@@ -13,6 +13,10 @@ import scala.collection.mutable
   *
   *  - mapper  → `mapPartitions` over input lines (per-split transform,
   *    /root/reference/runner.go:280-287)
+  *    — each input partition is one split and one map task; under
+  *    MrRunner a splittable input gets at least one split per core, sized
+  *    from its total bytes (`Sources.textLines` has the rule), and a `.gz`
+  *    file stays one split
   *  - combiner → bounded LRU pre-aggregation inside the map task — the same
   *    trick the reference's example hand-rolls with an LRU counter
   *    ("less Mapper output makes for faster sorting",
@@ -61,13 +65,17 @@ object MrPipeline {
 
   /** Apply engine properties for the duration of `body`, restoring prior
     * values (or unsetting) after — the scope of a per-step/per-job `-D`.
+    * A key the session did not set is unset again, not pinned to its
+    * default, so a later default (e.g. `Sources.lineSplitConf`) still sees
+    * it as unset.
     */
   private[mr] def withProperties[A](
       spark: org.apache.spark.sql.SparkSession,
       props: Map[String, String])(body: => A): A =
     if (props.isEmpty) body
     else {
-      val old = props.keys.map(k => k -> spark.conf.getOption(k)).toSeq
+      val conf = spark.sessionState.conf
+      val old = props.keys.map(k => k -> Option.when(conf.contains(k))(conf.getConfString(k))).toSeq
       props.foreach { case (k, v) => spark.conf.set(k, v) }
       try body
       finally old.foreach {

@@ -13,6 +13,16 @@ import graft.runtime.{Reporter, Workspace}
   * Differences by design (Spark-native): no self-shipping binary, no
   * per-step HDFS round-trips (one lazy DAG; materialization only at the
   * sink), counters are accumulators not stderr lines.
+  *
+  * Map parallelism: one map task per input split, at least one split per
+  * core for splittable input, sized from the total input bytes
+  * ([[graft.sources.Sources.textLines]] has the rule). The run applies
+  * [[graft.sources.Sources.lineSplitConf]] beneath `properties`, so a
+  * job-wide `spark.sql.files.*` entry still decides.
+  *
+  * Without `output` the job writes to `<workspace>/output` in a fresh
+  * workspace of its own and returns that path; with `output` it creates
+  * no workspace.
   */
 final case class MrRunner(
     name: String,
@@ -31,13 +41,14 @@ final case class MrRunner(
 
   /** Run all steps; returns (output path, counters). */
   def run(spark: SparkSession): (String, Counters) =
-    MrPipeline.withProperties(spark, properties) { runImpl(spark) }
+    MrPipeline.withProperties(spark, Sources.lineSplitConf(spark) ++ properties) {
+      runImpl(spark)
+    }
 
   private def runImpl(spark: SparkSession): (String, Counters) = {
     val counters = Counters.create(spark.sparkContext, s"graft.mr.$name")
     Reporter.status(spark, s"graft.mr job $name: ${steps.size} step(s)")
-    val workspace = Workspace.create(spark, tmpBase, name)
-    val outPath = output.getOrElse(s"$workspace/output")
+    val outPath = output.getOrElse(s"${Workspace.create(spark, tmpBase, name)}/output")
     val input = inputFiles
       .map(Sources.textLines(spark, _))
       .reduce(_ unionByName _)

@@ -26,10 +26,19 @@ package graft.runtime
   * no reader can observe: artifacts become visible only at the manifest
   * publish that follows them). An interrupt of the COORDINATING thread
   * while it awaits (the harness watchdog's reach is cancelJobGroup, not
-  * thread interrupt, so this is defensive) interrupts the workers,
-  * re-asserts the flag, and propagates — never a silent half-wait.
+  * thread interrupt, so this is defensive) interrupts the workers, waits
+  * for them again for at most [[InterruptGraceMs]] in total, attaches
+  * every failure collected by then (the workers' own failures, and their
+  * InterruptedExceptions) to the rethrown InterruptedException via
+  * `addSuppressed`, re-asserts the flag, and propagates — never a silent
+  * half-wait. A worker that ignores the interrupt past the grace is left
+  * running (it is a daemon thread); its failure, if any, is lost.
   */
 object Par {
+
+  /** Longest total wait for interrupted workers to stop. */
+  val InterruptGraceMs = 5000L
+
   def run(thunks: (() => Unit)*): Unit = {
     if (thunks.size <= 1) { thunks.foreach(_.apply()); return }
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -46,17 +55,29 @@ object Par {
     catch {
       case ie: InterruptedException =>
         threads.foreach(_.interrupt())
+        val deadline = System.nanoTime() + InterruptGraceMs * 1000000L
+        try threads.foreach { t =>
+          t.join(math.max(1L, (deadline - System.nanoTime()) / 1000000L))
+        }
+        catch { case again: InterruptedException => ie.addSuppressed(again) }
+        drainInto(ie, failures)
         Thread.currentThread().interrupt()
         throw ie
     }
     val first = failures.poll()
     if (first != null) {
-      var next = failures.poll()
-      while (next != null) {
-        if (next ne first) first.addSuppressed(next)
-        next = failures.poll()
-      }
+      drainInto(first, failures)
       throw first
+    }
+  }
+
+  private def drainInto(
+      head: Throwable,
+      failures: java.util.concurrent.ConcurrentLinkedQueue[Throwable]): Unit = {
+    var next = failures.poll()
+    while (next != null) {
+      if (next ne head) head.addSuppressed(next)
+      next = failures.poll()
     }
   }
 }

@@ -216,6 +216,10 @@ object TaskLogStream {
 /** Temp workspace lifecycle (#31): `user/<user>/tmp/<name>.<timestamp>`
   * with cleanup (/root/reference/runner.go:109-127) — over any Hadoop
   * scheme via FsUtil.
+  *
+  * A `-<uuid>` suffix makes every call's path its own: the timestamp has
+  * one-second resolution, so two same-name jobs started in the same
+  * second would otherwise share a workspace.
   */
 object Workspace {
   def create(s: SparkSession, base: String, name: String): String = {
@@ -224,7 +228,7 @@ object Workspace {
       .ofPattern("yyyyMMdd-HHmmss")
       .withZone(java.time.ZoneOffset.UTC)
       .format(java.time.Instant.now())
-    val path = s"$base/user/$user/tmp/$name.$ts"
+    val path = s"$base/user/$user/tmp/$name.$ts-${java.util.UUID.randomUUID()}"
     FsUtil.mkdir(s, path)
     path
   }

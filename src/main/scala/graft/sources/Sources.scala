@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import graft.mr.Counters
 
 /** Input sources (SURVEY.md §2B #11-14).
@@ -19,10 +20,46 @@ object Sources {
 
   /** Text-line source (#11): one string per line; globs, every Hadoop
     * scheme, and compressed files (#13, #14) come free from the reader.
+    *
+    * Splits: the scan runs one map task per input split, like Hadoop
+    * Streaming. Under [[lineSplitConf]] (MrRunner applies it for the whole
+    * run) each splittable file is cut into splits of
+    * `min(maxPartitionBytes, max(open, (bytes + files × open) / cores))`
+    * with `open` = [[LineSplitOpenCost]] and `cores` the session's default
+    * parallelism. That is `FileInputFormat`'s
+    * `max(minSize, min(totalSize / numSplits, blockSize))` with the core
+    * count as the map-task hint. So one file larger than
+    * `(cores − 1) × open` maps in at least one task per core, inputs past
+    * 128 MB per core keep 128 MB splits, many small files pack into about
+    * one task per core (never more than two), and a `.gz` file stays one
+    * split. A line that straddles a split boundary belongs to the split it
+    * starts in (Hadoop's `LineRecordReader`). Without that conf Spark's
+    * 4 MiB default open cost maps any input under 4 MiB per core in fewer
+    * tasks than cores, a 4 MB file in one.
     */
   def textLines(s: SparkSession, path: String): Dataset[String] = {
     import s.implicits._
     s.read.textFile(path)
+  }
+
+  /** Open cost, in bytes, that [[lineSplitConf]] charges per input file:
+    * the smallest split it cuts, and the weight that packs small files
+    * together, so a tiny input is not cut into near-empty tasks. Never 0:
+    * Spark would then size the splits of an input smaller than `cores`
+    * bytes at 0 bytes and fail.
+    */
+  val LineSplitOpenCost: Long = 64L * 1024
+
+  /** Session conf under which [[textLines]] plans splits as documented
+    * there. It is Spark's own `spark.sql.files.openCostInBytes` and is read
+    * when the scan is planned, i.e. at the action, so it has to be in effect
+    * around the action and not only where the Dataset is built. Empty when
+    * the session already sets the key, and a job's `properties` applied on
+    * top of it win, so an explicit setting always decides.
+    */
+  def lineSplitConf(s: SparkSession): Map[String, String] = {
+    val key = SQLConf.FILES_OPEN_COST_IN_BYTES.key
+    if (s.sessionState.conf.contains(key)) Map.empty else Map(key -> LineSplitOpenCost.toString)
   }
 
   /** JSON-lines source (#12): schema-on-read with PERMISSIVE mode; rows

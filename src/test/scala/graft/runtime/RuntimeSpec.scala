@@ -177,6 +177,10 @@ class RuntimeSpec extends AnyFunSuite {
     val ws = Workspace.create(spark, base, "jobname")
     assert(ws.contains("/tmp/jobname."))
     assert(FsUtil.exists(spark, ws))
+    // the timestamp has one-second resolution; the path is unique anyway
+    val again = Workspace.create(spark, base, "jobname")
+    assert(again != ws)
+    assert(Workspace.cleanup(spark, again))
     assert(Workspace.cleanup(spark, ws))
     assert(!FsUtil.exists(spark, ws))
   }
