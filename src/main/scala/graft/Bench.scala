@@ -12,6 +12,25 @@ import org.apache.spark.sql.SparkSession
   * a downstream consumer would pay.
   */
 object Bench {
+  /** JSON-escape an env note (r20 ADVICE #3: a SPARK_GRAFT_ENV_NOTE
+    * carrying a quote/backslash/control char produced an invalid JSON
+    * artifact).
+    */
+  private[graft] def jesc(raw: String): String = raw.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
+
+  /** `raw` JSON-escaped and then cut to at most `n` chars, by whole code
+    * points: never mid-escape, never half a surrogate pair.
+    */
+  private[graft] def jescTake(raw: String, n: Int): String = {
+    val pieces = raw.codePoints.toArray.map(cp => jesc(new String(Character.toChars(cp))))
+    pieces.take(pieces.scanLeft(0)(_ + _.length).tail.takeWhile(_ <= n).length).mkString
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -187,19 +206,6 @@ object Bench {
     // unknowingly). The driver never sets the env var; the default
     // names the one health metric the line already carries so a
     // cross-round comparison knows what to check first.
-    // JSON-escape the note (r20 ADVICE #3: a SPARK_GRAFT_ENV_NOTE
-    // carrying a quote/backslash/control char produced an invalid JSON
-    // artifact; and a blind take(60) could split a surrogate pair)
-    def jesc(raw: String): String = raw.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    def takeWhole(raw: String, n: Int): String = {
-      val t = raw.take(n)
-      if (t.nonEmpty && Character.isHighSurrogate(t.last)) t.dropRight(1) else t
-    }
     val envNote = jesc(sys.env.getOrElse("SPARK_GRAFT_ENV_NOTE",
       "shared host, no isolation; cross-round deltas need an interleaved A/B " +
         "or a same-round control family - check spread_med first"))
@@ -223,10 +229,11 @@ object Bench {
       .mkString("{", ",", "}")
     // env_note rides the STDOUT line too (r19 VERDICT #2: only the file
     // line carried it, so the driver artifact — built from stdout's tail —
-    // shipped without the health note). The stdout copy is truncated to
-    // keep the line inside the driver's ~2000-char tail capture.
+    // shipped without the health note). The stdout copy is escaped, then
+    // cut to 60 chars, to keep the line inside a ~2000-char capture of
+    // stdout's tail.
     val envNote2 = sys.env.get("SPARK_GRAFT_ENV_NOTE")
-      .map(n => jesc(takeWhole(n, 60)))
+      .map(n => jescTake(n, 60))
       .getOrElse("shared host, no isolation - check spread_med")
     val stdoutLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs2,"families":$fams,"sf":"$sfDir","runs":2,"degraded":$deg,"spread_med":${fmt(spreadMed)},"env_note":"$envNote2"}"""
     println(stdoutLine)

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.runtime.{IndexManifest, IndexStatePublisher, IndexStore}
+import graft.runtime.{IndexLifecycle, IndexManifest, IndexStatePublisher, IndexStore}
 
 /** Incremental corpus-append deduplication (d39) — the operator a daily
   * ingest pipeline runs most often: dedup a DELTA batch against the
@@ -251,8 +251,8 @@ object IncrementalDedup {
     * immutable directories, so no concurrent mutation can tear a read).
     * The probe-side tables are written BUCKETED on their probe keys —
     * the write-once cost that buys every later delta pass its
-    * shuffle-free corpus side; `meta` records the band geometry so a
-    * reader can neither mis-band nor mis-bucket. Rewritten-per-mutation
+    * shuffle-free corpus side; the manifest records the band geometry
+    * so a reader can neither mis-band nor mis-bucket. Rewritten-per-mutation
     * artifacts (`labels`, tombstones) live in generation directories;
     * appended artifacts (`sigs`, `pairs`) in epoch directories.
     */
@@ -265,14 +265,10 @@ object IncrementalDedup {
         Dedup.bandsOf(idx.sigs, k, rowsPerBand),
         "hashes", "bands", "bandcounts", nBuckets),
       () => idx.sigs.write.mode("overwrite").parquet(s"$dir/sigs/epoch-0"),
-      () => idx.labels.write.mode("overwrite").parquet(s"$dir/labels/gen-0"),
-      () => s.range(1).selectExpr(s"$k AS k", s"$rowsPerBand AS rows_per_band",
-          s"$nBuckets AS n_buckets")
-        .write.mode("overwrite").parquet(s"$dir/meta")) ++
+      () => idx.labels.write.mode("overwrite").parquet(s"$dir/labels/gen-0")) ++
       idx.pairs.map(p => () => p.write.mode("overwrite").parquet(s"$dir/pairs/epoch-0")) ++
       capLedger0.map(l => () => l.select(col("band"), col("bsig"))
         .write.mode("overwrite").parquet(s"$dir/capledger/epoch-0")): _*)
-    graft.runtime.MetaCache.invalidate(dir) // meta just (re)written
     val entries = Map(
       "hashes" -> "hashes", "bands" -> "bands", "bandcounts" -> "bandcounts",
       "sigs" -> "sigs", "labels" -> "labels/gen-0") ++
@@ -281,7 +277,8 @@ object IncrementalDedup {
     val epochs = Map("sigs" -> 0) ++
       (if (idx.pairs.nonEmpty) Map("pairs" -> 0) else Map.empty) ++
       (if (capLedger0.nonEmpty) Map("capledger" -> 0) else Map.empty)
-    IndexStatePublisher.publish(dir, IndexManifest(0L, entries, epochs))
+    IndexStatePublisher.publish(dir, IndexManifest(0L, entries, epochs,
+      Map("k" -> k, "rows_per_band" -> rowsPerBand, "n_buckets" -> nBuckets)))
   }
 
   /** The three bucketed probe tables, written fresh at `relHashes` /
@@ -322,19 +319,8 @@ object IncrementalDedup {
     readIndexAt(s, dir, IndexStatePublisher.current(dir))
 
   private def readIndexAt(s: SparkSession, dir: String, m: IndexManifest): CorpusIndex = {
-    val meta = graft.runtime.MetaCache.row(s, dir)
-    val (k, rpb, nb) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val del: Option[DataFrame] = m.pathOpt("deleted")
-      .map(rel => broadcast(s.read.parquet(s"$dir/$rel")))
-    def minusDel(df: DataFrame, idCol: String): DataFrame = del match {
-      // re-select the original order: a USING-key anti-join moves the key
-      // column first, which would silently swap (a_id, b_id) in the pair
-      // artifact for positional consumers
-      case Some(d) =>
-        df.join(d.withColumnRenamed("doc_id", idCol), Seq(idCol), "left_anti")
-          .select(df.columns.map(col).toIndexedSeq: _*)
-      case None => df
-    }
+    val (k, rpb, nb) = (m.geom(dir, "k"), m.geom(dir, "rows_per_band"), m.geom(dir, "n_buckets"))
+    val minusDel = IndexLifecycle.tombstoneFilter(s, dir, m, "doc_id")
     val pairs = m.pathOpt("pairs").map(_ => minusDel(minusDel(
       s.read.parquet(m.epochPaths(dir, "pairs"): _*), "a_id"), "b_id"))
     CorpusIndex(
@@ -570,17 +556,9 @@ object IncrementalDedup {
     // maintained appends rerun-reproducible (d52; the d51 pattern).
     // Uncapped appends on a ledgered index record an empty set.
     val ledgered = m.pathOpt("capledger").nonEmpty
-    val ledgerWrite = if (!ledgered) Seq.empty else {
-      val rows = ev.over.getOrElse {
-        import org.apache.spark.sql.types._
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("band", IntegerType),
-            StructField("bsig", StringType))))
-      }
-      Seq(() => rows.select(col("band"), col("bsig"))
-        .write.mode("overwrite")
-        .parquet(s"$dir/${m.path("capledger")}/epoch-$sigEpoch"))
-    }
+    val ledgerWrite = if (!ledgered) Seq.empty else
+      Seq(() => IndexLifecycle.writeLedgerEpoch(dir, m, sigEpoch, ev.over,
+        ev.deltaBands, "band", "bsig"))
     graft.runtime.Par.run(Seq(
       () => IndexStore.writeBucketed(ev.deltaHash, nb, s"$dir/${m.path("hashes")}",
         hashTable(s"$dir/${m.path("hashes")}"), "append", "content_hash"),
@@ -604,8 +582,6 @@ object IncrementalDedup {
     IndexStatePublisher.publish(dir, m
       .withEntry("labels", s"labels/gen-${m.gen + 1}")
       .withEntry("pairs", pairsRel)
-      .withEpoch("sigs", sigEpoch)
-      .withEpoch("pairs", pairEpoch)
       .copy(gen = m.gen + 1,
         epochs = m.epochs + ("sigs" -> sigEpoch) + ("pairs" -> pairEpoch) ++
           (if (ledgered) Map("capledger" -> sigEpoch) else Map.empty)))
@@ -613,14 +589,8 @@ object IncrementalDedup {
   }
 
   /** The persisted cap ledger as one frame: (epoch, band, bsig). */
-  def readCapLedger(s: SparkSession, dir: String): DataFrame = {
-    val m = IndexStatePublisher.current(dir)
-    require(m.pathOpt("capledger").nonEmpty, s"index at $dir has no cap ledger")
-    m.epochPaths(dir, "capledger").zipWithIndex
-      .map { case (p, e) => s.read.parquet(p).withColumn("epoch", lit(e)) }
-      .reduce(_.unionByName(_))
-      .select(col("epoch"), col("band"), col("bsig"))
-  }
+  def readCapLedger(s: SparkSession, dir: String): DataFrame =
+    IndexLifecycle.readCapLedger(s, dir, IndexStatePublisher.current(dir), "band", "bsig")
 
   /** The LEDGER-AWARE RERUN for the MinHash family (the engineering
     * contract of [[IncrementalSig.rerunWithLedger]], plus this family's
@@ -639,11 +609,11 @@ object IncrementalDedup {
     */
   def rerunKeptWithLedger(s: SparkSession, dir: String, docsWithEpoch: DataFrame,
       estMin: Double = 0.6, jaccardMin: Double = 0.8): DataFrame = {
-    val meta = graft.runtime.MetaCache.row(s, dir)
-    val (k, rpb) = (meta.getInt(0), meta.getInt(1))
+    val m = IndexStatePublisher.current(dir)
+    val (k, rpb) = (m.geom(dir, "k"), m.geom(dir, "rows_per_band"))
     val sigs = docsWithEpoch.select(col("doc_id"),
       graft.functions.MinHashSig(col("text"), 5, k).as("sig"))
-    val firstOver = readCapLedger(s, dir)
+    val firstOver = IndexLifecycle.readCapLedger(s, dir, m, "band", "bsig")
       .groupBy(col("band"), col("bsig"))
       .agg(min(col("epoch")).as("first_over"))
     val b = Dedup.bandsOf(sigs, k, rpb)
@@ -761,10 +731,6 @@ object IncrementalDedup {
         Seq("content_hash"))
       .filter(col("doc_id") =!= col("min_id"))
       .select(col("min_id").as("a_id"), col("doc_id").as("b_id"))
-    // the FULL surviving tombstone list is rewritten per generation
-    // (delete traffic is small by contract): one manifest resolution
-    // then gives a reader a consistent (labels, tombstones) pair —
-    // appending to a live tombstone dir could tear exactly that pairing.
     // The touched-cluster re-resolution is this mutation's HEAVY compute
     // (an iterative multi-job resolve); run it to completion BEFORE any
     // artifact write and overlap only the two cheap writes below (r20
@@ -781,13 +747,7 @@ object IncrementalDedup {
     val newLabels = untouched.unionByName(subLabels.select(col("id"), col("cluster")))
       .transform(graft.runtime.Ckpt.eager) // materialize BEFORE publishing over its input gen
     graft.runtime.Par.run( // two independent writes — overlap (guide §2.6)
-      () => {
-        val allDel = m.pathOpt("deleted")
-          .map(rel => s.read.parquet(s"$dir/$rel").unionByName(del).distinct())
-          .getOrElse(del)
-          .transform(graft.runtime.Ckpt.eager)
-        allDel.write.mode("overwrite").parquet(s"$dir/deleted/gen-${m.gen + 1}")
-      },
+      () => IndexLifecycle.writeTombstones(s, dir, m, del),
       () => newLabels.write.mode("overwrite").parquet(s"$dir/labels/gen-${m.gen + 1}"))
     IndexStatePublisher.publish(dir, m
       .withEntry("labels", s"labels/gen-${m.gen + 1}")
@@ -815,8 +775,7 @@ object IncrementalDedup {
     val m = IndexStatePublisher.current(dir)
     require(m.pathOpt("capledger").nonEmpty,
       s"index at $dir is not ledgered — use compactIndex")
-    val meta = graft.runtime.MetaCache.row(s, dir)
-    val (k, rpb, nb) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
+    val (k, rpb, nb) = (m.geom(dir, "k"), m.geom(dir, "rows_per_band"), m.geom(dir, "n_buckets"))
     val idx = readIndexAt(s, dir, m) // tombstone-filtered views
     val survN = idx.hashes.count()
     val gotN = corpus.count()
@@ -837,12 +796,12 @@ object IncrementalDedup {
         .write.mode("overwrite").parquet(s"$dir/capledger-g$g/epoch-0")) ++
       fresh.pairs.map(p =>
         () => p.write.mode("overwrite").parquet(s"$dir/pairs-g$g/epoch-0")): _*)
-    IndexStatePublisher.publish(dir, IndexManifest(g,
-      Map("hashes" -> s"hashes-g$g", "bands" -> s"bands-g$g",
+    IndexStatePublisher.publish(dir, m.copy(gen = g,
+      entries = Map("hashes" -> s"hashes-g$g", "bands" -> s"bands-g$g",
         "bandcounts" -> s"bandcounts-g$g", "sigs" -> s"sigs-g$g",
         "labels" -> s"labels/gen-$g", "pairs" -> s"pairs-g$g",
         "capledger" -> s"capledger-g$g"),
-      Map("sigs" -> 0, "pairs" -> 0, "capledger" -> 0)))
+      epochs = Map("sigs" -> 0, "pairs" -> 0, "capledger" -> 0)))
   }
 
   /** Rebuild-time COMPACTION — the scheduled physical half of deletion
@@ -867,27 +826,14 @@ object IncrementalDedup {
     * space is reclaimed by [[IndexStatePublisher.gc]] as a separate,
     * grace-period-scheduled step.
     */
-  def compactIndex(s: SparkSession, dir: String): Unit = IndexStatePublisher.withWriterLock(dir) {
-    val m = IndexStatePublisher.current(dir)
-    // a LEDGERED index's cap ledger is suppression HISTORY: an
-    // epoch-collapsed rewrite cannot preserve the d52 rerun contract
-    // (r17 ADVICE #2 — silently dropping the ledger made later capped
-    // appends stop recording). The ledgered path's compaction is a
-    // REBUILD via buildIndexWithLedger into a fresh directory, which
-    // re-derives a fresh epoch-0 suppression set from the survivors.
-    require(m.pathOpt("capledger").isEmpty,
-      s"index at $dir is ledgered; compaction would discard the cap " +
-        "ledger and break the rerun contract — use " +
-        "rebuildLedgered(dir, corpus, ...) instead")
-    if (m.pathOpt("deleted").nonEmpty) {
-      val meta = graft.runtime.MetaCache.row(s, dir)
-      val (k, rpb, nb) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
+  def compactIndex(s: SparkSession, dir: String): Unit =
+    IndexLifecycle.compact(dir, "rebuildLedgered(dir, corpus, ...)") { (m, g) =>
+      val (k, rpb, nb) = (m.geom(dir, "k"), m.geom(dir, "rows_per_band"), m.geom(dir, "n_buckets"))
       val idx = readIndexAt(s, dir, m)
       val hashes = idx.hashes.transform(graft.runtime.Ckpt.eager)
       val sigs = idx.sigs.transform(graft.runtime.Ckpt.eager)
       val labels = idx.labels.transform(graft.runtime.Ckpt.eager)
       val pairs = idx.pairs.map(_.transform(graft.runtime.Ckpt.eager))
-      val g = m.gen + 1
       graft.runtime.Par.run(Seq( // independent writes — overlap (guide §2.6)
         () => writeBucketedArtifacts(s, dir, hashes, Dedup.bandsOf(sigs, k, rpb),
           s"hashes-g$g", s"bands-g$g", s"bandcounts-g$g", nb),
@@ -895,16 +841,10 @@ object IncrementalDedup {
         () => labels.write.mode("overwrite").parquet(s"$dir/labels/gen-$g")) ++
         pairs.map(p =>
           () => p.write.mode("overwrite").parquet(s"$dir/pairs-g$g/epoch-0")): _*)
-      val entries = Map(
-        "hashes" -> s"hashes-g$g", "bands" -> s"bands-g$g",
+      Map("hashes" -> s"hashes-g$g", "bands" -> s"bands-g$g",
         "bandcounts" -> s"bandcounts-g$g", "sigs" -> s"sigs-g$g",
-        "labels" -> s"labels/gen-$g") ++
-        (if (pairs.nonEmpty) Map("pairs" -> s"pairs-g$g") else Map.empty)
-      val epochs = Map("sigs" -> 0) ++
-        (if (pairs.nonEmpty) Map("pairs" -> 0) else Map.empty)
-      IndexStatePublisher.publish(dir, IndexManifest(g, entries, epochs))
+        "labels" -> s"labels/gen-$g") ++ pairs.map(_ => "pairs" -> s"pairs-g$g")
     }
-  }
 
   /** d39: the oracle-gated composition — corpus = the 80% doc_id split
     * ("yesterday"), delta = the 20% ("today's batch"); build the corpus

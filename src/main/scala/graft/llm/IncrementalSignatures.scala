@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.runtime.{IndexLifecycle, IndexManifest, IndexStatePublisher}
 
 /** Incremental corpus-append arms for the remaining signature families
   * of the corpus index (r14 VERDICT ask #5) — the d39 pattern (persist
@@ -109,23 +110,19 @@ object IncrementalSig {
   def writeIndex(corpusSigs: DataFrame, pairs: DataFrame, dir: String,
       bits: Int, nBands: Int, nBuckets: Int = 32,
       capLedger0: Option[DataFrame] = None): Unit = {
-    import graft.runtime.{IndexManifest, IndexStatePublisher}
     val s = corpusSigs.sparkSession
     graft.runtime.Par.run(Seq( // independent writes — overlap (guide §2.6)
       () => writeBandTables(s, dir, bandsOfSig(corpusSigs, bits, nBands),
         "bands", "bandcounts", nBuckets),
-      () => pairs.write.mode("overwrite").parquet(s"$dir/pairs/epoch-0"),
-      () => s.range(1).selectExpr(s"$bits AS bits", s"$nBands AS n_bands",
-          s"$nBuckets AS n_buckets")
-        .write.mode("overwrite").parquet(s"$dir/meta")) ++
+      () => pairs.write.mode("overwrite").parquet(s"$dir/pairs/epoch-0")) ++
       capLedger0.map(l => () => l.select(col("band"), col("bsig"))
         .write.mode("overwrite").parquet(s"$dir/capledger/epoch-0")): _*)
-    graft.runtime.MetaCache.invalidate(dir) // meta just (re)written
     IndexStatePublisher.publish(dir, IndexManifest(0L,
       Map("bands" -> "bands", "bandcounts" -> "bandcounts", "pairs" -> "pairs") ++
         (if (capLedger0.nonEmpty) Map("capledger" -> "capledger") else Map.empty),
       Map("pairs" -> 0) ++
-        (if (capLedger0.nonEmpty) Map("capledger" -> 0) else Map.empty)))
+        (if (capLedger0.nonEmpty) Map("capledger" -> 0) else Map.empty),
+      Map("bits" -> bits, "n_bands" -> nBands, "n_buckets" -> nBuckets)))
   }
 
   /** Load the index at its CURRENT published generation (one manifest
@@ -136,21 +133,10 @@ object IncrementalSig {
     * can neither pair with future deltas nor linger in the answer.
     */
   def readIndex(s: SparkSession, dir: String): SigIndex = {
-    import graft.runtime.{IndexStatePublisher, IndexStore}
+    import graft.runtime.IndexStore
     val m = IndexStatePublisher.current(dir)
-    val meta = graft.runtime.MetaCache.row(s, dir)
-    val (bits, nBands, nb) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val del: Option[DataFrame] = m.pathOpt("deleted")
-      .map(rel => broadcast(s.read.parquet(s"$dir/$rel")))
-    def minusDel(df: DataFrame, idCol: String): DataFrame = del match {
-      // re-select the original order: a USING-key anti-join moves the key
-      // column first, which would silently swap (a_id, b_id) in the pair
-      // artifact for positional consumers
-      case Some(d) =>
-        df.join(d.withColumnRenamed("doc_id", idCol), Seq(idCol), "left_anti")
-          .select(df.columns.map(col).toIndexedSeq: _*)
-      case None => df
-    }
+    val (bits, nBands, nb) = (m.geom(dir, "bits"), m.geom(dir, "n_bands"), m.geom(dir, "n_buckets"))
+    val minusDel = IndexLifecycle.tombstoneFilter(s, dir, m, "doc_id")
     SigIndex(
       minusDel(IndexStore.ensureBucketedTable(s, bandTable(s"$dir/${m.path("bands")}"),
         "doc_id BIGINT, sig BIGINT, band INT, bsig BIGINT",
@@ -188,21 +174,15 @@ object IncrementalSig {
     * epoch tags) equals the tombstone-filtered pair artifact —
     * spec-pinned (IndexPublicationSpec "cap ledger" case).
     */
-  def deleteDocs(s: SparkSession, dir: String, deleteIds: DataFrame): Unit = {
-    import graft.runtime.IndexStatePublisher
+  def deleteDocs(s: SparkSession, dir: String, deleteIds: DataFrame): Unit =
     IndexStatePublisher.withWriterLock(dir) {
       val m = IndexStatePublisher.current(dir)
-      val del = deleteIds.select(col("doc_id").cast("long").as("doc_id"))
-      val allDel = m.pathOpt("deleted")
-        .map(rel => s.read.parquet(s"$dir/$rel").unionByName(del).distinct())
-        .getOrElse(del)
-        .transform(graft.runtime.Ckpt.eager)
-      allDel.write.mode("overwrite").parquet(s"$dir/deleted/gen-${m.gen + 1}")
+      IndexLifecycle.writeTombstones(s, dir, m,
+        deleteIds.select(col("doc_id").cast("long").as("doc_id")))
       IndexStatePublisher.publish(dir, m
         .withEntry("deleted", s"deleted/gen-${m.gen + 1}")
         .copy(gen = m.gen + 1))
     }
-  }
 
   /** The LEDGERED family's compaction: a REBUILD (r18 VERDICT ask #2 —
     * previously only a refusal message recommended this; now it is
@@ -226,14 +206,12 @@ object IncrementalSig {
     * answer.
     */
   def rebuildLedgered(s: SparkSession, dir: String, maxHamming: Int,
-      bucketCap: Int): Unit = {
-    import graft.runtime.{IndexManifest, IndexStatePublisher}
+      bucketCap: Int): Unit =
     IndexStatePublisher.withWriterLock(dir) {
       val m = IndexStatePublisher.current(dir)
       require(m.pathOpt("capledger").nonEmpty,
         s"signature index at $dir is not ledgered — use compactIndex")
-      val meta = graft.runtime.MetaCache.row(s, dir)
-      val (bits, nBands, nb) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
+      val (bits, nBands, nb) = (m.geom(dir, "bits"), m.geom(dir, "n_bands"), m.geom(dir, "n_buckets"))
       val idx = readIndex(s, dir) // tombstone-filtered views
       val survSigs = idx.bands.select(col("doc_id"), col("sig")).distinct()
         .transform(graft.runtime.Ckpt.eager)
@@ -247,12 +225,11 @@ object IncrementalSig {
         () => pairsC.write.mode("overwrite").parquet(s"$dir/pairs-g$g/epoch-0"),
         () => over0.select(col("band"), col("bsig"))
           .write.mode("overwrite").parquet(s"$dir/capledger-g$g/epoch-0"))
-      IndexStatePublisher.publish(dir, IndexManifest(g,
-        Map("bands" -> s"bands-g$g", "bandcounts" -> s"bandcounts-g$g",
+      IndexStatePublisher.publish(dir, m.copy(gen = g,
+        entries = Map("bands" -> s"bands-g$g", "bandcounts" -> s"bandcounts-g$g",
           "pairs" -> s"pairs-g$g", "capledger" -> s"capledger-g$g"),
-        Map("pairs" -> 0, "capledger" -> 0)))
+        epochs = Map("pairs" -> 0, "capledger" -> 0)))
     }
-  }
 
   /** Rebuild-time compaction (see [[IncrementalDedup.compactIndex]]):
     * rewrite the band table and pair list minus tombstoned rows,
@@ -262,34 +239,15 @@ object IncrementalSig {
     * rewrites target FRESH generation-suffixed directories; the switch
     * is the manifest CAS (in-flight readers keep their files).
     */
-  def compactIndex(s: SparkSession, dir: String): Unit = {
-    import graft.runtime.{IndexManifest, IndexStatePublisher}
-    IndexStatePublisher.withWriterLock(dir) {
-      val m = IndexStatePublisher.current(dir)
-      // a LEDGERED index's cap ledger is suppression HISTORY: an
-      // epoch-collapsed rewrite cannot preserve the rerun contract
-      // (r17 ADVICE #2 — silently dropping the ledger made later capped
-      // appends stop recording). The ledgered path's compaction is
-      // [[rebuildLedgered]] — engine code since r19.
-      require(m.pathOpt("capledger").isEmpty,
-        s"signature index at $dir is ledgered; compaction would discard " +
-          "the cap ledger and break the rerun contract — use " +
-          "rebuildLedgered(dir, maxHamming, bucketCap) instead")
-      if (m.pathOpt("deleted").nonEmpty) {
-        val nb = graft.runtime.MetaCache.row(s, dir).getInt(2)
-        val idx = readIndex(s, dir) // tombstone-filtered views
-        val bands = idx.bands.transform(graft.runtime.Ckpt.eager)
-        val pairs = idx.pairs.transform(graft.runtime.Ckpt.eager)
-        val g = m.gen + 1
-        writeBandTables(s, dir, bands, s"bands-g$g", s"bandcounts-g$g", nb)
-        pairs.write.mode("overwrite").parquet(s"$dir/pairs-g$g/epoch-0")
-        IndexStatePublisher.publish(dir, IndexManifest(g,
-          Map("bands" -> s"bands-g$g", "bandcounts" -> s"bandcounts-g$g",
-            "pairs" -> s"pairs-g$g"),
-          Map("pairs" -> 0)))
-      }
+  def compactIndex(s: SparkSession, dir: String): Unit =
+    IndexLifecycle.compact(dir, "rebuildLedgered(dir, maxHamming, bucketCap)") { (m, g) =>
+      val idx = readIndex(s, dir) // tombstone-filtered views
+      val bands = idx.bands.transform(graft.runtime.Ckpt.eager)
+      val pairs = idx.pairs.transform(graft.runtime.Ckpt.eager)
+      writeBandTables(s, dir, bands, s"bands-g$g", s"bandcounts-g$g", m.geom(dir, "n_buckets"))
+      pairs.write.mode("overwrite").parquet(s"$dir/pairs-g$g/epoch-0")
+      Map("bands" -> s"bands-g$g", "bandcounts" -> s"bandcounts-g$g", "pairs" -> s"pairs-g$g")
     }
-  }
 
   /** The incremental pass: delta bands probe the bucketed corpus band
     * table (corpus side: scan, no exchange) for corpus–delta pairs,
@@ -397,12 +355,11 @@ object IncrementalSig {
     * filtered, exactly what the next reader sees.
     */
   def appendToIndex(s: SparkSession, dir: String, deltaSigs: DataFrame,
-      maxHamming: Int, bucketCap: Int = Dedup.NoBucketCap): DataFrame = {
-    import graft.runtime.IndexStatePublisher
+      maxHamming: Int, bucketCap: Int = Dedup.NoBucketCap): DataFrame =
     IndexStatePublisher.withWriterLock(dir) {
       val m = IndexStatePublisher.current(dir)
       val idx = readIndex(s, dir)
-      val nb = graft.runtime.MetaCache.row(s, dir).getInt(2)
+      val nb = m.geom(dir, "n_buckets")
       val (db0, newPairs0, over) = deltaPairs(idx, deltaSigs, maxHamming, bucketCap)
       val newPairs = newPairs0.transform(graft.runtime.Ckpt.eager)
       val pairEpoch = m.epochs.getOrElse("pairs", -1) + 1
@@ -414,17 +371,9 @@ object IncrementalSig {
       // unbounded". Epochs align with the pair epochs; an uncapped
       // append on a ledgered index records an empty suppression set.
       val ledgered = m.pathOpt("capledger").nonEmpty
-      val ledgerWrite = if (!ledgered) Seq.empty else {
-        val rows = over.getOrElse {
-          import org.apache.spark.sql.types._
-          s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType(Seq(StructField("band", IntegerType),
-              StructField("bsig", LongType))))
-        }
-        Seq(() => rows.select(col("band"), col("bsig"))
-          .write.mode("overwrite")
-          .parquet(s"$dir/${m.path("capledger")}/epoch-$pairEpoch"))
-      }
+      val ledgerWrite = if (!ledgered) Seq.empty else
+        Seq(() => IndexLifecycle.writeLedgerEpoch(dir, m, pairEpoch, over, db0,
+          "band", "bsig"))
       graft.runtime.Par.run(Seq( // independent writes — overlap (guide §2.6)
         () => graft.runtime.IndexStore.writeBucketed(db0, nb,
           s"$dir/${m.path("bands")}", bandTable(s"$dir/${m.path("bands")}"),
@@ -440,19 +389,12 @@ object IncrementalSig {
           (if (ledgered) Map("capledger" -> pairEpoch) else Map.empty)))
       readIndex(s, dir).pairs
     }
-  }
 
   /** The persisted cap ledger as one frame: (epoch, band, bsig) — every
     * bucket the cap suppressed, at the epoch it suppressed it.
     */
-  def readCapLedger(s: SparkSession, dir: String): DataFrame = {
-    val m = graft.runtime.IndexStatePublisher.current(dir)
-    require(m.pathOpt("capledger").nonEmpty, s"index at $dir has no cap ledger")
-    m.epochPaths(dir, "capledger").zipWithIndex
-      .map { case (p, e) => s.read.parquet(p).withColumn("epoch", lit(e)) }
-      .reduce(_.unionByName(_))
-      .select(col("epoch"), col("band"), col("bsig"))
-  }
+  def readCapLedger(s: SparkSession, dir: String): DataFrame =
+    IndexLifecycle.readCapLedger(s, dir, IndexStatePublisher.current(dir), "band", "bsig")
 
   /** The LEDGER-AWARE RERUN — the engineering contract the cap ledger
     * buys (r16 VERDICT #2): given every document's signature tagged
@@ -471,9 +413,8 @@ object IncrementalSig {
     */
   def rerunWithLedger(s: SparkSession, dir: String,
       sigsWithEpoch: DataFrame, maxHamming: Int): DataFrame = {
-    val m = graft.runtime.IndexStatePublisher.current(dir)
-    val meta = graft.runtime.MetaCache.row(s, dir)
-    val (bits, nBands) = (meta.getInt(0), meta.getInt(1))
+    val m = IndexStatePublisher.current(dir)
+    val (bits, nBands) = (m.geom(dir, "bits"), m.geom(dir, "n_bands"))
     // Suppression is MONOTONE: bucket population over visible docs only
     // grows with the epoch, so "over cap at epoch k ⇒ over at every
     // k' > k" — a bucket's ledger rows form a suffix [firstOver, K].
@@ -483,7 +424,7 @@ object IncrementalSig {
     // the rerun scale-safe: a mega-bucket the cap suppressed from
     // epoch 0 contributes ZERO rows to the self-join instead of
     // enumerating its quadratic candidates and discarding them.
-    val firstOver = readCapLedger(s, dir)
+    val firstOver = IndexLifecycle.readCapLedger(s, dir, m, "band", "bsig")
       .groupBy(col("band"), col("bsig"))
       .agg(min(col("epoch")).as("first_over"))
     val banded = bandsOfSig(
@@ -763,7 +704,6 @@ object IncrementalSemantic {
       nBuckets: Int = 32, nTables: Int = NTables, bits: Int = Bits,
       pairs: Option[DataFrame] = None,
       capLedger0: Option[DataFrame] = None): Unit = {
-    import graft.runtime.{IndexManifest, IndexStatePublisher}
     val s = corpusE.sparkSession
     val ledgered = capLedger0.nonEmpty
     require(!ledgered || pairs.nonEmpty,
@@ -778,10 +718,7 @@ object IncrementalSemantic {
       () => graft.runtime.IndexStore.writeBucketed(buckets, nBuckets,
         s"$dir/buckets", tableFor(s"$dir/buckets"), "overwrite",
         "table_id", "bucket"),
-      () => labels.write.mode("overwrite").parquet(s"$dir/labels/gen-0"),
-      () => s.range(1).selectExpr(s"$nBuckets AS n_buckets",
-          s"$nTables AS n_tables", s"$bits AS bits")
-        .write.mode("overwrite").parquet(s"$dir/meta")) ++
+      () => labels.write.mode("overwrite").parquet(s"$dir/labels/gen-0")) ++
       (if (ledgered) Seq(
         () => graft.runtime.IndexStore.writeBucketed(
           buckets.groupBy(col("table_id"), col("bucket")).agg(count(lit(1)).as("cn")),
@@ -793,7 +730,6 @@ object IncrementalSemantic {
       else
         pairs.map(p => () => p.write.mode("overwrite").parquet(s"$dir/pairs/gen-0")).toSeq)
     graft.runtime.Par.run(writes: _*)
-    graft.runtime.MetaCache.invalidate(dir) // meta just (re)written
     val entries =
       if (ledgered)
         Map("buckets" -> "buckets", "labels" -> "labels/gen-0",
@@ -805,7 +741,8 @@ object IncrementalSemantic {
     val epochs =
       if (ledgered) Map("pairs" -> 0, "capledger" -> 0)
       else Map.empty[String, Int]
-    IndexStatePublisher.publish(dir, IndexManifest(0L, entries, epochs))
+    IndexStatePublisher.publish(dir, IndexManifest(0L, entries, epochs,
+      Map("n_buckets" -> nBuckets, "n_tables" -> nTables, "bits" -> bits)))
   }
 
   /** Load the index at its CURRENT published generation (one manifest
@@ -815,22 +752,9 @@ object IncrementalSemantic {
     * broadcast anti-joins (the bucketed layout survives).
     */
   def readIndex(s: SparkSession, dir: String): SemIndex = {
-    val m = graft.runtime.IndexStatePublisher.current(dir)
-    val meta = graft.runtime.MetaCache.row(s, dir)
-    // geometry rode into meta in r16 (the scale arm runs count-calibrated
-    // bits); a pre-r16 meta has only n_buckets — fall back to the pinned
-    // constants it was written under
-    val nb = meta.getInt(0)
-    val (nt, bits) =
-      if (meta.length >= 3) (meta.getInt(1), meta.getInt(2)) else (NTables, Bits)
-    val del: Option[DataFrame] = m.pathOpt("deleted")
-      .map(rel => broadcast(s.read.parquet(s"$dir/$rel")))
-    def minusDel(df: DataFrame, idCol: String): DataFrame = del match {
-      case Some(d) =>
-        df.join(d.withColumnRenamed("vec_id", idCol), Seq(idCol), "left_anti")
-          .select(df.columns.map(col).toIndexedSeq: _*)
-      case None => df
-    }
+    val m = IndexStatePublisher.current(dir)
+    val (nb, nt, bits) = (m.geom(dir, "n_buckets"), m.geom(dir, "n_tables"), m.geom(dir, "bits"))
+    val minusDel = IndexLifecycle.tombstoneFilter(s, dir, m, "vec_id")
     // pairs live in EPOCH dirs on a ledgered (maintained-append) index,
     // in a single gen-0 dir otherwise
     val pairs = m.pathOpt("pairs").map { rel =>
@@ -876,8 +800,7 @@ object IncrementalSemantic {
     * spec-pinned.
     */
   def deleteVectors(s: SparkSession, dir: String,
-      deleteIds0: DataFrame): DataFrame = {
-    import graft.runtime.IndexStatePublisher
+      deleteIds0: DataFrame): DataFrame =
     IndexStatePublisher.withWriterLock(dir) {
       val del = deleteIds0.select(col("vec_id").cast("long").as("vec_id"))
         .transform(graft.runtime.Ckpt.eager)
@@ -917,13 +840,7 @@ object IncrementalSemantic {
       val newLabels = untouched.unionByName(subLabels.select(col("id"), col("cluster")))
         .transform(graft.runtime.Ckpt.eager) // materialize BEFORE publishing over its input gen
       graft.runtime.Par.run( // two independent writes — overlap (guide §2.6)
-        () => {
-          val allDel = m.pathOpt("deleted")
-            .map(rel => s.read.parquet(s"$dir/$rel").unionByName(del).distinct())
-            .getOrElse(del)
-            .transform(graft.runtime.Ckpt.eager)
-          allDel.write.mode("overwrite").parquet(s"$dir/deleted/gen-${m.gen + 1}")
-        },
+        () => IndexLifecycle.writeTombstones(s, dir, m, del),
         () => newLabels.write.mode("overwrite").parquet(s"$dir/labels/gen-${m.gen + 1}"))
       IndexStatePublisher.publish(dir, m
         .withEntry("labels", s"labels/gen-${m.gen + 1}")
@@ -931,7 +848,6 @@ object IncrementalSemantic {
         .copy(gen = m.gen + 1))
       newLabels
     }
-  }
 
   /** The incremental pass: delta buckets probe the bucketed corpus
     * bucket table (corpus side: scan, no exchange) plus a delta-sized
@@ -1030,8 +946,7 @@ object IncrementalSemantic {
     */
   def appendToIndex(s: SparkSession, dir: String, allE: DataFrame,
       delta: DataFrame, minCos: Double = MinCos,
-      bucketCap: Int = Dedup.NoBucketCap): DataFrame = {
-    import graft.runtime.IndexStatePublisher
+      bucketCap: Int = Dedup.NoBucketCap): DataFrame =
     IndexStatePublisher.withWriterLock(dir) {
       val m = IndexStatePublisher.current(dir)
       require(m.epochs.contains("pairs") && m.pathOpt("capledger").nonEmpty,
@@ -1110,12 +1025,6 @@ object IncrementalSemantic {
       // five INDEPENDENT actions over materialized frames — overlap them
       // (guide §2.6; graft.runtime.Par); visibility is the manifest CAS
       val epoch = m.epochs("pairs") + 1
-      val ledgerRows = overLedger.getOrElse {
-        import org.apache.spark.sql.types._
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("table_id", IntegerType),
-            StructField("bucket", IntegerType))))
-      }
       graft.runtime.Par.run(
         () => graft.runtime.IndexStore.writeBucketed(db0, idx.nBuckets,
           s"$dir/${m.path("buckets")}", tableFor(s"$dir/${m.path("buckets")}"),
@@ -1127,9 +1036,8 @@ object IncrementalSemantic {
           "table_id", "bucket"),
         () => verified.write.mode("overwrite")
           .parquet(s"$dir/${m.path("pairs")}/epoch-$epoch"),
-        () => ledgerRows.select(col("table_id"), col("bucket"))
-          .write.mode("overwrite")
-          .parquet(s"$dir/${m.path("capledger")}/epoch-$epoch"),
+        () => IndexLifecycle.writeLedgerEpoch(dir, m, epoch, overLedger, db0,
+          "table_id", "bucket"),
         () => {
           newLabels = DedupResolve.incrementalLabels(idx.labels, verified,
               edgesMaterialized = true)
@@ -1145,17 +1053,10 @@ object IncrementalSemantic {
           allE.select(col("vec_id").as("doc_id")), newLabels)
         .select(col("doc_id").as("vec_id"))
     }
-  }
 
   /** The persisted cap ledger as one frame: (epoch, table_id, bucket). */
-  def readCapLedger(s: SparkSession, dir: String): DataFrame = {
-    val m = graft.runtime.IndexStatePublisher.current(dir)
-    require(m.pathOpt("capledger").nonEmpty, s"index at $dir has no cap ledger")
-    m.epochPaths(dir, "capledger").zipWithIndex
-      .map { case (p, e) => s.read.parquet(p).withColumn("epoch", lit(e)) }
-      .reduce(_.unionByName(_))
-      .select(col("epoch"), col("table_id"), col("bucket"))
-  }
+  def readCapLedger(s: SparkSession, dir: String): DataFrame =
+    IndexLifecycle.readCapLedger(s, dir, IndexStatePublisher.current(dir), "table_id", "bucket")
 
   /** The LEDGER-AWARE RERUN for the semantic family (the
     * [[IncrementalSig.rerunWithLedger]] contract plus this family's
@@ -1170,12 +1071,10 @@ object IncrementalSemantic {
     */
   def rerunKeptWithLedger(s: SparkSession, dir: String,
       vecsWithEpoch: DataFrame, minCos: Double = MinCos): DataFrame = {
-    val m = graft.runtime.IndexStatePublisher.current(dir)
-    val meta = graft.runtime.MetaCache.row(s, dir)
-    val (nt, bits) =
-      if (meta.length >= 3) (meta.getInt(1), meta.getInt(2)) else (NTables, Bits)
-    val e = withSigs(vecsWithEpoch, nt, bits).transform(graft.runtime.Ckpt.eager)
-    val firstOver = readCapLedger(s, dir)
+    val m = IndexStatePublisher.current(dir)
+    val e = withSigs(vecsWithEpoch, m.geom(dir, "n_tables"), m.geom(dir, "bits"))
+      .transform(graft.runtime.Ckpt.eager)
+    val firstOver = IndexLifecycle.readCapLedger(s, dir, m, "table_id", "bucket")
       .groupBy(col("table_id"), col("bucket"))
       .agg(min(col("epoch")).as("first_over"))
     val b = e.select(col("vec_id"), col("epoch"), posexplode(col("sigs")))
@@ -1213,14 +1112,12 @@ object IncrementalSemantic {
     * CAS (tombstone entry dropped) under the writer lock.
     */
   def rebuildLedgered(s: SparkSession, dir: String, allE: DataFrame,
-      bucketCap: Int, minCos: Double = MinCos): Unit = {
-    import graft.runtime.{IndexManifest, IndexStatePublisher}
+      bucketCap: Int, minCos: Double = MinCos): Unit =
     IndexStatePublisher.withWriterLock(dir) {
       val m = IndexStatePublisher.current(dir)
       require(m.pathOpt("capledger").nonEmpty,
         s"semantic index at $dir is not ledgered — use compactIndex")
-      val meta = graft.runtime.MetaCache.row(s, dir)
-      val (nb, nt, bits) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
+      val (nb, nt, bits) = (m.geom(dir, "n_buckets"), m.geom(dir, "n_tables"), m.geom(dir, "bits"))
       val idx = readIndex(s, dir) // tombstone-filtered views
       val survN = idx.buckets.select(col("vec_id")).distinct().count()
       val gotN = allE.select(col("vec_id")).distinct().count()
@@ -1248,13 +1145,12 @@ object IncrementalSemantic {
         () => pairsC.write.mode("overwrite").parquet(s"$dir/pairs-g$g/epoch-0"),
         () => over0.select(col("table_id"), col("bucket"))
           .write.mode("overwrite").parquet(s"$dir/capledger-g$g/epoch-0"))
-      IndexStatePublisher.publish(dir, IndexManifest(g,
-        Map("buckets" -> s"buckets-g$g", "bucketcounts" -> s"bucketcounts-g$g",
+      IndexStatePublisher.publish(dir, m.copy(gen = g,
+        entries = Map("buckets" -> s"buckets-g$g", "bucketcounts" -> s"bucketcounts-g$g",
           "labels" -> s"labels/gen-$g", "pairs" -> s"pairs-g$g",
           "capledger" -> s"capledger-g$g"),
-        Map("pairs" -> 0, "capledger" -> 0)))
+        epochs = Map("pairs" -> 0, "capledger" -> 0)))
     }
-  }
 
   /** Rebuild-time compaction (see [[IncrementalDedup.compactIndex]]):
     * rewrite the bucket table and pair evidence minus tombstoned rows
@@ -1267,32 +1163,18 @@ object IncrementalSemantic {
     * ledgered path's compaction is [[rebuildLedgered]] — engine code
     * since r19.
     */
-  def compactIndex(s: SparkSession, dir: String): Unit = {
-    import graft.runtime.IndexStatePublisher
-    IndexStatePublisher.withWriterLock(dir) {
-      val m = IndexStatePublisher.current(dir)
-      require(m.pathOpt("capledger").isEmpty,
-        s"semantic index at $dir is ledgered; compaction would discard the " +
-          "cap ledger and break the rerun contract — use " +
-          "rebuildLedgered(dir, allE, bucketCap) instead")
-      if (m.pathOpt("deleted").nonEmpty) {
-        val nb = graft.runtime.MetaCache.row(s, dir).getInt(0)
-        val idx = readIndex(s, dir)
-        val buckets = idx.buckets.transform(graft.runtime.Ckpt.eager)
-        val pairs = idx.pairs.map(_.transform(graft.runtime.Ckpt.eager))
-        val g = m.gen + 1
-        s.sql(s"DROP TABLE IF EXISTS ${tableFor(s"$dir/buckets-g$g")}")
-        graft.runtime.IndexStore.writeBucketed(buckets, nb,
-          s"$dir/buckets-g$g", tableFor(s"$dir/buckets-g$g"), "overwrite",
-          "table_id", "bucket")
-        pairs.foreach(_.write.mode("overwrite").parquet(s"$dir/pairs-g$g"))
-        IndexStatePublisher.publish(dir, m.copy(gen = g,
-          entries = (m.entries - "deleted") +
-            ("buckets" -> s"buckets-g$g") ++
-            (if (pairs.nonEmpty) Map("pairs" -> s"pairs-g$g") else Map.empty)))
-      }
+  def compactIndex(s: SparkSession, dir: String): Unit =
+    IndexLifecycle.compact(dir, "rebuildLedgered(dir, allE, bucketCap)") { (m, g) =>
+      val idx = readIndex(s, dir)
+      val buckets = idx.buckets.transform(graft.runtime.Ckpt.eager)
+      val pairs = idx.pairs.map(_.transform(graft.runtime.Ckpt.eager))
+      s.sql(s"DROP TABLE IF EXISTS ${tableFor(s"$dir/buckets-g$g")}")
+      graft.runtime.IndexStore.writeBucketed(buckets, m.geom(dir, "n_buckets"),
+        s"$dir/buckets-g$g", tableFor(s"$dir/buckets-g$g"), "overwrite",
+        "table_id", "bucket")
+      pairs.foreach(_.write.mode("overwrite").parquet(s"$dir/pairs-g$g"))
+      Map("buckets" -> s"buckets-g$g") ++ pairs.map(_ => "pairs" -> s"pairs-g$g")
     }
-  }
 
   /** d45: the oracle-gated composition — corpus = the 80% vec_id split,
     * delta = the 20%; build + persist the bucketed index, reload, run
@@ -1549,6 +1431,9 @@ object IncrementalContam {
   private def tableFor(dir: String): String =
     graft.runtime.IndexStore.tableFor("graft_contam_grams_", dir)
 
+  /** Write + PUBLISH (manifest generation 0, like every other index
+    * family; see [[IncrementalDedup.writeIndex]]).
+    */
   def writeIndex(idx: ContamIndex, dir: String, nBuckets: Int = 32): Unit = {
     val s = idx.grams.sparkSession
     val out = new java.io.FileOutputStream(s"$dir/bloom.bin")
@@ -1557,22 +1442,23 @@ object IncrementalContam {
     graft.runtime.Par.run( // independent writes — overlap (guide §2.6)
       () => graft.runtime.IndexStore.writeBucketed(idx.grams, nBuckets,
         s"$dir/grams", tableFor(dir), "overwrite", "gk"),
-      () => idx.spans.write.mode("overwrite").parquet(s"$dir/spans"),
-      () => s.range(1).selectExpr(s"$nBuckets AS n_buckets")
-        .write.mode("overwrite").parquet(s"$dir/meta"))
-    graft.runtime.MetaCache.invalidate(dir) // meta just (re)written
+      () => idx.spans.write.mode("overwrite").parquet(s"$dir/spans"))
+    IndexStatePublisher.publish(dir, IndexManifest(0L,
+      Map("bloom" -> "bloom.bin", "grams" -> "grams", "spans" -> "spans"), Map.empty,
+      Map("n_buckets" -> nBuckets)))
   }
 
   def readIndex(s: SparkSession, dir: String): ContamIndex = {
-    val nb = graft.runtime.MetaCache.row(s, dir).getInt(0)
-    val in = new java.io.FileInputStream(s"$dir/bloom.bin")
+    val m = IndexStatePublisher.current(dir)
+    val nb = m.geom(dir, "n_buckets")
+    val in = new java.io.FileInputStream(s"$dir/${m.path("bloom")}")
     val bloom =
       try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
       finally in.close()
     ContamIndex(bloom,
       graft.runtime.IndexStore.ensureBucketedTable(s, tableFor(dir),
-        "gk BIGINT", "gk", nb, s"$dir/grams"),
-      s.read.parquet(s"$dir/spans"))
+        "gk BIGINT", "gk", nb, s"$dir/${m.path("grams")}"),
+      s.read.parquet(s"$dir/${m.path("spans")}"))
   }
 
   /** d43: incremental corpus-append decontamination under the d29/d36

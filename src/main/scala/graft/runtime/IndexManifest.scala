@@ -27,14 +27,28 @@ final class IndexLockedException(dir: String, holder: String)
   * index directory. `epochs` counts the visible append-epoch
   * directories of epoch-appended artifacts (e.g. `pairs` with
   * epochs = 2 means `<pairs-dir>/epoch-0,1,2` are all visible).
+  * `geometry` holds the index family's fixed layout parameters (band
+  * count, bits, bucket count, ...) by name: written with generation 0
+  * and carried by every later generation, which is derived from its
+  * predecessor, so a reader gets the geometry from the same snapshot
+  * as the state it describes.
   */
 final case class IndexManifest(
     gen: Long,
     entries: Map[String, String],
-    epochs: Map[String, Int]) {
+    epochs: Map[String, Int],
+    geometry: Map[String, Int] = Map.empty) {
 
   def path(name: String): String = entries(name)
   def pathOpt(name: String): Option[String] = entries.get(name)
+
+  /** Geometry parameter `key`; fails loudly, naming the index, when the
+    * manifest does not record it (an index written before geometry
+    * moved into the manifest must be rebuilt).
+    */
+  def geom(dir: String, key: String): Int = geometry.getOrElse(key,
+    throw new IllegalStateException(s"index at $dir: manifest generation $gen " +
+      s"records no geometry `$key` — rebuild the index with its writeIndex"))
 
   /** Absolute paths of every visible epoch dir of artifact `name`. */
   def epochPaths(dir: String, name: String): Seq[String] =
@@ -65,7 +79,12 @@ final case class IndexManifest(
   *   - appended artifacts go to FRESH epoch directories
   *     (`pairs/epoch-K`), never into a dir a reader may be listing;
   *   - a tiny manifest file (`manifest/gen-%016d`) names the visible
-  *     state, written ONCE and immutable;
+  *     state, written ONCE and immutable: one `name=rel` line per
+  *     artifact, one `name.epochs=K` line per epoch-appended artifact,
+  *     one `geometry.key=N` line per geometry parameter (the index's
+  *     band count, bits, bucket count — so the layout a reader needs
+  *     publishes atomically with the state it describes), then an
+  *     `# end <n>` terminator counting all of those lines;
   *   - publication is a compare-and-swap on the generation file's
   *     existence. Two writers racing to publish generation N: exactly
   *     one wins, the other gets [[ConcurrentPublishException]].
@@ -133,6 +152,7 @@ object IndexStatePublisher {
   private val LockFile = "writer.lock"
   private val GenPattern = "^gen-(\\d{16})$".r
   private val EndMarker = "# end "
+  private val GeometryPrefix = "geometry."
 
   /** Default gc grace period: a generation superseded more recently
     * than this survives [[gc]], protecting readers that resolved it
@@ -298,20 +318,23 @@ object IndexStatePublisher {
       catch { case _: Exception => return None }
     var entries = Map.empty[String, String]
     var epochs = Map.empty[String, Int]
+    var geometry = Map.empty[String, Int]
     var complete = false
-    lines.foreach { l =>
+    try lines.foreach { l =>
       if (l.startsWith(EndMarker)) {
         complete = l.stripPrefix(EndMarker).trim.toIntOption
-          .contains(entries.size + epochs.size)
+          .contains(entries.size + epochs.size + geometry.size)
       } else l.split("=", 2) match {
         case Array(k, v) if k.endsWith(".epochs") =>
           epochs += (k.stripSuffix(".epochs") -> v.toInt)
+        case Array(k, v) if k.startsWith(GeometryPrefix) =>
+          geometry += (k.stripPrefix(GeometryPrefix) -> v.toInt)
         case Array(k, v) if k.nonEmpty && !k.startsWith("#") =>
           entries += (k -> v)
         case _ => ()
       }
-    }
-    if (complete) Some(IndexManifest(gen, entries, epochs)) else None
+    } catch { case _: NumberFormatException => return None } // cut mid-line
+    if (complete) Some(IndexManifest(gen, entries, epochs, geometry)) else None
   }
 
   /** The current manifest: the NEWEST generation file that parses as
@@ -334,7 +357,8 @@ object IndexStatePublisher {
 
   private def manifestBody(m: IndexManifest): Array[Byte] = {
     val kvs = m.entries.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" } ++
-      m.epochs.toSeq.sortBy(_._1).map { case (k, v) => s"$k.epochs=$v" }
+      m.epochs.toSeq.sortBy(_._1).map { case (k, v) => s"$k.epochs=$v" } ++
+      m.geometry.toSeq.sortBy(_._1).map { case (k, v) => s"$GeometryPrefix$k=$v" }
     (Seq(s"# graft index manifest generation ${m.gen}") ++ kvs ++
       Seq(s"$EndMarker${kvs.size}"))
       .mkString("", "\n", "\n").getBytes("UTF-8")
@@ -480,7 +504,7 @@ object IndexStatePublisher {
     * plus every generation whose SUCCESSOR manifest is younger than
     * `minAgeMs` (it stopped being current inside the grace window, so
     * an in-flight reader may still hold its paths). Keeps: the manifest
-    * dir, `meta`, the lock file, and every directory any retained
+    * dir, the lock file, and every directory any retained
     * manifest references (including all visible epoch dirs); for
     * top-level dirs with gen-/epoch- children, the referenced children
     * only. Manifest files of non-retained generations are dropped too.
@@ -520,7 +544,7 @@ object IndexStatePublisher {
     fs.listStatus(root).foreach { st =>
       val child = st.getPath
       val fn = child.getName
-      if (fn != ManifestDir && fn != "meta" && fn != LockFile &&
+      if (fn != ManifestDir && fn != LockFile &&
         !fn.startsWith(LockFile + ".broken-") && !referenced(child)) {
         fs.delete(child, true)
       } else if (st.isDirectory && fn != ManifestDir &&
@@ -528,7 +552,7 @@ object IndexStatePublisher {
         // top-level artifact dir with generation/epoch children: prune
         // the unreferenced children (e.g. labels/gen-0..N-1). ONLY
         // gen-/epoch- children are candidates — anything else (parquet
-        // part files of a leaf dir like `meta`) is data, not a version
+        // part files) is data, not a version
         fs.listStatus(child).foreach { sub =>
           val sn = sub.getPath.getName
           if ((sn.startsWith("gen-") || sn.startsWith("epoch-")) && !referenced(sub.getPath))

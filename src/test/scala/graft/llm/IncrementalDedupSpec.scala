@@ -295,8 +295,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
           IncrementalDedup.readIndex(spark, tmp).labels)
         .as[Long].collect().toSet
       IncrementalDedup.compactIndex(spark, tmp)
-      assert(graft.runtime.IndexStatePublisher.current(tmp).pathOpt("deleted").isEmpty,
+      val m = graft.runtime.IndexStatePublisher.current(tmp)
+      assert(m.pathOpt("deleted").isEmpty,
         "the compacted generation should publish no tombstone entry")
+      assert(m.geometry == Map("k" -> 32, "rows_per_band" -> 4, "n_buckets" -> 32),
+        s"geometry must survive delete and compaction: ${m.geometry}")
       val idx = IncrementalDedup.readIndex(spark, tmp)
       // the deleted rows are physically absent, not filter-hidden
       assert(idx.hashes.count() == 8L, "hashes should hold exactly the 8 survivors")

@@ -60,7 +60,10 @@ class IncrementalSemanticSpec extends AnyFunSuite {
           all.where(col("vec_id") % 7 =!= 3).select(col("vec_id").as("doc_id")), newLabels)
         .as[Long].collect().toSet
       IncrementalSemantic.compactIndex(spark, tmp)
-      assert(graft.runtime.IndexStatePublisher.current(tmp).pathOpt("deleted").isEmpty)
+      val m = graft.runtime.IndexStatePublisher.current(tmp)
+      assert(m.pathOpt("deleted").isEmpty)
+      assert(m.geometry == Map("n_buckets" -> 8, "n_tables" -> 8, "bits" -> 4),
+        s"geometry must survive delete and compaction: ${m.geometry}")
       val idx = IncrementalSemantic.readIndex(spark, tmp)
       assert(idx.buckets.filter(col("vec_id") % 7 === 3).count() == 0,
         "compaction left tombstoned bucket rows on disk")

@@ -93,6 +93,9 @@ class IncrementalSigSpec extends AnyFunSuite {
         tmp, 32, 4, nBuckets = 8)
       val del = docs.where(col("doc_id") % 7 === 3).select(col("doc_id"))
       IncrementalSig.deleteDocs(spark, tmp, del)
+      val geometry = Map("bits" -> 32, "n_bands" -> 4, "n_buckets" -> 8)
+      assert(graft.runtime.IndexStatePublisher.current(tmp).geometry == geometry,
+        "geometry must survive the delete publish")
       val idx = IncrementalSig.readIndex(spark, tmp)
       // deletion == full rerun on survivors (uncapped banding is
       // per-doc deterministic, so survivor pairs are exactly the
@@ -113,7 +116,9 @@ class IncrementalSigSpec extends AnyFunSuite {
       assert(appended == full, "empty append changed the tombstone-filtered answer")
       // compaction: same answer, tombstones physically gone
       IncrementalSig.compactIndex(spark, tmp)
-      assert(graft.runtime.IndexStatePublisher.current(tmp).pathOpt("deleted").isEmpty)
+      val m = graft.runtime.IndexStatePublisher.current(tmp)
+      assert(m.pathOpt("deleted").isEmpty)
+      assert(m.geometry == geometry, s"geometry must survive compaction: ${m.geometry}")
       val idx2 = IncrementalSig.readIndex(spark, tmp)
       assert(idx2.pairs.as[(Long, Long, Int)].collect().toSet == full,
         "compaction changed the pair answer")

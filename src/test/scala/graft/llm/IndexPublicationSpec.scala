@@ -355,17 +355,26 @@ class IndexPublicationSpec extends AnyFunSuite {
   test("a torn or empty max-gen manifest falls back to the newest complete generation") {
     val tmp = java.nio.file.Files.createTempDirectory("tornmanifest").toString
     try {
+      val geometry = Map("n_buckets" -> 8, "bits" -> 4)
       IndexStatePublisher.publish(tmp,
-        IndexManifest(0L, Map("labels" -> "labels/gen-0"), Map.empty))
+        IndexManifest(0L, Map("labels" -> "labels/gen-0"), Map.empty, geometry))
       // a crashed publisher's corpse: gen-1 exists but is truncated
       // mid-write (no `# end` terminator) — and an empty gen-2
       val md = java.nio.file.Paths.get(tmp, "manifest")
       java.nio.file.Files.write(md.resolve(f"gen-${1L}%016d"),
         "# graft index manifest generation 1\nlabels=labels/gen".getBytes("UTF-8"))
       java.nio.file.Files.write(md.resolve(f"gen-${2L}%016d"), Array.empty[Byte])
+      // max-gen files cut off inside their geometry lines: after a
+      // key's `=` and inside a key
+      val head = "# graft index manifest generation %d\nlabels=labels/gen-%d\ngeometry.bits=4\n"
+      java.nio.file.Files.write(md.resolve(f"gen-${3L}%016d"),
+        (head.format(3, 3) + "geometry.n_buckets=").getBytes("UTF-8"))
+      java.nio.file.Files.write(md.resolve(f"gen-${4L}%016d"),
+        (head.format(4, 4) + "geometry.n_buc").getBytes("UTF-8"))
       val cur = IndexStatePublisher.current(tmp)
       assert(cur.gen == 0L && cur.path("labels") == "labels/gen-0",
         "reader must skip incomplete manifests and fall back")
+      assert(cur.geometry == geometry, s"geometry must round-trip: ${cur.geometry}")
       // a YOUNG incomplete same-gen file is NOT healed (r18 ADVICE #1):
       // it may be a live writer mid-flush on a visible-before-complete
       // scheme — healing it would let two same-gen writers both win
@@ -382,6 +391,17 @@ class IndexPublicationSpec extends AnyFunSuite {
       IndexStatePublisher.publish(tmp,
         IndexManifest(1L, Map("labels" -> "labels/gen-1"), Map.empty))
       assert(IndexStatePublisher.current(tmp).path("labels") == "labels/gen-1")
+      // gen 1 records no geometry: every family's reader fails loudly,
+      // naming the index, instead of guessing a layout
+      Seq[() => Any](
+        () => IncrementalDedup.readIndex(spark, tmp),
+        () => IncrementalSig.readIndex(spark, tmp),
+        () => IncrementalSemantic.readIndex(spark, tmp),
+        () => IncrementalContam.readIndex(spark, tmp)).foreach { read =>
+        val ex = intercept[IllegalStateException](read())
+        assert(ex.getMessage.contains(tmp) && ex.getMessage.contains("geometry"),
+          s"unhelpful geometry failure: ${ex.getMessage}")
+      }
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }

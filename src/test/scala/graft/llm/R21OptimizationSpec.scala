@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.mr.TestSession
 
-/** Focused pins for the round-21 optimization internals: the per-dir
-  * meta-read cache ([[graft.runtime.MetaCache]]), the enriched
-  * [[graft.runtime.Par]] failure contract (suppressed siblings), the
+/** Focused pins for the round-21 optimization internals: index
+  * geometry read from the published manifest (no Spark job, no `meta`
+  * dir), the enriched [[graft.runtime.Par]] failure contract
+  * (suppressed siblings), the
   * resolve-before-write delete paths (deleteVectors / deleteFromIndex
   * return labels identical to the published artifact), and the
   * CpSlot-compatible checkpoint clamp (clamped frames keep the bare
@@ -16,23 +17,81 @@ class R21OptimizationSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
-  test("MetaCache: caches per dir, invalidate picks up a rewrite") {
-    val dir = graft.runtime.IndexStore.tempIndexDir("graft-metacache")
-    spark.range(1).selectExpr("42 AS n_buckets", "8 AS n_tables", "4 AS bits")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    graft.runtime.MetaCache.invalidate(dir)
-    val r1 = graft.runtime.MetaCache.row(spark, dir)
-    assert(r1.getInt(0) == 42 && r1.getInt(1) == 8 && r1.getInt(2) == 4)
-    // second read is served from the cache: the SAME Row instance
-    val r2 = graft.runtime.MetaCache.row(spark, dir)
-    assert(r1 eq r2, "second meta read must hit the cache")
-    // a rewrite + invalidate is visible; without invalidate it would not be
-    spark.range(1).selectExpr("7 AS n_buckets", "8 AS n_tables", "4 AS bits")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    assert(graft.runtime.MetaCache.row(spark, dir).getInt(0) == 42,
-      "stale-by-design until invalidated")
-    graft.runtime.MetaCache.invalidate(dir)
-    assert(graft.runtime.MetaCache.row(spark, dir).getInt(0) == 7)
+  /** The Spark jobs `body` starts, counted by a listener over a unique
+    * job group. A sentinel job in the same group closes the count: the
+    * listener bus delivers in order, so once the sentinel's start has
+    * arrived every job `body` started has been counted.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
+    val sentinel = s"$group-sentinel"
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        if (p.exists(_.getProperty("spark.jobGroup.id") == group)) {
+          if (p.exists(_.getProperty("spark.job.description") == sentinel)) done.countDown()
+          else seen.incrementAndGet()
+        }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "geometry probe")
+      val out =
+        try {
+          val r = body
+          spark.sparkContext.setJobDescription(sentinel)
+          spark.range(1).count()
+          r
+        } finally spark.sparkContext.clearJobGroup()
+      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS), "sentinel job never arrived")
+      (out, seen.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("manifest geometry: zero-job read, as written, no meta dir") {
+    val docs = (0L until 60L).map(i => (i, s"topic ${i % 7} note ${i % 5} body ${i % 3}"))
+      .toDF("doc_id", "text").transform(graft.runtime.Ckpt.eager)
+    val sigs = docs
+      .select(col("doc_id"), graft.functions.SimHashSig(col("text"), 32).as("sig"))
+      .transform(graft.runtime.Ckpt.eager)
+    val vecs = (0L until 60L)
+      .map(i => (i, Array.tabulate(16)(j => math.sin(i % 9 + j * 0.7).toFloat)))
+      .toDF("vec_id", "embedding")
+      .withColumn("nrm", sqrt(graft.functions.FloatVecDot(col("embedding"), col("embedding"))))
+    val corpusE = IncrementalSemantic.withSigs(vecs, 8, 4).transform(graft.runtime.Ckpt.eager)
+    val grams = Seq(1L, 2L, 3L).toDF("gk")
+    val bloom = org.apache.spark.util.sketch.BloomFilter.create(16)
+    val writes: Seq[(String, String => Unit, Map[String, Int])] = Seq(
+      ("dedup", dir => IncrementalDedup.writeIndex(
+          IncrementalDedup.buildIndex(docs, rowsPerBand = 4), dir,
+          k = 32, rowsPerBand = 4, nBuckets = 8),
+        Map("k" -> 32, "rows_per_band" -> 4, "n_buckets" -> 8)),
+      ("sig", dir => IncrementalSig.writeIndex(sigs,
+          IncrementalSig.buildPairs(sigs, 32, 4, 7), dir, 32, 4, nBuckets = 6),
+        Map("bits" -> 32, "n_bands" -> 4, "n_buckets" -> 6)),
+      ("semantic", dir => IncrementalSemantic.writeIndex(corpusE,
+          DedupResolve.resolveClusters(IncrementalSemantic.corpusPairs(corpusE)), dir,
+          nBuckets = 5, nTables = 8, bits = 4),
+        Map("n_buckets" -> 5, "n_tables" -> 8, "bits" -> 4)),
+      ("contam", dir => IncrementalContam.writeIndex(
+          IncrementalContam.ContamIndex(bloom, grams, Seq((1L, 0, 7)).toDF("doc_id",
+            "span_start", "span_end")), dir, nBuckets = 4),
+        Map("n_buckets" -> 4)))
+    writes.foreach { case (family, write, expected) =>
+      val dir = java.nio.file.Files.createTempDirectory(s"geom-$family").toString
+      try {
+        write(dir)
+        val (geometry, jobs) = jobsOf(graft.runtime.IndexStatePublisher.current(dir).geometry)
+        assert(jobs == 0, s"$family: resolving geometry ran $jobs Spark jobs")
+        assert(geometry == expected, s"$family: manifest geometry $geometry")
+        assert(!new java.io.File(s"$dir/meta").exists(), s"$family: a meta dir was written")
+      } finally {
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      }
+    }
   }
 
   test("Par.run: sibling failures are attached as suppressed, not swallowed") {

@@ -46,6 +46,8 @@ class RebuildLedgeredSpec extends AnyFunSuite {
       assert(m.pathOpt("deleted").isEmpty, "tombstone entry must be dropped")
       assert(m.epochs("pairs") == 0 && m.epochs("capledger") == 0,
         s"history must collapse to epoch 0: ${m.epochs}")
+      val geometry = Map("bits" -> 32, "n_bands" -> 8, "n_buckets" -> 8)
+      assert(m.geometry == geometry, s"geometry must survive every publish: ${m.geometry}")
       val surv = docs.where(col("doc_id") % 3 <= 1 && col("doc_id") % 7 =!= 3)
       val rebuilt = IncrementalSig.readIndex(spark, tmp).pairs
         .as[(Long, Long, Int)].collect().toSet
@@ -69,6 +71,7 @@ class RebuildLedgeredSpec extends AnyFunSuite {
         .as[(Long, Long, Int)].collect().toSet
       assert(artifact == replay,
         s"post-rebuild append broke the replay: ${artifact.size} vs ${replay.size}")
+      assert(IndexStatePublisher.current(tmp).geometry == geometry)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }
@@ -100,6 +103,8 @@ class RebuildLedgeredSpec extends AnyFunSuite {
       IncrementalDedup.rebuildLedgered(spark, tmp, surv, IncrementalDedup.LedgerCap)
       val m = IndexStatePublisher.current(tmp)
       assert(m.pathOpt("deleted").isEmpty && m.epochs("capledger") == 0)
+      assert(m.geometry == Map("k" -> 32, "rows_per_band" -> 4, "n_buckets" -> 8),
+        s"geometry must survive every publish: ${m.geometry}")
       val rebuilt = DedupResolve.keptFromLabels(surv.select(col("doc_id")),
           IncrementalDedup.readIndex(spark, tmp).labels)
         .as[Long].collect().toSet
@@ -140,6 +145,8 @@ class RebuildLedgeredSpec extends AnyFunSuite {
       IncrementalSemantic.rebuildLedgered(spark, tmp, surv, survCap)
       val m = IndexStatePublisher.current(tmp)
       assert(m.pathOpt("deleted").isEmpty && m.epochs("capledger") == 0)
+      val geometry = Map("n_buckets" -> 8, "n_tables" -> 8, "bits" -> 4)
+      assert(m.geometry == geometry, s"geometry must survive every publish: ${m.geometry}")
       val rebuilt = DedupResolve.keptFromLabels(
           surv.select(col("vec_id").as("doc_id")),
           IncrementalSemantic.readIndex(spark, tmp).labels)
@@ -157,6 +164,7 @@ class RebuildLedgeredSpec extends AnyFunSuite {
         surv.unionByName(all.filter(col("vec_id") % 3 === 2)),
         all.filter(col("vec_id") % 3 === 2), bucketCap = survCap)
       assert(IndexStatePublisher.current(tmp).epochs("capledger") == 1)
+      assert(IndexStatePublisher.current(tmp).geometry == geometry)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }
