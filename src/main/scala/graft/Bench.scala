@@ -31,6 +31,14 @@ object Bench {
     pieces.take(pieces.scanLeft(0)(_ + _.length).tail.takeWhile(_ <= n).length).mkString
   }
 
+  /** Where the full per-query record goes: `SPARK_GRAFT_BENCH_FILE`, else
+    * `BENCH_local_latest.json`. A subset run (`SPARK_GRAFT_BENCH_ONLY`)
+    * writes only to an explicitly named file, so timing a few queries
+    * cannot overwrite the full-inventory record.
+    */
+  private[graft] def recordFile(only: Option[String], file: Option[String]): Option[String] =
+    if (only.exists(_.nonEmpty)) file else Some(file.getOrElse("BENCH_local_latest.json"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -115,7 +123,12 @@ object Bench {
 
     // local-iteration filter: comma-separated name prefixes (e.g.
     // "t20,t21,d39"). The driver never sets it — full inventory.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
+    val onlyEnv = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+    val only = onlyEnv.map(_.split(",").toSet)
+    val outFile = recordFile(onlyEnv, sys.env.get("SPARK_GRAFT_BENCH_FILE"))
+    if (outFile.isEmpty)
+      System.err.println("[bench] SPARK_GRAFT_BENCH_ONLY is set and SPARK_GRAFT_BENCH_FILE " +
+        "is not: this subset run prints its line but writes no file record")
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.exists(n.startsWith)))
     // JVM/classloader warmup on the smallest SF so per-query numbers
@@ -239,11 +252,12 @@ object Bench {
     println(stdoutLine)
     // the full line goes to a file: the durable per-query record
     // (r14 VERDICT ask #3).
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILE", "BENCH_local_latest.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (fileLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Exception =>
-      System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")
+    outFile.foreach { f =>
+      try java.nio.file.Files.write(java.nio.file.Paths.get(f),
+        (fileLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      catch { case e: Exception =>
+        System.err.println(s"[bench] could not write $f: ${e.getMessage}")
+      }
     }
     spark.stop()
   }

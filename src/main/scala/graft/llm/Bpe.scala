@@ -121,8 +121,8 @@ object Bpe {
 
   /** `(word, cnt, seq)` — the word-frequency table with the initial
     * character-level symbol encoding. The ONE corpus-scale pass.
-    * (private[graft]: the scale harness's full-reaggregation A/B arm
-    * rebuilds the pre-delta learn loop from these pieces.)
+    * (private[graft]: the arm-agreement spec feeds it to both forced
+    * arms, [[learnFullArm]] and [[learnDeltaArm]].)
     */
   private[graft] def wordSeqs(docs: DataFrame): DataFrame =
     encodeSeqs(
@@ -130,11 +130,8 @@ object Bpe {
         .select(explode(Hashing.tokens(col("text"))).as("word"))
         .groupBy("word").agg(count(lit(1)).as("cnt")))
 
-  /** Marker-encode a (word, cnt) table into (word, cnt, seq). Factored
-    * out so the ScaleBench `bperegime` probe can learn over a SYNTHETIC
-    * word table (≥10⁶ distinct words, zipf counts) without a corpus.
-    */
-  private[graft] def encodeSeqs(words: DataFrame): DataFrame =
+  /** Marker-encode a (word, cnt) table into (word, cnt, seq). */
+  private def encodeSeqs(words: DataFrame): DataFrame =
     words
       // '~c1~c2~…~cn~': $1-backreference inserts a trailing ~ per char.
       // (?s) DOTALL is load-bearing for cross-engine parity: without it,
@@ -421,15 +418,13 @@ object Bpe {
     * generation, already rotated into `seqSlot` by the caller (the
     * corpus is read exactly once, at that checkpoint).
     */
-  private def learnLoopFull(seqSlot: CpSlot, seqDf0: DataFrame, maxMerges: Int,
-      onRound: (Int, Long, Double) => Unit): LoopState = {
+  private def learnLoopFull(seqSlot: CpSlot, seqDf0: DataFrame): LoopState = {
     var seqDf = seqDf0
     val merges = scala.collection.mutable.ArrayBuffer.empty[Learned]
     var pending: Option[(String, String)] = None
     var k = 1
     var exhausted = false
-    while (k <= maxMerges && !exhausted) {
-      val t0 = System.nanoTime()
+    while (k <= Merges && !exhausted) {
       val best = pairAgg(seqDf)
         .orderBy(col("pc").desc, col("a").asc, col("b").asc)
         .limit(1).collect()
@@ -439,22 +434,12 @@ object Bpe {
         require(!a.contains("~") && !b.contains("~") && !a.contains("|") && !b.contains("|"),
           s"reserved char leaked into a symbol: '$a','$b'")
         merges += Learned(k, a, b, c)
-        val argWall = (System.nanoTime() - t0) / 1e9
-        // scale-harness probe: affected-word count (the extra count job
-        // runs ONLY when instrumented, and OUTSIDE the timed spans — the
-        // reported wall is argmax + rewrite, the algorithm's own cost)
-        val hitCount =
-          if (onRound == null) -1L
-          else seqDf.where(col("seq").contains(s"~$a~$b~")).count()
-        val t1 = System.nanoTime()
-        if (k < maxMerges) {
+        if (k < Merges) {
           val pat = s"~$a~$b~"
           seqDf = seqSlot.rotate(seqDf.select(col("word"), col("cnt"),
             when(col("seq").contains(pat), applyMerge(col("seq"), a, b))
               .otherwise(col("seq")).as("seq")))
         } else pending = Some((a, b))
-        if (onRound != null)
-          onRound(k, hitCount, argWall + (System.nanoTime() - t1) / 1e9)
       }
       k += 1
     }
@@ -466,15 +451,13 @@ object Bpe {
     * below it, delta maintenance above. The deciding count scans the
     * fresh checkpoint (block-manager read, vocab-sized).
     */
-  private def learnLoopAuto(seqs0: DataFrame, maxMerges: Int,
-      onRound: (Int, Long, Double) => Unit,
-      deltaArmWords: Long): LoopState = {
+  private def learnLoopAuto(seqs0: DataFrame, deltaArmWords: Long): LoopState = {
     val seqSlot = new CpSlot
     val seqDf0 = seqSlot.rotate(seqs0)
     if (seqDf0.count() >= deltaArmWords)
-      learnLoopDelta(seqSlot, seqDf0, maxMerges, onRound)
+      learnLoopDelta(seqSlot, seqDf0)
     else
-      learnLoopFull(seqSlot, seqDf0, maxMerges, onRound)
+      learnLoopFull(seqSlot, seqDf0)
   }
 
   /** The merge loop, zero-residue posture: releases the word-table
@@ -485,9 +468,8 @@ object Bpe {
     * it; callers that DO consume it belong on [[learnRetained]].
     */
   private[graft] def learnDf(s: SparkSession, docs: DataFrame,
-      onRound: (Int, Long, Double) => Unit = null,
       deltaArmWords: Long = DeltaArmWords): (Seq[Learned], DataFrame) = {
-    val st = learnLoopAuto(wordSeqs(docs), Merges, onRound, deltaArmWords)
+    val st = learnLoopAuto(wordSeqs(docs), deltaArmWords)
     st.slot.release()
     val learnedPairs = st.merges.map(m => (m.a, m.b))
     (st.merges,
@@ -512,12 +494,11 @@ object Bpe {
     * Single-consumption: see the class doc.
     */
   private[graft] def learnRetained(s: SparkSession, docs: DataFrame,
-      onRound: (Int, Long, Double) => Unit = null,
       deltaArmWords: Long = DeltaArmWords): (Seq[Learned], DataFrame) = {
     // fallback release of a PREVIOUS retained table nobody consumed —
     // see [[pendingRetained]]
     drainPendingRetained(s)
-    val st = learnLoopAuto(wordSeqs(docs), Merges, onRound, deltaArmWords)
+    val st = learnLoopAuto(wordSeqs(docs), deltaArmWords)
     val fin0 = st.pending match {
       case Some((a, b)) =>
         st.seqDf.select(col("word"), col("cnt"), applyMerge(col("seq"), a, b).as("seq"))
@@ -530,24 +511,23 @@ object Bpe {
   }
 
   /** Full-re-agg arm over a prebuilt (word, cnt, seq) table, merges
-    * only — the ScaleBench `bpelearn:full` / `bperegime:full` surface
-    * (forces the arm regardless of [[DeltaArmWords]]).
+    * only, forcing the arm regardless of [[DeltaArmWords]] — the
+    * `bpelearn:full` / `bperegime:full` arm of the crossover measurement
+    * (SCALING.md §3g, SCALE_RESULTS_r15.jsonl).
     */
-  private[graft] def learnFullArm(seqs0: DataFrame, maxMerges: Int = Merges,
-      onRound: (Int, Long, Double) => Unit = null): Seq[Learned] = {
+  private[graft] def learnFullArm(seqs0: DataFrame): Seq[Learned] = {
     val slot = new CpSlot
-    val st = learnLoopFull(slot, slot.rotate(seqs0), maxMerges, onRound)
+    val st = learnLoopFull(slot, slot.rotate(seqs0))
     st.slot.release()
     st.merges
   }
 
-  /** Delta arm over a prebuilt table, merges only — the ScaleBench
-    * `bpelearn:inc` / `bperegime:inc` surface (forces the arm).
+  /** Delta arm over a prebuilt table, merges only, forcing the arm — the
+    * `bpelearn:inc` / `bperegime:inc` arm of the same measurement.
     */
-  private[graft] def learnDeltaArm(seqs0: DataFrame, maxMerges: Int = Merges,
-      onRound: (Int, Long, Double) => Unit = null): Seq[Learned] = {
+  private[graft] def learnDeltaArm(seqs0: DataFrame): Seq[Learned] = {
     val slot = new CpSlot
-    val st = learnLoopDelta(slot, slot.rotate(seqs0), maxMerges, onRound)
+    val st = learnLoopDelta(slot, slot.rotate(seqs0))
     st.slot.release()
     st.merges
   }
@@ -564,8 +544,7 @@ object Bpe {
     * maintained checkpoint. Output byte-identical to the full arm by
     * pair-count additivity (BpeSpec A/B pin).
     */
-  private def learnLoopDelta(seqSlot: CpSlot, seqDf0: DataFrame, maxMerges: Int,
-      onRound: (Int, Long, Double) => Unit): LoopState = {
+  private def learnLoopDelta(seqSlot: CpSlot, seqDf0: DataFrame): LoopState = {
     val pairSlot = new CpSlot
     var seqDf = seqDf0
     // the ONE full pair aggregation; every later round folds deltas
@@ -574,8 +553,7 @@ object Bpe {
     var pending: Option[(String, String)] = None
     var k = 1
     var exhausted = false
-    while (k <= maxMerges && !exhausted) {
-      val t0 = System.nanoTime()
+    while (k <= Merges && !exhausted) {
       val best = pairs
         .orderBy(col("pc").desc, col("a").asc, col("b").asc)
         .limit(1).collect()
@@ -585,12 +563,7 @@ object Bpe {
         require(!a.contains("~") && !b.contains("~") && !a.contains("|") && !b.contains("|"),
           s"reserved char leaked into a symbol: '$a','$b'")
         merges += Learned(k, a, b, c)
-        val argWall = (System.nanoTime() - t0) / 1e9
-        val hitCount =
-          if (onRound == null) -1L
-          else seqDf.where(col("seq").contains(s"~$a~$b~")).count()
-        val t1 = System.nanoTime()
-        if (k < maxMerges) {
+        if (k < Merges) {
           // hit reads the CHECKPOINTED seqDf (block-manager scans); the
           // −cnt/+cnt union runs through ONE pairAgg shuffle
           val pat = s"~$a~$b~"
@@ -607,8 +580,6 @@ object Bpe {
             when(col("seq").contains(pat), applyMerge(col("seq"), a, b))
               .otherwise(col("seq")).as("seq")))
         } else pending = Some((a, b))
-        if (onRound != null)
-          onRound(k, hitCount, argWall + (System.nanoTime() - t1) / 1e9)
       }
       k += 1
     }

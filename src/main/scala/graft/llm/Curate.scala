@@ -156,11 +156,12 @@ object Curate {
     curateV3Df(Tables.documents(s, dir), minTokens, quota, seqTokens,
       repK, repMax, nShards)
 
-  /** Stages 0–3b of the v3 chain: scrub, then the repetition cut —
-    * text-free and PRE-quota. Exposed (package-private) because the
-    * post-quota pipeline output MASKS this stage's effect: per-source
-    * quota refill replaces cut docs with lower-ranked survivors, so a
-    * harness that wants the true cut count must measure here.
+  /** The repetition cut (stage 3b) over an ALREADY-scrubbed frame —
+    * text-free and PRE-quota (v3 feeds it [[scrubScored]] directly, v4
+    * inserts the learned gate between scrub and this stage). The
+    * post-quota output MASKS the cut: per-source quota refill replaces
+    * cut docs with lower-ranked survivors. `extraCols` carries v4's
+    * evidence columns through the text-dropping select.
     *
     * explode(array(...)) = the same t05 pushdown barrier scrubScored
     * installs for the quality score: the repetition-cut filter below
@@ -170,14 +171,6 @@ object Curate {
     * round-11 d37 hang was exactly that: a 12 KB inlined Filter
     * re-running the scrub per candidate position. Behind the fence the
     * kernel runs once per scrubbed row.
-    */
-  private[graft] def repCutStage(docs: DataFrame, minTokens: Int,
-      repK: Int, repMax: Double): DataFrame =
-    repCutFrom(scrubScored(docs, minTokens), repK, repMax)
-
-  /** The repetition cut over an ALREADY-scrubbed frame (v4 inserts the
-    * learned gate between scrub and this stage). `extraCols` carries
-    * v4's evidence columns through the text-dropping select.
     */
   private def repCutFrom(scrubbed: DataFrame, repK: Int, repMax: Double,
       extraCols: Seq[String] = Nil): DataFrame =
@@ -193,7 +186,7 @@ object Curate {
   def curateV3Df(docs: DataFrame, minTokens: Int = 8,
       quota: Int = 12, seqTokens: Int = 256, repK: Int = 3,
       repMax: Double = 0.1, nShards: Int = 4): DataFrame = {
-    quotaPack(repCutStage(docs, minTokens, repK, repMax), quota, seqTokens)
+    quotaPack(repCutFrom(scrubScored(docs, minTokens), repK, repMax), quota, seqTokens)
       .withColumn("shard", pmod(Hashing.hash60(
           concat(lit("epoch0:"), col("source"), lit("#"),
             col("seq_no").cast("string"))),
@@ -299,12 +292,11 @@ object Curate {
         explode(array(
           LearnedQuality.featureExprsFor("nbst", "rtext"): _*)).as("f")))
 
-  /** Stages 0–3′ (scrub → learned gate), text still carried — exposed
-    * package-private for the same reason as [[repCutStage]]: the
-    * post-quota output MASKS the gate's activity (quota refill), so a
-    * measurement harness reads the cut at its own stage.
+  /** Stages 0–3′ (scrub → learned gate), text still carried. The
+    * post-quota output MASKS the gate's activity (quota refill), so the
+    * cut is only visible at this stage (SCALING.md §3f).
     */
-  private[graft] def nbGatedStage(docs: DataFrame, minTokens: Int,
+  private def nbGatedStage(docs: DataFrame, minTokens: Int,
       approxTeacher: Boolean = false): DataFrame = {
     val scrubbed = scrubScored(docs, minTokens).transform(graft.runtime.Ckpt.eager)
     val thr =

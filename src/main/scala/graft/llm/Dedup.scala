@@ -149,11 +149,12 @@ object Dedup {
         .select(col("doc_id"), graft.functions.MinHashSig(col("text"), 5, k).as("sig")),
       k, rowsPerBand, bucketCap)
 
-  /** The band self-join over an arbitrary (doc_id, sig) source — lets the
-    * scale harness A/B alternative signature constructions (e.g.
-    * [[graft.functions.MinHashSigPB]]) through the IDENTICAL join.
+  /** The band self-join over an arbitrary (doc_id, sig) source — shared
+    * by the candidate stage ([[bandedMinhashPairs]]) and the verified
+    * ladder over a caller-supplied signature frame
+    * ([[lshVerifiedPairsFromSigs]]), so both run the IDENTICAL join.
     */
-  private[graft] def bandedPairsFrom(
+  private def bandedPairsFrom(
       sig: DataFrame,
       k: Int,
       rowsPerBand: Int,

@@ -27,9 +27,9 @@ object DedupResolve {
 
   /** [[resolveClusters]] plus the number of rounds the propagation ran —
     * at scale the ROUND COUNT is the cost of resolution (each round is a
-    * full join+agg over the edge set), so the scale harness
-    * ([[graft.tools.ScaleBench]]) records it per corpus size to verify
-    * the O(log diameter) claim empirically.
+    * full join+agg over the edge set). The ×10/×50 runs recorded it per
+    * corpus size and chain length to verify the O(log diameter) claim
+    * (SCALING.md §3b, SCALE_RESULTS_r08.jsonl).
     */
   def resolveClustersCounted(pairs: DataFrame, maxIter: Int = 20): (DataFrame, Int) = {
     // ONE pass over the pair source emits both edge directions (explode
@@ -55,7 +55,7 @@ object DedupResolve {
     // only decrease toward the component min), so the fixpoint — and
     // therefore every caller-visible answer — is unchanged; iter starts
     // at 1 so the reported round count keeps meaning "propagation
-    // rounds run" for the scale harness's O(log diameter) record.
+    // rounds run" for the O(log diameter) record.
     var labels = edges.groupBy(col("src"))
       .agg(min(col("dst")).as("nbr_min"))
       .select(col("src").as("id"),

@@ -128,9 +128,9 @@ import graft.runtime.{IndexLifecycle, IndexManifest, IndexStatePublisher, IndexS
   * is inherent to capping + increments: capped production appends are
   * APPEND-CONSISTENT (each answer extends the previous run's), not
   * rerun-consistent — see SCALING.md §3h. The cap is a recall knob, as
-  * in d21/d25; the ScaleBench `incdedup` mode MEASURES the resulting
-  * kept-set drift at ×500 instead of hand-waving it, and its uncapped
-  * arm certifies set_diff = 0 where the equivalence claim is exact.
+  * in d21/d25; the resulting kept-set drift was MEASURED at ×500
+  * (SCALING.md §3g, `incdedup` rows of SCALE_RESULTS_r15.jsonl), and the
+  * uncapped arm certified set_diff = 0 where the equivalence is exact.
   */
 object IncrementalDedup {
 
@@ -244,8 +244,8 @@ object IncrementalDedup {
   private def bandTable(loc: String) = IndexStore.tableFor("graft_inc_bands_", loc)
   private def bcntTable(loc: String) = IndexStore.tableFor("graft_inc_bcnt_", loc)
 
-  /** Write the artifacts (the real persistence surface the ScaleBench
-    * `incdedup` mode and the d39/d46/d47 gates measure through) and
+  /** Write the artifacts (the real persistence surface the d39/d46/d47
+    * gates measure through) and
     * PUBLISH them as manifest generation 0 ([[IndexStatePublisher]] —
     * r16 VERDICT #1: readers resolve the manifest and then touch only
     * immutable directories, so no concurrent mutation can tear a read).

@@ -95,21 +95,6 @@ object Similarity {
       |  FROM p)
       |WHERE rnk <= 5""".stripMargin
 
-  /** [[bruteKnn]] over explicit frames — the ground-truth arm of the
-    * ScaleBench recall measurements (`incvec`): exact cosine top-k of
-    * each `q` row (qid, qv, qn) against all of `e` (vec_id, embedding,
-    * nrm). Queries broadcast; the corpus side is one scan.
-    */
-  private[graft] def bruteKnnOn(e: DataFrame, q: DataFrame, k: Int): DataFrame = {
-    val pairs = e.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .withColumn("cos", dotCol / (col("qn") * col("nrm")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id").asc)
-    pairs
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("vec_id").as("nid"), col("rnk"))
-  }
-
   /** Int8 scalar-quantized exact kNN (d30) — the memory-compression arm
     * of the ANN family. Normalize-then-quantize, the production cosine
     * recipe: each vector is L2-normalized, then every coordinate maps to
@@ -558,8 +543,8 @@ object Similarity {
     * (64 bytes packed vs ~8× as `array<int>`). Ranking is unchanged
     * (same integer dots through [[graft.functions.BinVecDot]]), so the
     * oracle is d31's layout-independent SQL at the same grid point; the
-    * byte-traffic delta is measured by ScaleBench's `sq8pack` mode, not
-    * asserted from the schema.
+    * byte-traffic delta was measured at ×500 (`sq8pack` rows of
+    * SCALE_RESULTS_r11.jsonl), not asserted from the schema.
     */
   def ivfSq8KnnPacked(
       s: SparkSession,
@@ -751,21 +736,18 @@ object Similarity {
   private[graft] def buildIvfSq8IndexFrom(e: DataFrame, nCells: Int, sampleN: Int): IvfSq8Index =
     buildIvfSq8IndexWith(e, ivfCentroids(e, nCells, sampleN))
 
-  /** Index build over EXPLICIT centroids — the seam the ScaleBench
-    * `incvec` retrain arm needs: [[ivfCentroids]] seeds and samples by
-    * the LOW vec_ids (a deterministic, oracle-replayable convention), so
-    * "retraining" over corpus ∪ delta would sample only the old corpus
-    * and silently reproduce the frozen quantizer; the measurement trains
-    * centroids on an id-remapped view and assigns the real ids here.
+  /** Index build over EXPLICIT centroids — the seam the retrain path
+    * needs: [[ivfCentroids]] seeds and samples by the LOW vec_ids (a
+    * deterministic, oracle-replayable convention), so "retraining" over
+    * corpus ∪ delta would sample only the old corpus and silently
+    * reproduce the frozen quantizer; the retrain trains centroids on an
+    * id-remapped view and assigns the real ids here (SCALING.md §3i).
     */
-  private[graft] def buildIvfSq8IndexWith(e: DataFrame, cent: DataFrame): IvfSq8Index = {
+  private def buildIvfSq8IndexWith(e: DataFrame, cent: DataFrame): IvfSq8Index = {
     val cells = ivfRanked(e, cent).filter(col("r") === 1)
       .select(col("vec_id"), col("cid").as("cell"))
     IvfSq8Index(cent, cells, sq8CodesOf(e))
   }
-
-  private[graft] def ivfCentroidsOf(e: DataFrame, nCells: Int, sampleN: Int): DataFrame =
-    ivfCentroids(e, nCells, sampleN)
 
   /** The one SQ8 packed-code formula (normalize → ×127 → round → pack)
     * — shared by index build and the d44 delta append so the two paths
@@ -857,13 +839,14 @@ object Similarity {
     *     hash-interleaved sample ([[ivfCentroids]] seeds/samples by
     *     LOW vec_id, and the accumulated corpus's low ids are all old
     *     corpus — training on them would silently reproduce the frozen
-    *     quantizer, the ScaleBench `incvecc` lesson; the sample is a
-    *     distributed TakeOrdered by hashed id, renumbered only within
-    *     its ≤ sampleN rows, so no corpus-wide single-partition sort),
-    *     fresh cells/codes epoch-0 directories, manifest CAS. The ×500
-    *     `incvecc` campaign certifies the paired retrain+retune
-    *     dominates the frozen index on both serve wall and recall at
-    *     ratios ≥ 1 (enforced by a require in the harness since r19).
+    *     quantizer, the clustered-drift lesson of SCALING.md §3k; the
+    *     sample is a distributed TakeOrdered by hashed id, renumbered
+    *     only within its ≤ sampleN rows, so no corpus-wide
+    *     single-partition sort), fresh cells/codes epoch-0 directories,
+    *     manifest CAS. The ×500 clustered-drift campaign measured the
+    *     paired retrain+retune dominating the frozen index on both serve
+    *     wall and recall at ratios ≥ 1 (SCALING.md §3k, `incvec` rows of
+    *     SCALE_RESULTS_r18.jsonl).
     *
     * `allE` is the accumulated corpus as (vec_id, embedding, nrm); a
     * count guard cross-checks it against the artifact row count.
@@ -998,13 +981,13 @@ object Similarity {
     * table, quantization is a per-row map — nothing touches the corpus
     * side but the artifact append itself.
     */
-  /** Frozen-quantizer append (the d44 contract, shared by the gate and
-    * the ScaleBench `incvec` arm): assign the delta to the index's
+  /** Frozen-quantizer append (the d44 contract; its ×500 recall curve is
+    * SCALING.md §3i): assign the delta to the index's
     * EXISTING centroids (the same [[ivfRanked]] argmax the build used)
     * and quantize with the same SQ8 formula — nothing touches the
     * corpus side but the artifact append itself.
     */
-  private[graft] def appendToIvfSq8Index(idx: IvfSq8Index, delta: DataFrame): IvfSq8Index = {
+  private def appendToIvfSq8Index(idx: IvfSq8Index, delta: DataFrame): IvfSq8Index = {
     val deltaCells = ivfRanked(delta, idx.centroids).filter(col("r") === 1)
       .select(col("vec_id"), col("cid").as("cell"))
     IvfSq8Index(idx.centroids,
@@ -1048,7 +1031,7 @@ object Similarity {
     * difference floor ≈ ±0.95 recall points — the r16 curve's ±2-pt
     * floors made the constant noise-pinned) and added the CLUSTERED
     * drift arm the r16 derivation flagged as unmeasured
-    * (SCALING.md §3i/§3j, ScaleBench `incvec`/`incvecc`):
+    * (SCALING.md §3i/§3j, `incvec` rows of SCALE_RESULTS_r16/r17.jsonl):
     *
     *  - UNIFORM drift: recall imposes NO binding constraint — the
     *    retrained advantage is ≤ 1.3 pts (≤ 1.4σ) through 4× appended

@@ -428,7 +428,8 @@ object TextAnalysis {
     * `materializeTf` pins the exploded tf stream (it feeds both the freq
     * aggregate and the probe side) instead of recomputing the scan under
     * the broadcast — the t07 pattern. Measured isolated (one arm per
-    * JVM, ScaleBench `ab:cur:*`, ×200 = 1.02M docs): recompute 5.7 s vs
+    * JVM, ×200 = 1.02M docs, SCALING.md §3d, `cur_ab_cold` rows of
+    * SCALE_RESULTS_r10.jsonl): recompute 5.7 s vs
     * pinned 85.7 s — a 15× loss for the pin, because the rebuild is one
     * cheap codegen'd [[graft.functions.TermCounts]] explode while the
     * pin checkpoints a corpus-sized stream (contrast [[SpanDedup]],

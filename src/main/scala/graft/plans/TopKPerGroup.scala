@@ -13,10 +13,11 @@ import scala.collection.mutable
 /** Whole-operator customization (SURVEY.md §7.4 case (c)): top-k rows per
   * group as a first-class physical operator.
   *
-  * Why custom, measured against Spark 4 (ScaleBench `mix` mode, ×200
-  * corpus): the engine's own `row_number().over(window) <= k` path has
-  * narrowed the gap — `InferWindowGroupLimit` plans a partial
-  * WindowGroupLimit below the exchange, so BOTH formulations now bound
+  * Why custom, measured against Spark 4 (×200 corpus, SCALING.md §3c,
+  * `t11_quota*` rows of SCALE_RESULTS_r09.jsonl): the engine's own
+  * `row_number().over(window) <= k` path has narrowed the gap —
+  * `InferWindowGroupLimit` plans a partial WindowGroupLimit below the
+  * exchange, so BOTH formulations now bound
   * the shuffle to ≤ groups·k rows per input partition (640k vs the 1.02M
   * input at ×200, identical in the A/B). What the window path still pays
   * is the SORT: WindowGroupLimitExec consumes sorted input, so every

@@ -2,24 +2,38 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Dump `.explain("formatted")` for a comma-separated list of declared
-  * queries (SPARK_GRAFT_EXPLAIN_QUERIES) into SPARK_GRAFT_EXPLAIN_DIR as
-  * `<name>_<suffix>.txt` (suffix from SPARK_GRAFT_EXPLAIN_SUFFIX, e.g.
-  * "before"/"after") — the optimization-round evidence files the judge
-  * reads (guide §1: capture the plan for every query you touch).
+/** Dump `.explain("formatted")` for the declared queries named on the
+  * command line (full names, e.g. `d39_incremental_dedup`) into
+  * SPARK_GRAFT_EXPLAIN_DIR as `<id>_<suffix>.txt` (suffix from
+  * SPARK_GRAFT_EXPLAIN_SUFFIX, e.g. "before"/"after") — the plan evidence
+  * for every query an optimization touches. An empty or unknown name
+  * list exits non-zero before any session starts.
   * Lifecycle queries run several eager actions before returning their
   * answer frame; the dump is the ANSWER plan (what the harness's noop
   * sink executes last), which is where the read-path regressions
   * (lost bucketed scans, unexpected exchanges) would show.
   */
 object ExplainDump {
+  /** The query names to dump, or why there is nothing to dump. */
+  private[graft] def selected(args: Seq[String]): Either[String, Seq[String]] = {
+    val known = graft.SparkEntry.queries
+    val unknown = args.filterNot(known.contains)
+    if (args.isEmpty) Left("usage: ExplainDump <query...> (full names, e.g. d39_incremental_dedup)")
+    else if (unknown.nonEmpty) Left(s"unknown queries: ${unknown.mkString(" ")}")
+    else Right(args)
+  }
+
   def main(args: Array[String]): Unit = {
+    val names = selected(args.toSeq) match {
+      case Right(ns) => ns
+      case Left(why) =>
+        System.err.println(s"[explain] $why")
+        sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_DIR", "plans/r20")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_SUFFIX", "before")
-    val names = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_QUERIES", "")
-      .split(",").map(_.trim).filter(_.nonEmpty)
     // same extensions as GraftSession.build (r20 ADVICE #1): evidence
     // plans must come from the engine's own planner surface (TopK
     // strategy + SQL function registrations); configs deliberately

@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench's stdout env note: escaped first, then cut, so a quote- or
   * backslash-dense `SPARK_GRAFT_ENV_NOTE` cannot grow the line or break
-  * its JSON.
+  * its JSON. And the file record: a subset run cannot overwrite the
+  * full-inventory record.
   */
 class BenchSpec extends AnyFunSuite {
   private val json = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -27,5 +28,14 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.jescTake("plain note", 60) == "plain note")
     // a quote that would straddle the limit is dropped whole
     assert(Bench.jescTake("x" * 59 + "\"", 60) == "x" * 59)
+  }
+
+  test("record file: a subset run writes only to an explicitly named file") {
+    assert(Bench.recordFile(None, None) == Some("BENCH_local_latest.json"))
+    assert(Bench.recordFile(None, Some("f.json")) == Some("f.json"))
+    assert(Bench.recordFile(Some("d39,t20"), None) == None)
+    assert(Bench.recordFile(Some("d39,t20"), Some("f.json")) == Some("f.json"))
+    // an empty filter selects the whole inventory, so it is a full run
+    assert(Bench.recordFile(Some(""), None) == Some("BENCH_local_latest.json"))
   }
 }

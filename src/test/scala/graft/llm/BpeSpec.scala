@@ -229,7 +229,7 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("delta-maintained learn arm produces byte-identical merges to the shipped full re-agg") {
-    // the A/B the scale harness measures must be semantics-free: the
+    // the two forced arms must be semantics-free: the
     // r14 delta fold (kept as the private learnDeltaArm) and the shipped
     // full-re-aggregation loop learn the SAME merge sequence
     val docs = graft.Tables.documents(spark, sf)

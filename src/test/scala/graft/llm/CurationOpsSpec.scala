@@ -70,6 +70,9 @@ class CurationOpsSpec extends AnyFunSuite {
       .as[(Long, Double)].collect().toMap
     assert(got(1L) == 7.0 / 15.0)
     assert(got(2L) == 4.0 / 10.0)
+    // pinning the tf stream is a pure performance knob
+    assert(TextAnalysis.lmTypicalityDf(docs, materializeTf = true)
+      .as[(Long, Double)].collect().toMap == got)
   }
 
   test("t14 plan: AQE broadcasts the vocabulary join at runtime (join is unhinted)") {
@@ -287,6 +290,9 @@ class CurationOpsSpec extends AnyFunSuite {
           col("quality"), col("n_tokens"), col("seq_no"))
         .collect().toSet
       assert(v3AsV2 == v2, s"trial $trial: v3(repMax=1) != v2")
+      val v2b = Curate.curateV2Df(docs.repartition(7), minTokens = 4, quota = 8,
+        seqTokens = 16).collect().toSet
+      assert(v2b == v2, s"trial $trial: v2 drifted under repartition")
       val v3a = Curate.curateV3Df(docs, minTokens = 4, quota = 8,
         seqTokens = 16, repK = 2, repMax = 0.3, nShards = 4).collect().toSet
       val v3b = Curate.curateV3Df(docs.repartition(7), minTokens = 4, quota = 8,
@@ -316,6 +322,11 @@ class CurationOpsSpec extends AnyFunSuite {
     val v4Ids = Curate.curateV4(spark, sfDir).select("doc_id")
       .as[Long].collect().toSet
     assert(v4Ids != v3Ids, "learned gate dropped nothing from the draw")
+    // the trained-model stage is an aggregate over a checkpointed frame,
+    // so the whole chain must not drift under input repartition
+    val v4b = Curate.curateV4Df(graft.Tables.documents(spark, sfDir).repartition(7)).collect()
+    assert(v4b.map(_.toString).sorted.toSeq == v4.map(_.toString).sorted.toSeq,
+      "v4 drifted under repartition")
   }
 
   test("d41: the approx teacher arm agrees with the exact rank-k median at verify SFs") {
