@@ -126,7 +126,7 @@ object DedupResolve {
     * [[graft.runtime.SideData.broadcastMap]] pattern), a shuffle-hash
     * side above it (completes instead of OOMing).
     */
-  private[llm] def guardedByCluster(touched: DataFrame,
+  private[graft] def guardedByCluster(touched: DataFrame,
       maxBroadcast: Long = MaxBroadcastClusters): DataFrame = {
     // clamp: a bound ≥ Int.MaxValue would overflow to a NEGATIVE limit
     // (r16 ADVICE) — and any bound that large is already "never
@@ -150,7 +150,7 @@ object DedupResolve {
     * cluster unchanged. Output: the UPDATED full label table (the
     * artifact a maintained index rewrites — d46).
     */
-  private[llm] def incrementalLabels(labels: DataFrame,
+  private[graft] def incrementalLabels(labels: DataFrame,
       newEdges0: DataFrame, edgesMaterialized: Boolean = false): DataFrame = {
     // maintained-index callers checkpoint the evidence themselves (it
     // must materialize BEFORE the artifact mutation they follow with) —

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.runtime.{IndexLifecycle, IndexManifest, IndexStatePublisher, IndexStore}
+import graft.runtime.{Ckpt, IndexLifecycle, IndexManifest, IndexStatePublisher, IndexStore}
 
 /** Incremental corpus-append deduplication (d39) — the operator a daily
   * ingest pipeline runs most often: dedup a DELTA batch against the
@@ -139,6 +139,8 @@ object IncrementalDedup {
     * persisted (bucketed) form — [[appendKept]] falls back to deriving
     * them from `sigs` otherwise (the in-plan spec path), and ignores a
     * persisted band table whose (k, rowsPerBand) don't match the call.
+    * `pairs`, the verified edge evidence, is required by [[writeIndex]]:
+    * deletion re-resolves touched clusters from it.
     */
   final case class CorpusIndex(
       hashes: DataFrame,
@@ -150,15 +152,39 @@ object IncrementalDedup {
       bandRows: Int = 0,
       pairs: Option[DataFrame] = None,
       nBuckets: Int = 32) {
-    /** Materialize the core artifacts (the in-plan stand-in for the
-      * parquet the production pipeline persists — and the pushdown
-      * fence that guarantees the incremental pass reads artifacts, not
-      * a re-derive of the corpus text).
+    /** Materialize the core artifacts and the pair evidence (the in-plan
+      * stand-in for the parquet the production pipeline persists — and
+      * the pushdown fence that guarantees the incremental pass reads
+      * artifacts, not a re-derive of the corpus text).
       */
     def checkpointed(): CorpusIndex =
-      CorpusIndex(hashes.transform(graft.runtime.Ckpt.eager), sigs.transform(graft.runtime.Ckpt.eager),
-        labels.transform(graft.runtime.Ckpt.eager))
+      CorpusIndex(hashes.transform(Ckpt.eager), sigs.transform(Ckpt.eager),
+        labels.transform(Ckpt.eager), pairs = pairs.map(_.transform(Ckpt.eager)))
   }
+
+  /** The band table: the LSH probe surface (see class doc). */
+  private val Bands = IndexLifecycle.Probe("graft_inc_", "bands", "bandcounts", "doc_id",
+    Seq("band", "bsig"), "doc_id BIGINT, sig ARRAY<BIGINT>, band INT, bsig STRING",
+    "band INT, bsig STRING")
+
+  private def hashTable(loc: String) = IndexStore.tableFor("graft_inc_hash_", loc)
+
+  private def hashesOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), md5(col("text").cast("binary")).as("content_hash"))
+
+  private def sigsOf(docs: DataFrame, k: Int): DataFrame =
+    docs.select(col("doc_id"), graft.functions.MinHashSig(col("text"), 5, k).as("sig"))
+
+  /** Exact-dup STAR edges over (doc_id, content_hash) rows: every member
+    * to its content-hash group's minimum id — connectivity-equal to the
+    * clique, at linear cost.
+    */
+  private def groupMinStars(hashes: DataFrame): DataFrame =
+    hashes
+      .join(hashes.groupBy(col("content_hash")).agg(min(col("doc_id")).as("min_id")),
+        Seq("content_hash"))
+      .filter(col("doc_id") =!= col("min_id"))
+      .select(col("min_id").as("a_id"), col("doc_id").as("b_id"))
 
   /** Build the artifacts the corpus run persists: content hashes,
     * minhash signatures, the verified pair set, and the resolved
@@ -174,20 +200,16 @@ object IncrementalDedup {
       estMin: Double = 0.6,
       jaccardMin: Double = 0.8,
       bucketCap: Int = Dedup.NoBucketCap): CorpusIndex = {
-    val hashes = corpus.select(col("doc_id"),
-      md5(col("text").cast("binary")).as("content_hash"))
     // ONE corpus MinHash pass, shared by the candidate ladder and every
     // artifact write in [[writeIndex]] (lazy sigs re-ran the fused scan
     // per consumer: band table, band counts, sig epoch — 3 extra corpus
     // passes per build; r20 optimization, guide §1.2)
-    val sigs = corpus.select(col("doc_id"),
-      graft.functions.MinHashSig(col("text"), 5, k).as("sig"))
-      .transform(graft.runtime.Ckpt.eager)
+    val sigs = sigsOf(corpus, k).transform(Ckpt.eager)
     val pairs = Dedup.lshVerifiedPairsFromSigs(corpus, sigs, k, rowsPerBand,
         estMin, jaccardMin, bucketCap)
       .select(col("a_id"), col("b_id"))
-      .transform(graft.runtime.Ckpt.eager)
-    CorpusIndex(hashes, sigs, DedupResolve.resolveClusters(pairs), pairs = Some(pairs))
+      .transform(Ckpt.eager)
+    CorpusIndex(hashesOf(corpus), sigs, DedupResolve.resolveClusters(pairs), pairs = Some(pairs))
   }
 
   /** The CAPPED build with its epoch-0 suppression set — the d51/d52
@@ -214,94 +236,58 @@ object IncrementalDedup {
     // hashes feed the star join (two reads) AND the bucketed hash-table
     // write; sigs feed the ladder, the over-cap ledger, and three
     // artifact writes — checkpoint each ONCE (r20, guide §1.2)
-    val hashes = corpus.select(col("doc_id"),
-      md5(col("text").cast("binary")).as("content_hash"))
-      .transform(graft.runtime.Ckpt.eager)
-    val sigs = corpus.select(col("doc_id"),
-      graft.functions.MinHashSig(col("text"), 5, k).as("sig"))
-      .transform(graft.runtime.Ckpt.eager)
-    val stars = hashes
-      .join(hashes.groupBy(col("content_hash")).agg(min(col("doc_id")).as("min_id")),
-        Seq("content_hash"))
-      .filter(col("doc_id") =!= col("min_id"))
-      .select(col("min_id").as("a_id"), col("doc_id").as("b_id"))
+    val hashes = hashesOf(corpus).transform(Ckpt.eager)
+    val sigs = sigsOf(corpus, k).transform(Ckpt.eager)
     val pairs = Dedup.lshVerifiedPairsFromSigs(corpus, sigs, k, rowsPerBand,
         estMin, jaccardMin, bucketCap)
       .select(col("a_id"), col("b_id"))
-      .unionByName(stars)
+      .unionByName(groupMinStars(hashes))
       .distinct()
-      .transform(graft.runtime.Ckpt.eager)
-    val over0 = Dedup.bandsOf(sigs, k, rowsPerBand)
-      .groupBy(col("band"), col("bsig")).agg(count(lit(1)).as("cn"))
-      .filter(col("cn") > bucketCap)
-      .select(col("band"), col("bsig"))
-      .transform(graft.runtime.Ckpt.eager)
+      .transform(Ckpt.eager)
+    val over0 = IndexLifecycle.overCap(Dedup.bandsOf(sigs, k, rowsPerBand), bucketCap, Bands)
     (CorpusIndex(hashes, sigs, DedupResolve.resolveClusters(pairs),
       pairs = Some(pairs)), over0)
   }
 
-  private def hashTable(loc: String) = IndexStore.tableFor("graft_inc_hash_", loc)
-  private def bandTable(loc: String) = IndexStore.tableFor("graft_inc_bands_", loc)
-  private def bcntTable(loc: String) = IndexStore.tableFor("graft_inc_bcnt_", loc)
-
   /** Write the artifacts (the real persistence surface the d39/d46/d47
-    * gates measure through) and
-    * PUBLISH them as manifest generation 0 ([[IndexStatePublisher]] —
-    * r16 VERDICT #1: readers resolve the manifest and then touch only
-    * immutable directories, so no concurrent mutation can tear a read).
-    * The probe-side tables are written BUCKETED on their probe keys —
-    * the write-once cost that buys every later delta pass its
-    * shuffle-free corpus side; the manifest records the band geometry
-    * so a reader can neither mis-band nor mis-bucket. Rewritten-per-mutation
-    * artifacts (`labels`, tombstones) live in generation directories;
-    * appended artifacts (`sigs`, `pairs`) in epoch directories.
+    * gates measure through) and PUBLISH them as manifest generation 0
+    * ([[IndexLifecycle.publishGen0]]: readers resolve the manifest and
+    * then touch only immutable directories, so no concurrent mutation
+    * can tear a read). The probe-side tables are written BUCKETED on
+    * their probe keys — the write-once cost that buys every later delta
+    * pass its shuffle-free corpus side; the manifest records the band
+    * geometry so a reader can neither mis-band nor mis-bucket.
+    * Rewritten-per-mutation artifacts (`labels`, tombstones) live in
+    * generation directories; appended artifacts (`sigs`, `pairs`, the
+    * cap ledger) in epoch directories. The index must carry its pair
+    * evidence (deletion re-resolves from it): an `IllegalArgumentException`
+    * naming `dir` otherwise.
     */
   def writeIndex(idx: CorpusIndex, dir: String,
       k: Int = 32, rowsPerBand: Int = 8, nBuckets: Int = 32,
       capLedger0: Option[DataFrame] = None): Unit = {
-    val s = idx.sigs.sparkSession
-    graft.runtime.Par.run(Seq( // independent writes — overlap (guide §2.6)
-      () => writeBucketedArtifacts(s, dir, idx.hashes,
-        Dedup.bandsOf(idx.sigs, k, rowsPerBand),
-        "hashes", "bands", "bandcounts", nBuckets),
-      () => idx.sigs.write.mode("overwrite").parquet(s"$dir/sigs/epoch-0"),
-      () => idx.labels.write.mode("overwrite").parquet(s"$dir/labels/gen-0")) ++
-      idx.pairs.map(p => () => p.write.mode("overwrite").parquet(s"$dir/pairs/epoch-0")) ++
-      capLedger0.map(l => () => l.select(col("band"), col("bsig"))
-        .write.mode("overwrite").parquet(s"$dir/capledger/epoch-0")): _*)
-    val entries = Map(
-      "hashes" -> "hashes", "bands" -> "bands", "bandcounts" -> "bandcounts",
-      "sigs" -> "sigs", "labels" -> "labels/gen-0") ++
-      (if (idx.pairs.nonEmpty) Map("pairs" -> "pairs") else Map.empty) ++
-      (if (capLedger0.nonEmpty) Map("capledger" -> "capledger") else Map.empty)
-    val epochs = Map("sigs" -> 0) ++
-      (if (idx.pairs.nonEmpty) Map("pairs" -> 0) else Map.empty) ++
-      (if (capLedger0.nonEmpty) Map("capledger" -> 0) else Map.empty)
-    IndexStatePublisher.publish(dir, IndexManifest(0L, entries, epochs,
-      Map("k" -> k, "rows_per_band" -> rowsPerBand, "n_buckets" -> nBuckets)))
+    require(idx.pairs.nonEmpty, s"writeIndex($dir): the index carries no pair " +
+      "evidence, which deletion re-resolves from — build it with buildIndex or buildIndexWithLedger")
+    val (writes, entries) = artifactWrites(idx.sigs.sparkSession, dir, 0L, idx,
+      capLedger0, k, rowsPerBand, nBuckets)
+    IndexLifecycle.publishGen0(dir, writes, entries,
+      Seq("sigs", "pairs") ++ capLedger0.map(_ => "capledger"),
+      Map("k" -> k, "rows_per_band" -> rowsPerBand, "n_buckets" -> nBuckets))
   }
 
-  /** The three bucketed probe tables, written fresh at `relHashes` /
-    * `relBands` / `relCounts` — shared by the initial build and the
-    * compaction rewrite (which targets fresh generation-suffixed names
-    * so in-flight readers keep their files).
+  /** The writes of every artifact of generation `g` from `idx` (plus the
+    * cap ledger `over` of a ledgered index) and the entries they fill —
+    * shared by the build, the ledgered rebuild and compaction.
     */
-  private def writeBucketedArtifacts(s: SparkSession, dir: String,
-      hashes: DataFrame, bands: DataFrame,
-      relHashes: String, relBands: String, relCounts: String,
-      nBuckets: Int): Unit = {
-    s.sql(s"DROP TABLE IF EXISTS ${hashTable(s"$dir/$relHashes")}")
-    s.sql(s"DROP TABLE IF EXISTS ${bandTable(s"$dir/$relBands")}")
-    s.sql(s"DROP TABLE IF EXISTS ${bcntTable(s"$dir/$relCounts")}")
-    graft.runtime.Par.run( // independent writes — overlap (guide §2.6)
-      () => IndexStore.writeBucketed(hashes, nBuckets, s"$dir/$relHashes",
-        hashTable(s"$dir/$relHashes"), "overwrite", "content_hash"),
-      () => IndexStore.writeBucketed(bands, nBuckets, s"$dir/$relBands",
-        bandTable(s"$dir/$relBands"), "overwrite", "band", "bsig"),
-      () => IndexStore.writeBucketed(
-        bands.groupBy(col("band"), col("bsig")).agg(count(lit(1)).as("cn")),
-        nBuckets, s"$dir/$relCounts",
-        bcntTable(s"$dir/$relCounts"), "overwrite", "band", "bsig"))
+  private def artifactWrites(s: SparkSession, dir: String, g: Long, idx: CorpusIndex,
+      over: Option[DataFrame], k: Int, rpb: Int, nb: Int): (Seq[() => Unit], Map[String, String]) = {
+    val hashRel = if (g == 0) "hashes" else s"hashes-g$g"
+    val hashWrite = IndexLifecycle.bucketedWrite(s, idx.hashes, nb, s"$dir/$hashRel",
+      hashTable(s"$dir/$hashRel"), "overwrite", Seq("content_hash"))
+    val (writes, entries) = IndexLifecycle.freshIndex(s, dir, Bands,
+      Dedup.bandsOf(idx.sigs, k, rpb), nb, g,
+      Map("sigs" -> idx.sigs, "pairs" -> idx.pairs.get), Some(idx.labels), over)
+    (hashWrite +: writes, entries + ("hashes" -> hashRel))
   }
 
   /** Load the index at its CURRENT published generation. One manifest
@@ -319,23 +305,17 @@ object IncrementalDedup {
     readIndexAt(s, dir, IndexStatePublisher.current(dir))
 
   private def readIndexAt(s: SparkSession, dir: String, m: IndexManifest): CorpusIndex = {
-    val (k, rpb, nb) = (m.geom(dir, "k"), m.geom(dir, "rows_per_band"), m.geom(dir, "n_buckets"))
+    val nb = m.geom(dir, "n_buckets")
     val minusDel = IndexLifecycle.tombstoneFilter(s, dir, m, "doc_id")
-    val pairs = m.pathOpt("pairs").map(_ => minusDel(minusDel(
-      s.read.parquet(m.epochPaths(dir, "pairs"): _*), "a_id"), "b_id"))
+    val pairs = IndexLifecycle.readPairs(s, dir, m, minusDel)
+    val (bands, counts) = IndexLifecycle.readProbe(s, dir, m, Bands, minusDel)
     CorpusIndex(
       minusDel(IndexStore.ensureBucketedTable(s, hashTable(s"$dir/${m.path("hashes")}"),
         "doc_id BIGINT, content_hash STRING", "content_hash", nb,
         s"$dir/${m.path("hashes")}"), "doc_id"),
       minusDel(s.read.parquet(m.epochPaths(dir, "sigs"): _*), "doc_id"),
       s.read.parquet(s"$dir/${m.path("labels")}"),
-      Some(minusDel(IndexStore.ensureBucketedTable(s, bandTable(s"$dir/${m.path("bands")}"),
-        "doc_id BIGINT, sig ARRAY<BIGINT>, band INT, bsig STRING",
-        "band, bsig", nb, s"$dir/${m.path("bands")}"), "doc_id")),
-      Some(IndexStore.ensureBucketedTable(s, bcntTable(s"$dir/${m.path("bandcounts")}"),
-        "band INT, bsig STRING, cn BIGINT", "band, bsig", nb,
-        s"$dir/${m.path("bandcounts")}")),
-      k, rpb, pairs, nb)
+      Some(bands), counts, m.geom(dir, "k"), m.geom(dir, "rows_per_band"), Some(pairs), nb)
   }
 
   /** The delta-side evidence of one append — everything stages 1–3 of
@@ -349,7 +329,7 @@ object IncrementalDedup {
       deltaSigs: DataFrame,
       deltaBands: DataFrame,
       edges: DataFrame,
-      over: Option[DataFrame] = None)
+      over: Option[DataFrame])
 
   private def deltaEvidence(
       allDocs: DataFrame,
@@ -361,18 +341,14 @@ object IncrementalDedup {
       jaccardMin: Double,
       bucketCap: Int): DeltaEvidence = {
     // 1. exact stars: each delta doc links to the min id of its
-    // content-hash group (connectivity-equal to the clique, linear
-    // cost). The corpus side is PROBED by the delta's distinct hashes —
-    // bucketed table ⇒ no corpus exchange — and only matched rows enter
-    // the group-min.
-    val deltaHash = delta.select(col("doc_id"),
-      md5(col("text").cast("binary")).as("content_hash"))
-    val corpusHits = idx.hashes.join(
-      deltaHash.select(col("content_hash")).distinct().hint("shuffle_hash"),
-      Seq("content_hash"))
-    val touchedMembers = corpusHits.unionByName(deltaHash)
-    val groupMin = touchedMembers
-      .groupBy(col("content_hash")).agg(min(col("doc_id")).as("min_id"))
+    // content-hash group. The corpus side is PROBED by the delta's
+    // distinct hashes — bucketed table ⇒ no corpus exchange — and only
+    // matched rows enter the group-min.
+    val deltaHash = hashesOf(delta)
+    val touchedMembers = idx.hashes.join(
+        deltaHash.select(col("content_hash")).distinct().hint("shuffle_hash"),
+        Seq("content_hash"))
+      .unionByName(deltaHash)
     // star EVERY touched member to the group min, not just delta
     // members: when the group's smallest id arrives in a LATER epoch,
     // the arriving doc IS the min — a delta-only star would link nobody
@@ -382,75 +358,26 @@ object IncrementalDedup {
     // Corpus-side members are the delta-probed HITS, so the channel
     // stays delta-proportional; the extra corpus-member edges are
     // connectivity-idempotent in the uncapped gates.
-    val exactStars = touchedMembers
-      .join(groupMin, "content_hash")
-      .filter(col("doc_id") =!= col("min_id"))
-      .select(col("min_id").as("a_id"), col("doc_id").as("b_id"))
+    val exactStars = groupMinStars(touchedMembers)
 
-    // 2. banded candidates with >= 1 delta member: corpus–delta via the
-    // bucketed band table (corpus side exchange-free), delta–delta via
-    // a delta-sized self-join. A persisted band table with mismatched
-    // geometry is ignored (bands are re-derived from sigs).
+    // 2. banded candidates with >= 1 delta member, under the
+    // template-skew cap (d21's guard). A persisted band table with
+    // mismatched geometry is ignored (bands are re-derived from sigs).
     val corpusBands = idx.bands match {
       case Some(b) if idx.bandK == k && idx.bandRows == rowsPerBand => b
       case _ => Dedup.bandsOf(idx.sigs, k, rowsPerBand)
     }
-    val deltaSigs = delta.select(col("doc_id"),
-      graft.functions.MinHashSig(col("text"), 5, k).as("sig"))
-      .transform(graft.runtime.Ckpt.eager) // read by the band explode AND the sig-epoch write-back
+    val deltaSigs = sigsOf(delta, k)
+      .transform(Ckpt.eager) // read by the band explode AND the sig-epoch write-back
     val deltaBands = Dedup.bandsOf(deltaSigs, k, rowsPerBand)
-      .transform(graft.runtime.Ckpt.eager) // read thrice: counts + both join sides
-    // the template-skew cap (d21's guard): total bucket population =
-    // persisted corpus count + delta count, examined for DELTA-TOUCHED
-    // buckets only — output-equivalent to capping the full union, at a
-    // delta-bucket-sized cost
-    var overLedger: Option[DataFrame] = None
-    val (cb, db) =
-      if (bucketCap == Dedup.NoBucketCap) (corpusBands, deltaBands)
-      else {
-        require(bucketCap > 0,
-          s"bucketCap must be positive or NoBucketCap, got $bucketCap")
-        val cCnt0 = idx.bandCounts.getOrElse(
-          corpusBands.groupBy(col("band"), col("bsig")).agg(count(lit(1)).as("cn")))
-        val dCnt = deltaBands.groupBy(col("band"), col("bsig"))
-          .agg(count(lit(1)).as("dn"))
-          .transform(graft.runtime.Ckpt.eager) // read twice: the count probe + the over-join
-        // a MAINTAINED index appends one count row per (append, bucket):
-        // SUM over delta-touched keys only — probe the bucketed counts
-        // with the delta's bucket list first (corpus side exchange-free,
-        // aggregation input delta-bucket-sized)
-        val cCnt = cCnt0
-          .join(dCnt.select(col("band"), col("bsig")).hint("shuffle_hash"),
-            Seq("band", "bsig"))
-          .groupBy(col("band"), col("bsig")).agg(sum(col("cn")).as("cn"))
-        val over = dCnt
-          .join(cCnt, Seq("band", "bsig"), "left_outer")
-          .filter(coalesce(col("cn"), lit(0L)) + col("dn") > bucketCap)
-          .select(col("band"), col("bsig"))
-          .transform(graft.runtime.Ckpt.eager)
-        overLedger = Some(over)
-        (corpusBands.join(over, Seq("band", "bsig"), "left_anti"),
-          deltaBands.join(over, Seq("band", "bsig"), "left_anti"))
-      }
-    val candCD = cb.alias("a")
-      .join(db.hint("shuffle_hash").alias("b"),
-        col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(
-        least(col("a.doc_id"), col("b.doc_id")).as("a_id"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("b_id"),
-        Dedup.sigEst(k).as("est"))
-    val candDD = db.hint("shuffle_hash").alias("a")
-      .join(db.alias("b"),
-        col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        Dedup.sigEst(k).as("est"))
-    val cand = candCD.unionByName(candDD)
+      .transform(Ckpt.eager) // read thrice: counts + both join sides
+    val (cb, db, over) = IndexLifecycle.capDelta(corpusBands, idx.bandCounts, deltaBands,
+      bucketCap, Bands)
+    val cand = IndexLifecycle.deltaCandidates(cb, db, Bands, Dedup.sigEst(k).as("est"))
       .distinct()
       // the d13 pushdown barrier: est stays a projection computed once
       // per distinct pair, never an interpreted join condition
-      .transform(graft.runtime.Ckpt.eager)
+      .transform(Ckpt.eager)
 
     // 3. est prefilter + exact-Jaccard verify; grams only for candidate
     // members (the semi-join prune inside verifyJaccardDf)
@@ -459,8 +386,7 @@ object IncrementalDedup {
       n = 5, minJaccard = jaccardMin)
 
     DeltaEvidence(deltaHash, deltaSigs, deltaBands,
-      exactStars.unionByName(verified.select(col("a_id"), col("b_id"))),
-      overLedger)
+      exactStars.unionByName(verified.select(col("a_id"), col("b_id"))), over)
   }
 
   /** The incremental pass: kept doc_ids of corpus ⊎ delta (one column,
@@ -488,14 +414,17 @@ object IncrementalDedup {
     * index a full run over the accumulated corpus would persist —
     * chaining is the pattern's whole point (the reference consumes step
     * N−1's output as step N's input, reference runner.go:147-151).
-    * Per append:
+    * Per append ([[IndexLifecycle.appendWriteBack]]):
     *   - bucketed tables (`hashes`, `bands`, `bandcounts`) take an
     *     APPEND of the delta's rows in the same bucket layout — write
     *     cost ∝ delta;
-    *   - `sigs` and `pairs` parquet append the delta's rows/edges;
+    *   - `sigs` and `pairs` take a new epoch of the delta's rows/edges,
+    *     and a ledgered index (built via [[buildIndexWithLedger]]) the
+    *     epoch's suppressed-bucket set (d52; the d51 pattern);
     *   - `labels` is REWRITTEN from the touched-subgraph resolution
     *     (cost ∝ dup-cluster membership, not corpus size — only ids
-    *     that appear in some pair carry a label row).
+    *     that appear in some pair carry a label row), overlapped with
+    *     the writes.
     * All evidence is checkpointed BEFORE any table mutation: the
     * evidence plans lazily probe the very tables being appended, and an
     * unmaterialized plan re-executed after the append would see the
@@ -507,9 +436,7 @@ object IncrementalDedup {
     * to FRESH generation/epoch directories and become visible only at
     * the manifest CAS — a reader resolving the manifest before the
     * publish sees generation N complete, after it generation N+1
-    * complete, never a mix. The bucketed probe tables take in-place
-    * file appends (they are WRITER-side probe surfaces; the lock
-    * serializes their only readers-that-matter).
+    * complete, never a mix.
     * Returns the kept doc_ids of `allDocs` (the accumulated corpus),
     * doc_id-ordered.
     */
@@ -520,148 +447,67 @@ object IncrementalDedup {
       delta: DataFrame,
       estMin: Double = 0.6,
       jaccardMin: Double = 0.8,
-      bucketCap: Int = Dedup.NoBucketCap): DataFrame = IndexStatePublisher.withWriterLock(dir) {
-    val m = IndexStatePublisher.current(dir)
+      bucketCap: Int = Dedup.NoBucketCap): DataFrame = IndexLifecycle.mutate(dir) { m =>
     val idx = readIndexAt(s, dir, m)
-    val (k, rpb, nb) = (idx.bandK, idx.bandRows, idx.nBuckets)
-    val ev = deltaEvidence(allDocs, idx, delta, k, rpb, estMin, jaccardMin, bucketCap)
-    val edges = ev.edges.transform(graft.runtime.Ckpt.eager)
-    // label resolution reads only IMMUTABLE inputs (checkpointed edges +
-    // the labels/gen-N parquet this mutation never touches) — overlap it
-    // with the artifact writes below (guide §2.6); the labels write
-    // chains inside the resolving thunk.
-    // RECOVERY NOTE (r20 ADVICE #2): the bucketed probe tables take
-    // in-place mode-append writes, so a resolution failure mid-overlap
-    // leaves appended rows visible to a reader at the OLD manifest —
-    // a wider torn window than the sequential order had (where only a
-    // write failure could tear). The writer-lock + rebuild contract is
-    // the recovery path either way: a failed mutation leaves the lock
-    // released by try/finally, the manifest un-advanced, and the next
-    // writer (or rebuildLedgered/compactIndex) re-derives from source —
-    // the probe-table surplus rows are harmless to correctness only
-    // AFTER that recovery, never to a concurrent reader mid-failure
-    // (readers-that-matter serialize on the writer lock, see class doc).
-    // The DELETE paths, whose heavy step is the resolve itself, run it
-    // BEFORE any write (see deleteFromIndex) — here the writes are the
-    // delta-proportional bulk and the overlap is the measured r20 win.
-    @volatile var newLabels: DataFrame = null
-    // artifact write-back (delta-proportional except the labels rewrite,
-    // which is dup-membership-proportional): independent actions over
-    // materialized frames — overlap them (guide §2.6; graft.runtime.Par)
-    val sigEpoch = m.epochs.getOrElse("sigs", -1) + 1
-    val pairsRel = m.pathOpt("pairs").getOrElse("pairs")
-    val pairEpoch = m.epochs.getOrElse("pairs", -1) + 1
-    // a LEDGERED index (built via [[buildIndexWithLedger]]) persists the
-    // epoch's suppressed-bucket set beside the pairs — what makes capped
-    // maintained appends rerun-reproducible (d52; the d51 pattern).
-    // Uncapped appends on a ledgered index record an empty set.
-    val ledgered = m.pathOpt("capledger").nonEmpty
-    val ledgerWrite = if (!ledgered) Seq.empty else
-      Seq(() => IndexLifecycle.writeLedgerEpoch(dir, m, sigEpoch, ev.over,
-        ev.deltaBands, "band", "bsig"))
-    graft.runtime.Par.run(Seq(
-      () => IndexStore.writeBucketed(ev.deltaHash, nb, s"$dir/${m.path("hashes")}",
-        hashTable(s"$dir/${m.path("hashes")}"), "append", "content_hash"),
-      () => IndexStore.writeBucketed(ev.deltaBands, nb, s"$dir/${m.path("bands")}",
-        bandTable(s"$dir/${m.path("bands")}"), "append", "band", "bsig"),
-      () => IndexStore.writeBucketed(
-        ev.deltaBands.groupBy(col("band"), col("bsig")).agg(count(lit(1)).as("cn")),
-        nb, s"$dir/${m.path("bandcounts")}",
-        bcntTable(s"$dir/${m.path("bandcounts")}"), "append", "band", "bsig"),
-      () => ev.deltaSigs.write.mode("overwrite")
-        .parquet(s"$dir/${m.path("sigs")}/epoch-$sigEpoch"),
-      () => edges.write.mode("overwrite")
-        .parquet(s"$dir/$pairsRel/epoch-$pairEpoch"),
-      () => {
-        newLabels = DedupResolve.incrementalLabels(idx.labels, edges,
-            edgesMaterialized = true)
-          .transform(graft.runtime.Ckpt.eager)
-        newLabels.write.mode("overwrite").parquet(s"$dir/labels/gen-${m.gen + 1}")
-      }) ++
-      ledgerWrite: _*)
-    IndexStatePublisher.publish(dir, m
-      .withEntry("labels", s"labels/gen-${m.gen + 1}")
-      .withEntry("pairs", pairsRel)
-      .copy(gen = m.gen + 1,
-        epochs = m.epochs + ("sigs" -> sigEpoch) + ("pairs" -> pairEpoch) ++
-          (if (ledgered) Map("capledger" -> sigEpoch) else Map.empty)))
-    DedupResolve.keptFromLabels(allDocs.select(col("doc_id")), newLabels)
+    val ev = deltaEvidence(allDocs, idx, delta, idx.bandK, idx.bandRows,
+      estMin, jaccardMin, bucketCap)
+    val edges = ev.edges.transform(Ckpt.eager)
+    val hashes = s"$dir/${m.path("hashes")}"
+    val (_, labels) = IndexLifecycle.appendWriteBack(s, dir, m, Bands, ev.deltaBands, ev.over,
+      Map("sigs" -> ev.deltaSigs, "pairs" -> edges), Some((idx.labels, edges)),
+      Seq(IndexLifecycle.bucketedWrite(s, ev.deltaHash, idx.nBuckets, hashes,
+        hashTable(hashes), "append", Seq("content_hash"))))
+    DedupResolve.keptFromLabels(allDocs.select(col("doc_id")), labels)
   }
 
   /** The persisted cap ledger as one frame: (epoch, band, bsig). */
   def readCapLedger(s: SparkSession, dir: String): DataFrame =
-    IndexLifecycle.readCapLedger(s, dir, IndexStatePublisher.current(dir), "band", "bsig")
+    IndexLifecycle.readCapLedger(s, dir, IndexStatePublisher.current(dir), Bands.keys: _*)
 
   /** The LEDGER-AWARE RERUN for the MinHash family (the engineering
-    * contract of [[IncrementalSig.rerunWithLedger]], plus this family's
+    * contract of [[IncrementalSig.rerunWithLedger]] — the
+    * [[IndexLifecycle.ledgerAdmitted]] replay — plus this family's
     * est-prefilter/Jaccard-verify ladder and exact-dup channel): given
     * every document tagged with its arrival epoch, recompute from
     * scratch the exact KEPT set the capped maintained appends produced.
-    * Same monotonicity identity — suppression only grows, so "pair
-    * admitted ⇔ some shared bucket under cap at max(epoch_a, epoch_b)"
-    * collapses to the row filter `epoch < firstOver(bucket)`, and
-    * suppressed mega-buckets contribute zero rows to the self-join.
-    * Admitted candidates run the UNCHANGED est/Jaccard verify; exact
-    * connectivity is the global hash-group stars (epoch-wise group-min
-    * stars have the same transitive closure). Spec-pinned equal to the
-    * maintained artifact; d52 gates the same semantics against the
-    * DuckDB epoch-capped oracle.
+    * The ledger replay ([[IndexLifecycle.ledgerAdmitted]]) admits the
+    * band rows; admitted candidates run the UNCHANGED est/Jaccard
+    * verify; exact connectivity is the global hash-group stars
+    * (epoch-wise group-min stars have the same transitive closure).
+    * Spec-pinned equal to the maintained artifact; d52 gates the same
+    * semantics against the DuckDB epoch-capped oracle.
     */
   def rerunKeptWithLedger(s: SparkSession, dir: String, docsWithEpoch: DataFrame,
       estMin: Double = 0.6, jaccardMin: Double = 0.8): DataFrame = {
     val m = IndexStatePublisher.current(dir)
-    val (k, rpb) = (m.geom(dir, "k"), m.geom(dir, "rows_per_band"))
-    val sigs = docsWithEpoch.select(col("doc_id"),
-      graft.functions.MinHashSig(col("text"), 5, k).as("sig"))
-    val firstOver = IndexLifecycle.readCapLedger(s, dir, m, "band", "bsig")
-      .groupBy(col("band"), col("bsig"))
-      .agg(min(col("epoch")).as("first_over"))
-    val b = Dedup.bandsOf(sigs, k, rpb)
-      .join(docsWithEpoch.select(col("doc_id"), col("epoch")), Seq("doc_id"))
-      .join(broadcast(firstOver), Seq("band", "bsig"), "left_outer")
-      .filter(col("first_over").isNull || col("epoch") < col("first_over"))
-      .drop("first_over")
-      .transform(graft.runtime.Ckpt.eager)
-    val cand = b.alias("a")
-      .join(b.hint("shuffle_hash").alias("b"),
-        col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
+    val k = m.geom(dir, "k")
+    val b = IndexLifecycle.ledgerAdmitted(s, dir, m,
+      Dedup.bandsOf(sigsOf(docsWithEpoch, k), k, m.geom(dir, "rows_per_band"))
+        .join(docsWithEpoch.select(col("doc_id"), col("epoch")), Seq("doc_id")),
+      Bands)
+    val cand = IndexLifecycle.selfPairs(b, b.hint("shuffle_hash"), Bands,
         Dedup.sigEst(k).as("est"))
       .distinct()
-      .transform(graft.runtime.Ckpt.eager)
+      .transform(Ckpt.eager)
     val verified = Dedup.verifyJaccardDf(docsWithEpoch,
       cand.filter(col("est") >= estMin).select(col("a_id"), col("b_id")),
       n = 5, minJaccard = jaccardMin)
-    val hashes = docsWithEpoch.select(col("doc_id"),
-      md5(col("text").cast("binary")).as("content_hash"))
-    val stars = hashes
-      .join(hashes.groupBy(col("content_hash")).agg(min(col("doc_id")).as("min_id")),
-        Seq("content_hash"))
-      .filter(col("doc_id") =!= col("min_id"))
-      .select(col("min_id").as("a_id"), col("doc_id").as("b_id"))
     DedupResolve.keptFromLabels(docsWithEpoch.select(col("doc_id")),
       DedupResolve.resolveClusters(
-        verified.select(col("a_id"), col("b_id")).unionByName(stars)))
+        verified.select(col("a_id"), col("b_id")).unionByName(groupMinStars(hashesOf(docsWithEpoch)))))
   }
 
   /** Incremental DELETION (d47): remove `deleteIds0` from the corpus the
-    * index represents — tombstone their artifact rows and re-resolve
-    * exactly the clusters that lost a member. Connectivity may genuinely
-    * SPLIT when a bridge document dies, which is why labels alone are
-    * insufficient and the index persists the pair evidence: survivors of
-    * touched clusters re-resolve from
-    *   (persisted pairs restricted to touched clusters, minus deleted
-    *    endpoints) ∪ (exact-hash group-min stars recomputed from the
-    *    SURVIVING hash rows of touched documents)
-    * — the second term restores exact-dup connectivity that append-time
-    * star reduction would otherwise lose with the star's center (the
-    * {1,2,3} clique persisted as (1,2),(1,3): delete 1 and the stars
-    * alone would split {2,3}). Untouched clusters keep yesterday's
-    * labels verbatim (no path between survivor components runs through
-    * a cluster none of whose members died). Cost ∝ touched-cluster
-    * membership + delete traffic; the corpus side of every probe is the
-    * bucketed scan or a broadcast filter.
+    * index represents — the touched-cluster re-resolution
+    * ([[IndexLifecycle.deleteTouched]]) from the persisted pairs of
+    * touched clusters minus deleted endpoints, PLUS this family's
+    * repair: exact-hash group-min stars recomputed from the SURVIVING
+    * hash rows of touched documents, which restores exact-dup
+    * connectivity that append-time star reduction would otherwise lose
+    * with the star's center (the {1,2,3} clique persisted as
+    * (1,2),(1,3): delete 1 and the stars alone would split {2,3}).
+    * Cost ∝ touched-cluster membership + delete traffic; the corpus side
+    * of every probe is the bucketed scan or a broadcast filter.
     *
     * Equivalence (the d47 gate): uncapped, a full rerun over
     * corpus-minus-deleted bands every surviving doc identically, so its
@@ -683,167 +529,74 @@ object IncrementalDedup {
     * SURVIVING corpus (original epoch tags) reproduces the maintained
     * answer exactly — banded pairs restrict to surviving endpoints
     * (per-doc-deterministic banding), exact stars are recomputed over
-    * survivors (this function's touched-cluster repair), components
-    * resolve over the surviving edge set. Gated by d55 at three SFs
-    * (an INTERLEAVED delete between capped appends) and spec-pinned.
+    * survivors (this function's repair), components resolve over the
+    * surviving edge set. Gated by d55 at three SFs (an INTERLEAVED
+    * delete between capped appends) and spec-pinned.
     *
     * Returns the updated labels (checkpointed — callers derive kept sets
     * from it without re-reading the overwritten file).
     */
   def deleteFromIndex(s: SparkSession, dir: String,
-      deleteIds0: DataFrame): DataFrame = IndexStatePublisher.withWriterLock(dir) {
-    val del = deleteIds0.select(col("doc_id").cast("long").as("doc_id"))
-      .transform(graft.runtime.Ckpt.eager)
-    // resolve the manifest ONCE: this pass needs yesterday's view
-    val m = IndexStatePublisher.current(dir)
+      deleteIds0: DataFrame): DataFrame = IndexLifecycle.mutate(dir) { m =>
     val idx = readIndexAt(s, dir, m)
-    val pairs = idx.pairs.getOrElse(
-      sys.error(s"index at $dir persists no pair evidence; deletion needs it"))
-    val delId = del.select(col("doc_id").as("id"))
-    val touched = idx.labels.join(delId, Seq("id"))
-      .select(col("cluster")).distinct()
-      .transform(graft.runtime.Ckpt.eager)
-    // guard probe ONCE per delete; both the touched-stars join and the
-    // untouched anti-join below reuse the same shaped frame (r16 ADVICE:
-    // the limit+count broadcast probe used to run twice per delete)
-    val tJoin = DedupResolve.guardedByCluster(touched)
-    val touchedLabels = idx.labels
-      .join(tJoin, Seq("cluster"))
-      .select(col("id"), col("cluster"))
-      .transform(graft.runtime.Ckpt.eager)
-    // surviving pair evidence of touched clusters (an edge's endpoints
-    // share a component, so membership is decided by a_id's label)
-    val survPairs = pairs
-      .join(touchedLabels.select(col("id").as("a_id")), Seq("a_id"), "left_semi")
-      .join(del.withColumnRenamed("doc_id", "a_id"), Seq("a_id"), "left_anti")
-      .join(del.withColumnRenamed("doc_id", "b_id"), Seq("b_id"), "left_anti")
-    // exact-dup stars recomputed from surviving hash rows of touched
-    // docs: probe the bucketed hash table by the touched ids (broadcast
-    // filter), regroup the SURVIVORS of their content-hash groups
-    val touchedHashes = idx.hashes
-      .join(broadcast(touchedLabels.select(col("id").as("doc_id"))), Seq("doc_id"), "left_semi")
-    val survGroups = idx.hashes
-      .join(touchedHashes.select(col("content_hash")).distinct().hint("shuffle_hash"),
-        Seq("content_hash"))
-      .join(del, Seq("doc_id"), "left_anti")
-    val survStars = survGroups
-      .join(survGroups.groupBy(col("content_hash")).agg(min(col("doc_id")).as("min_id")),
-        Seq("content_hash"))
-      .filter(col("doc_id") =!= col("min_id"))
-      .select(col("min_id").as("a_id"), col("doc_id").as("b_id"))
-    // The touched-cluster re-resolution is this mutation's HEAVY compute
-    // (an iterative multi-job resolve); run it to completion BEFORE any
-    // artifact write and overlap only the two cheap writes below (r20
-    // VERDICT #1 — see IncrementalSemantic.deleteVectors for the full
-    // argument: no heavy job ever shares the memory pool with another,
-    // and nothing irreversible happens until the failure-prone step has
-    // succeeded). Wall cost of serializing: ≈ 0 — the tombstone union
-    // job now hides under the label write instead of under the resolve.
-    val subLabels = DedupResolve.resolveClusters(
-      survPairs.select(col("a_id"), col("b_id")).unionByName(survStars))
-    val untouched = idx.labels
-      .join(tJoin, Seq("cluster"), "left_anti")
-      .select(col("id"), col("cluster"))
-    val newLabels = untouched.unionByName(subLabels.select(col("id"), col("cluster")))
-      .transform(graft.runtime.Ckpt.eager) // materialize BEFORE publishing over its input gen
-    graft.runtime.Par.run( // two independent writes — overlap (guide §2.6)
-      () => IndexLifecycle.writeTombstones(s, dir, m, del),
-      () => newLabels.write.mode("overwrite").parquet(s"$dir/labels/gen-${m.gen + 1}"))
-    IndexStatePublisher.publish(dir, m
-      .withEntry("labels", s"labels/gen-${m.gen + 1}")
-      .withEntry("deleted", s"deleted/gen-${m.gen + 1}")
-      .copy(gen = m.gen + 1))
-    newLabels
+    IndexLifecycle.deleteTouched(s, dir, m, "doc_id", deleteIds0, idx.labels, idx.pairs.get,
+      Some { (touchedLabels, del) =>
+        // probe the bucketed hash table by the touched ids (broadcast
+        // filter), regroup the SURVIVORS of their content-hash groups
+        val touchedHashes = idx.hashes
+          .join(broadcast(touchedLabels.select(col("id").as("doc_id"))), Seq("doc_id"), "left_semi")
+        groupMinStars(idx.hashes
+          .join(touchedHashes.select(col("content_hash")).distinct().hint("shuffle_hash"),
+            Seq("content_hash"))
+          .join(del, Seq("doc_id"), "left_anti"))
+      })
   }
 
-  /** The LEDGERED family's compaction: a REBUILD (r18 VERDICT ask #2;
-    * see [[IncrementalSig.rebuildLedgered]] for the contract — a
-    * scheduled, loud re-derivation with a fresh epoch-0 ledger, never
-    * a silent drift). The MinHash family's verify ladder needs the
+  /** The LEDGERED family's compaction: a REBUILD
+    * ([[IndexLifecycle.rebuildLedgered]] holds the contract — a
+    * scheduled, loud re-derivation with a fresh epoch-0 ledger, never a
+    * silent drift). The MinHash family's verify ladder needs the
     * document TEXT (5-gram Jaccard), which no artifact retains, so the
     * caller supplies `corpus` — the surviving accumulated documents; a
-    * count guard cross-checks it against the tombstone-filtered hash
-    * artifact. Everything re-derives via [[buildIndexWithLedger]] at
-    * the index's persisted geometry into FRESH generation-suffixed
-    * directories; the switch is the manifest CAS (tombstone entry
-    * dropped) under the writer lock. In-flight readers keep their
-    * directories until [[IndexStatePublisher.gc]].
+    * count guard ([[IndexLifecycle.requireSurvivors]]) cross-checks it
+    * against the tombstone-filtered hash artifact. Everything
+    * re-derives via [[buildIndexWithLedger]] at the index's persisted
+    * geometry into FRESH generation-suffixed directories.
     */
   def rebuildLedgered(s: SparkSession, dir: String, corpus: DataFrame,
       bucketCap: Int, estMin: Double = 0.6,
-      jaccardMin: Double = 0.8): Unit = IndexStatePublisher.withWriterLock(dir) {
-    val m = IndexStatePublisher.current(dir)
-    require(m.pathOpt("capledger").nonEmpty,
-      s"index at $dir is not ledgered — use compactIndex")
-    val (k, rpb, nb) = (m.geom(dir, "k"), m.geom(dir, "rows_per_band"), m.geom(dir, "n_buckets"))
-    val idx = readIndexAt(s, dir, m) // tombstone-filtered views
-    val survN = idx.hashes.count()
-    val gotN = corpus.count()
-    require(gotN == survN,
-      s"rebuildLedgered($dir): caller passed $gotN documents but the index " +
-        s"has $survN survivors — the rebuild corpus must be exactly the " +
-        "surviving accumulated corpus")
-    val (fresh, over0) = buildIndexWithLedger(corpus, k, rpb, estMin,
-      jaccardMin, bucketCap)
-    val g = m.gen + 1
-    graft.runtime.Par.run(Seq( // independent writes — overlap (guide §2.6)
-      () => writeBucketedArtifacts(s, dir, fresh.hashes,
-        Dedup.bandsOf(fresh.sigs, k, rpb),
-        s"hashes-g$g", s"bands-g$g", s"bandcounts-g$g", nb),
-      () => fresh.sigs.write.mode("overwrite").parquet(s"$dir/sigs-g$g/epoch-0"),
-      () => fresh.labels.write.mode("overwrite").parquet(s"$dir/labels/gen-$g"),
-      () => over0.select(col("band"), col("bsig"))
-        .write.mode("overwrite").parquet(s"$dir/capledger-g$g/epoch-0")) ++
-      fresh.pairs.map(p =>
-        () => p.write.mode("overwrite").parquet(s"$dir/pairs-g$g/epoch-0")): _*)
-    IndexStatePublisher.publish(dir, m.copy(gen = g,
-      entries = Map("hashes" -> s"hashes-g$g", "bands" -> s"bands-g$g",
-        "bandcounts" -> s"bandcounts-g$g", "sigs" -> s"sigs-g$g",
-        "labels" -> s"labels/gen-$g", "pairs" -> s"pairs-g$g",
-        "capledger" -> s"capledger-g$g"),
-      epochs = Map("sigs" -> 0, "pairs" -> 0, "capledger" -> 0)))
+      jaccardMin: Double = 0.8): Unit = IndexLifecycle.rebuildLedgered(dir) { (m, g) =>
+    val (k, rpb) = (m.geom(dir, "k"), m.geom(dir, "rows_per_band"))
+    val survivors = readIndexAt(s, dir, m).hashes.count() // tombstone-filtered
+    IndexLifecycle.requireSurvivors(dir, corpus.count(), survivors)
+    val (fresh, over0) = buildIndexWithLedger(corpus, k, rpb, estMin, jaccardMin, bucketCap)
+    artifactWrites(s, dir, g, fresh, Some(over0), k, rpb, m.geom(dir, "n_buckets"))
   }
 
-  /** Rebuild-time COMPACTION — the scheduled physical half of deletion
-    * (tombstones make takedowns O(delete traffic); compaction makes the
-    * artifacts small again): rewrite every artifact minus its
-    * tombstoned rows and drop the tombstone entry. Answer-invariant by
-    * construction — [[readIndex]] already served the filtered view; the
-    * rewrite only changes what is on disk — so there is no oracle gate,
-    * just the spec pinning read-before ≡ read-after. Bands and counts
-    * are RE-DERIVED from the compacted sigs (the same construction a
-    * fresh build uses), which also collapses the maintained index's
-    * per-append count rows back to one row per bucket AND the epoch
-    * history back to epoch-0. Cost is a full artifact rewrite —
-    * corpus-proportional, which is WHY it is a scheduled rebuild-time
-    * decision and not part of the delete path (the same scheduling as
-    * centroid retrain / re-banding).
-    *
-    * Atomicity (r16 VERDICT #1): every rewritten artifact goes to a
-    * FRESH generation-suffixed directory (`hashes-g<N>`, `sigs-g<N>`,
-    * …) with a fresh catalog name; the old directories stay untouched
-    * for in-flight readers and the switch is the manifest CAS. Physical
+  /** Rebuild-time COMPACTION ([[IndexLifecycle.compact]]) — the
+    * scheduled physical half of deletion (tombstones make takedowns
+    * O(delete traffic); compaction makes the artifacts small again):
+    * rewrite every artifact minus its tombstoned rows and drop the
+    * tombstone entry. Answer-invariant by construction — [[readIndex]]
+    * already served the filtered view; the rewrite only changes what is
+    * on disk — so there is no oracle gate, just the spec pinning
+    * read-before ≡ read-after. Bands and counts are RE-DERIVED from the
+    * compacted sigs (the same construction a fresh build uses), which
+    * also collapses the maintained index's per-append count rows back to
+    * one row per bucket AND the epoch history back to epoch-0. Cost is a
+    * full artifact rewrite — corpus-proportional, which is WHY it is a
+    * scheduled rebuild-time decision and not part of the delete path
+    * (the same scheduling as centroid retrain / re-banding). Physical
     * space is reclaimed by [[IndexStatePublisher.gc]] as a separate,
     * grace-period-scheduled step.
     */
   def compactIndex(s: SparkSession, dir: String): Unit =
     IndexLifecycle.compact(dir, "rebuildLedgered(dir, corpus, ...)") { (m, g) =>
-      val (k, rpb, nb) = (m.geom(dir, "k"), m.geom(dir, "rows_per_band"), m.geom(dir, "n_buckets"))
       val idx = readIndexAt(s, dir, m)
-      val hashes = idx.hashes.transform(graft.runtime.Ckpt.eager)
-      val sigs = idx.sigs.transform(graft.runtime.Ckpt.eager)
-      val labels = idx.labels.transform(graft.runtime.Ckpt.eager)
-      val pairs = idx.pairs.map(_.transform(graft.runtime.Ckpt.eager))
-      graft.runtime.Par.run(Seq( // independent writes — overlap (guide §2.6)
-        () => writeBucketedArtifacts(s, dir, hashes, Dedup.bandsOf(sigs, k, rpb),
-          s"hashes-g$g", s"bands-g$g", s"bandcounts-g$g", nb),
-        () => sigs.write.mode("overwrite").parquet(s"$dir/sigs-g$g/epoch-0"),
-        () => labels.write.mode("overwrite").parquet(s"$dir/labels/gen-$g")) ++
-        pairs.map(p =>
-          () => p.write.mode("overwrite").parquet(s"$dir/pairs-g$g/epoch-0")): _*)
-      Map("hashes" -> s"hashes-g$g", "bands" -> s"bands-g$g",
-        "bandcounts" -> s"bandcounts-g$g", "sigs" -> s"sigs-g$g",
-        "labels" -> s"labels/gen-$g") ++ pairs.map(_ => "pairs" -> s"pairs-g$g")
+      val cp = (df: DataFrame) => df.transform(Ckpt.eager)
+      artifactWrites(s, dir, g,
+        CorpusIndex(cp(idx.hashes), cp(idx.sigs), cp(idx.labels), pairs = Some(cp(idx.pairs.get))),
+        None, m.geom(dir, "k"), m.geom(dir, "rows_per_band"), m.geom(dir, "n_buckets"))
     }
 
   /** d39: the oracle-gated composition — corpus = the 80% doc_id split

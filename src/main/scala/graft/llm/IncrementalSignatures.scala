@@ -1,9 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.runtime.{IndexLifecycle, IndexManifest, IndexStatePublisher}
+import graft.runtime.{Ckpt, IndexLifecycle, IndexManifest, IndexStatePublisher}
 
 /** Incremental corpus-append arms for the remaining signature families
   * of the corpus index (r14 VERDICT ask #5) — the d39 pattern (persist
@@ -53,6 +53,20 @@ object IncrementalSig {
       .withColumnRenamed("col", "bsig")
   }
 
+  /** The band table: the probe surface, bucketed on (band, bsig). */
+  private val Bands = IndexLifecycle.Probe("graft_sig_", "bands", "bandcounts", "doc_id",
+    Seq("band", "bsig"), "doc_id BIGINT, sig BIGINT, band INT, bsig BIGINT",
+    "band INT, bsig BIGINT")
+
+  /** The verify predicate: exact Hamming distance over the full
+    * signatures the joined band rows carry — a projection of the join.
+    */
+  private def hamming: Column =
+    bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).cast("int").as("hamming")
+
+  private def withinHamming(cand: DataFrame, maxHamming: Int): DataFrame =
+    cand.filter(col("hamming") <= maxHamming).distinct()
+
   /** The banded Hamming self-join over a (doc_id, sig) table — the
     * "yesterday's run" that produces the persisted corpus-internal pair
     * artifact. Identical semantics to the shipped family operators
@@ -67,14 +81,7 @@ object IncrementalSig {
     val banded = Dedup.capBuckets(
         bandsOfSig(sigs, bits, nBands), bucketCap, "band", "bsig")
       .hint("shuffle_hash")
-    banded.alias("a")
-      .join(banded.alias("b"),
-        col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).cast("int").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+    withinHamming(IndexLifecycle.selfPairs(banded, banded, Bands, hamming), maxHamming)
   }
 
   /** The persisted artifacts: the bucketed band table (probe surface),
@@ -84,45 +91,17 @@ object IncrementalSig {
   final case class SigIndex(bands: DataFrame, pairs: DataFrame,
       bits: Int, nBands: Int, bandCounts: Option[DataFrame] = None)
 
-  private def bandTable(loc: String) =
-    graft.runtime.IndexStore.tableFor("graft_sig_bands_", loc)
-  private def bcntTable(loc: String) =
-    graft.runtime.IndexStore.tableFor("graft_sig_bcnt_", loc)
-
-  private def writeBandTables(s: SparkSession, dir: String, bands: DataFrame,
-      relBands: String, relCounts: String, nBuckets: Int): Unit = {
-    s.sql(s"DROP TABLE IF EXISTS ${bandTable(s"$dir/$relBands")}")
-    s.sql(s"DROP TABLE IF EXISTS ${bcntTable(s"$dir/$relCounts")}")
-    graft.runtime.Par.run( // independent writes — overlap (guide §2.6)
-      () => graft.runtime.IndexStore.writeBucketed(bands, nBuckets,
-        s"$dir/$relBands", bandTable(s"$dir/$relBands"), "overwrite",
-        "band", "bsig"),
-      () => graft.runtime.IndexStore.writeBucketed(
-        bands.groupBy(col("band"), col("bsig")).agg(count(lit(1)).as("cn")),
-        nBuckets, s"$dir/$relCounts", bcntTable(s"$dir/$relCounts"),
-        "overwrite", "band", "bsig"))
-  }
-
-  /** Write + PUBLISH (manifest generation 0 — the atomic-publication
-    * discipline of [[IncrementalDedup.writeIndex]], shared by every
-    * index family; r16 VERDICT #1).
+  /** Write + PUBLISH manifest generation 0
+    * ([[IndexLifecycle.publishGen0]], the atomic-publication discipline
+    * every index family shares; r16 VERDICT #1).
     */
   def writeIndex(corpusSigs: DataFrame, pairs: DataFrame, dir: String,
       bits: Int, nBands: Int, nBuckets: Int = 32,
       capLedger0: Option[DataFrame] = None): Unit = {
-    val s = corpusSigs.sparkSession
-    graft.runtime.Par.run(Seq( // independent writes — overlap (guide §2.6)
-      () => writeBandTables(s, dir, bandsOfSig(corpusSigs, bits, nBands),
-        "bands", "bandcounts", nBuckets),
-      () => pairs.write.mode("overwrite").parquet(s"$dir/pairs/epoch-0")) ++
-      capLedger0.map(l => () => l.select(col("band"), col("bsig"))
-        .write.mode("overwrite").parquet(s"$dir/capledger/epoch-0")): _*)
-    IndexStatePublisher.publish(dir, IndexManifest(0L,
-      Map("bands" -> "bands", "bandcounts" -> "bandcounts", "pairs" -> "pairs") ++
-        (if (capLedger0.nonEmpty) Map("capledger" -> "capledger") else Map.empty),
-      Map("pairs" -> 0) ++
-        (if (capLedger0.nonEmpty) Map("capledger" -> 0) else Map.empty),
-      Map("bits" -> bits, "n_bands" -> nBands, "n_buckets" -> nBuckets)))
+    val (writes, entries) = IndexLifecycle.freshIndex(corpusSigs.sparkSession, dir, Bands,
+      bandsOfSig(corpusSigs, bits, nBands), nBuckets, 0L, Map("pairs" -> pairs), None, capLedger0)
+    IndexLifecycle.publishGen0(dir, writes, entries, Seq("pairs") ++ capLedger0.map(_ => "capledger"),
+      Map("bits" -> bits, "n_bands" -> nBands, "n_buckets" -> nBuckets))
   }
 
   /** Load the index at its CURRENT published generation (one manifest
@@ -132,30 +111,21 @@ object IncrementalSig {
     * broadcast anti-joins — the bucketed layout survives, deleted docs
     * can neither pair with future deltas nor linger in the answer.
     */
-  def readIndex(s: SparkSession, dir: String): SigIndex = {
-    import graft.runtime.IndexStore
-    val m = IndexStatePublisher.current(dir)
-    val (bits, nBands, nb) = (m.geom(dir, "bits"), m.geom(dir, "n_bands"), m.geom(dir, "n_buckets"))
+  def readIndex(s: SparkSession, dir: String): SigIndex =
+    readIndexAt(s, dir, IndexStatePublisher.current(dir))
+
+  private def readIndexAt(s: SparkSession, dir: String, m: IndexManifest): SigIndex = {
     val minusDel = IndexLifecycle.tombstoneFilter(s, dir, m, "doc_id")
-    SigIndex(
-      minusDel(IndexStore.ensureBucketedTable(s, bandTable(s"$dir/${m.path("bands")}"),
-        "doc_id BIGINT, sig BIGINT, band INT, bsig BIGINT",
-        "band, bsig", nb, s"$dir/${m.path("bands")}"), "doc_id"),
-      minusDel(minusDel(s.read.parquet(m.epochPaths(dir, "pairs"): _*), "a_id"), "b_id"),
-      bits, nBands,
-      Some(IndexStore.ensureBucketedTable(s, bcntTable(s"$dir/${m.path("bandcounts")}"),
-        "band INT, bsig BIGINT, cn BIGINT", "band, bsig", nb,
-        s"$dir/${m.path("bandcounts")}")))
+    val (bands, counts) = IndexLifecycle.readProbe(s, dir, m, Bands, minusDel)
+    SigIndex(bands, IndexLifecycle.readPairs(s, dir, m, minusDel),
+      m.geom(dir, "bits"), m.geom(dir, "n_bands"), counts)
   }
 
   /** Deletion from a signature index (the d47 lifecycle applied to the
     * bit-signature families): the PAIR LIST is the resolvable artifact —
     * there is no cluster stage to repair — so takedown is exactly a
-    * tombstone generation; [[readIndex]] filters every artifact by it.
-    * The full surviving tombstone list is rewritten per generation
-    * (delete traffic is small by contract) and published with the
-    * manifest CAS under the writer lock — a reader's one manifest
-    * resolution gives a consistent (pairs, tombstones) snapshot.
+    * tombstone generation ([[IndexLifecycle.tombstone]]);
+    * [[readIndex]] filters every artifact by it.
     * Equivalence (uncapped): surviving docs band identically in a rerun
     * over corpus-minus-deleted, so the rerun's pairs are precisely
     * yesterday's restricted to surviving endpoints — the filtered load.
@@ -175,78 +145,41 @@ object IncrementalSig {
     * spec-pinned (IndexPublicationSpec "cap ledger" case).
     */
   def deleteDocs(s: SparkSession, dir: String, deleteIds: DataFrame): Unit =
-    IndexStatePublisher.withWriterLock(dir) {
-      val m = IndexStatePublisher.current(dir)
-      IndexLifecycle.writeTombstones(s, dir, m,
-        deleteIds.select(col("doc_id").cast("long").as("doc_id")))
-      IndexStatePublisher.publish(dir, m
-        .withEntry("deleted", s"deleted/gen-${m.gen + 1}")
-        .copy(gen = m.gen + 1))
-    }
+    IndexLifecycle.tombstone(s, dir, "doc_id", deleteIds)
 
-  /** The LEDGERED family's compaction: a REBUILD (r18 VERDICT ask #2 —
-    * previously only a refusal message recommended this; now it is
-    * engine code). Epoch-collapsing compaction cannot preserve a cap
-    * ledger (suppression HISTORY), so the scheduled physical cleanup
-    * for a ledgered index is: re-derive everything from the SURVIVING
-    * signatures — recoverable from the tombstone-filtered band table,
-    * no caller-supplied corpus needed — via [[buildPairsWithLedger]],
-    * into FRESH generation-suffixed directories with a fresh EPOCH-0
-    * ledger, switch with the manifest CAS (tombstone entry dropped),
-    * all under the writer lock. In-flight readers keep their
-    * directories until [[graft.runtime.IndexStatePublisher.gc]].
-    *
-    * The rebuilt index answers as a FRESH capped build over survivors —
-    * by design NOT necessarily the pre-rebuild maintained answer (the
-    * epoch history is gone; suppression re-derives from the survivor
-    * population). That is the same semantic reset a re-banding or
-    * centroid retrain performs: a scheduled, loud re-derivation, never
-    * a silent drift. The spec pins rebuilt ≡ fresh-build-over-survivors
-    * AND that the fresh ledger replays (epoch-0 tags) to the rebuilt
-    * answer.
+  /** The LEDGERED family's compaction: a REBUILD
+    * ([[IndexLifecycle.rebuildLedgered]] holds the contract). The
+    * surviving signatures are recoverable from the tombstone-filtered
+    * band table, so no caller-supplied corpus is needed: everything
+    * re-derives via [[buildPairsWithLedger]] into FRESH
+    * generation-suffixed directories with a fresh EPOCH-0 ledger. The
+    * spec pins rebuilt ≡ fresh-build-over-survivors AND that the fresh
+    * ledger replays (epoch-0 tags) to the rebuilt answer.
     */
   def rebuildLedgered(s: SparkSession, dir: String, maxHamming: Int,
-      bucketCap: Int): Unit =
-    IndexStatePublisher.withWriterLock(dir) {
-      val m = IndexStatePublisher.current(dir)
-      require(m.pathOpt("capledger").nonEmpty,
-        s"signature index at $dir is not ledgered — use compactIndex")
-      val (bits, nBands, nb) = (m.geom(dir, "bits"), m.geom(dir, "n_bands"), m.geom(dir, "n_buckets"))
-      val idx = readIndex(s, dir) // tombstone-filtered views
-      val survSigs = idx.bands.select(col("doc_id"), col("sig")).distinct()
-        .transform(graft.runtime.Ckpt.eager)
-      val (pairs, over0) = buildPairsWithLedger(survSigs, bits, nBands,
-        maxHamming, bucketCap)
-      val pairsC = pairs.transform(graft.runtime.Ckpt.eager)
-      val g = m.gen + 1
-      graft.runtime.Par.run( // independent writes — overlap (guide §2.6)
-        () => writeBandTables(s, dir, bandsOfSig(survSigs, bits, nBands),
-          s"bands-g$g", s"bandcounts-g$g", nb),
-        () => pairsC.write.mode("overwrite").parquet(s"$dir/pairs-g$g/epoch-0"),
-        () => over0.select(col("band"), col("bsig"))
-          .write.mode("overwrite").parquet(s"$dir/capledger-g$g/epoch-0"))
-      IndexStatePublisher.publish(dir, m.copy(gen = g,
-        entries = Map("bands" -> s"bands-g$g", "bandcounts" -> s"bandcounts-g$g",
-          "pairs" -> s"pairs-g$g", "capledger" -> s"capledger-g$g"),
-        epochs = Map("pairs" -> 0, "capledger" -> 0)))
-    }
+      bucketCap: Int): Unit = IndexLifecycle.rebuildLedgered(dir) { (m, g) =>
+    val (bits, nBands) = (m.geom(dir, "bits"), m.geom(dir, "n_bands"))
+    val survSigs = readIndexAt(s, dir, m).bands.select(col("doc_id"), col("sig")).distinct()
+      .transform(Ckpt.eager)
+    val (pairs, over0) = buildPairsWithLedger(survSigs, bits, nBands, maxHamming, bucketCap)
+    IndexLifecycle.freshIndex(s, dir, Bands, bandsOfSig(survSigs, bits, nBands),
+      m.geom(dir, "n_buckets"), g, Map("pairs" -> pairs.transform(Ckpt.eager)), None, Some(over0))
+  }
 
-  /** Rebuild-time compaction (see [[IncrementalDedup.compactIndex]]):
-    * rewrite the band table and pair list minus tombstoned rows,
-    * recount buckets (collapsing the maintained index's per-append
-    * count rows and the epoch history), drop the tombstone entry.
-    * Answer-invariant — the spec pins read-before ≡ read-after. All
-    * rewrites target FRESH generation-suffixed directories; the switch
-    * is the manifest CAS (in-flight readers keep their files).
+  /** Rebuild-time compaction ([[IndexLifecycle.compact]] holds the
+    * contract): rewrite the band table and pair
+    * list minus tombstoned rows, recount buckets (collapsing the
+    * maintained index's per-append count rows and the epoch history),
+    * drop the tombstone entry. Answer-invariant — the spec pins
+    * read-before ≡ read-after.
     */
   def compactIndex(s: SparkSession, dir: String): Unit =
     IndexLifecycle.compact(dir, "rebuildLedgered(dir, maxHamming, bucketCap)") { (m, g) =>
-      val idx = readIndex(s, dir) // tombstone-filtered views
-      val bands = idx.bands.transform(graft.runtime.Ckpt.eager)
-      val pairs = idx.pairs.transform(graft.runtime.Ckpt.eager)
-      writeBandTables(s, dir, bands, s"bands-g$g", s"bandcounts-g$g", m.geom(dir, "n_buckets"))
-      pairs.write.mode("overwrite").parquet(s"$dir/pairs-g$g/epoch-0")
-      Map("bands" -> s"bands-g$g", "bandcounts" -> s"bandcounts-g$g", "pairs" -> s"pairs-g$g")
+      val idx = readIndexAt(s, dir, m)
+      val bands = idx.bands.transform(Ckpt.eager)
+      val pairs = idx.pairs.transform(Ckpt.eager)
+      IndexLifecycle.freshIndex(s, dir, Bands, bands, m.geom(dir, "n_buckets"), g,
+        Map("pairs" -> pairs), None)
     }
 
   /** The incremental pass: delta bands probe the bucketed corpus band
@@ -254,12 +187,8 @@ object IncrementalSig {
     * plus a delta-sized self-join for delta–delta pairs; exact Hamming
     * verify is a projection of the joined rows; union with yesterday's
     * pairs IS the full-corpus answer (class doc). `bucketCap` follows
-    * the d39 pattern: the cap over corpus+delta bucket population is
-    * enforced from the PERSISTED per-bucket counts joined to the
-    * delta's — delta-touched buckets only, output-equivalent to
-    * capping the full union (a bucket without a delta member emits no
-    * candidate), at a delta-bucket-sized cost. Under a finite cap the
-    * equivalence carries d39's yesterday's-population caveat at cap
+    * the d39 pattern ([[IndexLifecycle.capDelta]]). Under a finite cap
+    * the equivalence carries d39's yesterday's-population caveat at cap
     * crossings; the uncapped gates stay exact.
     */
   def appendPairs(idx: SigIndex, deltaSigs: DataFrame,
@@ -268,133 +197,55 @@ object IncrementalSig {
 
   /** The CAPPED build arm with its over-cap evidence (the epoch-0 cap
     * ledger): same semantics as [[buildPairs]] at a finite cap, but the
-    * suppressed bucket set is returned for persistence. Epoch-0 rule =
-    * the same rule every append applies ([[deltaPairs]]): a bucket is
-    * suppressed iff its population among docs visible at this epoch
-    * exceeds the cap.
+    * suppressed bucket set is returned for persistence
+    * ([[IndexLifecycle.overCap]]).
     */
   private[graft] def buildPairsWithLedger(sigs: DataFrame, bits: Int, nBands: Int,
       maxHamming: Int, bucketCap: Int): (DataFrame, DataFrame) = {
     require(bucketCap != Dedup.NoBucketCap, "ledger build requires a finite cap")
-    val banded = bandsOfSig(sigs, bits, nBands)
-    val over = banded.groupBy(col("band"), col("bsig")).agg(count(lit(1)).as("cn"))
-      .filter(col("cn") > bucketCap)
-      .select(col("band"), col("bsig"))
-      .transform(graft.runtime.Ckpt.eager)
+    val over = IndexLifecycle.overCap(bandsOfSig(sigs, bits, nBands), bucketCap, Bands)
     (buildPairs(sigs, bits, nBands, maxHamming, bucketCap), over)
   }
 
   /** The delta-involved pairs of one append (the shared core of the
     * one-shot [[appendPairs]] and the maintained [[appendToIndex]]):
-    * corpus–delta via the bucketed band probe, delta–delta via the
-    * delta-sized self-join, exact Hamming verify, `a < b` distinct.
+    * the capped delta probe, exact Hamming verify, `a < b` distinct.
     * Returns (delta band rows — checkpointed, the write-back payload —
     * the LAZY new-pair frame, and the over-cap bucket set this epoch
     * SUPPRESSED — the cap-ledger row source, `None` when uncapped).
     */
   private def deltaPairs(idx: SigIndex, deltaSigs: DataFrame,
       maxHamming: Int, bucketCap: Int): (DataFrame, DataFrame, Option[DataFrame]) = {
-    val db0 = bandsOfSig(deltaSigs, idx.bits, idx.nBands).transform(graft.runtime.Ckpt.eager)
-    var overLedger: Option[DataFrame] = None
-    val (cb, db) =
-      if (bucketCap == Dedup.NoBucketCap) (idx.bands, db0)
-      else {
-        require(bucketCap > 0,
-          s"bucketCap must be positive or NoBucketCap, got $bucketCap")
-        val cCnt0 = idx.bandCounts.getOrElse(
-          idx.bands.groupBy(col("band"), col("bsig")).agg(count(lit(1)).as("cn")))
-        val dCnt = db0.groupBy(col("band"), col("bsig"))
-          .agg(count(lit(1)).as("dn"))
-          .transform(graft.runtime.Ckpt.eager)
-        // a MAINTAINED index appends one count row per (append, bucket):
-        // SUM over delta-touched keys only (the d46 pattern)
-        val cCnt = cCnt0
-          .join(dCnt.select(col("band"), col("bsig")).hint("shuffle_hash"),
-            Seq("band", "bsig"))
-          .groupBy(col("band"), col("bsig")).agg(sum(col("cn")).as("cn"))
-        val over = dCnt
-          .join(cCnt, Seq("band", "bsig"), "left_outer")
-          .filter(coalesce(col("cn"), lit(0L)) + col("dn") > bucketCap)
-          .select(col("band"), col("bsig"))
-          .transform(graft.runtime.Ckpt.eager)
-        overLedger = Some(over)
-        (idx.bands.join(over, Seq("band", "bsig"), "left_anti"),
-          db0.join(over, Seq("band", "bsig"), "left_anti"))
-      }
-    def ham = bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).cast("int")
-    val candCD = cb.alias("a")
-      .join(db.hint("shuffle_hash").alias("b"),
-        col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(
-        least(col("a.doc_id"), col("b.doc_id")).as("a_id"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("b_id"),
-        ham.as("hamming"))
-    val candDD = db.hint("shuffle_hash").alias("a")
-      .join(db.alias("b"),
-        col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        ham.as("hamming"))
-    (db0,
-      candCD.unionByName(candDD)
-        .filter(col("hamming") <= maxHamming)
-        .distinct(),
-      overLedger)
+    val db0 = bandsOfSig(deltaSigs, idx.bits, idx.nBands).transform(Ckpt.eager)
+    val (cb, db, over) = IndexLifecycle.capDelta(idx.bands, idx.bandCounts, db0, bucketCap, Bands)
+    (db0, withinHamming(IndexLifecycle.deltaCandidates(cb, db, Bands, hamming), maxHamming), over)
   }
 
   /** One MAINTAINED append (the d46 lifecycle for the signature
     * families): compute the delta-involved pairs, then write the delta's
-    * rows BACK — band rows appended in the same bucket layout, one count
-    * row per (append, bucket) (readers sum over delta-touched keys),
-    * new pairs appended to the pair artifact — so the directory again
-    * holds what a full run over the accumulated corpus would persist.
-    * New pairs are checkpointed BEFORE any table mutation (their plan
-    * lazily probes the very band table being appended). Returns the
-    * artifact's pair state re-read from disk — old ∪ new, tombstone-
-    * filtered, exactly what the next reader sees.
+    * rows BACK ([[IndexLifecycle.appendWriteBack]]) — band rows appended
+    * in the same bucket layout, one count row per (append, bucket),
+    * new pairs (and a ledgered index's suppressed set) as a new epoch —
+    * so the directory again holds what a full run over the accumulated
+    * corpus would persist. New pairs are checkpointed BEFORE any table
+    * mutation (their plan lazily probes the very band table being
+    * appended). Returns the published pair state — old ∪ new,
+    * tombstone-filtered, exactly what the next reader sees.
     */
   def appendToIndex(s: SparkSession, dir: String, deltaSigs: DataFrame,
       maxHamming: Int, bucketCap: Int = Dedup.NoBucketCap): DataFrame =
-    IndexStatePublisher.withWriterLock(dir) {
-      val m = IndexStatePublisher.current(dir)
-      val idx = readIndex(s, dir)
-      val nb = m.geom(dir, "n_buckets")
-      val (db0, newPairs0, over) = deltaPairs(idx, deltaSigs, maxHamming, bucketCap)
-      val newPairs = newPairs0.transform(graft.runtime.Ckpt.eager)
-      val pairEpoch = m.epochs.getOrElse("pairs", -1) + 1
-      // the CAP LEDGER (r16 VERDICT #2): a LEDGERED index (built via
-      // [[buildPairsWithLedger]]) persists, per epoch, the exact bucket
-      // set the cap suppressed — which is what makes a capped
-      // incremental answer REPRODUCIBLE by a rerun
-      // ([[rerunWithLedger]]) instead of "append-consistent, drift
-      // unbounded". Epochs align with the pair epochs; an uncapped
-      // append on a ledgered index records an empty suppression set.
-      val ledgered = m.pathOpt("capledger").nonEmpty
-      val ledgerWrite = if (!ledgered) Seq.empty else
-        Seq(() => IndexLifecycle.writeLedgerEpoch(dir, m, pairEpoch, over, db0,
-          "band", "bsig"))
-      graft.runtime.Par.run(Seq( // independent writes — overlap (guide §2.6)
-        () => graft.runtime.IndexStore.writeBucketed(db0, nb,
-          s"$dir/${m.path("bands")}", bandTable(s"$dir/${m.path("bands")}"),
-          "append", "band", "bsig"),
-        () => graft.runtime.IndexStore.writeBucketed(
-          db0.groupBy(col("band"), col("bsig")).agg(count(lit(1)).as("cn")),
-          nb, s"$dir/${m.path("bandcounts")}",
-          bcntTable(s"$dir/${m.path("bandcounts")}"), "append", "band", "bsig"),
-        () => newPairs.write.mode("overwrite")
-          .parquet(s"$dir/${m.path("pairs")}/epoch-$pairEpoch")) ++ ledgerWrite: _*)
-      IndexStatePublisher.publish(dir, m.copy(gen = m.gen + 1,
-        epochs = m.epochs + ("pairs" -> pairEpoch) ++
-          (if (ledgered) Map("capledger" -> pairEpoch) else Map.empty)))
-      readIndex(s, dir).pairs
+    IndexLifecycle.mutate(dir) { m =>
+      val (db0, newPairs, over) = deltaPairs(readIndexAt(s, dir, m), deltaSigs, maxHamming, bucketCap)
+      val (next, _) = IndexLifecycle.appendWriteBack(s, dir, m, Bands, db0, over,
+        Map("pairs" -> newPairs.transform(Ckpt.eager)), None)
+      readIndexAt(s, dir, next).pairs
     }
 
   /** The persisted cap ledger as one frame: (epoch, band, bsig) — every
     * bucket the cap suppressed, at the epoch it suppressed it.
     */
   def readCapLedger(s: SparkSession, dir: String): DataFrame =
-    IndexLifecycle.readCapLedger(s, dir, IndexStatePublisher.current(dir), "band", "bsig")
+    IndexLifecycle.readCapLedger(s, dir, IndexStatePublisher.current(dir), Bands.keys: _*)
 
   /** The LEDGER-AWARE RERUN — the engineering contract the cap ledger
     * buys (r16 VERDICT #2): given every document's signature tagged
@@ -404,44 +255,23 @@ object IncrementalSig {
     * instead of re-deriving caps from populations. The identity: a
     * pair is discovered at epoch e = max(epoch_a, epoch_b) (the epoch
     * its later member arrived), through any shared (band, bsig) bucket
-    * NOT suppressed at e — so one self-join with the ledger anti-joined
-    * on (band, bsig, e) replays the whole history. The capped
-    * incremental answer thus HAS a rerun-reproducible definition; the
-    * spec gates `rerunWithLedger ≡ accumulated index pairs`, and d51
-    * gates the same semantics against a DuckDB oracle that re-derives
-    * the suppression sets from running bucket populations.
+    * NOT suppressed at e — which the row-level replay
+    * ([[IndexLifecycle.ledgerAdmitted]]) decides before one self-join.
+    * The capped incremental answer thus HAS a rerun-reproducible
+    * definition; the spec gates `rerunWithLedger ≡ accumulated index
+    * pairs`, and d51 gates the same semantics against a DuckDB oracle
+    * that re-derives the suppression sets from running bucket
+    * populations.
     */
   def rerunWithLedger(s: SparkSession, dir: String,
       sigsWithEpoch: DataFrame, maxHamming: Int): DataFrame = {
     val m = IndexStatePublisher.current(dir)
-    val (bits, nBands) = (m.geom(dir, "bits"), m.geom(dir, "n_bands"))
-    // Suppression is MONOTONE: bucket population over visible docs only
-    // grows with the epoch, so "over cap at epoch k ⇒ over at every
-    // k' > k" — a bucket's ledger rows form a suffix [firstOver, K].
-    // Therefore "pair admitted ⇔ bucket not over at pe = max(ea, eb)"
-    // ⇔ "both endpoints' epochs < firstOver(bucket)", and the filter
-    // moves from the pair level to the ROW level — which is what keeps
-    // the rerun scale-safe: a mega-bucket the cap suppressed from
-    // epoch 0 contributes ZERO rows to the self-join instead of
-    // enumerating its quadratic candidates and discarding them.
-    val firstOver = IndexLifecycle.readCapLedger(s, dir, m, "band", "bsig")
-      .groupBy(col("band"), col("bsig"))
-      .agg(min(col("epoch")).as("first_over"))
-    val banded = bandsOfSig(
-        sigsWithEpoch.select(col("doc_id"), col("sig"), col("epoch")),
-        bits, nBands)
-      .join(broadcast(firstOver), Seq("band", "bsig"), "left_outer")
-      .filter(col("first_over").isNull || col("epoch") < col("first_over"))
-      .drop("first_over")
-      .transform(graft.runtime.Ckpt.eager)
-    banded.alias("a")
-      .join(banded.hint("shuffle_hash").alias("b"),
-        col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).cast("int").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+    val banded = IndexLifecycle.ledgerAdmitted(s, dir, m,
+      bandsOfSig(sigsWithEpoch.select(col("doc_id"), col("sig"), col("epoch")),
+        m.geom(dir, "bits"), m.geom(dir, "n_bands")),
+      Bands)
+    withinHamming(
+      IndexLifecycle.selfPairs(banded, banded.hint("shuffle_hash"), Bands, hamming), maxHamming)
   }
 
   /** d42: incremental SimHash near-dup pairs at d12's grid point
@@ -659,26 +489,36 @@ object IncrementalSemantic {
     e.withColumn("sigs",
       graft.functions.SignLshBuckets(col("embedding"), nTables, bits))
 
-  private[graft] def bucketsOf(e: DataFrame): DataFrame =
-    e.select(col("vec_id"), posexplode(col("sigs")))
+  /** The (vec_id, carry..., table_id, bucket) rows of `e`'s signatures. */
+  private[graft] def bucketsOf(e: DataFrame, carry: String*): DataFrame =
+    e.select((col("vec_id") +: carry.map(col)) :+ posexplode(col("sigs")): _*)
       .withColumnRenamed("pos", "table_id")
       .withColumnRenamed("col", "bucket")
 
-  /** Yesterday's run: bucket self-join + exact-cosine verify over the
-    * corpus at the index's geometry (the same candidate/verify ladder as
-    * [[Similarity.signLshPairs]] at explicit bits).
+  /** The bucket table: the probe surface, bucketed on (table_id,
+    * bucket). bucket is INT: SignLshBuckets emits array<int> (≤ 32 bits
+    * of bucket id by construction) — a BIGINT declaration would read the
+    * int32 parquet column as null and silently empty every probe.
     */
-  private[graft] def corpusPairs(e: DataFrame, minCos: Double = MinCos): DataFrame = {
-    val buckets = bucketsOf(e).hint("shuffle_hash")
-    val ids = buckets.alias("a")
-      .join(buckets.alias("b"),
-        col("a.table_id") === col("b.table_id") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-      .distinct()
-    Similarity.verifyCosineOn(e.select(col("vec_id"), col("embedding"), col("nrm")), ids, minCos)
+  private val Buckets = IndexLifecycle.Probe("graft_sem_", "buckets", "bucketcounts", "vec_id",
+    Seq("table_id", "bucket"), "vec_id BIGINT, table_id INT, bucket INT",
+    "table_id INT, bucket INT")
+
+  /** The bucket self-join over `buckets` + the exact-cosine verify over
+    * `e` (the same candidate/verify ladder as [[Similarity.signLshPairs]]
+    * at explicit bits).
+    */
+  private def verifiedPairs(e: DataFrame, buckets0: DataFrame, minCos: Double): DataFrame = {
+    val buckets = buckets0.hint("shuffle_hash")
+    Similarity.verifyCosineOn(e.select(col("vec_id"), col("embedding"), col("nrm")),
+      IndexLifecycle.selfPairs(buckets, buckets, Buckets).distinct(), minCos)
   }
+
+  /** Yesterday's run: bucket self-join + exact-cosine verify over the
+    * corpus at the index's geometry.
+    */
+  private[graft] def corpusPairs(e: DataFrame, minCos: Double = MinCos): DataFrame =
+    verifiedPairs(e, bucketsOf(e), minCos)
 
   final case class SemIndex(buckets: DataFrame, labels: DataFrame,
       nTables: Int = NTables, bits: Int = Bits,
@@ -686,63 +526,28 @@ object IncrementalSemantic {
       bucketCounts: Option[DataFrame] = None,
       nBuckets: Int = 32)
 
-  private def tableFor(dir: String): String =
-    graft.runtime.IndexStore.tableFor("graft_sem_buckets_", dir)
-  private def bcntTableFor(dir: String): String =
-    graft.runtime.IndexStore.tableFor("graft_sem_bcnt_", dir)
-
-  /** Write + PUBLISH (manifest generation 0; see
-    * [[IncrementalDedup.writeIndex]] — r16 VERDICT #1). A LEDGERED
-    * write (`capLedger0` present — the d53 capped posture, r17 VERDICT
-    * ask #3) additionally persists the per-bucket population counts
-    * (the cap's delta-side evidence, one count row per (append,
-    * bucket); readers SUM over delta-touched keys) and lays pairs +
-    * ledger out in EPOCH directories so maintained appends
-    * ([[appendToIndex]]) extend them append-only.
+  /** Write + PUBLISH manifest generation 0
+    * ([[IndexLifecycle.publishGen0]]). Pairs, when given (deletion's
+    * evidence), live in EPOCH directories like every family's. A
+    * LEDGERED write (`capLedger0` present — the d53 capped posture, r17
+    * VERDICT ask #3) additionally persists the per-bucket population
+    * counts (the cap's delta-side evidence, one count row per (append,
+    * bucket); readers SUM over delta-touched keys) and the epoch-0
+    * ledger, so maintained appends ([[appendToIndex]]) extend them
+    * append-only.
     */
   def writeIndex(corpusE: DataFrame, labels: DataFrame, dir: String,
       nBuckets: Int = 32, nTables: Int = NTables, bits: Int = Bits,
       pairs: Option[DataFrame] = None,
       capLedger0: Option[DataFrame] = None): Unit = {
-    val s = corpusE.sparkSession
-    val ledgered = capLedger0.nonEmpty
-    require(!ledgered || pairs.nonEmpty,
+    require(capLedger0.isEmpty || pairs.nonEmpty,
       "a ledgered semantic index persists its pair evidence")
-    val buckets = bucketsOf(corpusE)
-    s.sql(s"DROP TABLE IF EXISTS ${tableFor(s"$dir/buckets")}")
-    if (ledgered) s.sql(s"DROP TABLE IF EXISTS ${bcntTableFor(s"$dir/bucketcounts")}")
-    // the artifact writes are INDEPENDENT actions over materialized
-    // inputs — overlap them (guide §2.6; graft.runtime.Par): visibility
-    // is the manifest publish below, so write ordering is unobservable
-    val writes = Seq(
-      () => graft.runtime.IndexStore.writeBucketed(buckets, nBuckets,
-        s"$dir/buckets", tableFor(s"$dir/buckets"), "overwrite",
-        "table_id", "bucket"),
-      () => labels.write.mode("overwrite").parquet(s"$dir/labels/gen-0")) ++
-      (if (ledgered) Seq(
-        () => graft.runtime.IndexStore.writeBucketed(
-          buckets.groupBy(col("table_id"), col("bucket")).agg(count(lit(1)).as("cn")),
-          nBuckets, s"$dir/bucketcounts", bcntTableFor(s"$dir/bucketcounts"),
-          "overwrite", "table_id", "bucket")) ++
-        pairs.map(p => () => p.write.mode("overwrite").parquet(s"$dir/pairs/epoch-0")) ++
-        capLedger0.map(l => () => l.select(col("table_id"), col("bucket"))
-          .write.mode("overwrite").parquet(s"$dir/capledger/epoch-0"))
-      else
-        pairs.map(p => () => p.write.mode("overwrite").parquet(s"$dir/pairs/gen-0")).toSeq)
-    graft.runtime.Par.run(writes: _*)
-    val entries =
-      if (ledgered)
-        Map("buckets" -> "buckets", "labels" -> "labels/gen-0",
-          "bucketcounts" -> "bucketcounts", "pairs" -> "pairs",
-          "capledger" -> "capledger")
-      else
-        Map("buckets" -> "buckets", "labels" -> "labels/gen-0") ++
-          (if (pairs.nonEmpty) Map("pairs" -> "pairs/gen-0") else Map.empty)
-    val epochs =
-      if (ledgered) Map("pairs" -> 0, "capledger" -> 0)
-      else Map.empty[String, Int]
-    IndexStatePublisher.publish(dir, IndexManifest(0L, entries, epochs,
-      Map("n_buckets" -> nBuckets, "n_tables" -> nTables, "bits" -> bits)))
+    val (writes, entries) = IndexLifecycle.freshIndex(corpusE.sparkSession, dir, Buckets,
+      bucketsOf(corpusE), nBuckets, 0L, pairs.map("pairs" -> _).toMap, Some(labels),
+      capLedger0, counts = capLedger0.nonEmpty)
+    IndexLifecycle.publishGen0(dir, writes, entries,
+      pairs.map(_ => "pairs") ++ capLedger0.map(_ => "capledger"),
+      Map("n_buckets" -> nBuckets, "n_tables" -> nTables, "bits" -> bits))
   }
 
   /** Load the index at its CURRENT published generation (one manifest
@@ -751,45 +556,28 @@ object IncrementalSemantic {
     * are filtered out of the bucket table and the pair evidence with
     * broadcast anti-joins (the bucketed layout survives).
     */
-  def readIndex(s: SparkSession, dir: String): SemIndex = {
-    val m = IndexStatePublisher.current(dir)
-    val (nb, nt, bits) = (m.geom(dir, "n_buckets"), m.geom(dir, "n_tables"), m.geom(dir, "bits"))
+  def readIndex(s: SparkSession, dir: String): SemIndex =
+    readIndexAt(s, dir, IndexStatePublisher.current(dir))
+
+  private def readIndexAt(s: SparkSession, dir: String, m: IndexManifest): SemIndex = {
     val minusDel = IndexLifecycle.tombstoneFilter(s, dir, m, "vec_id")
-    // pairs live in EPOCH dirs on a ledgered (maintained-append) index,
-    // in a single gen-0 dir otherwise
-    val pairs = m.pathOpt("pairs").map { rel =>
-      val raw =
-        if (m.epochs.contains("pairs"))
-          s.read.parquet(m.epochPaths(dir, "pairs"): _*)
-        else s.read.parquet(s"$dir/$rel")
-      minusDel(minusDel(raw, "a_id"), "b_id")
-    }
-    val bcnt = m.pathOpt("bucketcounts").map(rel =>
-      graft.runtime.IndexStore.ensureBucketedTable(s,
-        bcntTableFor(s"$dir/$rel"),
-        "table_id INT, bucket INT, cn BIGINT",
-        "table_id, bucket", nb, s"$dir/$rel"))
-    // bucket is INT: SignLshBuckets emits array<int> (≤ 32 bits of
-    // bucket id by construction) — a BIGINT declaration here would read
-    // the int32 parquet column as null and silently empty every probe
-    SemIndex(minusDel(graft.runtime.IndexStore.ensureBucketedTable(s,
-        tableFor(s"$dir/${m.path("buckets")}"),
-        "vec_id BIGINT, table_id INT, bucket INT",
-        "table_id, bucket", nb, s"$dir/${m.path("buckets")}"), "vec_id"),
-      s.read.parquet(s"$dir/${m.path("labels")}"), nt, bits, pairs, bcnt, nb)
+    val pairs = m.pathOpt("pairs").map(_ => IndexLifecycle.readPairs(s, dir, m, minusDel))
+    val (buckets, counts) = IndexLifecycle.readProbe(s, dir, m, Buckets, minusDel)
+    SemIndex(buckets, s.read.parquet(s"$dir/${m.path("labels")}"),
+      m.geom(dir, "n_tables"), m.geom(dir, "bits"), pairs, counts, m.geom(dir, "n_buckets"))
   }
 
   /** Incremental DELETION from the semantic index (d49 — the d47
-    * lifecycle for the embedding family, minus the exact-hash channel
-    * text has and embeddings don't): tombstone the vectors, re-resolve
-    * exactly the clusters that lost a member from the PERSISTED pair
-    * evidence restricted to touched clusters minus deleted endpoints
-    * (connectivity splits when a bridge vector dies — labels alone
-    * cannot recover that), keep untouched labels verbatim. Uncapped and
-    * geometry-pinned, so the equivalence to the full rerun over
-    * surviving vectors is exact (per-vector bucketing is deterministic:
-    * the rerun's candidates are yesterday's restricted to survivors).
-    * Returns the updated labels (checkpointed).
+    * touched-cluster lifecycle, [[IndexLifecycle.deleteTouched]], for
+    * the embedding family, minus the exact-hash channel text has and
+    * embeddings don't): tombstone the vectors, re-resolve exactly the
+    * clusters that lost a member from the PERSISTED pair evidence
+    * restricted to touched clusters minus deleted endpoints, keep
+    * untouched labels verbatim. Uncapped and geometry-pinned, so the
+    * equivalence to the full rerun over surviving vectors is exact
+    * (per-vector bucketing is deterministic: the rerun's candidates are
+    * yesterday's restricted to survivors). Returns the updated labels
+    * (checkpointed).
     *
     * LEDGERED (capped) indexes: deletion COMPOSES with the cap ledger
     * (r18 VERDICT #1 — the d56 contract): suppression sets are
@@ -800,90 +588,50 @@ object IncrementalSemantic {
     * spec-pinned.
     */
   def deleteVectors(s: SparkSession, dir: String,
-      deleteIds0: DataFrame): DataFrame =
-    IndexStatePublisher.withWriterLock(dir) {
-      val del = deleteIds0.select(col("vec_id").cast("long").as("vec_id"))
-        .transform(graft.runtime.Ckpt.eager)
-      val m = IndexStatePublisher.current(dir)
-      val idx = readIndex(s, dir) // yesterday's view (manifest not yet advanced)
-      val pairs = idx.pairs.getOrElse(
-        sys.error(s"semantic index at $dir persists no pair evidence; deletion needs it"))
-      val touched = idx.labels.join(del.select(col("vec_id").as("id")), Seq("id"))
-        .select(col("cluster")).distinct()
-        .transform(graft.runtime.Ckpt.eager)
-      // guard probe ONCE per delete; both joins below reuse it (r16 ADVICE)
-      val tJoin = DedupResolve.guardedByCluster(touched)
-      val touchedLabels = idx.labels
-        .join(tJoin, Seq("cluster"))
-        .select(col("id"), col("cluster"))
-      val survPairs = pairs
-        .join(touchedLabels.select(col("id").as("a_id")), Seq("a_id"), "left_semi")
-        .join(del.withColumnRenamed("vec_id", "a_id"), Seq("a_id"), "left_anti")
-        .join(del.withColumnRenamed("vec_id", "b_id"), Seq("b_id"), "left_anti")
-      // the touched-cluster re-resolution is this mutation's HEAVY
-      // compute (an iterative multi-job resolve); run it to completion
-      // BEFORE any artifact write and overlap only the two cheap writes
-      // below (r20 VERDICT #1: overlapping the resolve with the
-      // tombstone rewrite was the prime suspect for d49's intermittent
-      // 7× blowup at 32-way task concurrency — two concurrent heavy
-      // jobs sharing local-mode's one unified memory pool, guide §5 —
-      // and the serial order also closes the torn-state window r20
-      // ADVICE flagged: nothing irreversible happens until the
-      // failure-prone step has succeeded). Wall cost of serializing:
-      // ≈ 0 — the tombstone union job now hides under the label write
-      // instead of under the resolve.
-      val subLabels =
-        DedupResolve.resolveClusters(survPairs.select(col("a_id"), col("b_id")))
-      val untouched = idx.labels
-        .join(tJoin, Seq("cluster"), "left_anti")
-        .select(col("id"), col("cluster"))
-      val newLabels = untouched.unionByName(subLabels.select(col("id"), col("cluster")))
-        .transform(graft.runtime.Ckpt.eager) // materialize BEFORE publishing over its input gen
-      graft.runtime.Par.run( // two independent writes — overlap (guide §2.6)
-        () => IndexLifecycle.writeTombstones(s, dir, m, del),
-        () => newLabels.write.mode("overwrite").parquet(s"$dir/labels/gen-${m.gen + 1}"))
-      IndexStatePublisher.publish(dir, m
-        .withEntry("labels", s"labels/gen-${m.gen + 1}")
-        .withEntry("deleted", s"deleted/gen-${m.gen + 1}")
-        .copy(gen = m.gen + 1))
-      newLabels
-    }
+      deleteIds0: DataFrame): DataFrame = IndexLifecycle.mutate(dir) { m =>
+    val idx = readIndexAt(s, dir, m)
+    IndexLifecycle.deleteTouched(s, dir, m, "vec_id", deleteIds0, idx.labels,
+      idx.pairs.getOrElse(
+        sys.error(s"semantic index at $dir persists no pair evidence; deletion needs it")),
+      None)
+  }
 
-  /** The incremental pass: delta buckets probe the bucketed corpus
-    * bucket table (corpus side: scan, no exchange) plus a delta-sized
-    * self-join; only candidates with ≥ 1 delta member reach the cosine
-    * verify (embeddings semi-join-pruned inside
-    * [[Similarity.verifyCosineOn]]); components resolve over the
-    * touched subgraph.
+  /** The delta probe of one append: delta buckets probe the bucketed
+    * corpus bucket table (corpus side: scan, no exchange) plus a
+    * delta-sized self-join under the cap ([[IndexLifecycle.capDelta]]);
+    * only candidates with ≥ 1 delta member reach the cosine verify.
+    * Returns (the delta's bucket rows, checkpointed; the LAZY verified
+    * pairs; the suppressed set, `None` when uncapped).
     */
-  def appendKept(allE: DataFrame, idx: SemIndex, delta: DataFrame,
-      minCos: Double = MinCos): DataFrame = {
-    // one checkpoint, not two (see appendToIndex — r20)
-    val db = bucketsOf(withSigs(delta, idx.nTables, idx.bits))
-      .transform(graft.runtime.Ckpt.eager)
-    val candCD = idx.buckets.alias("a")
-      .join(db.hint("shuffle_hash").alias("b"),
-        col("a.table_id") === col("b.table_id") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(
-        least(col("a.vec_id"), col("b.vec_id")).as("a_id"),
-        greatest(col("a.vec_id"), col("b.vec_id")).as("b_id"))
-    val candDD = db.hint("shuffle_hash").alias("a")
-      .join(db.alias("b"),
-        col("a.table_id") === col("b.table_id") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-    val candIds = candCD.unionByName(candDD).distinct().transform(graft.runtime.Ckpt.eager)
-    // endpoint semi-join prune before the verify (see [[appendToIndex]])
+  private def deltaVerified(allE: DataFrame, idx: SemIndex, delta: DataFrame,
+      minCos: Double, bucketCap: Int): (DataFrame, DataFrame, Option[DataFrame]) = {
+    // one checkpoint, not two: bucketsOf is the signature projection's
+    // only consumer, so materializing the pre-explode frame separately
+    // was a pure extra job (r20)
+    val db0 = bucketsOf(withSigs(delta, idx.nTables, idx.bits)).transform(Ckpt.eager)
+    val (cb, db, over) = IndexLifecycle.capDelta(idx.buckets, idx.bucketCounts, db0,
+      bucketCap, Buckets)
+    val candIds = IndexLifecycle.deltaCandidates(cb, db, Buckets).distinct().transform(Ckpt.eager)
+    // semi-join-prune the vector table to candidate ENDPOINTS before
+    // the cosine verify (the verifyJaccardDf discipline): without it
+    // every append re-broadcast the FULL corpus embedding table twice
+    // — measured at ×500 (1.02M vecs): append walls ≈ the full-rerun
+    // wall (~175 s vs 154 s) instead of delta-proportional
     val candEnds = candIds.select(col("a_id").as("vec_id"))
       .unionByName(candIds.select(col("b_id").as("vec_id")))
       .distinct()
     val eCand = allE.select(col("vec_id"), col("embedding"), col("nrm"))
       .join(candEnds, Seq("vec_id"), "left_semi")
-      .transform(graft.runtime.Ckpt.eager)
-    val verified = Similarity.verifyCosineOn(eCand, candIds, minCos)
+      .transform(Ckpt.eager)
+    (db0, Similarity.verifyCosineOn(eCand, candIds, minCos), over)
+  }
+
+  /** The incremental pass: the uncapped delta probe, cosine verify,
+    * components resolved over the touched subgraph.
+    */
+  def appendKept(allE: DataFrame, idx: SemIndex, delta: DataFrame,
+      minCos: Double = MinCos): DataFrame = {
+    val (_, verified, _) = deltaVerified(allE, idx, delta, minCos, Dedup.NoBucketCap)
     DedupResolve.incrementalKept(
         allE.select(col("vec_id").as("doc_id")), idx.labels, verified)
       .select(col("doc_id").as("vec_id"))
@@ -904,193 +652,69 @@ object IncrementalSemantic {
   /** The CAPPED build arm with its epoch-0 suppression set (the
     * d51/d52 ledger pattern on (table_id, bucket) — r17 VERDICT ask
     * #3): same candidate/verify ladder as [[corpusPairs]] minus the
-    * over-cap buckets, which are returned for persistence.
+    * over-cap buckets ([[IndexLifecycle.overCap]]), which are returned
+    * for persistence.
     */
   private[graft] def corpusPairsWithLedger(e: DataFrame, bucketCap: Int,
       minCos: Double = MinCos): (DataFrame, DataFrame) = {
     require(bucketCap > 0, s"ledger build requires a finite positive cap, got $bucketCap")
     val buckets0 = bucketsOf(e)
-    val over = buckets0.groupBy(col("table_id"), col("bucket"))
-      .agg(count(lit(1)).as("cn"))
-      .filter(col("cn") > bucketCap)
-      .select(col("table_id"), col("bucket"))
-      .transform(graft.runtime.Ckpt.eager)
-    val buckets = buckets0.join(over, Seq("table_id", "bucket"), "left_anti")
-      .hint("shuffle_hash")
-    val ids = buckets.alias("a")
-      .join(buckets.alias("b"),
-        col("a.table_id") === col("b.table_id") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-      .distinct()
-    (Similarity.verifyCosineOn(e.select(col("vec_id"), col("embedding"), col("nrm")),
-      ids, minCos), over)
+    val over = IndexLifecycle.overCap(buckets0, bucketCap, Buckets)
+    (verifiedPairs(e, buckets0.join(over, Buckets.keys, "left_anti"), minCos), over)
   }
 
   /** One MAINTAINED append on the semantic index (the d46/d51 lifecycle
     * for the embedding family — r17 VERDICT ask #3: before this, the
     * capped posture on embeddings was either impossible or
-    * drift-unbounded). Under the writer lock: capped delta candidates
+    * drift-unbounded). Under the writer lock: the capped delta probe
     * (suppression from the PERSISTED per-bucket counts summed over
-    * delta-touched keys + the delta's own counts — population among
-    * vectors visible this epoch, examined for delta-touched buckets
-    * only), cosine verify, touched-subgraph label resolution; then the
-    * write-back — delta bucket rows appended in the bucket layout, one
-    * count row per (append, bucket), verified pairs + the epoch's
-    * suppressed-bucket set in fresh epoch dirs, labels rewritten to a
-    * fresh generation — and the manifest CAS. Requires a LEDGERED index
-    * ([[writeIndex]] with `capLedger0`): the epoch layout is what makes
-    * the capped answer rerun-reproducible ([[rerunKeptWithLedger]]).
-    * Returns the kept vec_ids of `allE` (the accumulated corpus).
+    * delta-touched keys + the delta's own counts), cosine verify, then
+    * the write-back and publish ([[IndexLifecycle.appendWriteBack]]) —
+    * delta bucket rows appended in the bucket layout, one count row per
+    * (append, bucket), verified pairs + the epoch's suppressed-bucket
+    * set as a new epoch, labels re-resolved over the touched subgraph
+    * (overlapped with the writes) into a fresh generation. Requires a
+    * LEDGERED index ([[writeIndex]] with `capLedger0`): the ledger and
+    * the bucket counts are what make the capped answer
+    * rerun-reproducible ([[rerunKeptWithLedger]]). Returns the kept
+    * vec_ids of `allE` (the accumulated corpus).
     */
   def appendToIndex(s: SparkSession, dir: String, allE: DataFrame,
       delta: DataFrame, minCos: Double = MinCos,
-      bucketCap: Int = Dedup.NoBucketCap): DataFrame =
-    IndexStatePublisher.withWriterLock(dir) {
-      val m = IndexStatePublisher.current(dir)
-      require(m.epochs.contains("pairs") && m.pathOpt("capledger").nonEmpty,
-        s"semantic index at $dir is not ledgered — maintained appends need " +
-          "the epoch layout (writeIndex with capLedger0)")
-      val idx = readIndex(s, dir)
-      // one checkpoint, not two: bucketsOf is the signature projection's
-      // only consumer, so materializing the pre-explode frame separately
-      // was a pure extra job (r20)
-      val db0 = bucketsOf(withSigs(delta, idx.nTables, idx.bits))
-        .transform(graft.runtime.Ckpt.eager)
-      var overLedger: Option[DataFrame] = None
-      val (cb, db) =
-        if (bucketCap == Dedup.NoBucketCap) (idx.buckets, db0)
-        else {
-          require(bucketCap > 0,
-            s"bucketCap must be positive or NoBucketCap, got $bucketCap")
-          val cCnt0 = idx.bucketCounts.getOrElse(
-            idx.buckets.groupBy(col("table_id"), col("bucket")).agg(count(lit(1)).as("cn")))
-          val dCnt = db0.groupBy(col("table_id"), col("bucket"))
-            .agg(count(lit(1)).as("dn"))
-            .transform(graft.runtime.Ckpt.eager)
-          val cCnt = cCnt0
-            .join(dCnt.select(col("table_id"), col("bucket")).hint("shuffle_hash"),
-              Seq("table_id", "bucket"))
-            .groupBy(col("table_id"), col("bucket")).agg(sum(col("cn")).as("cn"))
-          val over = dCnt
-            .join(cCnt, Seq("table_id", "bucket"), "left_outer")
-            .filter(coalesce(col("cn"), lit(0L)) + col("dn") > bucketCap)
-            .select(col("table_id"), col("bucket"))
-            .transform(graft.runtime.Ckpt.eager)
-          overLedger = Some(over)
-          (idx.buckets.join(over, Seq("table_id", "bucket"), "left_anti"),
-            db0.join(over, Seq("table_id", "bucket"), "left_anti"))
-        }
-      val candCD = cb.alias("a")
-        .join(db.hint("shuffle_hash").alias("b"),
-          col("a.table_id") === col("b.table_id") &&
-            col("a.bucket") === col("b.bucket") &&
-            col("a.vec_id") =!= col("b.vec_id"))
-        .select(
-          least(col("a.vec_id"), col("b.vec_id")).as("a_id"),
-          greatest(col("a.vec_id"), col("b.vec_id")).as("b_id"))
-      val candDD = db.hint("shuffle_hash").alias("a")
-        .join(db.alias("b"),
-          col("a.table_id") === col("b.table_id") &&
-            col("a.bucket") === col("b.bucket") &&
-            col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-      val candIds = candCD.unionByName(candDD).distinct().transform(graft.runtime.Ckpt.eager)
-      // semi-join-prune the vector table to candidate ENDPOINTS before
-      // the cosine verify (the verifyJaccardDf discipline): without it
-      // every append re-broadcast the FULL corpus embedding table twice
-      // — measured at ×500 (1.02M vecs): append walls ≈ the full-rerun
-      // wall (~175 s vs 154 s) instead of delta-proportional
-      val candEnds = candIds.select(col("a_id").as("vec_id"))
-        .unionByName(candIds.select(col("b_id").as("vec_id")))
-        .distinct()
-      val eCand = allE.select(col("vec_id"), col("embedding"), col("nrm"))
-        .join(candEnds, Seq("vec_id"), "left_semi")
-        .transform(graft.runtime.Ckpt.eager)
-      val verified = Similarity.verifyCosineOn(eCand, candIds, minCos)
-        .transform(graft.runtime.Ckpt.eager) // materialize BEFORE mutating its input tables
-      // label resolution reads only IMMUTABLE inputs (the checkpointed
-      // verified evidence + the labels/gen-N parquet this mutation never
-      // touches), so it can overlap the four artifact writes below that
-      // depend only on db0/verified/ledgerRows (guide §2.6) — the labels
-      // write itself chains inside the resolving thunk.
-      // RECOVERY NOTE (r20 ADVICE #2): see IncrementalDedup.appendToIndex
-      // — mode-append probe-table writes overlapping the resolution widen
-      // the torn window on failure; the writer-lock + rebuild contract is
-      // the recovery path, and the delete path (deleteVectors) resolves
-      // BEFORE writing.
-      @volatile var newLabels: DataFrame = null
-      // write-back (delta-proportional; labels ∝ dup-cluster membership):
-      // five INDEPENDENT actions over materialized frames — overlap them
-      // (guide §2.6; graft.runtime.Par); visibility is the manifest CAS
-      val epoch = m.epochs("pairs") + 1
-      graft.runtime.Par.run(
-        () => graft.runtime.IndexStore.writeBucketed(db0, idx.nBuckets,
-          s"$dir/${m.path("buckets")}", tableFor(s"$dir/${m.path("buckets")}"),
-          "append", "table_id", "bucket"),
-        () => graft.runtime.IndexStore.writeBucketed(
-          db0.groupBy(col("table_id"), col("bucket")).agg(count(lit(1)).as("cn")),
-          idx.nBuckets, s"$dir/${m.path("bucketcounts")}",
-          bcntTableFor(s"$dir/${m.path("bucketcounts")}"), "append",
-          "table_id", "bucket"),
-        () => verified.write.mode("overwrite")
-          .parquet(s"$dir/${m.path("pairs")}/epoch-$epoch"),
-        () => IndexLifecycle.writeLedgerEpoch(dir, m, epoch, overLedger, db0,
-          "table_id", "bucket"),
-        () => {
-          newLabels = DedupResolve.incrementalLabels(idx.labels, verified,
-              edgesMaterialized = true)
-            .transform(graft.runtime.Ckpt.eager)
-          newLabels.write.mode("overwrite").parquet(s"$dir/labels/gen-${m.gen + 1}")
-        })
-      IndexStatePublisher.publish(dir, m
-        .withEntry("labels", s"labels/gen-${m.gen + 1}")
-        .withEpoch("pairs", epoch)
-        .withEpoch("capledger", epoch)
-        .copy(gen = m.gen + 1))
-      DedupResolve.keptFromLabels(
-          allE.select(col("vec_id").as("doc_id")), newLabels)
-        .select(col("doc_id").as("vec_id"))
-    }
+      bucketCap: Int = Dedup.NoBucketCap): DataFrame = IndexLifecycle.mutate(dir) { m =>
+    require(m.pathOpt("capledger").nonEmpty,
+      s"semantic index at $dir is not ledgered — maintained appends need " +
+        "its cap ledger and bucket counts (writeIndex with capLedger0)")
+    val idx = readIndexAt(s, dir, m)
+    val (db0, verified0, over) = deltaVerified(allE, idx, delta, minCos, bucketCap)
+    val verified = verified0.transform(Ckpt.eager) // materialize BEFORE mutating its input tables
+    val (_, labels) = IndexLifecycle.appendWriteBack(s, dir, m, Buckets, db0, over,
+      Map("pairs" -> verified), Some((idx.labels, verified)))
+    DedupResolve.keptFromLabels(
+        allE.select(col("vec_id").as("doc_id")), labels)
+      .select(col("doc_id").as("vec_id"))
+  }
 
   /** The persisted cap ledger as one frame: (epoch, table_id, bucket). */
   def readCapLedger(s: SparkSession, dir: String): DataFrame =
-    IndexLifecycle.readCapLedger(s, dir, IndexStatePublisher.current(dir), "table_id", "bucket")
+    IndexLifecycle.readCapLedger(s, dir, IndexStatePublisher.current(dir), Buckets.keys: _*)
 
   /** The LEDGER-AWARE RERUN for the semantic family (the
-    * [[IncrementalSig.rerunWithLedger]] contract plus this family's
+    * [[IndexLifecycle.ledgerAdmitted]] replay plus this family's
     * cosine verify and component resolution): given every vector tagged
     * with its arrival epoch, recompute from scratch the exact KEPT set
-    * the capped maintained appends produced. Same monotonicity
-    * identity — visible bucket populations only grow, so suppression
-    * collapses to the row filter `epoch < firstOver(bucket)` and a
-    * mega-bucket suppressed from epoch 0 contributes ZERO rows to the
-    * self-join. Spec-pinned equal to the maintained answer; d53 gates
-    * the same semantics against the DuckDB epoch-capped oracle.
+    * the capped maintained appends produced, the bucket rows admitted
+    * by the ledger replay ([[IndexLifecycle.ledgerAdmitted]]).
+    * Spec-pinned equal to the maintained answer; d53 gates the same
+    * semantics against the DuckDB epoch-capped oracle.
     */
   def rerunKeptWithLedger(s: SparkSession, dir: String,
       vecsWithEpoch: DataFrame, minCos: Double = MinCos): DataFrame = {
     val m = IndexStatePublisher.current(dir)
     val e = withSigs(vecsWithEpoch, m.geom(dir, "n_tables"), m.geom(dir, "bits"))
-      .transform(graft.runtime.Ckpt.eager)
-    val firstOver = IndexLifecycle.readCapLedger(s, dir, m, "table_id", "bucket")
-      .groupBy(col("table_id"), col("bucket"))
-      .agg(min(col("epoch")).as("first_over"))
-    val b = e.select(col("vec_id"), col("epoch"), posexplode(col("sigs")))
-      .withColumnRenamed("pos", "table_id")
-      .withColumnRenamed("col", "bucket")
-      .join(broadcast(firstOver), Seq("table_id", "bucket"), "left_outer")
-      .filter(col("first_over").isNull || col("epoch") < col("first_over"))
-      .drop("first_over")
-      .transform(graft.runtime.Ckpt.eager)
-    val cand = b.alias("a")
-      .join(b.hint("shuffle_hash").alias("b"),
-        col("a.table_id") === col("b.table_id") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-      .distinct()
+      .transform(Ckpt.eager)
+    val b = IndexLifecycle.ledgerAdmitted(s, dir, m, bucketsOf(e, "epoch"), Buckets)
+    val cand = IndexLifecycle.selfPairs(b, b.hint("shuffle_hash"), Buckets).distinct()
     val verified = Similarity.verifyCosineOn(
       e.select(col("vec_id"), col("embedding"), col("nrm")), cand, minCos)
     DedupResolve.keptFromLabels(
@@ -1099,81 +723,42 @@ object IncrementalSemantic {
       .select(col("doc_id").as("vec_id"))
   }
 
-  /** The LEDGERED family's compaction: a REBUILD (r18 VERDICT ask #2;
-    * see [[IncrementalSig.rebuildLedgered]] for the contract — a
-    * scheduled, loud re-derivation over survivors with a fresh epoch-0
-    * ledger, never a silent drift). Embeddings are NOT recoverable
-    * from the bucket table (buckets are a lossy projection), so the
-    * caller supplies `allE` — the surviving vectors as
-    * (vec_id, embedding, nrm); a count guard cross-checks it against
-    * the tombstone-filtered artifact. Everything re-derives via
-    * [[corpusPairsWithLedger]] at the index's pinned geometry into
-    * FRESH generation-suffixed directories; the switch is the manifest
-    * CAS (tombstone entry dropped) under the writer lock.
+  /** The LEDGERED family's compaction: a REBUILD
+    * ([[IndexLifecycle.rebuildLedgered]] holds the contract).
+    * Embeddings are NOT recoverable from the bucket table (buckets are a
+    * lossy projection), so the caller supplies `allE` — the surviving
+    * vectors as (vec_id, embedding, nrm); a count guard
+    * ([[IndexLifecycle.requireSurvivors]]) cross-checks it against the
+    * tombstone-filtered artifact. Everything re-derives via
+    * [[corpusPairsWithLedger]] at the index's pinned geometry into FRESH
+    * generation-suffixed directories.
     */
   def rebuildLedgered(s: SparkSession, dir: String, allE: DataFrame,
-      bucketCap: Int, minCos: Double = MinCos): Unit =
-    IndexStatePublisher.withWriterLock(dir) {
-      val m = IndexStatePublisher.current(dir)
-      require(m.pathOpt("capledger").nonEmpty,
-        s"semantic index at $dir is not ledgered — use compactIndex")
-      val (nb, nt, bits) = (m.geom(dir, "n_buckets"), m.geom(dir, "n_tables"), m.geom(dir, "bits"))
-      val idx = readIndex(s, dir) // tombstone-filtered views
-      val survN = idx.buckets.select(col("vec_id")).distinct().count()
-      val gotN = allE.select(col("vec_id")).distinct().count()
-      require(gotN == survN,
-        s"rebuildLedgered($dir): caller passed $gotN vectors but the index " +
-          s"has $survN survivors — the rebuild corpus must be exactly the " +
-          "surviving vectors")
-      val e = withSigs(allE, nt, bits).transform(graft.runtime.Ckpt.eager)
-      val (pairs, over0) = corpusPairsWithLedger(e, bucketCap, minCos)
-      val pairsC = pairs.transform(graft.runtime.Ckpt.eager)
-      val labels = DedupResolve.resolveClusters(pairsC).transform(graft.runtime.Ckpt.eager)
-      val g = m.gen + 1
-      val buckets = bucketsOf(e)
-      s.sql(s"DROP TABLE IF EXISTS ${tableFor(s"$dir/buckets-g$g")}")
-      s.sql(s"DROP TABLE IF EXISTS ${bcntTableFor(s"$dir/bucketcounts-g$g")}")
-      graft.runtime.Par.run( // independent writes — overlap (guide §2.6)
-        () => graft.runtime.IndexStore.writeBucketed(buckets, nb,
-          s"$dir/buckets-g$g", tableFor(s"$dir/buckets-g$g"), "overwrite",
-          "table_id", "bucket"),
-        () => graft.runtime.IndexStore.writeBucketed(
-          buckets.groupBy(col("table_id"), col("bucket")).agg(count(lit(1)).as("cn")),
-          nb, s"$dir/bucketcounts-g$g", bcntTableFor(s"$dir/bucketcounts-g$g"),
-          "overwrite", "table_id", "bucket"),
-        () => labels.write.mode("overwrite").parquet(s"$dir/labels/gen-$g"),
-        () => pairsC.write.mode("overwrite").parquet(s"$dir/pairs-g$g/epoch-0"),
-        () => over0.select(col("table_id"), col("bucket"))
-          .write.mode("overwrite").parquet(s"$dir/capledger-g$g/epoch-0"))
-      IndexStatePublisher.publish(dir, m.copy(gen = g,
-        entries = Map("buckets" -> s"buckets-g$g", "bucketcounts" -> s"bucketcounts-g$g",
-          "labels" -> s"labels/gen-$g", "pairs" -> s"pairs-g$g",
-          "capledger" -> s"capledger-g$g"),
-        epochs = Map("pairs" -> 0, "capledger" -> 0)))
-    }
+      bucketCap: Int, minCos: Double = MinCos): Unit = IndexLifecycle.rebuildLedgered(dir) { (m, g) =>
+    val survivors = readIndexAt(s, dir, m).buckets.select(col("vec_id")).distinct().count()
+    IndexLifecycle.requireSurvivors(dir, allE.select(col("vec_id")).distinct().count(), survivors)
+    val e = withSigs(allE, m.geom(dir, "n_tables"), m.geom(dir, "bits")).transform(Ckpt.eager)
+    val (pairs, over0) = corpusPairsWithLedger(e, bucketCap, minCos)
+    val pairsC = pairs.transform(Ckpt.eager)
+    IndexLifecycle.freshIndex(s, dir, Buckets, bucketsOf(e), m.geom(dir, "n_buckets"), g,
+      Map("pairs" -> pairsC), Some(DedupResolve.resolveClusters(pairsC).transform(Ckpt.eager)),
+      Some(over0))
+  }
 
-  /** Rebuild-time compaction (see [[IncrementalDedup.compactIndex]]):
-    * rewrite the bucket table and pair evidence minus tombstoned rows
-    * into FRESH generation-suffixed directories, drop the tombstone
-    * entry, switch with the manifest CAS. Labels were already rewritten
-    * at delete time. Answer-invariant. REFUSED on a ledgered index:
-    * the cap ledger is suppression HISTORY — no epoch-collapsed rewrite
-    * can preserve the rerun contract (epoch tags in
-    * [[rerunKeptWithLedger]] align with the persisted epochs). The
-    * ledgered path's compaction is [[rebuildLedgered]] — engine code
-    * since r19.
+  /** Rebuild-time compaction ([[IndexLifecycle.compact]] holds the
+    * contract): rewrite the bucket table and
+    * pair evidence minus tombstoned rows into FRESH generation-suffixed
+    * directories, drop the tombstone entry. Labels were already
+    * rewritten at delete time. Answer-invariant. REFUSED on a ledgered
+    * index (its compaction is [[rebuildLedgered]]).
     */
   def compactIndex(s: SparkSession, dir: String): Unit =
     IndexLifecycle.compact(dir, "rebuildLedgered(dir, allE, bucketCap)") { (m, g) =>
-      val idx = readIndex(s, dir)
-      val buckets = idx.buckets.transform(graft.runtime.Ckpt.eager)
-      val pairs = idx.pairs.map(_.transform(graft.runtime.Ckpt.eager))
-      s.sql(s"DROP TABLE IF EXISTS ${tableFor(s"$dir/buckets-g$g")}")
-      graft.runtime.IndexStore.writeBucketed(buckets, m.geom(dir, "n_buckets"),
-        s"$dir/buckets-g$g", tableFor(s"$dir/buckets-g$g"), "overwrite",
-        "table_id", "bucket")
-      pairs.foreach(_.write.mode("overwrite").parquet(s"$dir/pairs-g$g"))
-      Map("buckets" -> s"buckets-g$g") ++ pairs.map(_ => "pairs" -> s"pairs-g$g")
+      val idx = readIndexAt(s, dir, m)
+      val buckets = idx.buckets.transform(Ckpt.eager)
+      val pairs = idx.pairs.map(_.transform(Ckpt.eager))
+      IndexLifecycle.freshIndex(s, dir, Buckets, buckets, m.geom(dir, "n_buckets"), g,
+        pairs.map("pairs" -> _).toMap, None, counts = false)
     }
 
   /** d45: the oracle-gated composition — corpus = the 80% vec_id split,
@@ -1431,21 +1016,19 @@ object IncrementalContam {
   private def tableFor(dir: String): String =
     graft.runtime.IndexStore.tableFor("graft_contam_grams_", dir)
 
-  /** Write + PUBLISH (manifest generation 0, like every other index
-    * family; see [[IncrementalDedup.writeIndex]]).
+  /** Write + PUBLISH manifest generation 0 (like every other index
+    * family; [[IndexLifecycle.publishGen0]]).
     */
   def writeIndex(idx: ContamIndex, dir: String, nBuckets: Int = 32): Unit = {
     val s = idx.grams.sparkSession
     val out = new java.io.FileOutputStream(s"$dir/bloom.bin")
     try idx.bloom.writeTo(out) finally out.close()
-    s.sql(s"DROP TABLE IF EXISTS ${tableFor(dir)}")
-    graft.runtime.Par.run( // independent writes — overlap (guide §2.6)
-      () => graft.runtime.IndexStore.writeBucketed(idx.grams, nBuckets,
-        s"$dir/grams", tableFor(dir), "overwrite", "gk"),
-      () => idx.spans.write.mode("overwrite").parquet(s"$dir/spans"))
-    IndexStatePublisher.publish(dir, IndexManifest(0L,
-      Map("bloom" -> "bloom.bin", "grams" -> "grams", "spans" -> "spans"), Map.empty,
-      Map("n_buckets" -> nBuckets)))
+    IndexLifecycle.publishGen0(dir, Seq(
+        IndexLifecycle.bucketedWrite(s, idx.grams, nBuckets,
+          s"$dir/grams", tableFor(dir), "overwrite", Seq("gk")),
+        () => idx.spans.write.mode("overwrite").parquet(s"$dir/spans")),
+      Map("bloom" -> "bloom.bin", "grams" -> "grams", "spans" -> "spans"), Nil,
+      Map("n_buckets" -> nBuckets))
   }
 
   def readIndex(s: SparkSession, dir: String): ContamIndex = {

@@ -350,6 +350,41 @@ class IncrementalDedupSpec extends AnyFunSuite {
     }
   }
 
+  test("pair evidence is required: writeIndex refuses an index without it, and checkpointed() keeps it through append then delete") {
+    // an index persisted without its corpus pairs would start its pair
+    // artifact at the first append with only that delta's edges; a later
+    // delete would re-resolve the touched corpus cluster from that
+    // partial evidence and leave its near-dup members as singletons
+    val tmp = java.nio.file.Files.createTempDirectory("incpairs").toString
+    try {
+      val corpus = docsDf.where(col("doc_id") <= 5L) // {0,1,2,3,4} bridged, {5}
+      val idx = IncrementalDedup.buildIndex(corpus, rowsPerBand = 4).checkpointed()
+      val e = intercept[IllegalArgumentException] {
+        IncrementalDedup.writeIndex(idx.copy(pairs = None), tmp, rowsPerBand = 4)
+      }
+      assert(e.getMessage.contains(tmp), s"the refusal must name the index: ${e.getMessage}")
+      assert(graft.runtime.IndexStatePublisher.currentOpt(tmp).isEmpty,
+        "a refused write must publish nothing")
+      IncrementalDedup.writeIndex(idx, tmp, rowsPerBand = 4)
+      val delta = docsDf.where(col("doc_id").isin(9L, 14L))
+      IncrementalDedup.appendToIndex(spark, tmp, corpus.unionByName(delta), delta).count()
+      // deleting the bridge must split {0,1} from {2,3} — from the CORPUS
+      // pairs, which only the carried evidence holds
+      val newLabels = IncrementalDedup.deleteFromIndex(spark, tmp, Seq(4L).toDF("doc_id"))
+      val surv = docsDf.where(col("doc_id") <= 5L || col("doc_id").isin(9L, 14L))
+        .where(col("doc_id") =!= 4L)
+      val kept = DedupResolve.keptFromLabels(surv.select(col("doc_id")), newLabels)
+        .as[Long].collect().toSet
+      val fullKept = DedupResolve.dedupedDocIds(spark, surv,
+          Dedup.lshVerifiedPairsDf(surv, rowsPerBand = 4).select(col("a_id"), col("b_id")))
+        .as[Long].collect().toSet
+      assert(kept == fullKept, s"delete after append $kept != survivor rerun $fullKept")
+      assert(kept == Set(0L, 2L, 5L, 14L), s"kept after delete: $kept")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    }
+  }
+
   test("touched-cluster broadcast is guarded: above the bound the join degrades to shuffle, same answer") {
     val touched = Seq(0L, 2L).toDF("cluster")
     val pSmall = DedupResolve.guardedByCluster(touched)

@@ -71,6 +71,19 @@ class IncrementalSemanticSpec extends AnyFunSuite {
           all.where(col("vec_id") % 7 =!= 3).select(col("vec_id").as("doc_id")), idx.labels)
         .as[Long].collect().toSet
       assert(after == before, "compaction changed the kept set")
+      // a mutation after compaction reads the compacted pair layout: a
+      // second takedown must still equal the survivor rerun over both
+      def dead(c: org.apache.spark.sql.Column) = c % 7 === 3 || c % 11 === 5
+      val relabeled = IncrementalSemantic.deleteVectors(spark, tmp,
+        all.where(col("vec_id") % 11 === 5).select(col("vec_id")))
+      val survivors = all.where(!dead(col("vec_id"))).select(col("vec_id").as("doc_id"))
+      val twice = DedupResolve.keptFromLabels(survivors, relabeled).as[Long].collect().toSet
+      val survPairs = Similarity.signLshPairs(spark, sf, nTables = 8, bits = 4, minCos = 0.35)
+        .filter(!dead(col("a_id")) && !dead(col("b_id")))
+        .select(col("a_id"), col("b_id"))
+      val rerun = DedupResolve.dedupedDocIds(spark, survivors, survPairs).as[Long].collect().toSet
+      assert(twice == rerun, "a delete after compaction diverged from the survivor rerun")
+      assert(graft.runtime.IndexStatePublisher.current(tmp).epochs("pairs") == 0)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }

@@ -142,6 +142,13 @@ class RebuildLedgeredSpec extends AnyFunSuite {
       val surv = all.filter(col("vec_id") % 3 <= 1 && col("vec_id") % 7 =!= 3)
         .localCheckpoint(true)
       val survCap = IncrementalSemantic.semLedgerCap(surv.count())
+      // wrong vectors → loud refusal, index untouched
+      val before = IndexStatePublisher.current(tmp).gen
+      intercept[IllegalArgumentException] {
+        IncrementalSemantic.rebuildLedgered(spark, tmp, all.filter(col("vec_id") % 3 <= 1), survCap)
+      }
+      assert(IndexStatePublisher.current(tmp).gen == before,
+        "a refused rebuild must not advance the manifest")
       IncrementalSemantic.rebuildLedgered(spark, tmp, surv, survCap)
       val m = IndexStatePublisher.current(tmp)
       assert(m.pathOpt("deleted").isEmpty && m.epochs("capledger") == 0)
