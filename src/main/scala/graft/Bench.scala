@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs the query inventory on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -12,9 +10,10 @@ import org.apache.spark.sql.SparkSession
   * a downstream consumer would pay.
   */
 object Bench {
-  /** JSON-escape an env note (r20 ADVICE #3: a SPARK_GRAFT_ENV_NOTE
-    * carrying a quote/backslash/control char produced an invalid JSON
-    * artifact).
+  /** JSON-escape a string: quote, backslash and every control char below
+    * 0x20, the one escaper of the bench's env note and Verify's
+    * `oracle_sql.json` (r20 ADVICE #3: a SPARK_GRAFT_ENV_NOTE carrying a
+    * quote/backslash/control char produced an invalid JSON artifact).
     */
   private[graft] def jesc(raw: String): String = raw.flatMap {
     case '"' => "\\\""
@@ -41,29 +40,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the per-query sweep AND the BPE loop's checkpoint rotations
-    // unpersist locally-checkpointed RDDs BY DESIGN (their consumers
-    // have fully materialized; nothing recomputes them) — Spark logs a
-    // WARN per such unpersist ("lineage has been truncated...") that
-    // floods the captured tail with non-signal. The emitter is the
-    // concrete RDD class's logger (a DataFrame localCheckpoint is
-    // always a MapPartitionsRDD), so silence exactly that logger
-    // instead of the whole org.apache.spark.rdd package (r14 ADVICE:
-    // the package-wide ERROR level also hid unrelated rdd warnings
-    // that could explain anomalous timings).
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession.driverSession("graft-bench")
     def sweep(): Unit =
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
 

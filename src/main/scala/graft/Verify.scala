@@ -37,6 +37,15 @@ object Verify {
     }
   }
 
+  /** `oracle_sql.json`: one JSON object, query name → oracle SQL, every
+    * string escaped by [[Bench.jesc]] — a tab or CR in an oracle's SQL
+    * must not make the DuckDB compare's `json.load` fail and silently
+    * zero the correctness report.
+    */
+  private[graft] def oracleJson(oracles: Map[String, String]): String =
+    oracles.map { case (k, v) => s""""${Bench.jesc(k)}": "${Bench.jesc(v)}"""" }
+      .mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name filter (local debugging
     // on partial corpora — e.g. an m02 parity check on a documents-only
@@ -45,35 +54,15 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.driverSession("graft-verify")
     // distinct env var from Bench's SPARK_GRAFT_QUERY_TIMEOUT (150 s
     // noop-sink default): Verify's coalesce(1) parquet dumps cost more
     // than a noop materialization, and sharing one knob between harnesses
     // with different defaults meant tuning one silently retuned the other
     runAll(spark, sfDir, outDir, SparkEntry.queries.filter(q => keep(q._1)),
       Watchdog.secs("SPARK_GRAFT_VERIFY_TIMEOUT", 300))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(o => keep(o._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql.filter(o => keep(o._1))))
     spark.stop()
   }
 }

@@ -425,27 +425,22 @@ object TextAnalysis {
 
   /** [[lmTypicality]] over any (doc_id, text) DataFrame.
     *
-    * `materializeTf` pins the exploded tf stream (it feeds both the freq
-    * aggregate and the probe side) instead of recomputing the scan under
-    * the broadcast — the t07 pattern. Measured isolated (one arm per
-    * JVM, ×200 = 1.02M docs, SCALING.md §3d, `cur_ab_cold` rows of
-    * SCALE_RESULTS_r10.jsonl): recompute 5.7 s vs
-    * pinned 85.7 s — a 15× loss for the pin, because the rebuild is one
-    * cheap codegen'd [[graft.functions.TermCounts]] explode while the
-    * pin checkpoints a corpus-sized stream (contrast [[SpanDedup]],
-    * where the rebuild re-runs an md5 per gram and the pin WINS — the
-    * variable is the cost to rebuild). At 100 TB pinning ~corpus-sized
-    * state is not an option at all, so the default is the scan-twice
-    * shape and the pin is a small-corpus opt-in.
+    * The exploded tf stream feeds both the freq aggregate and the probe
+    * side and is recomputed under the broadcast, not pinned (the t07
+    * pattern). Measured isolated (one arm per JVM, ×200 = 1.02M docs,
+    * SCALING.md §3d, `cur_ab_cold` rows of SCALE_RESULTS_r10.jsonl):
+    * recompute 5.7 s vs pinned 85.7 s — a 15× loss for the pin, because
+    * the rebuild is one cheap codegen'd [[graft.functions.TermCounts]]
+    * explode while the pin checkpoints a corpus-sized stream (contrast
+    * [[SpanDedup]], where the rebuild re-runs an md5 per gram and the pin
+    * WINS — the variable is the cost to rebuild).
     */
-  def lmTypicalityDf(docs: DataFrame, materializeTf: Boolean = false): DataFrame = {
-    val tfRaw = docs
+  def lmTypicalityDf(docs: DataFrame): DataFrame = {
+    val tf = docs
       .select(col("doc_id"), explode(graft.functions.TermCounts(col("text"))).as("tc"))
       .select(col("doc_id"), col("tc.term").as("term"), col("tc.tf").as("tf"))
-    val tf = if (materializeTf) tfRaw.transform(graft.runtime.Ckpt.eager) else tfRaw
     val freq = tf.groupBy(col("term")).agg(sum(col("tf")).as("freq"))
-    // Σ freq ≡ Σ tf: total token count comes straight off the checkpointed
-    // tf pass (one partial-sum, no per-term exchange) instead of
+    // Σ freq ≡ Σ tf: total token count comes straight off the tf pass (one partial-sum, no per-term exchange) instead of
     // re-aggregating the vocabulary
     val total = tf.agg(sum(col("tf")).as("tot"))
     tf.join(freq, "term")

@@ -72,12 +72,7 @@ object MakeNonAsciiCorpus {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.driverSession("graft-nonascii-corpus")
     write(spark, args(0))
     spark.stop()
   }

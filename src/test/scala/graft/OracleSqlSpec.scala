@@ -42,4 +42,14 @@ class OracleSqlSpec extends AnyFunSuite {
       assert(!sql.contains("${"), s"$name: uninterpolated template residue")
     }
   }
+
+  test("oracle_sql.json: Verify's JSON parses back to exactly the oracle map") {
+    import scala.jdk.CollectionConverters._
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    def parsed(m: Map[String, String]): Map[String, String] =
+      json.readValue(Verify.oracleJson(m), classOf[java.util.Map[String, String]]).asScala.toMap
+    assert(parsed(SparkEntry.oracleSql) == SparkEntry.oracleSql)
+    val odd = Map("q\"x\\y\tz\u0001" -> "SELECT '\"', '\\', '\t', '\u0001'\r\n")
+    assert(parsed(odd) == odd)
+  }
 }

@@ -70,9 +70,6 @@ class CurationOpsSpec extends AnyFunSuite {
       .as[(Long, Double)].collect().toMap
     assert(got(1L) == 7.0 / 15.0)
     assert(got(2L) == 4.0 / 10.0)
-    // pinning the tf stream is a pure performance knob
-    assert(TextAnalysis.lmTypicalityDf(docs, materializeTf = true)
-      .as[(Long, Double)].collect().toMap == got)
   }
 
   test("t14 plan: AQE broadcasts the vocabulary join at runtime (join is unhinted)") {

@@ -3,8 +3,8 @@ package graft.tools
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The command-line surface the README documents: every `runMain` class
-  * it names exists and has a `main`, and ExplainDump refuses to run
-  * without a valid query list.
+  * it names exists and has a `main`, and every Measure mode refuses to
+  * run without a valid query list.
   */
 class ToolsSpec extends AnyFunSuite {
 
@@ -25,11 +25,23 @@ class ToolsSpec extends AnyFunSuite {
     }
   }
 
-  test("ExplainDump: names come from args; empty or unknown lists are refused") {
-    assert(ExplainDump.selected(Nil).isLeft)
-    assert(ExplainDump.selected(Seq("d39_incremental_dedup", "no_such_query")) ==
-      Left("unknown queries: no_such_query"))
-    assert(ExplainDump.selected(Seq("d39_incremental_dedup", "m08_incremental_phash")) ==
-      Right(Seq("d39_incremental_dedup", "m08_incremental_phash")))
+  test("Measure: names come from args; empty or unknown lists are refused") {
+    val (d39, m08, d56) = ("d39_incremental_dedup", "m08_incremental_phash", "d56_ledgered_delete_semantic")
+    assert(Measure.parse(Nil).isLeft)
+    assert(Measure.parse(Seq("no_such_mode", d39)).isLeft)
+    assert(Measure.parse(Seq("explain")).isLeft)
+    assert(Measure.parse(Seq("explain", d39, "no_such_query")) == Left("unknown queries: no_such_query"))
+    assert(Measure.parse(Seq("explain", d39, m08)) == Right("explain" -> Seq(d39, m08)))
+    assert(Measure.parse(Seq("profile")).isLeft)
+    assert(Measure.parse(Seq("profile", d39, m08)).isLeft)
+    assert(Measure.parse(Seq("profile", "d56")) == Left("unknown queries: d56"))
+    assert(Measure.parse(Seq("profile", d56)) == Right("profile" -> Seq(d56)))
+    // a mistyped name is refused up front, not timed as a failed query
+    assert(Measure.parse(Seq("cold", d39, "d4_ngram_jaccard")) == Left("unknown queries: d4_ngram_jaccard"))
+    assert(Measure.parse(Seq("cold", d39)) == Right("cold" -> Seq(d39)))
+    val heavy = Measure.parse(Seq("cold")).map(_._2).getOrElse(Nil)
+    assert(heavy.size == 10 && heavy.forall(graft.SparkEntry.queries.contains))
+    assert(Measure.parse(Seq("hunt", d39)).isLeft)
+    assert(Measure.parse(Seq("hunt")) == Right("hunt" -> graft.SparkEntry.queries.keys.toSeq.sorted))
   }
 }
