@@ -304,7 +304,8 @@ object IncrementalDedup {
   def readIndex(s: SparkSession, dir: String): CorpusIndex =
     readIndexAt(s, dir, IndexStatePublisher.current(dir))
 
-  private def readIndexAt(s: SparkSession, dir: String, m: IndexManifest): CorpusIndex = {
+  /** The index at manifest `m` — the generation a caller resolved. */
+  def readIndexAt(s: SparkSession, dir: String, m: IndexManifest): CorpusIndex = {
     val nb = m.geom(dir, "n_buckets")
     val minusDel = IndexLifecycle.tombstoneFilter(s, dir, m, "doc_id")
     val pairs = IndexLifecycle.readPairs(s, dir, m, minusDel)

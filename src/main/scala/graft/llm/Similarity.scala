@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.runtime.{Ckpt, IndexLifecycle, IndexManifest, IndexStatePublisher}
 import Hashing._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -760,56 +761,49 @@ object Similarity {
       .select(col("vec_id"), col("code"))
   }
 
-  /** Write + PUBLISH (manifest generation 0 — the same atomic-
-    * publication discipline as every other index family, r16 VERDICT
-    * #1/#8: the serving twin re-resolves the manifest per micro-batch,
-    * so published state must be immutable-per-generation). `centroids`
-    * is rewritten only at rebuild; `cells`/`codes` append per epoch.
+  /** Write + PUBLISH generation 0 through the maintained-index runner
+    * ([[graft.runtime.IndexLifecycle.publishGen0]]; the serving twin
+    * re-resolves the manifest per micro-batch, so published state must
+    * be immutable-per-generation). `centroids` is rewritten only at
+    * rebuild; `cells`/`codes` append per epoch. The trained cell count
+    * (the centroid rows — a seed no sample vector chose trains no cell)
+    * is manifest geometry `n_cells`, read by maintenance and by a
+    * derived-probe serve.
     */
-  def writeIvfSq8Index(idx: IvfSq8Index, dir: String): Unit = {
-    import graft.runtime.{IndexManifest, IndexStatePublisher}
-    graft.runtime.Par.run( // independent writes — overlap (guide §2.6)
-      () => idx.centroids.write.mode("overwrite").parquet(s"$dir/centroids/gen-0"),
-      () => idx.cells.write.mode("overwrite").parquet(s"$dir/cells/epoch-0"),
-      () => idx.codes.write.mode("overwrite").parquet(s"$dir/codes/epoch-0"))
-    IndexStatePublisher.publish(dir, IndexManifest(0L,
+  def writeIvfSq8Index(idx: IvfSq8Index, dir: String): Unit =
+    IndexLifecycle.publishGen0(dir, Seq(
+        () => idx.centroids.write.mode("overwrite").parquet(s"$dir/centroids/gen-0"),
+        () => idx.cells.write.mode("overwrite").parquet(s"$dir/cells/epoch-0"),
+        () => idx.codes.write.mode("overwrite").parquet(s"$dir/codes/epoch-0")),
       Map("centroids" -> "centroids/gen-0", "cells" -> "cells", "codes" -> "codes"),
-      Map("cells" -> 0, "codes" -> 0)))
-  }
+      Seq("cells", "codes"), Map("n_cells" -> idx.centroids.count().toInt))
 
-  def readIvfSq8Index(s: SparkSession, dir: String): IvfSq8Index = {
-    val m = graft.runtime.IndexStatePublisher.current(dir)
+  def readIvfSq8Index(s: SparkSession, dir: String): IvfSq8Index =
+    readIvfSq8IndexAt(s, dir, IndexStatePublisher.current(dir))
+
+  /** The index at manifest `m` — the generation a caller resolved. */
+  def readIvfSq8IndexAt(s: SparkSession, dir: String, m: IndexManifest): IvfSq8Index =
     IvfSq8Index(
       s.read.parquet(s"$dir/${m.path("centroids")}"),
       s.read.parquet(m.epochPaths(dir, "cells"): _*),
       s.read.parquet(m.epochPaths(dir, "codes"): _*))
-  }
 
-  /** MAINTAINED on-disk vector append (the d44 frozen-quantizer contract
-    * applied to the persisted artifact): assign + quantize the delta,
-    * write the rows into fresh epoch directories, publish the next
-    * generation under the writer lock. What [[appendToIvfSq8Index]] is
-    * to a loaded index, this is to the directory a serving reader
-    * ([[graft.streaming.VecStream.annServedMaintained]]) re-resolves.
+  /** MAINTAINED on-disk vector append (the d44 frozen-quantizer contract):
+    * assign the delta to the published centroids (the same
+    * [[ivfRanked]] argmax the build used), quantize it with the same SQ8
+    * formula, and append both as the next epoch of `cells`/`codes`
+    * ([[graft.runtime.IndexLifecycle.appendEpochs]]) — nothing touches
+    * the corpus side. A serving reader
+    * ([[graft.streaming.VecStream.annServedMaintained]]) re-resolves the
+    * directory per micro-batch.
     */
-  def appendVectorsToIndexDir(s: SparkSession, dir: String, delta: DataFrame): Unit = {
-    import graft.runtime.IndexStatePublisher
-    IndexStatePublisher.withWriterLock(dir) {
-      val m = IndexStatePublisher.current(dir)
-      val centroids = s.read.parquet(s"$dir/${m.path("centroids")}")
-      val deltaCells = ivfRanked(delta, centroids).filter(col("r") === 1)
+  def appendVectorsToIndexDir(s: SparkSession, dir: String, delta: DataFrame): Unit =
+    IndexLifecycle.mutate(dir) { m =>
+      val deltaCells = ivfRanked(delta, s.read.parquet(s"$dir/${m.path("centroids")}"))
+        .filter(col("r") === 1)
         .select(col("vec_id"), col("cid").as("cell"))
-        .transform(graft.runtime.Ckpt.eager)
-      val deltaCodes = sq8CodesOf(delta).transform(graft.runtime.Ckpt.eager)
-      val cellEpoch = m.epochs("cells") + 1
-      val codeEpoch = m.epochs("codes") + 1
-      graft.runtime.Par.run( // independent writes — overlap (guide §2.6)
-        () => deltaCells.write.mode("overwrite").parquet(s"$dir/cells/epoch-$cellEpoch"),
-        () => deltaCodes.write.mode("overwrite").parquet(s"$dir/codes/epoch-$codeEpoch"))
-      IndexStatePublisher.publish(dir, m.copy(gen = m.gen + 1,
-        epochs = Map("cells" -> cellEpoch, "codes" -> codeEpoch)))
+      IndexLifecycle.appendEpochs(dir, m, Map("cells" -> deltaCells, "codes" -> sq8CodesOf(delta)))
     }
-  }
 
   /** Outcome of one [[maintainIvfSq8IndexDir]] pass: whether the
     * rebuild fired, the counts that drove the trigger, and the
@@ -824,15 +818,14 @@ object Similarity {
     * #2 — [[shouldRebuild]], [[cellsFor]]/[[probeFor]], and the
     * retrain seam all existed, but nothing composed trigger → retrain
     * → re-tune → republish into one call a scheduler can own). Under
-    * the writer lock:
+    * the writer lock ([[graft.runtime.IndexLifecycle.mutate]]):
     *   - TRIGGER: indexed = the epoch-0 cell rows (the trained base),
     *     appended = every later epoch's; [[shouldRebuild]] at the
     *     measured default ratio decides;
-    *   - not due → report the live geometry (cell count from the
-    *     published centroids; probe count derived by [[probeFor]] —
-    *     the historical grid points (16, 2) and (64, 4) are fixed
-    *     points of that derivation, so no persisted-geometry artifact
-    *     is needed);
+    *   - not due → report the live geometry (the manifest's `n_cells`;
+    *     probe count derived by [[probeFor]] — the historical grid
+    *     points (16, 2) and (64, 4) are fixed points of that
+    *     derivation, so no persisted probe count is needed);
     *   - due → RETRAIN + RE-TUNE: geometry re-derived at the
     *     accumulated count ([[cellsFor]]/[[probeFor]]/[[ivfSampleFor]]
     *     — the d54-gated arithmetic), centroids retrained on a
@@ -842,8 +835,10 @@ object Similarity {
     *     quantizer, the clustered-drift lesson of SCALING.md §3k; the
     *     sample is a distributed TakeOrdered by hashed id, renumbered
     *     only within its ≤ sampleN rows, so no corpus-wide
-    *     single-partition sort), fresh cells/codes epoch-0 directories,
-    *     manifest CAS. The ×500 clustered-drift campaign measured the
+    *     single-partition sort), published through the runner's
+    *     regeneration ([[graft.runtime.IndexLifecycle.regenerate]]):
+    *     fresh gen-suffixed directories, epochs back at 0, `n_cells`
+    *     re-derived. The ×500 clustered-drift campaign measured the
     *     paired retrain+retune dominating the frozen index on both serve
     *     wall and recall at ratios ≥ 1 (SCALING.md §3k, `incvec` rows of
     *     SCALE_RESULTS_r18.jsonl).
@@ -852,18 +847,15 @@ object Similarity {
     * count guard cross-checks it against the artifact row count.
     */
   def maintainIvfSq8IndexDir(s: SparkSession, dir: String, allE: DataFrame,
-      maxAppendRatio: Double = RebuildAppendRatio): IvfMaintenance = {
-    import graft.runtime.{IndexManifest, IndexStatePublisher}
-    IndexStatePublisher.withWriterLock(dir) {
-      val m = IndexStatePublisher.current(dir)
+      maxAppendRatio: Double = RebuildAppendRatio): IvfMaintenance =
+    IndexLifecycle.mutate(dir) { m =>
       val cellPaths = m.epochPaths(dir, "cells")
       val indexedN = s.read.parquet(cellPaths.head).count()
       val appendedN =
         if (cellPaths.size > 1) s.read.parquet(cellPaths.tail: _*).count() else 0L
       if (!shouldRebuild(indexedN, appendedN, maxAppendRatio)) {
-        val curCells = s.read.parquet(s"$dir/${m.path("centroids")}").count().toInt
-        IvfMaintenance(rebuilt = false, indexedN, appendedN,
-          curCells, probeFor(curCells))
+        val nc = m.geom(dir, "n_cells")
+        IvfMaintenance(rebuilt = false, indexedN, appendedN, nc, probeFor(nc))
       } else {
         val n = allE.count()
         require(n == indexedN + appendedN,
@@ -871,27 +863,22 @@ object Similarity {
             s"index holds ${indexedN + appendedN} — the rebuild corpus must " +
             "be exactly the accumulated vectors")
         val nc = cellsFor(n)
-        val np = probeFor(nc)
         val ns = ivfSampleFor(nc)
         val hashOrd = Seq(pmod(xxhash64(col("vec_id")), lit(9973L)), col("vec_id"))
-        val samp = allE.orderBy(hashOrd: _*).limit(ns).transform(graft.runtime.Ckpt.eager)
-        val w = org.apache.spark.sql.expressions.Window.orderBy(hashOrd: _*)
+        val samp = allE.orderBy(hashOrd: _*).limit(ns).transform(Ckpt.eager)
         val remapped = samp.withColumn("vec_id",
-          row_number().over(w).cast("long") - 1)
+          row_number().over(Window.orderBy(hashOrd: _*)).cast("long") - 1)
         val idx = buildIvfSq8IndexWith(allE, ivfCentroids(remapped, nc, ns))
-        val g = m.gen + 1
-        graft.runtime.Par.run( // independent writes — overlap (guide §2.6)
-          () => idx.centroids.write.mode("overwrite").parquet(s"$dir/centroids/gen-$g"),
-          () => idx.cells.write.mode("overwrite").parquet(s"$dir/cells-g$g/epoch-0"),
-          () => idx.codes.write.mode("overwrite").parquet(s"$dir/codes-g$g/epoch-0"))
-        IndexStatePublisher.publish(dir, IndexManifest(g,
-          Map("centroids" -> s"centroids/gen-$g", "cells" -> s"cells-g$g",
-            "codes" -> s"codes-g$g"),
-          Map("cells" -> 0, "codes" -> 0)))
-        IvfMaintenance(rebuilt = true, n, 0L, nc, np)
+        IndexLifecycle.regenerate(dir, m, Map("n_cells" -> nc)) { g =>
+          (Seq(
+            () => idx.centroids.write.mode("overwrite").parquet(s"$dir/centroids/gen-$g"),
+            () => idx.cells.write.mode("overwrite").parquet(s"$dir/cells-g$g/epoch-0"),
+            () => idx.codes.write.mode("overwrite").parquet(s"$dir/codes-g$g/epoch-0")),
+            Map("centroids" -> s"centroids/gen-$g", "cells" -> s"cells-g$g", "codes" -> s"codes-g$g"))
+        }
+        IvfMaintenance(rebuilt = true, n, 0L, nc, probeFor(nc))
       }
     }
-  }
 
   /** Serve kNN from a LOADED index: only the queries rank against the
     * loaded centroids (the corpus's cell assignment is the artifact —
@@ -964,9 +951,9 @@ object Similarity {
     * m08 matrix): yesterday's index is trained and persisted over the
     * corpus split; today's delta vectors are assigned to the FROZEN
     * coarse quantizer (the same [[ivfRanked]] argmax the build used)
-    * and quantized with the same SQ8 formula; the appended
-    * cells/codes round-trip parquet; serving reads the loaded appended
-    * artifacts.
+    * and quantized with the same SQ8 formula, through the maintained
+    * append ([[appendVectorsToIndexDir]]) the serving twin re-resolves;
+    * serving reads the published generation back.
     *
     * The append CONTRACT — and what the oracle is: append must equal a
     * REBUILD WITH THE FROZEN QUANTIZER over corpus ⊎ delta (the oracle
@@ -981,37 +968,19 @@ object Similarity {
     * table, quantization is a per-row map — nothing touches the corpus
     * side but the artifact append itself.
     */
-  /** Frozen-quantizer append (the d44 contract; its ×500 recall curve is
-    * SCALING.md §3i): assign the delta to the index's
-    * EXISTING centroids (the same [[ivfRanked]] argmax the build used)
-    * and quantize with the same SQ8 formula — nothing touches the
-    * corpus side but the artifact append itself.
-    */
-  private def appendToIvfSq8Index(idx: IvfSq8Index, delta: DataFrame): IvfSq8Index = {
-    val deltaCells = ivfRanked(delta, idx.centroids).filter(col("r") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    IvfSq8Index(idx.centroids,
-      idx.cells.unionByName(deltaCells),
-      idx.codes.unionByName(sq8CodesOf(delta)))
-  }
-
   def ivfSq8IndexAppend(s: SparkSession, dir: String): DataFrame = {
     val all = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"))
       .withColumn("nrm", normCol)
-      .transform(graft.runtime.Ckpt.lazyCp)
-    val corpus = all.filter(col("vec_id") % 5 < 4)
-    val delta = all.filter(col("vec_id") % 5 >= 4)
+      .transform(Ckpt.lazyCp)
     // yesterday: train on the corpus split, persist
-    val idxDir0 = graft.runtime.IndexStore.tempIndexDir("graft-ivf-append0")
-    writeIvfSq8Index(buildIvfSq8IndexFrom(corpus, nCells = 16, sampleN = 200), idxDir0)
-    val idx0 = readIvfSq8Index(s, idxDir0)
-    // today: frozen-quantizer assignment + SQ8 codes for the delta only
-    val appended = appendToIvfSq8Index(idx0, delta)
     val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-ivf-append")
-    writeIvfSq8Index(appended, idxDir)
-    val idx = readIvfSq8Index(s, idxDir)
-    ivfSq8KnnFromIndex(all.filter(col("vec_id") < 50), idx, nProbe = 2)
+    writeIvfSq8Index(buildIvfSq8IndexFrom(all.filter(col("vec_id") % 5 < 4),
+      nCells = 16, sampleN = 200), idxDir)
+    // today: the maintained append of the delta split, then serve the
+    // published generation
+    appendVectorsToIndexDir(s, idxDir, all.filter(col("vec_id") % 5 >= 4))
+    ivfSq8KnnFromIndex(all.filter(col("vec_id") < 50), readIvfSq8Index(s, idxDir), nProbe = 2)
   }
 
   /** [[ivfSq8IndexAppend]]'s oracle: the frozen-quantizer rebuild —

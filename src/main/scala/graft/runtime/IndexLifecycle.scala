@@ -296,7 +296,7 @@ object IndexLifecycle {
       rows: DataFrame, over: Option[DataFrame], epochs: Map[String, DataFrame],
       relabel: Option[(DataFrame, DataFrame)],
       extra: Seq[() => Unit] = Nil): (IndexManifest, DataFrame) = {
-    val e = m.epochs("pairs") + 1
+    val (e, epochWrites, next0) = epochAppend(dir, m, epochs)
     @volatile var labels: DataFrame = null
     val ledger =
       if (m.pathOpt("capledger").isEmpty) Nil
@@ -306,15 +306,34 @@ object IndexLifecycle {
         .transform(Ckpt.eager)
       labels.write.mode("overwrite").parquet(s"$dir/${nextLabels(m)}")
     }
-    val next0 = m.copy(gen = m.gen + 1, epochs = m.epochs.map { case (k, _) => k -> e })
     val next = if (relabel.isEmpty) next0 else next0.withEntry("labels", nextLabels(m))
     writeAndPublish(dir, next,
       extra ++ probeWrites(s, dir, p, rows, m.geom(dir, "n_buckets"), "append",
-        m.path(p.table), Some(m.path(p.counts))) ++
-        epochs.map { case (n, df) =>
-          () => df.write.mode("overwrite").parquet(s"$dir/${m.path(n)}/epoch-$e") } ++
-        resolve ++ ledger)
+        m.path(p.table), Some(m.path(p.counts))) ++ epochWrites ++ resolve ++ ledger)
     (next, labels)
+  }
+
+  /** The epoch-append step every maintained append shares, on manifest
+    * `m`: the next epoch `e` (every epoch artifact advances to it
+    * together), the writes of each frame of `epochs` (name → frame) as
+    * that artifact's `epoch-e` directory, and generation `m.gen + 1`
+    * with every epoch artifact at `e`.
+    */
+  private def epochAppend(dir: String, m: IndexManifest,
+      epochs: Map[String, DataFrame]): (Int, Seq[() => Unit], IndexManifest) = {
+    val e = m.epochs.values.max + 1
+    (e, epochs.toSeq.map { case (n, df) =>
+        () => df.write.mode("overwrite").parquet(s"$dir/${m.path(n)}/epoch-$e") },
+      m.copy(gen = m.gen + 1, epochs = m.epochs.map { case (k, _) => k -> e }))
+  }
+
+  /** A maintained APPEND that only adds epochs, on manifest `m` (resolved
+    * by [[mutate]]): each frame of `epochs` takes the next epoch, then
+    * generation `m.gen + 1` publishes.
+    */
+  def appendEpochs(dir: String, m: IndexManifest, epochs: Map[String, DataFrame]): Unit = {
+    val (_, writes, next) = epochAppend(dir, m, epochs)
+    writeAndPublish(dir, next, writes)
   }
 
   /** Tombstone-only DELETION, for a family whose answer is the filtered
@@ -402,12 +421,12 @@ object IndexLifecycle {
     */
   def compact(dir: String, rebuild: String)(
       rewrite: (IndexManifest, Long) => (Seq[() => Unit], Map[String, String])): Unit =
-    regenerate(dir) { m =>
+    mutate(dir) { m =>
       require(m.pathOpt("capledger").isEmpty,
         s"index at $dir is ledgered; compaction would discard the cap " +
           s"ledger and break the rerun contract — use $rebuild instead")
-      m.pathOpt("deleted").nonEmpty
-    }(rewrite)
+      if (m.pathOpt("deleted").nonEmpty) regenerate(dir, m)(rewrite(m, _))
+    }
 
   /** The LEDGERED rebuild: a scheduled, loud re-derivation over the
     * survivors with a fresh epoch-0 ledger — by design NOT necessarily
@@ -421,10 +440,10 @@ object IndexLifecycle {
     */
   def rebuildLedgered(dir: String)(
       rewrite: (IndexManifest, Long) => (Seq[() => Unit], Map[String, String])): Unit =
-    regenerate(dir) { m =>
+    mutate(dir) { m =>
       require(m.pathOpt("capledger").nonEmpty, s"index at $dir is not ledgered — use compactIndex")
-      true
-    }(rewrite)
+      regenerate(dir, m)(rewrite(m, _))
+    }
 
   /** The rebuild input guard: a caller-supplied corpus must hold exactly
     * the index's `survivors` (tombstone-filtered) rows — a refused
@@ -435,23 +454,22 @@ object IndexLifecycle {
       s"rebuildLedgered($dir): caller passed $got rows but the index has " +
         s"$survivors survivors — the rebuild input must be exactly the survivors")
 
-  /** The regeneration skeleton of compaction and rebuild: under the
-    * writer lock, when `go(m)`, the writes `rewrite(m, g)` returns run
-    * concurrently and generation `g = m.gen + 1` publishes their
-    * entries, with the tombstone entry dropped and
-    * every rewritten epoch artifact back at epoch 0. The new manifest
-    * derives from `m`, so geometry carries over, and in-flight readers
-    * keep their directories until [[IndexStatePublisher.gc]].
+  /** The regeneration skeleton of compaction, rebuild and retrain, on
+    * manifest `m` (resolved by [[mutate]]): the writes `rewrite(g)`
+    * returns run concurrently and generation `g = m.gen + 1` publishes
+    * their entries, with the tombstone entry dropped, every rewritten
+    * epoch artifact back at epoch 0 and `geometry` over `m`'s. The new
+    * manifest derives from `m`, so every other entry and geometry
+    * parameter carries over, and in-flight readers keep their
+    * directories until [[IndexStatePublisher.gc]].
     */
-  private def regenerate(dir: String)(go: IndexManifest => Boolean)(
-      rewrite: (IndexManifest, Long) => (Seq[() => Unit], Map[String, String])): Unit =
-    mutate(dir) { m =>
-      if (go(m)) {
-        val g = m.gen + 1
-        val (writes, fresh) = rewrite(m, g)
-        writeAndPublish(dir, m.copy(gen = g,
-          entries = m.entries - "deleted" ++ fresh,
-          epochs = m.epochs ++ fresh.keys.filter(m.epochs.contains).map(_ -> 0)), writes)
-      }
-    }
+  def regenerate(dir: String, m: IndexManifest, geometry: Map[String, Int] = Map.empty)(
+      rewrite: Long => (Seq[() => Unit], Map[String, String])): Unit = {
+    val g = m.gen + 1
+    val (writes, fresh) = rewrite(g)
+    writeAndPublish(dir, m.copy(gen = g,
+      entries = m.entries - "deleted" ++ fresh,
+      epochs = m.epochs ++ fresh.keys.filter(m.epochs.contains).map(_ -> 0),
+      geometry = m.geometry ++ geometry), writes)
+  }
 }

@@ -56,10 +56,6 @@ final case class IndexManifest(
 
   def withEntry(name: String, rel: String): IndexManifest =
     copy(entries = entries + (name -> rel))
-  def withoutEntry(name: String): IndexManifest =
-    copy(entries = entries - name, epochs = epochs - name)
-  def withEpoch(name: String, epoch: Int): IndexManifest =
-    copy(epochs = epochs + (name -> epoch))
 }
 
 /** Atomic, versioned publication of maintained-index state (r16 VERDICT

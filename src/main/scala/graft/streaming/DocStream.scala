@@ -317,8 +317,10 @@ object DocStream {
     * same artifacts and gates the full equivalence (d39).
     */
   /** [[corpusDeduped]] against the MAINTAINED on-disk index (r16 VERDICT
-    * #8): each micro-batch re-resolves the index manifest and probes the
-    * generation it names — an append/delete/compaction landing BETWEEN
+    * #8): each micro-batch resolves the index manifest once and probes
+    * exactly the generation it names
+    * ([[graft.llm.IncrementalDedup.readIndexAt]]) — an
+    * append/delete/compaction landing BETWEEN
     * micro-batches changes the served answer exactly as the batch path
     * over a fresh [[graft.llm.IncrementalDedup.readIndex]] would
     * (spec-pinned). Resolution is cached BY GENERATION: the per-batch
@@ -338,13 +340,12 @@ object DocStream {
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: java.lang.Long) =>
-        val s = batch.sparkSession
-        val gen = graft.runtime.IndexStatePublisher.current(idxDir).gen
+        val m = graft.runtime.IndexStatePublisher.current(idxDir)
         val idx = cached match {
-          case Some((g, i)) if g == gen => i
+          case Some((g, i)) if g == m.gen => i
           case _ =>
-            val i = graft.llm.IncrementalDedup.readIndex(s, idxDir)
-            cached = Some((gen, i))
+            val i = graft.llm.IncrementalDedup.readIndexAt(batch.sparkSession, idxDir, m)
+            cached = Some((m.gen, i))
             i
         }
         sink(corpusDeduped(batch.toDF(), idx, k, rowsPerBand, estMin), batchId)

@@ -44,20 +44,20 @@ object VecStream {
       .start()
 
   /** [[annServed]] against the MAINTAINED on-disk index (r16 VERDICT
-    * #8): each micro-batch re-resolves the index manifest, so vectors
+    * #8): each micro-batch resolves the index manifest once, so vectors
     * appended between batches ([[graft.llm.Similarity
     * .appendVectorsToIndexDir]]) — and REBUILDS
     * ([[graft.llm.Similarity.maintainIvfSq8IndexDir]], which may
     * change the cell count) — are served by the very next batch,
     * exactly as the batch path over a fresh
     * [[graft.llm.Similarity.readIvfSq8Index]] would (spec-pinned).
-    * Resolution is cached by generation (one manifest read per batch on
-    * an unchanged index; immutable generations make the cache
-    * tear-proof under concurrent writers). `nProbe <= 0` derives the
-    * probe count from the LOADED generation's cell count by the pinned
-    * scan fraction ([[graft.llm.Similarity.probeFor]]) — the serving
-    * mode that tracks a retuned rebuild without redeploying the
-    * server.
+    * The loaded generation is cached by generation number and is
+    * exactly the resolved one ([[graft.llm.Similarity.readIvfSq8IndexAt]];
+    * immutable generations make the cache tear-proof under concurrent
+    * writers). `nProbe <= 0` derives the probe count from that
+    * manifest's cell count (`n_cells`) by the pinned scan fraction
+    * ([[graft.llm.Similarity.probeFor]]) — the serving mode that tracks
+    * a retuned rebuild without redeploying the server.
     */
   def annServedMaintained(
       queries: DataFrame,
@@ -67,16 +67,15 @@ object VecStream {
     queries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: java.lang.Long) =>
-        val s = batch.sparkSession
-        val gen = graft.runtime.IndexStatePublisher.current(idxDir).gen
+        val m = graft.runtime.IndexStatePublisher.current(idxDir)
         val (idx, np) = cached match {
-          case Some((g, i, p)) if g == gen => (i, p)
+          case Some((g, i, p)) if g == m.gen => (i, p)
           case _ =>
-            val i = graft.llm.Similarity.readIvfSq8Index(s, idxDir)
+            val i = graft.llm.Similarity.readIvfSq8IndexAt(batch.sparkSession, idxDir, m)
             val p =
               if (nProbe > 0) nProbe
-              else graft.llm.Similarity.probeFor(i.centroids.count().toInt)
-            cached = Some((gen, i, p))
+              else graft.llm.Similarity.probeFor(m.geom(idxDir, "n_cells"))
+            cached = Some((m.gen, i, p))
             (i, p)
         }
         val prepared = batch

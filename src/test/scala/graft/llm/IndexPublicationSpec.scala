@@ -3,6 +3,7 @@ package graft.llm
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.mr.TestSession
+import scala.jdk.CollectionConverters._
 import graft.runtime.{ConcurrentPublishException, IndexLockedException,
   IndexManifest, IndexStatePublisher}
 
@@ -38,6 +39,26 @@ class IndexPublicationSpec extends AnyFunSuite {
     (24L, base2 + " xx")
   )
   private def docsDf = fixture.toDF("doc_id", "text")
+
+  test("boundary: outside graft.runtime, no src/main code publishes, locks or builds a manifest") {
+    // every index writer goes through IndexLifecycle; doc comments may
+    // still name the primitives
+    val banned = Seq("IndexStatePublisher.publish", "withWriterLock", "IndexManifest(")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"$root not found from ${root.toAbsolutePath}")
+    val stream = java.nio.file.Files.walk(root)
+    val offenders = try stream.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !p.startsWith(root.resolve("graft/runtime")))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if !Seq("//", "/*", "*").exists(line.trim.startsWith) &&
+              banned.exists(line.contains) =>
+            s"$p:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    finally stream.close()
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 
   test("manifest publish is CAS: the second writer of a generation is rejected") {
     val tmp = java.nio.file.Files.createTempDirectory("manifestcas").toString
@@ -229,6 +250,38 @@ class IndexPublicationSpec extends AnyFunSuite {
       assert(gens == 1, s"gc should keep exactly the current manifest, found $gens")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    }
+    // the IVF-SQ8 index on the same runner: gen 0, an append, a retrain;
+    // gc keeps exactly the retrained generation's artifacts
+    val ivf = java.nio.file.Files.createTempDirectory("indexgc-ivf").toString
+    try {
+      val e = graft.Tables.embeddings(spark, sf)
+        .select(col("vec_id"), col("embedding"))
+        .withColumn("nrm", sqrt(graft.functions.FloatVecDot(col("embedding"), col("embedding"))))
+        .localCheckpoint(true)
+      val corpus = e.filter(col("vec_id") < 200)
+      val acc = e.filter(col("vec_id") < 300)
+      Similarity.writeIvfSq8Index(
+        Similarity.buildIvfSq8IndexFrom(corpus, nCells = 16, sampleN = 200), ivf)
+      Similarity.appendVectorsToIndexDir(spark, ivf, acc.filter(col("vec_id") >= 200))
+      val r = Similarity.maintainIvfSq8IndexDir(spark, ivf, acc)
+      assert(r.rebuilt, s"a 50% append must retrain: $r")
+      def served() = Similarity.ivfSq8KnnFromIndex(e.filter(col("vec_id") < 20),
+        Similarity.readIvfSq8Index(spark, ivf), r.nProbe).collect().toSet
+      val before = served()
+      IndexStatePublisher.gc(ivf, 0L)
+      val m = IndexStatePublisher.current(ivf)
+      assert(served() == before, "gc changed the served IVF answer")
+      val g = m.gen
+      assert(new java.io.File(ivf).list().toSet ==
+        Set("manifest", "centroids", s"cells-g$g", s"codes-g$g"), "gc kept a superseded IVF dir")
+      assert(new java.io.File(s"$ivf/centroids").list().toSet == Set(s"gen-$g"))
+      // an IVF manifest without its cell count fails loudly
+      IndexStatePublisher.publish(ivf, m.copy(gen = g + 1, geometry = Map.empty))
+      val err = intercept[IllegalStateException](Similarity.maintainIvfSq8IndexDir(spark, ivf, acc))
+      assert(err.getMessage.contains("n_cells"), err.getMessage)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ivf))
     }
   }
 

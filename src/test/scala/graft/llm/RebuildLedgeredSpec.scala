@@ -188,6 +188,7 @@ class RebuildLedgeredSpec extends AnyFunSuite {
     try {
       Similarity.writeIvfSq8Index(
         Similarity.buildIvfSq8IndexFrom(corpus, nCells = 16, sampleN = 200), idxDir)
+      val m0 = IndexStatePublisher.current(idxDir)
       // small append: 10% < the 0.2 trigger — NOT due; live geometry reported
       val d1 = all.filter(col("vec_id") >= 400 && col("vec_id") < 440)
       Similarity.appendVectorsToIndexDir(spark, idxDir, d1)
@@ -216,6 +217,11 @@ class RebuildLedgeredSpec extends AnyFunSuite {
       assert(idx.cells.count() == 500 && idx.codes.count() == 500,
         "rebuilt artifact must cover the accumulated corpus")
       assert(idx.centroids.count() == r2.nCells)
+      // both generations record their trained cell count as geometry
+      assert(Seq(m0 -> r1, m -> r2).forall { case (g, r) =>
+          g.geom(idxDir, "n_cells") == r.nCells &&
+            Similarity.readIvfSq8IndexAt(spark, idxDir, g).centroids.count() == r.nCells
+        }, s"n_cells: gen 0 ${m0.geometry}, retrained ${m.geometry}")
       // the retrained quantizer serves an APPENDED (drifted) vector: an
       // exact twin of an appended query must surface as its own top hit
       val q = all.filter(col("vec_id") === 450L)
