@@ -486,14 +486,7 @@ object Curate {
 
   val curateSql: String =
     s"""WITH RECURSIVE pairs AS (${Dedup.lshVerifiedPairsSql}),
-       |edges AS (
-       |  SELECT a_id AS a, b_id AS b FROM pairs
-       |  UNION SELECT b_id, a_id FROM pairs),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-       |lbl AS (SELECT a AS id, least(a, min(b)) AS cluster FROM reach GROUP BY a),
+       |${OracleSql.closureCtes()},
        |contaminated AS (SELECT doc_id FROM (${Decontaminate.flagOverlapsSql})),
        |quality AS (SELECT doc_id FROM (${TextAnalysis.qualityFilterSql}))
        |SELECT doc_id FROM documents

@@ -205,22 +205,8 @@ object DedupResolve {
     dedupedDocIds(s, docs, pairs).orderBy(col("doc_id"))
   }
 
-  val dedupPipelineSql: String = {
-    val pairsSql = Dedup.ngramJaccardSql
-    s"""WITH RECURSIVE pairs AS ($pairsSql),
-       |edges AS (
-       |  SELECT a_id AS a, b_id AS b FROM pairs
-       |  UNION SELECT b_id, a_id FROM pairs),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-       |lbl AS (SELECT a AS id, least(a, min(b)) AS cluster FROM reach GROUP BY a)
-       |SELECT doc_id FROM documents
-       |WHERE doc_id < 600
-       |  AND doc_id NOT IN (SELECT id FROM lbl WHERE id <> cluster)
-       |ORDER BY doc_id""".stripMargin
-  }
+  val dedupPipelineSql: String = OracleSql.keptClosureSql(
+    s"pairs AS (${Dedup.ngramJaccardSql})", "doc_id", "documents", Some("doc_id < 600"))
 
   /** CORPUS-WIDE dedup, end to end — the production pipeline with no id
     * bound anywhere: fused MinHash signatures → threshold-calibrated LSH
@@ -245,42 +231,14 @@ object DedupResolve {
 
   /** [[corpusDedupPipelineSql]] restricted to documents matching
     * `docWhere` (a bare predicate, e.g. "doc_id % 7 <> 3") — the
-    * full-rerun-on-survivors oracle of the deletion gate (d47). The
-    * default pipeline text is NOT routed through this builder so its
-    * oracle stays byte-identical to r15's.
+    * full-rerun-on-survivors oracle of the deletion gate (d47).
     */
-  def corpusDedupPipelineSqlWhere(docWhere: String): String = {
-    val pairsSql = Dedup.lshVerifiedPairsSqlWhere(s"WHERE $docWhere")
-    s"""WITH RECURSIVE pairs AS ($pairsSql),
-       |edges AS (
-       |  SELECT a_id AS a, b_id AS b FROM pairs
-       |  UNION SELECT b_id, a_id FROM pairs),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-       |lbl AS (SELECT a AS id, least(a, min(b)) AS cluster FROM reach GROUP BY a)
-       |SELECT doc_id FROM documents
-       |WHERE $docWhere
-       |  AND doc_id NOT IN (SELECT id FROM lbl WHERE id <> cluster)
-       |ORDER BY doc_id""".stripMargin
-  }
+  def corpusDedupPipelineSqlWhere(docWhere: String): String = OracleSql.keptClosureSql(
+    s"pairs AS (${Dedup.lshVerifiedPairsSqlWhere(s"WHERE $docWhere")})", "doc_id", "documents",
+    Some(docWhere))
 
-  val corpusDedupPipelineSql: String = {
-    val pairsSql = Dedup.lshVerifiedPairsSql
-    s"""WITH RECURSIVE pairs AS ($pairsSql),
-       |edges AS (
-       |  SELECT a_id AS a, b_id AS b FROM pairs
-       |  UNION SELECT b_id, a_id FROM pairs),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-       |lbl AS (SELECT a AS id, least(a, min(b)) AS cluster FROM reach GROUP BY a)
-       |SELECT doc_id FROM documents
-       |WHERE doc_id NOT IN (SELECT id FROM lbl WHERE id <> cluster)
-       |ORDER BY doc_id""".stripMargin
-  }
+  val corpusDedupPipelineSql: String = OracleSql.keptClosureSql(
+    s"pairs AS (${Dedup.lshVerifiedPairsSql})", "doc_id", "documents")
 
   /** CORPUS-WIDE semantic dedup — the embedding twin of
     * [[corpusDedupPipeline]], with no vec_id bound at any stage: sign-LSH
@@ -309,21 +267,8 @@ object DedupResolve {
       .orderBy(col("vec_id"))
   }
 
-  val semanticCorpusPipelineSql: String = {
-    val pairsSql = Similarity.signLshPairsDefaultSql
-    s"""WITH RECURSIVE pairs AS ($pairsSql),
-       |edges AS (
-       |  SELECT a_id AS a, b_id AS b FROM pairs
-       |  UNION SELECT b_id, a_id FROM pairs),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-       |lbl AS (SELECT a AS id, least(a, min(b)) AS cluster FROM reach GROUP BY a)
-       |SELECT vec_id FROM embeddings
-       |WHERE vec_id NOT IN (SELECT id FROM lbl WHERE id <> cluster)
-       |ORDER BY vec_id""".stripMargin
-  }
+  val semanticCorpusPipelineSql: String = OracleSql.keptClosureSql(
+    s"pairs AS (${Similarity.signLshPairsDefaultSql})", "vec_id", "embeddings")
 
   /** Semantic dedup (the SemDeDup shape): embedding-cosine near-dup PAIRS
     * (d07's exact verifier — at scale, LSH/IVF candidates feed it) become
@@ -344,20 +289,6 @@ object DedupResolve {
       .orderBy(col("vec_id"))
   }
 
-  val semanticDedupPipelineSql: String = {
-    val pairsSql = Similarity.embedNearDupSql
-    s"""WITH RECURSIVE pairs AS ($pairsSql),
-       |edges AS (
-       |  SELECT a_id AS a, b_id AS b FROM pairs
-       |  UNION SELECT b_id, a_id FROM pairs),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-       |lbl AS (SELECT a AS id, least(a, min(b)) AS cluster FROM reach GROUP BY a)
-       |SELECT vec_id FROM embeddings
-       |WHERE vec_id < 1000
-       |  AND vec_id NOT IN (SELECT id FROM lbl WHERE id <> cluster)
-       |ORDER BY vec_id""".stripMargin
-  }
+  val semanticDedupPipelineSql: String = OracleSql.keptClosureSql(
+    s"pairs AS (${Similarity.embedNearDupSql})", "vec_id", "embeddings", Some("vec_id < 1000"))
 }

@@ -696,30 +696,23 @@ object IncrementalDedup {
     * exact-dup group-min stars → transitive closure → keep the min
     * doc_id per component.
     */
-  val cappedMultiAppendDedupSql: String = {
-    val pairsSql = Dedup.lshVerifiedPairsEpochCappedSql(32, 4, 0.6, 0.8, LedgerCap, 4)
-    s"""WITH RECURSIVE pairs AS ($pairsSql),
-       |hashes AS (SELECT doc_id, md5(text) AS ch FROM documents),
+  val cappedMultiAppendDedupSql: String = OracleSql.keptClosureSql(
+    s"""pairs AS (${Dedup.lshVerifiedPairsEpochCappedSql(32, 4, 0.6, 0.8, LedgerCap, 4)}),
+       |${exactStarCtes("")}""".stripMargin,
+    "doc_id", "documents", extraEdges = Seq("hstars"))
+
+  /** The exact-dup channel of the capped oracles: `hashes` over the
+    * documents matching `docWhere`, and `hstars` (a_id, b_id), the edges
+    * from each content-hash group's min doc_id to its other members.
+    */
+  private def exactStarCtes(docWhere: String): String =
+    s"""hashes AS (SELECT doc_id, md5(text) AS ch FROM documents$docWhere),
        |hstars AS (
        |  SELECT m.min_id AS a_id, h.doc_id AS b_id
        |  FROM hashes h
        |  JOIN (SELECT ch, MIN(doc_id) AS min_id FROM hashes GROUP BY ch) m
        |    ON h.ch = m.ch
-       |  WHERE h.doc_id <> m.min_id),
-       |edges AS (
-       |  SELECT a_id AS a, b_id AS b FROM pairs
-       |  UNION SELECT b_id, a_id FROM pairs
-       |  UNION SELECT a_id, b_id FROM hstars
-       |  UNION SELECT b_id, a_id FROM hstars),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-       |lbl AS (SELECT a AS id, least(a, min(b)) AS cluster FROM reach GROUP BY a)
-       |SELECT doc_id FROM documents
-       |WHERE doc_id NOT IN (SELECT id FROM lbl WHERE id <> cluster)
-       |ORDER BY doc_id""".stripMargin
-  }
+       |  WHERE h.doc_id <> m.min_id)""".stripMargin
 
   /** d55: DELETION composed with the CAPPED LEDGERED posture (r18
     * VERDICT ask #1 — the round's one `weak` component: the production
@@ -792,32 +785,14 @@ object IncrementalDedup {
   val cappedLedgerDeleteDedupSql: String = {
     val dead = "(doc_id % 7 = 3 AND doc_id % 3 <= 1)"
     val pairsSql = Dedup.lshVerifiedPairsEpochCappedSql(32, 4, 0.6, 0.8, LedgerCap, 3)
-    s"""WITH RECURSIVE pairs0 AS ($pairsSql),
-       |pairs AS (
-       |  SELECT a_id, b_id FROM pairs0
-       |  WHERE NOT (a_id % 7 = 3 AND a_id % 3 <= 1)
-       |    AND NOT (b_id % 7 = 3 AND b_id % 3 <= 1)),
-       |hashes AS (SELECT doc_id, md5(text) AS ch FROM documents WHERE NOT $dead),
-       |hstars AS (
-       |  SELECT m.min_id AS a_id, h.doc_id AS b_id
-       |  FROM hashes h
-       |  JOIN (SELECT ch, MIN(doc_id) AS min_id FROM hashes GROUP BY ch) m
-       |    ON h.ch = m.ch
-       |  WHERE h.doc_id <> m.min_id),
-       |edges AS (
-       |  SELECT a_id AS a, b_id AS b FROM pairs
-       |  UNION SELECT b_id, a_id FROM pairs
-       |  UNION SELECT a_id, b_id FROM hstars
-       |  UNION SELECT b_id, a_id FROM hstars),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-       |lbl AS (SELECT a AS id, least(a, min(b)) AS cluster FROM reach GROUP BY a)
-       |SELECT doc_id FROM documents
-       |WHERE NOT $dead
-       |  AND doc_id NOT IN (SELECT id FROM lbl WHERE id <> cluster)
-       |ORDER BY doc_id""".stripMargin
+    OracleSql.keptClosureSql(
+      s"""pairs0 AS ($pairsSql),
+         |pairs AS (
+         |  SELECT a_id, b_id FROM pairs0
+         |  WHERE NOT (a_id % 7 = 3 AND a_id % 3 <= 1)
+         |    AND NOT (b_id % 7 = 3 AND b_id % 3 <= 1)),
+         |${exactStarCtes(s" WHERE NOT $dead")}""".stripMargin,
+      "doc_id", "documents", Some(s"NOT $dead"), Seq("hstars"))
   }
 
   /** d47: the deletion gate — yesterday's index over the WHOLE corpus,

@@ -806,42 +806,15 @@ object IncrementalSemantic {
     * with the takedown predicate threaded through both the pair CTE and
     * the kept select.
     */
-  val semanticDeleteSql: String = {
-    val pairsSql = Similarity.signLshPairsSqlFor(8, 4, 0.35,
-      vecWhere = "WHERE vec_id % 7 <> 3")
-    s"""WITH RECURSIVE pairs AS ($pairsSql),
-       |edges AS (
-       |  SELECT a_id AS a, b_id AS b FROM pairs
-       |  UNION SELECT b_id, a_id FROM pairs),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-       |lbl AS (SELECT a AS id, least(a, min(b)) AS cluster FROM reach GROUP BY a)
-       |SELECT vec_id FROM embeddings
-       |WHERE vec_id % 7 <> 3
-       |  AND vec_id NOT IN (SELECT id FROM lbl WHERE id <> cluster)
-       |ORDER BY vec_id""".stripMargin
-  }
+  val semanticDeleteSql: String = OracleSql.keptClosureSql(
+    s"pairs AS (${Similarity.signLshPairsSqlFor(8, 4, 0.35, vecWhere = "WHERE vec_id % 7 <> 3")})",
+    "vec_id", "embeddings", Some("vec_id % 7 <> 3"))
 
   /** The frozen-geometry full rerun: d16's recursive-closure shape over
     * [[Similarity.signLshPairsSqlFor]] at the pinned (8, 4, 0.35).
     */
-  val semanticAppendSql: String = {
-    val pairsSql = Similarity.signLshPairsSqlFor(8, 4, 0.35)
-    s"""WITH RECURSIVE pairs AS ($pairsSql),
-       |edges AS (
-       |  SELECT a_id AS a, b_id AS b FROM pairs
-       |  UNION SELECT b_id, a_id FROM pairs),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-       |lbl AS (SELECT a AS id, least(a, min(b)) AS cluster FROM reach GROUP BY a)
-       |SELECT vec_id FROM embeddings
-       |WHERE vec_id NOT IN (SELECT id FROM lbl WHERE id <> cluster)
-       |ORDER BY vec_id""".stripMargin
-  }
+  val semanticAppendSql: String = OracleSql.keptClosureSql(
+    s"pairs AS (${Similarity.signLshPairsSqlFor(8, 4, 0.35)})", "vec_id", "embeddings")
 
   /** d53: k CAPPED maintained appends on the SEMANTIC family with a
     * persisted cap ledger — the d51/d52 contract carried to embeddings
@@ -941,55 +914,27 @@ object IncrementalSemantic {
     def dead(ref: String): Option[String] = deadTemplate.map(_.replace("@", ref))
     val candDead = deadTemplate.map(_ =>
       s"\n    AND NOT ${dead("a.vec_id").get} AND NOT ${dead("b.vec_id").get}").getOrElse("")
-    val keptDead = deadTemplate.map(_ => s"NOT ${dead("vec_id").get}\n  AND ").getOrElse("")
-    s"""WITH RECURSIVE e AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS v,
-       |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-       |  FROM embeddings),
-       |cap AS (
-       |  SELECT GREATEST(1, CAST(FLOOR(0.75 * COUNT(*) / ${1 << bits}) AS BIGINT)) AS cap
-       |  FROM embeddings),
-       |planes AS MATERIALIZED (
-       |  SELECT j, i,
-       |    (((${Hashing.sqlHash60("j||':'||i")}) % 2000) - 1000)/1000.0 AS w
-       |  FROM range(0, ${nTables * bits}) t1(j), range(0, 64) t2(i)),
-       |dots AS (
-       |  SELECT e.vec_id, p.j, SUM(e.v[p.i + 1] * p.w) AS d
-       |  FROM e, planes p GROUP BY e.vec_id, p.j),
-       |buckets AS (
-       |  SELECT vec_id, vec_id % $epochMod AS epoch, j // $bits AS table_id,
-       |    SUM(CASE WHEN d >= 0 THEN (1 << (j % $bits)) ELSE 0 END) AS bucket
-       |  FROM dots GROUP BY vec_id, j // $bits),
-       |pop AS (
-       |  SELECT x.table_id, x.bucket, kk.k AS pe, COUNT(*) AS cnt
-       |  FROM buckets x JOIN range(0, $epochMod) kk(k) ON x.epoch <= kk.k
-       |  GROUP BY 1, 2, 3),
-       |cand AS (
-       |  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-       |  FROM buckets a
-       |  JOIN buckets b
-       |    ON a.table_id = b.table_id AND a.bucket = b.bucket
-       |      AND a.vec_id < b.vec_id
-       |  JOIN pop p ON p.table_id = a.table_id AND p.bucket = a.bucket
-       |    AND p.pe = greatest(a.epoch, b.epoch)
-       |  WHERE p.cnt <= (SELECT cap FROM cap)$candDead),
-       |pairs AS (
-       |  SELECT c.a_id, c.b_id
-       |  FROM cand c
-       |  JOIN e ea ON ea.vec_id = c.a_id
-       |  JOIN e eb ON eb.vec_id = c.b_id
-       |  WHERE list_dot_product(ea.v, eb.v) / (ea.nrm * eb.nrm) >= $minCos),
-       |edges AS (
-       |  SELECT a_id AS a, b_id AS b FROM pairs
-       |  UNION SELECT b_id, a_id FROM pairs),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.a, e2.b FROM reach r JOIN edges e2 ON r.b = e2.a),
-       |lbl AS (SELECT a AS id, least(a, min(b)) AS cluster FROM reach GROUP BY a)
-       |SELECT vec_id FROM embeddings
-       |WHERE ${keptDead}vec_id NOT IN (SELECT id FROM lbl WHERE id <> cluster)
-       |ORDER BY vec_id""".stripMargin
+    OracleSql.keptClosureSql(
+      s"""cap AS (
+         |  SELECT GREATEST(1, CAST(FLOOR(0.75 * COUNT(*) / ${1 << bits}) AS BIGINT)) AS cap
+         |  FROM embeddings),
+         |${OracleSql.signLshCtes(nTables, Some(bits), materialized = true, epochMod = Some(epochMod))},
+         |pop AS (
+         |  SELECT x.table_id, x.bucket, kk.k AS pe, COUNT(*) AS cnt
+         |  FROM buckets x JOIN range(0, $epochMod) kk(k) ON x.epoch <= kk.k
+         |  GROUP BY 1, 2, 3),
+         |cand AS (
+         |  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
+         |  FROM buckets a
+         |  JOIN buckets b
+         |    ON a.table_id = b.table_id AND a.bucket = b.bucket
+         |      AND a.vec_id < b.vec_id
+         |  JOIN pop p ON p.table_id = a.table_id AND p.bucket = a.bucket
+         |    AND p.pe = greatest(a.epoch, b.epoch)
+         |  WHERE p.cnt <= (SELECT cap FROM cap)$candDead),
+         |pairs AS (
+         |${OracleSql.indented(OracleSql.cosineVerifySql(minCos))})""".stripMargin,
+      "vec_id", "embeddings", dead("vec_id").map(p => s"NOT $p"))
   }
 
   /** The d53 oracle: [[cappedSemanticSqlFor]] at epochMod = 4, no

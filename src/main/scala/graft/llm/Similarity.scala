@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.runtime.{Ckpt, IndexLifecycle, IndexManifest, IndexStatePublisher}
-import Hashing._
+import OracleSql.{cosineVerifySql, indented, signLshCtes, top5Sql, vecCte}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (`embedding: array<float>`, 64-dim).
@@ -60,47 +60,79 @@ object Similarity {
   // to the HOF aggregate/zip_with form, ~10× faster on candidate batches)
   private def dotCol = FloatVecDot(col("qv"), col("embedding"))
   private def normCol = sqrt(FloatVecDot(col("embedding"), col("embedding")))
+  private def cosCol = dotCol / (col("qn") * col("nrm"))
+
+  /** The (vec_id, embedding, nrm) vector table every kNN operator starts
+    * from.
+    */
+  private def vecs(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir)
+      .select(col("vec_id"), col("embedding"))
+      .withColumn("nrm", normCol)
+
+  /** The kNN query side: (qid, qv, qn) for the vectors of `e` with
+    * vec_id < 50.
+    */
+  private def queryVecs(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < 50)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("nrm").as("qn"))
+
+  /** The top-5 ranking every kNN operator ends with: per `qid`, the 5
+    * best `id`s by `score` desc, ties broken by `id` for full
+    * determinism, as (qid, nid, rnk, `out`…).
+    */
+  private def top5(cands: DataFrame, score: String, id: String, out: Column*): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col(score).desc, col(id).asc)
+    cands.withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= 5)
+      .select(Seq(col("qid"), col(id), col("rnk")) ++ out: _*)
+      .withColumnRenamed(id, "nid")
+  }
+
+  /** Exact-cosine top-5 over candidate ids (qid, `id`): candidate vectors
+    * re-attach from `e` by id, the query vectors broadcast.
+    */
+  private def cosineTop5(ids: DataFrame, id: String, e: DataFrame): DataFrame =
+    top5(ids
+      .join(e.select(col("vec_id"), col("embedding"), col("nrm")).withColumnRenamed("vec_id", id), id)
+      .join(broadcast(queryVecs(e)), "qid")
+      .withColumn("cos", cosCol), "cos", id)
+
+  /** Packed-SQ8 top-5 over candidate ids (qid, nid): corpus codes from
+    * `codes`, query codes from `qcodes` (both (vec_id, code)), ranked by
+    * the signed-byte integer dot.
+    */
+  private def packedTop5(candIds: DataFrame, codes: DataFrame, qcodes: DataFrame): DataFrame = {
+    import graft.functions.BinVecDot
+    top5(candIds
+      .join(codes.select(col("vec_id").as("nid"), col("code").as("ncode")), "nid")
+      .join(broadcast(qcodes.select(col("vec_id").as("qid"), col("code").as("qcode"))), "qid")
+      .withColumn("qdot", BinVecDot(col("qcode"), col("ncode"))), "qdot", "nid", col("qdot"))
+  }
 
   /** Exact cosine top-5 neighbors for each query vector (vec_id < 50).
     * Output is (qid, nid, rank) — ranks, not raw similarities, so the
-    * result is robust to last-bit float noise across engines; ties broken
-    * by nid for full determinism.
+    * result is robust to last-bit float noise across engines.
     */
   def bruteKnn(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", normCol)
-    val q = e.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("nrm").as("qn"))
-    val pairs = e.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .withColumn("cos", dotCol / (col("qn") * col("nrm")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id").asc)
-    pairs
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("qid"), col("vec_id").as("nid"), col("rnk"))
+    val e = vecs(s, dir)
+    top5(e.join(broadcast(queryVecs(e)), col("vec_id") =!= col("qid"))
+      .withColumn("cos", cosCol), "cos", "vec_id")
   }
 
   val bruteKnnSql: String =
-    """WITH n AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v,
-      |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      |  FROM embeddings),
-      |p AS (
-      |  SELECT q.vec_id AS qid, e.vec_id AS nid,
-      |    list_dot_product(q.v, e.v) / (q.nrm * e.nrm) AS cos
-      |  FROM n q, n e WHERE q.vec_id < 50 AND e.vec_id <> q.vec_id)
-      |SELECT qid, nid, CAST(rnk AS INT) AS rnk FROM (
-      |  SELECT qid, nid,
-      |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid ASC) AS rnk
-      |  FROM p)
-      |WHERE rnk <= 5""".stripMargin
+    s"""WITH ${vecCte("n")},
+       |p AS (
+       |  SELECT q.vec_id AS qid, e.vec_id AS nid,
+       |    list_dot_product(q.v, e.v) / (q.nrm * e.nrm) AS cos
+       |  FROM n q, n e WHERE q.vec_id < 50 AND e.vec_id <> q.vec_id)
+       |${top5Sql("p", "cos")}""".stripMargin
 
   /** Int8 scalar-quantized exact kNN (d30) — the memory-compression arm
     * of the ANN family. Normalize-then-quantize, the production cosine
     * recipe: each vector is L2-normalized, then every coordinate maps to
-    * `round(v_i / ‖v‖ · 127) ∈ [-127, 127]`, and candidates rank by the
-    * INTEGER dot of quantized vectors (codegen
+    * `round(v_i / ‖v‖ · 127) ∈ [-127, 127]` ([[sq8Of]]), and candidates
+    * rank by the INTEGER dot of quantized vectors (codegen
     * [[graft.functions.IntVecDot]]) — qdot/127² ≈ cosine. The ranking
     * key is integer-exact: unlike the float-cosine paths (portable only
     * because both engines accumulate in index order), an integer dot has
@@ -122,46 +154,34 @@ object Similarity {
     */
   def sq8Knn(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.IntVecDot
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", greatest(normCol, lit(1e-12)))
-      .withColumn("qv", transform(col("embedding"),
-        x => round(x.cast("double") / col("nrm") * 127).cast("int")))
-      .select(col("vec_id"), col("qv"))
+    val e = vecs(s, dir).withColumn("qv", sq8Of).select(col("vec_id"), col("qv"))
     val q = e.filter(col("vec_id") < 50)
       .select(col("vec_id").as("qid"), col("qv").as("qa"))
-    val pairs = e.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .withColumn("qdot", IntVecDot(col("qa"), col("qv")))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("qdot").desc, col("vec_id").asc)
-    pairs
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("qid"), col("vec_id").as("nid"), col("rnk"), col("qdot"))
+    top5(e.join(broadcast(q), col("vec_id") =!= col("qid"))
+      .withColumn("qdot", IntVecDot(col("qa"), col("qv"))), "qdot", "vec_id", col("qdot"))
   }
 
-  /** DuckDB mirror of [[sq8Knn]]: the same normalize→round→integer-dot
-    * pipeline in SQL. `list_dot_product` over BIGINT lists is exact here
-    * (≤ 64·127² ≈ 1.03e6 ≪ 2^53).
+  /** The normalize→round CTEs (`n`, `q`) and the all-pairs integer dot
+    * (`p`) of the SQ8 mirrors. `list_dot_product` over BIGINT lists is
+    * exact here (≤ 64·127² ≈ 1.03e6 ≪ 2^53).
     */
-  val sq8KnnSql: String =
-    """WITH n AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v,
-      |    greatest(sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])), 1e-12) AS nrm
-      |  FROM embeddings),
-      |q AS (
-      |  SELECT vec_id,
-      |    list_transform(v, x -> CAST(round(x / nrm * 127) AS BIGINT)) AS qv
-      |  FROM n),
-      |p AS (
+  private val sq8QuantCtes: String =
+    s"""${vecCte("n", floor = true)},
+       |q AS (
+       |  SELECT vec_id,
+       |    list_transform(v, x -> CAST(round(x / nrm * 127) AS BIGINT)) AS qv
+       |  FROM n)""".stripMargin
+  private val sq8PairsCte: String =
+    """p AS (
       |  SELECT a.vec_id AS qid, b.vec_id AS nid,
       |    CAST(list_dot_product(a.qv, b.qv) AS BIGINT) AS qdot
-      |  FROM q a, q b WHERE a.vec_id < 50 AND b.vec_id <> a.vec_id)
-      |SELECT qid, nid, CAST(rnk AS INT) AS rnk, qdot FROM (
-      |  SELECT qid, nid, qdot,
-      |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY qdot DESC, nid ASC) AS rnk
-      |  FROM p)
-      |WHERE rnk <= 5""".stripMargin
+      |  FROM q a, q b WHERE a.vec_id < 50 AND b.vec_id <> a.vec_id)""".stripMargin
+
+  /** DuckDB mirror of [[sq8Knn]]: the same normalize→round→integer-dot
+    * pipeline in SQL.
+    */
+  val sq8KnnSql: String =
+    s"WITH $sq8QuantCtes,\n$sq8PairsCte\n${top5Sql("p", "qdot", keepScore = true)}"
 
   /** d34: [[sq8Knn]] with codes in the PRODUCTION layout — packed binary
     * ([[graft.functions.PackInt8]], one signed byte per coordinate: 64
@@ -178,52 +198,28 @@ object Similarity {
     * cross-engine-checked, not documented.
     */
   def sq8KnnPacked(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.{BinVecDot, PackInt8}
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", greatest(normCol, lit(1e-12)))
-      .withColumn("code", PackInt8(transform(col("embedding"),
-        x => round(x.cast("double") / col("nrm") * 127).cast("int"))))
-      .select(col("vec_id"), col("code"))
+    import graft.functions.BinVecDot
+    val e = sq8CodesOf(vecs(s, dir))
     val q = e.filter(col("vec_id") < 50)
       .select(col("vec_id").as("qid"), col("code").as("qcode"))
-    val pairs = e.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .withColumn("qdot", BinVecDot(col("qcode"), col("code")))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("qdot").desc, col("vec_id").asc)
-    pairs
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("qid"), col("vec_id").as("nid"), col("rnk"), col("qdot"),
-        md5(hex(col("qcode"))).as("qcode_md5"))
+    top5(e.join(broadcast(q), col("vec_id") =!= col("qid"))
+        .withColumn("qdot", BinVecDot(col("qcode"), col("code"))), "qdot", "vec_id",
+      col("qdot"), md5(hex(col("qcode"))).as("qcode_md5"))
   }
 
   /** DuckDB mirror of [[sq8KnnPacked]]: d30's quantize→integer-dot CTEs
     * plus the hex-transcription md5 of each query's packed code.
     */
   val sq8KnnPackedSql: String =
-    """WITH n AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v,
-      |    greatest(sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])), 1e-12) AS nrm
-      |  FROM embeddings),
-      |q AS (
-      |  SELECT vec_id,
-      |    list_transform(v, x -> CAST(round(x / nrm * 127) AS BIGINT)) AS qv
-      |  FROM n),
-      |hx AS (
-      |  SELECT vec_id, md5(list_aggregate(
-      |    list_transform(qv, x -> lpad(to_hex((x + 256) % 256), 2, '0')),
-      |    'string_agg', '')) AS qcode_md5
-      |  FROM q),
-      |p AS (
-      |  SELECT a.vec_id AS qid, b.vec_id AS nid,
-      |    CAST(list_dot_product(a.qv, b.qv) AS BIGINT) AS qdot
-      |  FROM q a, q b WHERE a.vec_id < 50 AND b.vec_id <> a.vec_id)
-      |SELECT qid, nid, CAST(rnk AS INT) AS rnk, qdot, qcode_md5 FROM (
-      |  SELECT qid, nid, qdot,
-      |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY qdot DESC, nid ASC) AS rnk
-      |  FROM p) r JOIN hx ON hx.vec_id = r.qid
-      |WHERE rnk <= 5""".stripMargin
+    s"""WITH $sq8QuantCtes,
+       |hx AS (
+       |  SELECT vec_id, md5(list_aggregate(
+       |    list_transform(qv, x -> lpad(to_hex((x + 256) % 256), 2, '0')),
+       |    'string_agg', '')) AS qcode_md5
+       |  FROM q),
+       |$sq8PairsCte
+       |${top5Sql("p", "qdot", keepScore = true,
+            join = " r JOIN hx ON hx.vec_id = r.qid", joinCols = ", qcode_md5")}""".stripMargin
 
   /** DuckDB mirror of [[lshKnn]], generated from the SAME (nTables, bits)
     * arguments: hyperplanes recomputed from the same md5 derivation,
@@ -232,21 +228,7 @@ object Similarity {
     * (P(|dot| < 1e-13) ≈ 1e-13 per vector-plane).
     */
   def lshKnnSqlFor(nTables: Int, bits: Int): String =
-    s"""WITH e AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS v,
-       |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-       |  FROM embeddings),
-       |planes AS (
-       |  SELECT j, i,
-       |    (((${Hashing.sqlHash60("j||':'||i")}) % 2000) - 1000)/1000.0 AS w
-       |  FROM range(0, ${nTables * bits}) t1(j), range(0, 64) t2(i)),
-       |dots AS (
-       |  SELECT e.vec_id, p.j, SUM(e.v[p.i + 1] * p.w) AS d
-       |  FROM e, planes p GROUP BY e.vec_id, p.j),
-       |buckets AS (
-       |  SELECT vec_id, j // $bits AS table_id,
-       |    SUM(CASE WHEN d >= 0 THEN (1 << (j % $bits)) ELSE 0 END) AS bucket
-       |  FROM dots GROUP BY vec_id, j // $bits),
+    s"""WITH ${signLshCtes(nTables, Some(bits))},
        |cand AS (
        |  SELECT DISTINCT q.vec_id AS qid, c.vec_id AS nid
        |  FROM buckets q JOIN buckets c
@@ -255,10 +237,7 @@ object Similarity {
        |scored AS (
        |  SELECT ci.qid, ci.nid, list_dot_product(a.v, b.v)/(a.nrm*b.nrm) AS cos
        |  FROM cand ci JOIN e a ON a.vec_id = ci.qid JOIN e b ON b.vec_id = ci.nid)
-       |SELECT qid, nid, CAST(rnk AS INT) AS rnk FROM (
-       |  SELECT qid, nid,
-       |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid ASC) AS rnk
-       |  FROM scored) WHERE rnk <= 5""".stripMargin
+       |${top5Sql("scored", "cos")}""".stripMargin
 
   val lshKnnSql: String = lshKnnSqlFor(defTables, defBits)
 
@@ -305,11 +284,6 @@ object Similarity {
     verifyCosineOn(e, p, minCos)
   }
 
-  /** Verify stage over a pre-materialized vector table (vec_id, embedding,
-    * nrm) — callers that already hold the (possibly bounded) vector scan
-    * ([[signLshPairs]], [[embedNearDup]]) pass it directly, skipping
-    * [[verifyCosine]]'s id prune.
-    */
   /** Broadcast budget for the verify joins' vector side, in BYTES — ~384
     * MB, sized so the measured ×200 point (1M 64-float rows ≈ 290 MB with
     * per-row overhead) still broadcasts, comfortably under Spark's
@@ -328,6 +302,11 @@ object Similarity {
     */
   private val MaxBroadcastBytes: Long = 384L << 20
 
+  /** Verify stage over a pre-materialized vector table (vec_id, embedding,
+    * nrm) — callers that already hold the (possibly bounded) vector scan
+    * ([[signLshPairs]], [[embedNearDup]]) pass it directly, skipping
+    * [[verifyCosine]]'s id prune.
+    */
   private[llm] def verifyCosineOn(e: DataFrame, pairs: DataFrame, minCos: Double): DataFrame = {
     // NOTE: one EAGER aggregate (row count + widest vector) runs here, at
     // build time — the join strategy has to be decided when the plan is
@@ -344,7 +323,7 @@ object Similarity {
     pairs
       .join(side(ea), "a_id")
       .join(side(eb), "b_id")
-      .withColumn("cos", dotCol / (col("qn") * col("nrm")))
+      .withColumn("cos", cosCol)
       .filter(col("cos") >= minCos)
       .select(col("a_id"), col("b_id"))
   }
@@ -363,11 +342,7 @@ object Similarity {
     // prune would be a no-op distinct over every pair row — build the
     // bounded vector table once (it feeds both verify sides) and hand the
     // id-only cross straight to the shared verify stage
-    val e = Tables.embeddings(s, dir)
-      .filter(col("vec_id") < 1000)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", normCol)
-      .transform(graft.runtime.Ckpt.eager)
+    val e = vecs(s, dir).filter(col("vec_id") < 1000).transform(Ckpt.eager)
     val ids = e.select(col("vec_id"))
     val cand = ids.select(col("vec_id").as("a_id"))
       .join(broadcast(ids.select(col("vec_id").as("b_id"))), col("a_id") < col("b_id"))
@@ -375,10 +350,7 @@ object Similarity {
   }
 
   val embedNearDupSql: String =
-    """WITH n AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v,
-      |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      |  FROM embeddings WHERE vec_id < 1000)
+    s"""WITH ${vecCte("n", " WHERE vec_id < 1000")}
       |SELECT a.vec_id AS a_id, b.vec_id AS b_id
       |FROM n a JOIN n b ON a.vec_id < b.vec_id
       |WHERE list_dot_product(a.v, b.v) / (a.nrm * b.nrm) >= 0.35""".stripMargin
@@ -414,23 +386,9 @@ object Similarity {
       nProbe: Int = 2,
       sampleN: Int = 200): DataFrame = {
     // 5 branches reference e (seeds, sample, scored, qv, corpus) —
-    // materialize once
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", normCol)
-      .transform(graft.runtime.Ckpt.lazyCp)
-    val candIds = ivfCandidateIds(e, nCells, nProbe, sampleN)
-    val qv = e.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("nrm").as("qn"))
-    val corpus = e.select(col("vec_id").as("nid"), col("embedding"), col("nrm"))
-    val cands = candIds
-      .join(corpus, "nid")
-      .join(broadcast(qv), "qid")
-      .withColumn("cos", dotCol / (col("qn") * col("nrm")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid").asc)
-    cands.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("qid"), col("nid"), col("rnk"))
+    // materialize once, eagerly (see lshKnn)
+    val e = vecs(s, dir).transform(Ckpt.eager)
+    cosineTop5(ivfCandidateIds(e, nCells, nProbe, sampleN), "nid", e)
   }
 
   /** IVF candidate generation shared by [[ivfKnn]] and [[ivfSq8Knn]]:
@@ -441,17 +399,21 @@ object Similarity {
     */
   private def ivfCandidateIds(
       e: DataFrame, nCells: Int, nProbe: Int, sampleN: Int): DataFrame = {
-    val cent = ivfCentroids(e, nCells, sampleN)
-    val ranked = ivfRanked(e, cent)
-    val cells = ranked.filter(col("r") === 1).select(col("vec_id"), col("cid").as("cell"))
+    val ranked = ivfRanked(e, ivfCentroids(e, nCells, sampleN))
     val probes = ranked.filter(col("vec_id") < 50 && col("r") <= nProbe)
       .select(col("vec_id").as("qid"), col("cid").as("probe_cell"))
+    probeCands(probes, cellsOf(ranked))
+  }
+
+  /** The distinct (qid, nid) candidates of (qid, probe_cell) probes over a
+    * (vec_id, cell) assignment — the trained and the loaded paths alike.
+    */
+  private def probeCands(probes: DataFrame, cells: DataFrame): DataFrame =
     probes
       .join(cells.withColumnRenamed("vec_id", "nid"), col("cell") === col("probe_cell"))
       .filter(col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"))
       .distinct()
-  }
 
   /** Centroid training (one deterministic Lloyd iteration — see
     * [[ivfKnn]]'s scaladoc): (cid, qv float[], cnrm). Factored out so the
@@ -493,6 +455,10 @@ object Similarity {
     scored.withColumn("r", row_number().over(byVec))
   }
 
+  /** The (vec_id, cell) argmax assignment of an [[ivfRanked]] ranking. */
+  private def cellsOf(ranked: DataFrame): DataFrame =
+    ranked.filter(col("r") === 1).select(col("vec_id"), col("cid").as("cell"))
+
   /** IVF-SQ8 (d31): the composition [[sq8Knn]]'s scaladoc promises —
     * IVF cell probing for candidate generation, int8 scalar-quantized
     * INTEGER ranking within the probed cells. Candidate membership is
@@ -513,28 +479,18 @@ object Similarity {
       nProbe: Int = 2,
       sampleN: Int = 200): DataFrame = {
     import graft.functions.IntVecDot
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", normCol)
-      .transform(graft.runtime.Ckpt.lazyCp)
+    val e = vecs(s, dir).transform(Ckpt.eager)
     val candIds = ivfCandidateIds(e, nCells, nProbe, sampleN)
     // quantize ONCE and materialize — the HOF transform is interpreted
     // (no codegen for lambda bodies), and qt feeds both join sides; this
     // is also the production layout: int8 codes are stored, not derived
-    val qt = e
-      .withColumn("qv8", transform(col("embedding"),
-        x => round(x.cast("double") / greatest(col("nrm"), lit(1e-12)) * 127).cast("int")))
-      .select(col("vec_id"), col("qv8"))
-      .transform(graft.runtime.Ckpt.lazyCp)
-    val cands = candIds
+    val qt = e.withColumn("qv8", sq8Of).select(col("vec_id"), col("qv8"))
+      .transform(Ckpt.eager)
+    top5(candIds
       .join(qt.select(col("vec_id").as("nid"), col("qv8").as("nv8")), "nid")
       .join(broadcast(qt.filter(col("vec_id") < 50)
         .select(col("vec_id").as("qid"), col("qv8").as("qq8"))), "qid")
-      .withColumn("qdot", IntVecDot(col("qq8"), col("nv8")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("qdot").desc, col("nid").asc)
-    cands.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("qid"), col("nid"), col("rnk"), col("qdot"))
+      .withColumn("qdot", IntVecDot(col("qq8"), col("nv8"))), "qdot", "nid", col("qdot"))
   }
 
   /** d35: [[ivfSq8Knn]] with the candidate-side codes in the packed
@@ -553,51 +509,31 @@ object Similarity {
       nCells: Int = 16,
       nProbe: Int = 2,
       sampleN: Int = 200): DataFrame = {
-    import graft.functions.{BinVecDot, PackInt8}
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", normCol)
-      .transform(graft.runtime.Ckpt.lazyCp)
+    val e = vecs(s, dir).transform(Ckpt.lazyCp)
     val candIds = ivfCandidateIds(e, nCells, nProbe, sampleN)
     // pack ONCE and materialize (the d31 lesson: the interpreted HOF
     // lambda must not re-run per consumer) — and the stored form IS the
     // production layout now, not a model of it
-    val qt = e
-      .withColumn("code", PackInt8(transform(col("embedding"),
-        x => round(x.cast("double") / greatest(col("nrm"), lit(1e-12)) * 127).cast("int"))))
-      .select(col("vec_id"), col("code"))
-      .transform(graft.runtime.Ckpt.lazyCp)
-    val cands = candIds
-      .join(qt.select(col("vec_id").as("nid"), col("code").as("ncode")), "nid")
-      .join(broadcast(qt.filter(col("vec_id") < 50)
-        .select(col("vec_id").as("qid"), col("code").as("qcode"))), "qid")
-      .withColumn("qdot", BinVecDot(col("qcode"), col("ncode")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("qdot").desc, col("nid").asc)
-    cands.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("qid"), col("nid"), col("rnk"), col("qdot"))
+    val qt = sq8CodesOf(e).transform(Ckpt.lazyCp)
+    packedTop5(candIds, qt, qt.filter(col("vec_id") < 50))
   }
 
-  /** DuckDB mirror of [[ivfKnn]], generated from the SAME (nCells,
-    * nProbe, sampleN) arguments — the d18-d21 grid-gate pattern applied
-    * to the IVF knobs (the scale measurements showed 64 cells beating the
-    * shipped 16 at a third of the scan budget, so the retuning path must
-    * be gated too).
-    */
   /** Shared CTE prefix (through `cand_ids`) of the IVF oracles —
-    * generated from the same arguments as [[ivfCandidateIds]].
+    * generated from the same arguments as [[ivfCandidateIds]]. The
+    * geometry arrives as SQL expressions: literals for a fixed grid
+    * point, or columns of a one-row `geo` CTE (`geoCte`, cross-joined
+    * where read) for a geometry derived in SQL. `seedsAnd`/`sampAnd`
+    * restrict the centroid training to a corpus split.
     */
-  private def ivfCandidateCte(nCells: Int, nProbe: Int, sampleN: Int,
-      seedsAnd: String = "", sampAnd: String = ""): String =
-    s"""WITH e AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v,
-      |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      |  FROM embeddings),
-      |seeds AS (SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM e WHERE vec_id < $nCells$seedsAnd),
+  private def ivfCandidateCte(nCells: String, nProbe: String, sampleN: String,
+      geoCte: String = "", seedsAnd: String = "", sampAnd: String = ""): String = {
+    val (head, geo) = if (geoCte.isEmpty) ("", "") else (geoCte + ",\n", ", geo")
+    s"""WITH $head${vecCte("e")},
+      |seeds AS (SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM e$geo WHERE vec_id < $nCells$seedsAnd),
       |a0 AS (
       |  SELECT s.vec_id, c.cid,
       |    list_dot_product(s.v, c.cv) / (c.cnrm * s.nrm) AS ccos
-      |  FROM e s, seeds c WHERE s.vec_id < $sampleN$sampAnd),
+      |  FROM e s, seeds c$geo WHERE s.vec_id < $sampleN$sampAnd),
       |assign AS (
       |  SELECT vec_id, cid FROM (
       |    SELECT vec_id, cid,
@@ -624,34 +560,37 @@ object Similarity {
       |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid ASC) AS r
       |  FROM scored),
       |cells AS (SELECT vec_id, cid AS cell FROM ranked WHERE r = 1),
-      |probes AS (SELECT vec_id AS qid, cid AS probe_cell FROM ranked
+      |probes AS (SELECT vec_id AS qid, cid AS probe_cell FROM ranked$geo
       |           WHERE vec_id < 50 AND r <= $nProbe),
       |cand_ids AS (
       |  SELECT DISTINCT p.qid, c.vec_id AS nid
       |  FROM probes p JOIN cells c ON c.cell = p.probe_cell
       |  WHERE c.vec_id <> p.qid)""".stripMargin
+  }
 
-  def ivfKnnSqlFor(nCells: Int, nProbe: Int, sampleN: Int): String =
-    ivfCandidateCte(nCells, nProbe, sampleN) +
-    """,
+  /** The exact-cosine rank tail of the IVF float oracles. */
+  private val ivfCosineRank: String =
+    s""",
       |cands AS (
       |  SELECT ci.qid, ci.nid,
       |    list_dot_product(q.v, n.v) / (q.nrm * n.nrm) AS cos
       |  FROM cand_ids ci
       |  JOIN e q ON q.vec_id = ci.qid
       |  JOIN e n ON n.vec_id = ci.nid)
-      |SELECT qid, nid, CAST(rnk AS INT) AS rnk FROM (
-      |  SELECT qid, nid,
-      |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid ASC) AS rnk
-      |  FROM cands)
-      |WHERE rnk <= 5""".stripMargin
+      |${top5Sql("cands", "cos")}""".stripMargin
 
-  /** DuckDB mirror of [[ivfSq8Knn]]: the shared candidate CTE plus the
-    * [[sq8KnnSql]] quantize→integer-dot ranking, generated from the same
-    * arguments.
+  /** DuckDB mirror of [[ivfKnn]], generated from the SAME (nCells,
+    * nProbe, sampleN) arguments — the d18-d21 grid-gate pattern applied
+    * to the IVF knobs (the scale measurements showed 64 cells beating the
+    * shipped 16 at a third of the scan budget, so the retuning path must
+    * be gated too).
     */
+  def ivfKnnSqlFor(nCells: Int, nProbe: Int, sampleN: Int): String =
+    ivfCandidateCte(s"$nCells", s"$nProbe", s"$sampleN") + ivfCosineRank
+
+  /** The [[sq8KnnSql]] quantize→integer-dot ranking over `cand_ids`. */
   private val sq8RankSuffix: String =
-    """,
+    s""",
       |qt AS (
       |  SELECT vec_id,
       |    list_transform(v, x -> CAST(round(x / greatest(nrm, 1e-12) * 127) AS BIGINT)) AS qv8
@@ -662,14 +601,13 @@ object Similarity {
       |  FROM cand_ids ci
       |  JOIN qt a ON a.vec_id = ci.qid
       |  JOIN qt b ON b.vec_id = ci.nid)
-      |SELECT qid, nid, CAST(rnk AS INT) AS rnk, qdot FROM (
-      |  SELECT qid, nid, qdot,
-      |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY qdot DESC, nid ASC) AS rnk
-      |  FROM cands)
-      |WHERE rnk <= 5""".stripMargin
+      |${top5Sql("cands", "qdot", keepScore = true)}""".stripMargin
 
+  /** DuckDB mirror of [[ivfSq8Knn]]: the shared candidate CTE plus the
+    * SQ8 ranking, generated from the same arguments.
+    */
   def ivfSq8KnnSqlFor(nCells: Int, nProbe: Int, sampleN: Int): String =
-    ivfCandidateCte(nCells, nProbe, sampleN) + sq8RankSuffix
+    ivfCandidateCte(s"$nCells", s"$nProbe", s"$sampleN") + sq8RankSuffix
 
   /** The d31 gate: IVF-SQ8 at the shipped IVF defaults. */
   def ivfSq8Knn16(s: SparkSession, dir: String): DataFrame =
@@ -723,12 +661,7 @@ object Similarity {
       dir: String,
       nCells: Int = 16,
       sampleN: Int = 200): IvfSq8Index =
-    buildIvfSq8IndexFrom(
-      Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding"))
-        .withColumn("nrm", normCol)
-        .transform(graft.runtime.Ckpt.lazyCp),
-      nCells, sampleN)
+    buildIvfSq8IndexFrom(vecs(s, dir).transform(Ckpt.lazyCp), nCells, sampleN)
 
   /** [[buildIvfSq8Index]] over a prepared (vec_id, embedding, nrm)
     * frame — the seam the incremental append path (d44) trains its
@@ -744,22 +677,21 @@ object Similarity {
     * reproduce the frozen quantizer; the retrain trains centroids on an
     * id-remapped view and assigns the real ids here (SCALING.md §3i).
     */
-  private def buildIvfSq8IndexWith(e: DataFrame, cent: DataFrame): IvfSq8Index = {
-    val cells = ivfRanked(e, cent).filter(col("r") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    IvfSq8Index(cent, cells, sq8CodesOf(e))
-  }
+  private def buildIvfSq8IndexWith(e: DataFrame, cent: DataFrame): IvfSq8Index =
+    IvfSq8Index(cent, cellsOf(ivfRanked(e, cent)), sq8CodesOf(e))
 
-  /** The one SQ8 packed-code formula (normalize → ×127 → round → pack)
-    * — shared by index build and the d44 delta append so the two paths
-    * cannot drift.
+  /** The one SQ8 quantizer (normalize → ×127 → round, an int per
+    * coordinate) over (embedding, nrm) — every SQ8 path, in-plan and
+    * persisted, so none can drift.
     */
-  private def sq8CodesOf(e: DataFrame): DataFrame = {
-    import graft.functions.PackInt8
-    e.withColumn("code", PackInt8(transform(col("embedding"),
-        x => round(x.cast("double") / greatest(col("nrm"), lit(1e-12)) * 127).cast("int"))))
+  private def sq8Of: Column =
+    transform(col("embedding"),
+      x => round(x.cast("double") / greatest(col("nrm"), lit(1e-12)) * 127).cast("int"))
+
+  /** (vec_id, code): [[sq8Of]] packed one signed byte per coordinate. */
+  private def sq8CodesOf(e: DataFrame): DataFrame =
+    e.withColumn("code", graft.functions.PackInt8(sq8Of))
       .select(col("vec_id"), col("code"))
-  }
 
   /** Write + PUBLISH generation 0 through the maintained-index runner
     * ([[graft.runtime.IndexLifecycle.publishGen0]]; the serving twin
@@ -799,9 +731,7 @@ object Similarity {
     */
   def appendVectorsToIndexDir(s: SparkSession, dir: String, delta: DataFrame): Unit =
     IndexLifecycle.mutate(dir) { m =>
-      val deltaCells = ivfRanked(delta, s.read.parquet(s"$dir/${m.path("centroids")}"))
-        .filter(col("r") === 1)
-        .select(col("vec_id"), col("cid").as("cell"))
+      val deltaCells = cellsOf(ivfRanked(delta, s.read.parquet(s"$dir/${m.path("centroids")}")))
       IndexLifecycle.appendEpochs(dir, m, Map("cells" -> deltaCells, "codes" -> sq8CodesOf(delta)))
     }
 
@@ -894,15 +824,9 @@ object Similarity {
       queries: DataFrame,
       idx: IvfSq8Index,
       nProbe: Int = 2): DataFrame = {
-    import graft.functions.BinVecDot
     val probes = ivfRanked(queries, idx.centroids)
       .filter(col("r") <= nProbe)
       .select(col("vec_id").as("qid"), col("cid").as("probe_cell"))
-    val candIds = probes
-      .join(idx.cells.withColumnRenamed("vec_id", "nid"), col("cell") === col("probe_cell"))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"))
-      .distinct()
     // query-side codes are quantized from the PASSED query frame itself
     // (the same sq8CodesOf formula the index was built with, so an
     // indexed vector gets bit-identical codes) — r15 ADVICE: the
@@ -911,16 +835,7 @@ object Similarity {
     // serving case (a genuinely new request vector), and scored a
     // changed embedding with its stale indexed code. The query set is
     // serve-request-sized, so the broadcast is bounded by the caller
-    val qcodes = sq8CodesOf(queries)
-      .select(col("vec_id").as("qid"), col("code").as("qcode"))
-    val cands = candIds
-      .join(idx.codes.select(col("vec_id").as("nid"), col("code").as("ncode")), "nid")
-      .join(broadcast(qcodes), "qid")
-      .withColumn("qdot", BinVecDot(col("qcode"), col("ncode")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("qdot").desc, col("nid").asc)
-    cands.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("qid"), col("nid"), col("rnk"), col("qdot"))
+    packedTop5(probeCands(probes, idx.cells), idx.codes, sq8CodesOf(queries))
   }
 
   /** d40: the full persistence round — train, WRITE the parquet index,
@@ -937,11 +852,7 @@ object Similarity {
     val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-ivf-index")
     writeIvfSq8Index(buildIvfSq8Index(s, dir, nCells = 16, sampleN = 200), idxDir)
     val idx = readIvfSq8Index(s, idxDir)
-    val queries = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", normCol)
-      .filter(col("vec_id") < 50)
-    ivfSq8KnnFromIndex(queries, idx, nProbe = 2)
+    ivfSq8KnnFromIndex(vecs(s, dir).filter(col("vec_id") < 50), idx, nProbe = 2)
   }
 
   val ivfSq8KnnLoadedSql: String = ivfSq8KnnSql
@@ -969,10 +880,7 @@ object Similarity {
     * side but the artifact append itself.
     */
   def ivfSq8IndexAppend(s: SparkSession, dir: String): DataFrame = {
-    val all = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", normCol)
-      .transform(Ckpt.lazyCp)
+    val all = vecs(s, dir).transform(Ckpt.lazyCp)
     // yesterday: train on the corpus split, persist
     val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-ivf-append")
     writeIvfSq8Index(buildIvfSq8IndexFrom(all.filter(col("vec_id") % 5 < 4),
@@ -989,7 +897,7 @@ object Similarity {
     * ranking run over ALL vectors.
     */
   val ivfSq8IndexAppendSql: String =
-    ivfCandidateCte(16, 2, 200,
+    ivfCandidateCte("16", "2", "200",
       seedsAnd = " AND vec_id % 5 < 4",
       sampAnd = " AND s.vec_id % 5 < 4") + sq8RankSuffix
 
@@ -1138,64 +1046,13 @@ object Similarity {
     * signLshPairsAutoSqlFor pattern).
     */
   val ivfKnnAutoSql: String =
-    s"""WITH geo AS MATERIALIZED (
-      |  SELECT nc, GREATEST(2, CAST(round(nc * $IvfScanFrac) AS INT)) AS np,
-      |    GREATEST(200, 4 * nc) AS ns
-      |  FROM (SELECT CAST(power(2, round(log2(
-      |      LEAST(GREATEST(count(*) / $IvfTargetCellPop.0, 16.0), 4096.0)))) AS INT) AS nc
-      |    FROM embeddings)),
-      |e AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v,
-      |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      |  FROM embeddings),
-      |seeds AS (SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM e, geo WHERE vec_id < geo.nc),
-      |a0 AS (
-      |  SELECT s.vec_id, c.cid,
-      |    list_dot_product(s.v, c.cv) / (c.cnrm * s.nrm) AS ccos
-      |  FROM e s, seeds c, geo WHERE s.vec_id < geo.ns),
-      |assign AS (
-      |  SELECT vec_id, cid FROM (
-      |    SELECT vec_id, cid,
-      |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid ASC) AS r
-      |    FROM a0) WHERE r = 1),
-      |grp AS (
-      |  SELECT a.cid, list(s.v ORDER BY s.vec_id) AS vs
-      |  FROM assign a JOIN e s ON s.vec_id = a.vec_id GROUP BY a.cid),
-      |cmean AS (
-      |  SELECT cid,
-      |    [list_reduce(list_transform(vs, x -> x[i]), (acc, y) -> acc + y)
-      |       / len(vs) for i in range(1, 65)]::FLOAT[] AS cfv
-      |  FROM grp),
-      |cent AS (
-      |  SELECT cid, cfv::DOUBLE[] AS cv,
-      |    sqrt(list_dot_product(cfv::DOUBLE[], cfv::DOUBLE[])) AS cnrm
-      |  FROM cmean),
-      |scored AS (
-      |  SELECT e.vec_id, c.cid,
-      |    list_dot_product(e.v, c.cv) / (c.cnrm * e.nrm) AS ccos
-      |  FROM e, cent c),
-      |ranked AS (
-      |  SELECT vec_id, cid,
-      |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid ASC) AS r
-      |  FROM scored),
-      |cells AS (SELECT vec_id, cid AS cell FROM ranked WHERE r = 1),
-      |probes AS (SELECT vec_id AS qid, cid AS probe_cell FROM ranked, geo
-      |           WHERE vec_id < 50 AND r <= geo.np),
-      |cand_ids AS (
-      |  SELECT DISTINCT p.qid, c.vec_id AS nid
-      |  FROM probes p JOIN cells c ON c.cell = p.probe_cell
-      |  WHERE c.vec_id <> p.qid),
-      |cands AS (
-      |  SELECT ci.qid, ci.nid,
-      |    list_dot_product(q.v, n.v) / (q.nrm * n.nrm) AS cos
-      |  FROM cand_ids ci
-      |  JOIN e q ON q.vec_id = ci.qid
-      |  JOIN e n ON n.vec_id = ci.nid)
-      |SELECT qid, nid, CAST(rnk AS INT) AS rnk FROM (
-      |  SELECT qid, nid,
-      |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid ASC) AS rnk
-      |  FROM cands)
-      |WHERE rnk <= 5""".stripMargin
+    ivfCandidateCte("geo.nc", "geo.np", "geo.ns",
+      geoCte = s"""geo AS MATERIALIZED (
+        |  SELECT nc, GREATEST(2, CAST(round(nc * $IvfScanFrac) AS INT)) AS np,
+        |    GREATEST(200, 4 * nc) AS ns
+        |  FROM (SELECT CAST(power(2, round(log2(
+        |      LEAST(GREATEST(count(*) / $IvfTargetCellPop.0, 16.0), 4096.0)))) AS INT) AS nc
+        |    FROM embeddings))""".stripMargin) + ivfCosineRank
 
   /** Corpus-wide semantic near-dup PAIRS — the embedding twin of
     * [[graft.llm.Dedup.lshVerifiedPairs]]: sign-LSH bucket collisions
@@ -1239,11 +1096,9 @@ object Similarity {
         LshCalibration.capFor(n.toDouble / (1L << bitsEff))
       else bucketCap
     // referenced by the bucket explode AND both verify sides
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", normCol)
+    val e = vecs(s, dir)
       .withColumn("sigs", graft.functions.SignLshBuckets(col("embedding"), nTables, bitsEff))
-      .transform(graft.runtime.Ckpt.eager)
+      .transform(Ckpt.eager)
     val buckets = Dedup.capBuckets(
       e.select(col("vec_id"), posexplode(col("sigs")))
         .withColumnRenamed("pos", "table_id")
@@ -1266,34 +1121,21 @@ object Similarity {
     */
   def signLshPairsSqlFor(nTables: Int, bits: Int, minCos: Double,
       vecWhere: String = ""): String =
-    s"""SELECT a_id, b_id FROM (
-       |  WITH e AS (
-       |    SELECT vec_id, embedding::DOUBLE[] AS v,
-       |      sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-       |    FROM embeddings $vecWhere),
-       |  planes AS (
-       |    SELECT j, i,
-       |      (((${Hashing.sqlHash60("j||':'||i")}) % 2000) - 1000)/1000.0 AS w
-       |    FROM range(0, ${nTables * bits}) t1(j), range(0, 64) t2(i)),
-       |  dots AS (
-       |    SELECT e.vec_id, p.j, SUM(e.v[p.i + 1] * p.w) AS d
-       |    FROM e, planes p GROUP BY e.vec_id, p.j),
-       |  buckets AS (
-       |    SELECT vec_id, j // $bits AS table_id,
-       |      SUM(CASE WHEN d >= 0 THEN (1 << (j % $bits)) ELSE 0 END) AS bucket
-       |    FROM dots GROUP BY vec_id, j // $bits),
-       |  cand AS (
-       |    SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-       |    FROM buckets a JOIN buckets b
-       |      ON a.table_id = b.table_id AND a.bucket = b.bucket
-       |        AND a.vec_id < b.vec_id)
-       |  SELECT c.a_id, c.b_id
-       |  FROM cand c
-       |  JOIN e ea ON ea.vec_id = c.a_id
-       |  JOIN e eb ON eb.vec_id = c.b_id
-       |  WHERE list_dot_product(ea.v, eb.v) / (ea.nrm * eb.nrm) >= $minCos)""".stripMargin
+    signLshPairsOver("WITH " + signLshCtes(nTables, Some(bits), from = s" $vecWhere"), minCos)
 
-  val signLshPairsSql: String = signLshPairsSqlFor(defTables, defBits, defCosMin)
+  /** The pair tail of the sign-LSH pair mirrors over their bucket CTEs
+    * `ctes`: distinct a < b bucket collisions, cosine-verified, nested as
+    * one `SELECT a_id, b_id` query.
+    */
+  private def signLshPairsOver(ctes: String, minCos: Double): String =
+    "SELECT a_id, b_id FROM (\n" + indented(
+      s"""$ctes,
+         |cand AS (
+         |  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
+         |  FROM buckets a JOIN buckets b
+         |    ON a.table_id = b.table_id AND a.bucket = b.bucket
+         |      AND a.vec_id < b.vec_id)
+         |${cosineVerifySql(minCos)})""".stripMargin)
 
   /** DuckDB mirror of [[signLshPairs]] under [[AutoBits]]: the bit count
     * is DERIVED in SQL — `nb` computes
@@ -1312,39 +1154,12 @@ object Similarity {
       targetBucket: Int,
       minBits: Int,
       minCos: Double): String =
-    s"""SELECT a_id, b_id FROM (
-       |  WITH nb AS MATERIALIZED (
-       |    SELECT greatest($minBits,
-       |      CAST(round(log2(count(*) / $targetBucket.0)) AS INT)) AS bits
-       |    FROM embeddings),
-       |  e AS (
-       |    SELECT vec_id, embedding::DOUBLE[] AS v,
-       |      sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-       |    FROM embeddings),
-       |  planes AS MATERIALIZED (
-       |    SELECT j, i,
-       |      (((${Hashing.sqlHash60("j||':'||i")}) % 2000) - 1000)/1000.0 AS w
-       |    FROM range(0, ${nTables * 30}) t1(j), range(0, 64) t2(i), nb
-       |    WHERE j < $nTables * nb.bits),
-       |  dots AS (
-       |    SELECT e.vec_id, p.j, SUM(e.v[p.i + 1] * p.w) AS d
-       |    FROM e, planes p GROUP BY e.vec_id, p.j),
-       |  buckets AS (
-       |    SELECT vec_id, table_id,
-       |      SUM(CASE WHEN d >= 0 THEN (1 << bitpos) ELSE 0 END) AS bucket
-       |    FROM (SELECT vec_id, j // nb.bits AS table_id, j % nb.bits AS bitpos, d
-       |          FROM dots, nb)
-       |    GROUP BY vec_id, table_id),
-       |  cand AS (
-       |    SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-       |    FROM buckets a JOIN buckets b
-       |      ON a.table_id = b.table_id AND a.bucket = b.bucket
-       |        AND a.vec_id < b.vec_id)
-       |  SELECT c.a_id, c.b_id
-       |  FROM cand c
-       |  JOIN e ea ON ea.vec_id = c.a_id
-       |  JOIN e eb ON eb.vec_id = c.b_id
-       |  WHERE list_dot_product(ea.v, eb.v) / (ea.nrm * eb.nrm) >= $minCos)""".stripMargin
+    signLshPairsOver(
+      s"""WITH nb AS MATERIALIZED (
+         |  SELECT greatest($minBits,
+         |    CAST(round(log2(count(*) / $targetBucket.0)) AS INT)) AS bits
+         |  FROM embeddings),
+         |${signLshCtes(nTables, None, materialized = true)}""".stripMargin, minCos)
 
   /** The AutoBits gate's target bucket: small enough that the derivation
     * lands on DIFFERENT bit counts across the driver SFs (500 embeddings
@@ -1402,12 +1217,12 @@ object Similarity {
     // pure function of (plane, dim) and materialize identically on every
     // executor — no UDF (the scan stays in whole-stage codegen), no plane
     // broadcast. e is referenced by 3 branches (buckets×2, corpus, qv);
-    // localCheckpoint materializes scan+norm+signature ONCE, not per branch
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", normCol)
+    // the checkpoint materializes scan+norm+signature ONCE, not per branch
+    // — eagerly: lazily, the broadcast (qb, qv) and shuffle (buckets,
+    // corpus) branches raced to compute the same cached partitions
+    val e = vecs(s, dir)
       .withColumn("sigs", graft.functions.SignLshBuckets(col("embedding"), nTables, bits))
-      .transform(graft.runtime.Ckpt.lazyCp)
+      .transform(Ckpt.eager)
     val buckets = e.select(col("vec_id"), col("embedding"), col("nrm"),
       posexplode(col("sigs")))
       .withColumnRenamed("pos", "table_id")
@@ -1423,17 +1238,6 @@ object Similarity {
         col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"))
       .distinct()
-    val corpus = e.select(col("vec_id"), col("embedding"), col("nrm"))
-    val qv = e.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("nrm").as("qn"))
-    val cands = pairIds
-      .join(corpus, "vec_id")
-      .join(broadcast(qv), "qid")
-      .withColumn("cos", dotCol / (col("qn") * col("nrm")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id").asc)
-    cands
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("qid"), col("vec_id").as("nid"), col("rnk"))
+    cosineTop5(pairIds, "vec_id", e)
   }
 }

@@ -84,13 +84,6 @@ object DocStream {
       .withWatermark(tsCol, horizon)
       .dropDuplicatesWithinWatermark("content_hash")
 
-  /** Quality gate on the deduped stream (same score family as
-    * `TextAnalysis.qualityFilter`'s diversity component): drop
-    * repeated-character spam below the Gini floor.
-    */
-  def qualityGated(docs: DataFrame, giniFloor: Double = 0.5): DataFrame =
-    ingested(docs).filter(col("char_gini") >= giniFloor)
-
   /** The curation scrub in-stream — what a production ingest runs FIRST,
     * before any stateful operator: PII redaction (t13's codegen regex
     * chain, `llm.Pii`) and the t05 composite quality filter scored over

@@ -43,6 +43,29 @@ class OracleSqlSpec extends AnyFunSuite {
     }
   }
 
+  test("one copy: the closure and sign-LSH plane CTEs are each written once in src/main") {
+    // every oracle that needs them goes through graft.llm.OracleSql; doc
+    // comments may still name them
+    import scala.jdk.CollectionConverters._
+    val snippets = Seq("reach(a, b) AS (", "planes AS")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"$root not found from ${root.toAbsolutePath}")
+    val stream = java.nio.file.Files.walk(root)
+    val hits = try stream.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if !Seq("//", "/*", "*").exists(line.trim.startsWith) =>
+            snippets.filter(line.contains).map(_ -> s"$p:${i + 1}")
+        }.flatten
+      }.toList
+    finally stream.close()
+    snippets.foreach { s =>
+      val at = hits.collect { case (`s`, where) => where }
+      assert(at.size == 1, s"'$s' is written ${at.size} times:\n${at.mkString("\n")}")
+    }
+  }
+
   test("oracle_sql.json: Verify's JSON parses back to exactly the oracle map") {
     import scala.jdk.CollectionConverters._
     val json = new com.fasterxml.jackson.databind.ObjectMapper()

@@ -20,7 +20,7 @@ NORMALIZE = [
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
-    (re.compile(r"/tmp/graft-([a-z]+)\d+"), r"/tmp/graft-\1N"),
+    (re.compile(r"/tmp/graft-([a-z-]+)\d+"), r"/tmp/graft-\1N"),
     (re.compile(r"\b(graft_[a-z_]+)_[0-9a-f]{16}\b"), r"\1_H"),
 ]
 
