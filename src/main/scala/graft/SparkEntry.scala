@@ -181,11 +181,6 @@ object SparkEntry {
     "t19_lang_guess"     -> (graft.llm.TextAnalysis.langGuessPlanted _),
     // t20/t21: BPE vocabulary induction — learning over the word-frequency
     // table (never the corpus), merge-by-merge oracle replay.
-    // ONE-SHOT CONTRACT (t21, t25): these frames ride the learn loop's
-    // retained checkpoint, released after the FIRST action that touches
-    // them (Bpe.learnRetained) — materialize once (as the harness does);
-    // a caller needing re-materialization should collect or write the
-    // first pass
     "t20_bpe_merges"     -> (graft.llm.Bpe.merges _),
     "t21_bpe_vocab"      -> (graft.llm.Bpe.vocab _),
     // t22: learned quality — integer-count NB-style scorer distilled from

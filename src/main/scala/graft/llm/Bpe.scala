@@ -21,25 +21,12 @@ import graft.Tables
   * state after merge k), so one driver-side row per round is the
   * irreducible coordination cost, not a scale smell.
   *
-  * Per-round pair counts (round 15, reversing round 14's default): a
-  * MEASURED HYBRID. Round 14 shipped a delta-maintained fold
-  * (`pairs − pairAgg(hit) + pairAgg(rewritten hit)`) on the argument
-  * that affected words shrink as learning proceeds — but the ×500
-  * measurement (judge-run, reproduced in SCALE_RESULTS_r15.jsonl
-  * `bpelearn` rows) shows the delta arm LOSES at the verify-scale
-  * operating point: at a 78k-word table the maintained pair table is
-  * the same order as the full re-aggregation's input, so the per-round
-  * fold + extra jobs cost more than the explode they avoid (0.376 vs
-  * 0.285 s/round). At the regime the asymptotic argument actually
-  * describes (≥10⁶-word tables, hundreds of merges — the `bperegime`
-  * rows: 923k words, 256 merges) the delta arm WINS 2.5× (0.556 vs
-  * 1.407 s/round): there the per-round symbol explode dominates.
-  * [[learnLoopAuto]] therefore picks the arm by the measured crossover
-  * ([[DeltaArmWords]]): a verify-scale learn runs full re-agg, a
-  * web-scale tokenizer build gets the delta loop, automatically. Both
-  * arms produce byte-identical merges (pair counts are additive per
-  * word; the fold is exact integer arithmetic) — gated by the t20–t26
-  * oracles and the BpeSpec A/B pin.
+  * Per-round pair counts: every round re-aggregates the adjacent pairs of
+  * the whole (checkpointed, vocab-sized) word table. On real text that
+  * is the measured winner up to 443k distinct words at 1,024 merges; a
+  * delta-maintained pair table first won at 1.5M words (1.16×,
+  * SCALE_RESULTS_r15–r17.jsonl), far above the word tables the shipped
+  * [[Merges]] learn over here, so only the full loop is kept.
   *
   * Deterministic spec (both engines implement THIS, independently):
   *   - tokens = whitespace split ([[Hashing.tokens]]), empties dropped;
@@ -71,26 +58,13 @@ import graft.Tables
   *     simultaneous merge.
   *
   * Memory discipline: the loop's word table lives in ONE rotated
-  * localCheckpoint slot ([[CpSlot]] — the checkpointed RDD is captured
-  * from the checkpoint's own LogicalRDD, never set-diffed out of the
-  * global persistent-RDD registry, so a concurrent job's cached blocks
-  * can't be captured and later killed: the r13 ADVICE race). Queries
-  * that never materialize the final segmentation ([[merges]],
-  * [[docTokens]], [[heldoutTokens]], [[mergeList]]) release the slot
-  * the moment learning returns — zero persisted-RDD residue. Queries
-  * that DO consume the final table ([[vocab]], [[tokenIds]]) would
-  * otherwise re-pay the corpus-scale `wordSeqs` pass to rebuild it (the
-  * r14 regression: 1.55–1.88× on t20–t24); they instead keep the loop's
-  * LAST checkpoint (the final table is that checkpoint plus one
-  * pending-merge projection — no extra corpus pass) and hand its
-  * release to [[releaseOnConsume]]: a one-shot QueryExecutionListener
-  * that unpersists the block the first time an action whose plan
-  * contains it completes. The retained plan is SINGLE-consumption by
-  * design (a localCheckpoint cannot recompute once released — a second
-  * materialization fails loudly rather than silently re-paying);
-  * every caller constructs a fresh learn per query, so the one action
-  * Verify/Bench/specs run is exactly the consumption the hook waits
-  * for.
+  * localCheckpoint slot ([[CpSlot]]), released before the learn returns —
+  * on success or failure — so every query leaves zero persisted RDDs and
+  * every returned frame can be materialized any number of times. The
+  * final segmentation's token histogram ([[vocab]], the [[tokenIds]]
+  * dictionary) is collected from the loop's last checkpoint before that
+  * release and comes back as a driver-built frame, like the merge table:
+  * it is the model artifact, bounded by base chars + merges.
   *
   * The DuckDB oracle replays the identical algorithm as a chain of
   * MATERIALIZED CTEs, one (pairs → best → rewritten-words) stage per
@@ -119,39 +93,37 @@ object Bpe {
   private def sqlScrub(e: String): String =
     s"replace(replace($e, '~', ''), '|', '')"
 
+  /** A word's marker-encoded symbol sequence `~s1~…~sn~` after replaying
+    * `learned` in order (none: the initial character-level encoding).
+    * `$1`-backreference inserts a trailing `~` per char. (?s) DOTALL is
+    * load-bearing for cross-engine parity: without it, Java's '.' skips
+    * \r, U+0085, U+2028, U+2029 while RE2's skips only \n — a token
+    * containing \r would be marker-encoded differently by the two
+    * engines. With DOTALL both mark EVERY codepoint.
+    */
+  private def segment(word: Column, learned: Seq[Learned] = Nil): Column =
+    replayAll(concat(lit("~"), regexp_replace(scrub(word), "(?s)(.)", "$1~")),
+      learned.map(m => (m.a, m.b)))
+
   /** `(word, cnt, seq)` — the word-frequency table with the initial
     * character-level symbol encoding. The ONE corpus-scale pass.
-    * (private[graft]: the arm-agreement spec feeds it to both forced
-    * arms, [[learnFullArm]] and [[learnDeltaArm]].)
     */
-  private[graft] def wordSeqs(docs: DataFrame): DataFrame =
-    encodeSeqs(
-      docs
-        .select(explode(Hashing.tokens(col("text"))).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("cnt")))
-
-  /** Marker-encode a (word, cnt) table into (word, cnt, seq). */
-  private def encodeSeqs(words: DataFrame): DataFrame =
-    words
-      // '~c1~c2~…~cn~': $1-backreference inserts a trailing ~ per char.
-      // (?s) DOTALL is load-bearing for cross-engine parity: without it,
-      // Java's '.' skips \r, U+0085, U+2028, U+2029 while RE2's skips only
-      // \n — a token containing \r would be marker-encoded differently
-      // by the two engines. With DOTALL both mark EVERY codepoint.
-      .select(col("word"), col("cnt"),
-        concat(lit("~"), regexp_replace(scrub(col("word")), "(?s)(.)", "$1~")).as("seq"))
+  private def wordSeqs(docs: DataFrame): DataFrame =
+    docs
+      .select(explode(Hashing.tokens(col("text"))).as("word"))
+      .groupBy("word").agg(count(lit(1)).as("cnt"))
+      .select(col("word"), col("cnt"), segment(col("word")).as("seq"))
 
   private def symsOf(seq: Column): Column =
     filter(split(seq, "~"), x => x =!= "")
 
-  /** Weighted adjacent-pair aggregation over a (cnt, seq) table — the one
-    * formula both the initial build and the per-round delta use, so they
-    * cannot drift. `greatest(·, 0)` guards the empty symbol list (a word
-    * of only reserved chars scrubs to zero symbols; `slice` throws on a
-    * negative length where the oracle's `range(1, greatest(len(y),1))`
-    * yields empty — the r13 ADVICE crash-divergence).
+  /** Weighted adjacent-pair aggregation over a (cnt, seq) table.
+    * `greatest(·, 0)` guards the empty symbol list (a word of only
+    * reserved chars scrubs to zero symbols; `slice` throws on a negative
+    * length where the oracle's `range(1, greatest(len(y),1))` yields
+    * empty — the r13 ADVICE crash-divergence).
     */
-  private[graft] def pairAgg(df: DataFrame): DataFrame = {
+  private def pairAgg(df: DataFrame): DataFrame = {
     val syms = symsOf(col("seq"))
     val n = greatest(size(syms) - 1, lit(0))
     df.select(col("cnt"), explode(arrays_zip(
@@ -163,7 +135,7 @@ object Bpe {
   }
 
   /** One merge application: [[Passes]] chained non-overlapping replaces. */
-  private[graft] def applyMerge(sq: Column, a: String, b: String): Column = {
+  private def applyMerge(sq: Column, a: String, b: String): Column = {
     var s = sq
     for (_ <- 1 to Passes) s = replace(s, lit(s"~$a~$b~"), lit(s"~$a$b~"))
     s
@@ -201,10 +173,6 @@ object Bpe {
       cur.foreach(releaseCp)
       cur = None
     }
-    /** Transfer ownership of the current generation to the caller
-      * (who becomes responsible for its release) without unpersisting.
-      */
-    def handOff(): Unit = { cur = None }
   }
 
   /** Unpersist a localCheckpoint's block, warning loudly if the plan is
@@ -222,373 +190,60 @@ object Bpe {
             s"(zero-residue discipline broken; BpeSpec's residue gate should be failing)")
     }
 
-  /** Release a retained checkpoint the first time a query that reads it
-    * completes (success OR failure): a one-shot QueryExecutionListener
-    * keyed on the checkpoint's RDD id. This is what lets [[vocab]] /
-    * [[tokenIds]] consume the learn loop's final table directly (block-
-    * manager reads) instead of re-paying the corpus-scale `wordSeqs`
-    * pass, while still leaving zero persisted-RDD residue once the
-    * query has run — the release fires on the harness's own action.
-    * Listener dispatch is async (the SQL listener bus), so residue
-    * drains shortly after the action returns, not synchronously —
-    * BpeSpec polls for the drain.
-    */
-  /** The retained checkpoints whose consume event has not fired yet, per
-    * session — the fallback release path (r15 ADVICE): a caller that
-    * never materializes the retained frame (watchdog expiry, schema-only
-    * inspection) would otherwise leak both the checkpoint block and a
-    * session-wide listener that scans every later query's analyzed plan.
-    * The next [[learnRetained]] call on the same session drains a
-    * previous entry ONLY when it is provably abandoned (weak-ref gate;
-    * see [[drainPendingRetained]]) and refuses loudly otherwise — at
-    * most ONE outstanding (listener, block) pair can exist per session,
-    * enforced instead of assumed (r16 ADVICE).
-    */
-  private val pendingRetained =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession,
-      (org.apache.spark.sql.util.QueryExecutionListener, org.apache.spark.rdd.RDD[_],
-        java.lang.ref.WeakReference[DataFrame], Long)]()
-
-  /** EXPLICITLY abandon the session's outstanding retained segmentation
-    * table (r17 ADVICE #3): unregister its consume listener and release
-    * its checkpoint block without requiring the frame to be consumed OR
-    * garbage-collected. This is the release path for callers that hold
-    * a reference to a retained frame they will never materialize —
-    * under `-XX:+DisableExplicitGC` (a common Spark production
-    * setting) [[drainPendingRetained]]'s weak-ref gate cannot clear, so
-    * WITHOUT this call an abandoned-but-reachable frame turns the next
-    * [[learnRetained]] into a hard [[IllegalStateException]]. No-op
-    * when nothing is outstanding. Safe only when the caller guarantees
-    * the frame will not be materialized afterwards (its checkpoint
-    * block is gone; an action on it would fail).
-    */
-  def releaseRetained(s: SparkSession): Unit = {
-    val prev = pendingRetained.get(s)
-    if (prev != null && pendingRetained.remove(s, prev)) {
-      try s.listenerManager.unregister(prev._1) catch { case _: Exception => () }
-      prev._2.unpersist(false)
-    }
-  }
-
-  /** Drain the previous retained entry ONLY when it is provably safe
-    * (r16 ADVICE): the old unconditional unpersist truncated a LIVE
-    * caller's checkpoint lineage — if that caller materialized its
-    * frame afterwards, its action failed hard (missing checkpoint
-    * block) instead of the prior benign leak. The ladder:
-    *   1. wait briefly for an in-flight consume event (the SQL listener
-    *      bus is async — the common Verify/Bench case is a consumed
-    *      frame whose event hasn't dispatched yet);
-    *   2. weak-ref gate: if no strong reference to the retained
-    *      DataFrame survives (the abandoned-caller case — watchdog
-    *      expiry, schema-only inspection), nobody can materialize it,
-    *      so the drain is safe. CAVEAT (r17 ADVICE #3): the gate
-    *      nudges the collector with `System.gc()`, which
-    *      `-XX:+DisableExplicitGC` turns into a no-op — under that
-    *      flag an abandoned-but-uncollected frame falls through to
-    *      step 3's refusal instead of draining. Callers that abandon a
-    *      retained frame they still reference must release it
-    *      explicitly via [[releaseRetained]]; the refusal message
-    *      names that path.
-    *   3. otherwise the frame is still REACHABLE and unconsumed —
-    *      refuse loudly. One retained frame per session is the
-    *      contract; enforcing it beats silently breaking the first
-    *      caller.
-    * The step-1 wait is skipped when the entry is OLD (≥ 30 s): an
-    * in-flight consume event dispatches within listener-bus latency
-    * (milliseconds), so waiting 2 s on a long-abandoned entry just
-    * taxes every recovery path (r17 ADVICE #3).
-    */
-  private[llm] def drainPendingRetained(s: SparkSession): Unit = {
-    if (!pendingRetained.containsKey(s)) return
-    // 1. in-flight consume event — a YOUNG entry gets the full wait; an
-    // OLD one still gets a SHORT wait (r18 ADVICE #3: a frame
-    // materialized long after learnRetained can have its consume event
-    // still on the async listener bus — the zero-wait fast path refused
-    // a legitimately consumed frame when the caller still held the
-    // reference, so the weak-ref gate could not clear either)
-    val born = Option(pendingRetained.get(s)).map(_._4).getOrElse(0L)
-    val young = System.nanoTime() - born < 30L * 1000 * 1000 * 1000
-    val deadline = System.nanoTime() + (if (young) 2000L else 200L) * 1000 * 1000
-    while (pendingRetained.containsKey(s) && System.nanoTime() < deadline &&
-        { Thread.sleep(25); pendingRetained.containsKey(s) }) ()
-    val prev = pendingRetained.get(s)
-    if (prev == null) return
-    // 2. abandoned? (weak ref cleared once the caller dropped the frame)
-    var tries = 0
-    while (prev._3.get() != null && tries < 8) { System.gc(); Thread.sleep(50); tries += 1 }
-    if (prev._3.get() == null) {
-      if (pendingRetained.remove(s, prev)) {
-        try s.listenerManager.unregister(prev._1) catch { case _: Exception => () }
-        prev._2.unpersist(false)
-      }
-    } else if (!pendingRetained.containsKey(s) || (pendingRetained.get(s) ne prev)) {
-      // the consume event landed DURING the weak-ref gate (the ~450 ms
-      // gc loop): the entry is gone (or replaced) — nothing to refuse
-      ()
-    } else {
-      // 3. live and unconsumed — a second learnRetained here would have
-      // to choose between leaking and corrupting the first caller
-      throw new IllegalStateException(
-        "learnRetained: the previous retained segmentation table on this session " +
-          "is still reachable and has not been consumed — materialize it, drop " +
-          "all references to it, or release it explicitly with " +
-          "Bpe.releaseRetained(session) before calling learnRetained again " +
-          "(under -XX:+DisableExplicitGC the reference-drop path cannot be " +
-          "detected; use the explicit release); retained tables are " +
-          "single-outstanding per session")
-    }
-  }
-
-  private def releaseOnConsume(s: SparkSession, cp: DataFrame): Unit =
-    cp.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        val rddId = l.rdd.id
-        val lm = s.listenerManager
-        val listener: org.apache.spark.sql.util.QueryExecutionListener =
-          new org.apache.spark.sql.util.QueryExecutionListener {
-            private def maybe(qe: org.apache.spark.sql.execution.QueryExecution): Unit = {
-              val hit = qe.analyzed.exists {
-                case x: org.apache.spark.sql.execution.LogicalRDD => x.rdd.id == rddId
-                case _ => false
-              }
-              if (hit) {
-                l.rdd.unpersist(false)
-                lm.unregister(this)
-                val cur = pendingRetained.get(s)
-                if (cur != null && (cur._1 eq this)) pendingRetained.remove(s, cur)
-              }
-            }
-            override def onSuccess(funcName: String,
-                qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-              maybe(qe)
-            override def onFailure(funcName: String,
-                qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit =
-              maybe(qe)
-          }
-        lm.register(listener)
-        pendingRetained.put(s,
-          (listener, l.rdd, new java.lang.ref.WeakReference(cp), System.nanoTime()))
-      case other =>
-        // no checkpoint to manage — nothing retained, nothing leaks
-        org.apache.logging.log4j.LogManager.getLogger(Bpe.getClass).warn(
-          s"releaseOnConsume: expected a LogicalRDD, got ${other.getClass.getSimpleName}")
-    }
-
   private[llm] final case class Learned(round: Int, a: String, b: String, cnt: Long)
 
-  /** Loop state handed from [[learnLoopFull]] to the two release
-    * postures: the learned merges, the slot holding the LAST rotated
-    * checkpoint, that checkpoint, and the final round's merge (recorded
-    * but deliberately not applied inside the loop — the final table is
-    * checkpoint + one projection, never a rewrite nobody reads).
+  /** The merge loop: one symbol-explode + (a,b) aggregation over the
+    * checkpointed word table and one TakeOrdered(1) argmax per round. The
+    * corpus is read once, at the first checkpoint. `use` sees the learned
+    * merges and the final segmentation — the last checkpoint with the
+    * last round's merge applied as a projection, never a rewrite nobody
+    * reads — while the slot is live; the slot is released when `use`
+    * returns or throws.
     */
-  private final case class LoopState(
-      merges: Seq[Learned],
-      slot: CpSlot,
-      seqDf: DataFrame,
-      pending: Option[(String, String)])
-
-  /** The delta arm engages when the word table holds at least this many
-    * distinct words — the MEASURED hybrid gate, corrected TWICE by
-    * real-corpus measurement (SCALE_RESULTS_r15/r16.jsonl):
-    *   - synthetic zipf tables: delta wins from ~99k words up (2× at
-    *     99k, 2.3× at 290k, 2.5× at 923k/256 merges, r15 `bperegime`);
-    *   - REAL-structured tables: full re-aggregation wins at 78k words
-    *     (0.285 vs 0.376 s/round, r15 `bpelearn`) AND STILL at 443k
-    *     words / 1024 merges (0.854 vs 0.914 s/round, r16 `bpe_real` on
-    *     the vocabulary-expanded ×500 corpus) — r15's 300k gate, set
-    *     from the synthetic bracketing, was falsified by the first
-    *     real point above it.
-    * The crossover is structure-dependent (random-ish text spreads the
-    * argmax pair's occurrences thin, natural language concentrates
-    * them) and on real corpora sits ABOVE 443k; the gap is narrowing
-    * (32% at 78k/12 merges → 7% at 443k/1024 merges), so 1M is the
-    * conservative reading: below it every measured REAL point favors
-    * full; above it only the synthetic regime is measured, and it
-    * favors delta 2.5×. Both arms are byte-identical in output (BpeSpec
-    * A/B pin), so the gate is a pure cost decision; the count that
-    * decides it is one scan of the already-checkpointed table.
-    */
-  val DeltaArmWords: Long = 1000000L
-
-  /** The merge loop at full pair re-aggregation: one symbol-explode +
-    * (a,b) aggregation over the vocab-sized checkpointed table and one
-    * TakeOrdered(1) argmax per round (the measured winner below
-    * [[DeltaArmWords]] — see the class doc). `seqDf0` is the FIRST
-    * generation, already rotated into `seqSlot` by the caller (the
-    * corpus is read exactly once, at that checkpoint).
-    */
-  private def learnLoopFull(seqSlot: CpSlot, seqDf0: DataFrame): LoopState = {
-    var seqDf = seqDf0
-    val merges = scala.collection.mutable.ArrayBuffer.empty[Learned]
-    var pending: Option[(String, String)] = None
-    var k = 1
-    var exhausted = false
-    while (k <= Merges && !exhausted) {
-      val best = pairAgg(seqDf)
-        .orderBy(col("pc").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val (a, b, c) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        require(!a.contains("~") && !b.contains("~") && !a.contains("|") && !b.contains("|"),
-          s"reserved char leaked into a symbol: '$a','$b'")
-        merges += Learned(k, a, b, c)
-        if (k < Merges) {
-          val pat = s"~$a~$b~"
-          seqDf = seqSlot.rotate(seqDf.select(col("word"), col("cnt"),
-            when(col("seq").contains(pat), applyMerge(col("seq"), a, b))
-              .otherwise(col("seq")).as("seq")))
-        } else pending = Some((a, b))
-      }
-      k += 1
-    }
-    LoopState(merges.toSeq, seqSlot, seqDf, pending)
-  }
-
-  /** Rotate the word table's first generation and pick the learn arm by
-    * the MEASURED crossover ([[DeltaArmWords]]): full re-aggregation
-    * below it, delta maintenance above. The deciding count scans the
-    * fresh checkpoint (block-manager read, vocab-sized).
-    */
-  private def learnLoopAuto(seqs0: DataFrame, deltaArmWords: Long): LoopState = {
-    val seqSlot = new CpSlot
-    val seqDf0 = seqSlot.rotate(seqs0)
-    if (seqDf0.count() >= deltaArmWords)
-      learnLoopDelta(seqSlot, seqDf0)
-    else
-      learnLoopFull(seqSlot, seqDf0)
-  }
-
-  /** The merge loop, zero-residue posture: releases the word-table
-    * checkpoint before returning. The returned final-segmentation frame
-    * is a CHECKPOINT-FREE replay plan (the merge list over
-    * [[wordSeqs]]) — callers that never materialize it ([[merges]],
-    * [[docTokens]], [[heldoutTokens]], [[mergeList]]) pay nothing for
-    * it; callers that DO consume it belong on [[learnRetained]].
-    */
-  private[graft] def learnDf(s: SparkSession, docs: DataFrame,
-      deltaArmWords: Long = DeltaArmWords): (Seq[Learned], DataFrame) = {
-    val st = learnLoopAuto(wordSeqs(docs), deltaArmWords)
-    st.slot.release()
-    val learnedPairs = st.merges.map(m => (m.a, m.b))
-    (st.merges,
-      wordSeqs(docs).select(col("word"), col("cnt"),
-        replayAll(col("seq"), learnedPairs).as("seq")))
-  }
-
-  /** The merge loop, retained-final-table posture: the final
-    * segmentation (the pending merge applied over the loop's last
-    * checkpoint) is rotated into ONE FRESH vocab-sized checkpoint —
-    * block-manager reads for the consumer, NO second corpus pass — and
-    * its release is handed to [[releaseOnConsume]] (fires when the
-    * consuming query's action completes). The extra rotation is
-    * correctness-load-bearing, not a flourish: the loop's final argmax
-    * collect READS the last loop checkpoint, and its async
-    * QueryExecutionListener event can arrive after the release hook
-    * registers — matching the rdd id and unpersisting the block before
-    * the consumer runs (measured: flaky CHECKPOINT_RDD_BLOCK_ID_NOT_
-    * FOUND in ~half of bench runs). A freshly-rotated checkpoint's rdd
-    * id is born after every loop action, so no in-flight event can
-    * reference it; the first event that does is the consumer's.
-    * Single-consumption: see the class doc.
-    */
-  private[graft] def learnRetained(s: SparkSession, docs: DataFrame,
-      deltaArmWords: Long = DeltaArmWords): (Seq[Learned], DataFrame) = {
-    // fallback release of a PREVIOUS retained table nobody consumed —
-    // see [[pendingRetained]]
-    drainPendingRetained(s)
-    val st = learnLoopAuto(wordSeqs(docs), deltaArmWords)
-    val fin0 = st.pending match {
-      case Some((a, b)) =>
-        st.seqDf.select(col("word"), col("cnt"), applyMerge(col("seq"), a, b).as("seq"))
-      case None => st.seqDf
-    }
-    val finCp = st.slot.rotate(fin0)
-    st.slot.handOff()
-    releaseOnConsume(s, finCp)
-    (st.merges, finCp)
-  }
-
-  /** Full-re-agg arm over a prebuilt (word, cnt, seq) table, merges
-    * only, forcing the arm regardless of [[DeltaArmWords]] — the
-    * `bpelearn:full` / `bperegime:full` arm of the crossover measurement
-    * (SCALING.md §3g, SCALE_RESULTS_r15.jsonl).
-    */
-  private[graft] def learnFullArm(seqs0: DataFrame): Seq[Learned] = {
+  private def learnThen[A](docs: DataFrame)(use: (Seq[Learned], DataFrame) => A): A = {
     val slot = new CpSlot
-    val st = learnLoopFull(slot, slot.rotate(seqs0))
-    st.slot.release()
-    st.merges
-  }
-
-  /** Delta arm over a prebuilt table, merges only, forcing the arm — the
-    * `bpelearn:inc` / `bperegime:inc` arm of the same measurement.
-    */
-  private[graft] def learnDeltaArm(seqs0: DataFrame): Seq[Learned] = {
-    val slot = new CpSlot
-    val st = learnLoopDelta(slot, slot.rotate(seqs0))
-    st.slot.release()
-    st.merges
-  }
-
-  /** The DELTA-maintained merge loop — the arm [[learnLoopAuto]] picks
-    * ABOVE the measured crossover (symbol mass ≫ distinct pairs:
-    * ≥10⁶-word tables, hundreds of merges — 2.5× faster than full
-    * re-agg at the `bperegime` point; see [[DeltaArmWords]]). Merging
-    * (a,b) changes the adjacent-pair multiset only for words containing
-    * `~a~b~`, so each round folds `pairAgg(hit rows at −cnt ∪ rewritten
-    * hit rows at +cnt)` — ONE delta aggregation (r15: the two branches
-    * of r14's fold fused) — into the maintained pair table, then
-    * re-aggregates that narrow (a, b, pc) table. The argmax reads the
-    * maintained checkpoint. Output byte-identical to the full arm by
-    * pair-count additivity (BpeSpec A/B pin).
-    */
-  private def learnLoopDelta(seqSlot: CpSlot, seqDf0: DataFrame): LoopState = {
-    val pairSlot = new CpSlot
-    var seqDf = seqDf0
-    // the ONE full pair aggregation; every later round folds deltas
-    var pairs = pairSlot.rotate(pairAgg(seqDf))
-    val merges = scala.collection.mutable.ArrayBuffer.empty[Learned]
-    var pending: Option[(String, String)] = None
-    var k = 1
-    var exhausted = false
-    while (k <= Merges && !exhausted) {
-      val best = pairs
-        .orderBy(col("pc").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val (a, b, c) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        require(!a.contains("~") && !b.contains("~") && !a.contains("|") && !b.contains("|"),
-          s"reserved char leaked into a symbol: '$a','$b'")
-        merges += Learned(k, a, b, c)
-        if (k < Merges) {
-          // hit reads the CHECKPOINTED seqDf (block-manager scans); the
-          // −cnt/+cnt union runs through ONE pairAgg shuffle
-          val pat = s"~$a~$b~"
-          val hit = seqDf.where(col("seq").contains(pat))
-          val delta = pairAgg(
-            hit.select((-col("cnt")).as("cnt"), col("seq"))
-              .unionByName(hit.select(col("cnt"), applyMerge(col("seq"), a, b).as("seq"))))
-            .where(col("pc") =!= 0)
-          pairs = pairSlot.rotate(
-            pairs.unionByName(delta)
-              .groupBy("a", "b").agg(sum("pc").as("pc"))
-              .where(col("pc") > 0))
-          seqDf = seqSlot.rotate(seqDf.select(col("word"), col("cnt"),
-            when(col("seq").contains(pat), applyMerge(col("seq"), a, b))
-              .otherwise(col("seq")).as("seq")))
-        } else pending = Some((a, b))
+    try {
+      var seqDf = slot.rotate(wordSeqs(docs))
+      val merges = scala.collection.mutable.ArrayBuffer.empty[Learned]
+      var k = 1
+      var exhausted = false
+      while (k <= Merges && !exhausted) {
+        val best = pairAgg(seqDf)
+          .orderBy(col("pc").desc, col("a").asc, col("b").asc)
+          .limit(1).collect()
+        if (best.isEmpty) exhausted = true
+        else {
+          val (a, b, c) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+          require(!a.contains("~") && !b.contains("~") && !a.contains("|") && !b.contains("|"),
+            s"reserved char leaked into a symbol: '$a','$b'")
+          merges += Learned(k, a, b, c)
+          val merged = seqDf.select(col("word"), col("cnt"),
+            when(col("seq").contains(s"~$a~$b~"), applyMerge(col("seq"), a, b))
+              .otherwise(col("seq")).as("seq"))
+          seqDf = if (k < Merges) slot.rotate(merged) else merged
+        }
+        k += 1
       }
-      k += 1
-    }
-    pairSlot.release()
-    LoopState(merges.toSeq, seqSlot, seqDf, pending)
+      use(merges.toSeq, seqDf)
+    } finally slot.release()
   }
 
-  private def learn(s: SparkSession, dir: String): (Seq[Learned], DataFrame) =
-    learnDf(s, Tables.documents(s, dir))
+  /** The learned merges over any (text) DataFrame. */
+  private[llm] def learnDf(docs: DataFrame): Seq[Learned] =
+    learnThen(docs)((merges, _) => merges)
+
+  /** The learned merges and the final segmentation's `(token, freq)`
+    * histogram, collected (base chars + merges rows) and returned as a
+    * driver-built frame.
+    */
+  private def learnVocab(docs: DataFrame): (Seq[Learned], DataFrame) =
+    learnThen(docs) { (merges, fin) =>
+      val hist = fin
+        .select(col("cnt"), explode(symsOf(col("seq"))).as("token"))
+        .groupBy("token").agg(sum("cnt").as("freq"))
+      (merges, docs.sparkSession.createDataFrame(
+        java.util.Arrays.asList(hist.collect(): _*), hist.schema))
+    }
 
   /** t20: the learned merge table — `(merge_round, sym_a, sym_b, merged,
     * pair_freq)`, one row per round in learning order. The output is
@@ -597,7 +252,7 @@ object Bpe {
     */
   def merges(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    learn(s, dir)._1
+    learnDf(Tables.documents(s, dir))
       .map(m => (m.round, m.a, m.b, m.a + m.b, m.cnt))
       .toDF("merge_round", "sym_a", "sym_b", "merged", "pair_freq")
   }
@@ -605,12 +260,8 @@ object Bpe {
   /** t21: the corpus token histogram under the LEARNED segmentation —
     * the apply path (what a token-budget or packing decision consumes).
     */
-  def vocab(s: SparkSession, dir: String): DataFrame = {
-    val (_, finalSeqs) = learnRetained(s, Tables.documents(s, dir))
-    finalSeqs
-      .select(col("cnt"), explode(symsOf(col("seq"))).as("token"))
-      .groupBy("token").agg(sum("cnt").as("freq"))
-  }
+  def vocab(s: SparkSession, dir: String): DataFrame =
+    learnVocab(Tables.documents(s, dir))._2
 
   /** t23: per-document token counts under the LEARNED vocabulary — the
     * apply surface a token-budget or packing decision (t15) actually
@@ -627,21 +278,18 @@ object Bpe {
     * dominant cost at 100 TB (measured as ~+0.8 s at sf0.1, r14).
     */
   def docTokens(s: SparkSession, dir: String): DataFrame =
-    docTokensDf(s, Tables.documents(s, dir))
+    docTokensDf(Tables.documents(s, dir))
 
   /** [[docTokens]] over any (doc_id, text) DataFrame — exposed for the
     * reserved-char parity spec (two evaluation strategies, one answer,
     * on ADVERSARIAL input).
     */
-  private[llm] def docTokensDf(s: SparkSession, docs: DataFrame): DataFrame = {
-    val (learned, _) = learnDf(s, docs)
+  private[llm] def docTokensDf(docs: DataFrame): DataFrame = {
+    val learned = learnDf(docs)
     val tok = docs
       .select(col("doc_id"), explode(Hashing.tokens(col("text"))).as("word"))
-    val seq = replayAll(
-      concat(lit("~"), regexp_replace(scrub(col("word")), "(?s)(.)", "$1~")),
-      learned.map(m => (m.a, m.b)))
     val counts = tok.select(col("word")).distinct()
-      .select(col("word"), size(symsOf(seq)).as("n_syms"))
+      .select(col("word"), size(symsOf(segment(col("word"), learned))).as("n_syms"))
     tok
       .join(counts, Seq("word"))
       .groupBy("doc_id")
@@ -668,15 +316,11 @@ object Bpe {
     * exactly (merging only ever concatenates).
     */
   def tokenIds(s: SparkSession, dir: String): DataFrame = {
-    // the id dictionary needs per-word FREQUENCIES, so it reads the
-    // loop's RETAINED final word table (block-manager scan — at 100 TB
-    // a deployment persists this as an artifact, the d40 posture); the
-    // per-word symbol explode takes the cheaper t24 shape — replay over
-    // the distinct words of the corpus explode the join consumes
-    val (learned, finalSeqs) = learnRetained(s, Tables.documents(s, dir))
-    val vocab = finalSeqs
-      .select(col("cnt"), explode(symsOf(col("seq"))).as("token"))
-      .groupBy("token").agg(sum(col("cnt")).as("freq"))
+    // the id dictionary ranks the collected histogram; the per-word
+    // symbol explode takes the cheaper t24 shape — replay over the
+    // distinct words of the corpus explode the join consumes
+    val (learned, hist) = learnVocab(Tables.documents(s, dir))
+    val vocab = hist
       .withColumn("token_id", row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(col("freq").desc, col("token").asc)).cast("int"))
@@ -685,11 +329,8 @@ object Bpe {
       .select(col("doc_id"), posexplode(Hashing.tokens(col("text"))))
       .select(col("doc_id"), (col("pos") + 1).cast("int").as("wpos"),
         col("col").as("word"))
-    val seq = replayAll(
-      concat(lit("~"), regexp_replace(scrub(col("word")), "(?s)(.)", "$1~")),
-      learned.map(m => (m.a, m.b)))
     val wordSyms = tok.select(col("word")).distinct()
-      .select(col("word"), posexplode(symsOf(seq)))
+      .select(col("word"), posexplode(symsOf(segment(col("word"), learned))))
       .select(col("word"), (col("pos") + 1).cast("int").as("spos"),
         col("col").as("token"))
     tok
@@ -728,7 +369,7 @@ object Bpe {
     * [[graft.streaming.DocStream.bpeSegmented]]).
     */
   def mergeList(s: SparkSession, dir: String): Seq[(String, String)] =
-    learn(s, dir)._1.map(m => (m.a, m.b))
+    learnDf(Tables.documents(s, dir)).map(m => (m.a, m.b))
 
   /** Per-row token count under a learned merge list, as ONE codegen
     * expression chain over the WHOLE text — no explode, no join, no
@@ -764,14 +405,11 @@ object Bpe {
     */
   def heldoutTokens(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val (learned, _) = learnDf(s, docs.where(col("doc_id") % 5 < 4))
+    val learned = learnDf(docs.where(col("doc_id") % 5 < 4))
     val testTok = docs.where(col("doc_id") % 5 >= 4)
       .select(col("doc_id"), explode(Hashing.tokens(col("text"))).as("word"))
-    val seq: Column = replayAll(
-      concat(lit("~"), regexp_replace(scrub(col("word")), "(?s)(.)", "$1~")),
-      learned.map(m => (m.a, m.b)))
     val segmented = testTok.select(col("word")).distinct()
-      .select(col("word"), size(symsOf(seq)).as("n_syms"))
+      .select(col("word"), size(symsOf(segment(col("word"), learned))).as("n_syms"))
     testTok.join(segmented, Seq("word"))
       .groupBy("doc_id")
       .agg(sum(col("n_syms")).as("n_bpe_tokens"))
@@ -787,7 +425,7 @@ object Bpe {
     val stages = new StringBuilder
     stages ++= s"WITH w0 AS MATERIALIZED (SELECT w AS word, COUNT(*) AS cnt FROM (SELECT unnest($toks) AS w FROM documents$docsWhere) GROUP BY w), "
     // \1-backreference: DuckDB's regexp_replace spelling of Spark's $1;
-    // 's' flag = the DOTALL of the Spark side's (?s) (see wordSeqs)
+    // 's' flag = the DOTALL of the Spark side's (?s) (see segment)
     stages ++= raw"s0 AS MATERIALIZED (SELECT word, cnt, '~' || regexp_replace(${sqlScrub("word")}, '(.)', '\1~', 'gs') AS seq FROM w0)"
     for (k <- 1 to n) {
       val prev = s"s${k - 1}"

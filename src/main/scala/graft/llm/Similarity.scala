@@ -265,14 +265,10 @@ object Similarity {
       s: SparkSession,
       dir: String,
       pairs: DataFrame,
-      minCos: Double = defCosMin,
-      materializePairs: Boolean = true): DataFrame = {
-    // pairs feeds the id prune AND the final join — materialize by default
-    // so an expensive candidate generator doesn't run twice; a caller
-    // whose generator is cheaper than its own materialization (d07's
-    // id-only cross) opts out
-    val p0 = pairs.select(col("a_id"), col("b_id"))
-    val p = if (materializePairs) p0.transform(graft.runtime.Ckpt.eager) else p0
+      minCos: Double = defCosMin): DataFrame = {
+    // pairs feeds the id prune AND the final join — materialize it so an
+    // expensive candidate generator doesn't run twice
+    val p = pairs.select(col("a_id"), col("b_id")).transform(graft.runtime.Ckpt.eager)
     val ids = p.select(col("a_id").as("vec_id"))
       .unionByName(p.select(col("b_id").as("vec_id")))
       .distinct()
@@ -959,10 +955,9 @@ object Similarity {
   /** The measured trigger point (see [[shouldRebuild]]): the ×500
     * clustered-drift curve shows the frozen index's serve wall already
     * 2.8–4× the retrained one's at the SMALLEST measured append ratios
-    * (0.2–0.5), so the general default triggers there — the
-    * conservative side of the worst measured regime, the
-    * [[graft.llm.Bpe.DeltaArmWords]] discipline. (r16's 0.5 was pinned
-    * to a noise-limited 100-query recall curve; the r17 1,000-query
+    * (0.2–0.5), so the general default triggers there: on the
+    * conservative side of the worst regime's measured curve. (r16's 0.5
+    * was pinned to a noise-limited 100-query recall curve; the r17 1,000-query
     * re-measurement shows recall was never the binding constraint —
     * serve cost is.)
     */

@@ -37,10 +37,7 @@ import graft.Tables
   * 62.6 s regenerated (SCALING.md §3d) — because re-generation re-runs
   * an md5 per gram (CPU-bound) where t14's re-generation is a cheap
   * codegen'd term explode. The variable in the materialization trade
-  * is the COST TO REBUILD, not just the size to cache;
-  * `materializeGrams = false` remains the opt-out for clusters where
-  * pinning a ~corpus-sized stream (MEMORY_AND_DISK) is worse than the
-  * second hash pass.
+  * is the COST TO REBUILD, not just the size to cache.
   *
   * Grouping on the 60-bit [[Hashing.hash60]] of the gram instead of the
   * gram string keeps the shuffle rows fixed-width (16 bytes vs a k-token
@@ -66,15 +63,9 @@ object SpanDedup {
   def dupSpans(s: SparkSession, dir: String, minTokens: Int): DataFrame =
     dupSpansDf(Tables.documents(s, dir), minTokens)
 
-  /** [[dupSpans]] over any (doc_id, text) DataFrame. `materializeGrams`
-    * pins the exploded gram stream between the count and probe sides —
-    * the measured default (see the object scaladoc for the A/B and the
-    * t14 contrast); pass false to trade a second md5 pass for zero
-    * cached state.
-    */
-  def dupSpansDf(docs: DataFrame, minTokens: Int,
-      materializeGrams: Boolean = true): DataFrame = {
-    val hits = dupPositions(docs, minTokens, materializeGrams)
+  /** [[dupSpans]] over any (doc_id, text) DataFrame. */
+  def dupSpansDf(docs: DataFrame, minTokens: Int): DataFrame = {
+    val hits = dupPositions(docs, minTokens)
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     hits
       .withColumn("isl", col("pos") - row_number().over(w))
@@ -87,18 +78,21 @@ object SpanDedup {
         (col("span_end") - col("span_start") + 1).cast("int").as("span_tokens"))
   }
 
-  /** Start positions (doc_id, pos) of corpus-duplicated `minTokens`-grams. */
-  private def dupPositions(docs: DataFrame, k: Int,
-      materializeGrams: Boolean): DataFrame = {
+  /** Start positions (doc_id, pos) of corpus-duplicated `minTokens`-grams.
+    * The exploded gram stream is pinned between the count and probe sides
+    * (the measured win; see the object scaladoc for the A/B and the t14
+    * contrast).
+    */
+  private def dupPositions(docs: DataFrame, k: Int): DataFrame = {
     require(k >= 2, s"minTokens must be >= 2, got $k")
-    val gramsRaw = docs
+    val grams = docs
       .select(col("doc_id"), Hashing.tokens(col("text")).as("t"))
       .where(size(col("t")) >= k)
       .select(col("doc_id"),
         posexplode(transform(sequence(lit(1), size(col("t")) - (k - 1)),
           i => Hashing.hash60(concat_ws(" ", slice(col("t"), i, lit(k)))))))
       .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("gk"))
-    val grams = if (materializeGrams) gramsRaw.transform(graft.runtime.Ckpt.eager) else gramsRaw
+      .transform(graft.runtime.Ckpt.eager)
     val dup = grams.groupBy(col("gk")).count().where(col("count") > 1)
       .select(col("gk"))
     grams.join(dup, "gk").select(col("doc_id"), col("pos"))
@@ -138,9 +132,8 @@ object SpanDedup {
     stripSpansDf(Tables.documents(s, dir), minTokens)
 
   /** [[stripSpans]] over any (doc_id, text) DataFrame. */
-  def stripSpansDf(docs: DataFrame, minTokens: Int,
-      materializeGrams: Boolean = true): DataFrame = {
-    val cov = dupPositions(docs, minTokens, materializeGrams)
+  def stripSpansDf(docs: DataFrame, minTokens: Int): DataFrame = {
+    val cov = dupPositions(docs, minTokens)
       .select(col("doc_id"),
         explode(sequence(col("pos"), col("pos") + (minTokens - 1))).as("pos"))
       .groupBy(col("doc_id")).agg(collect_set(col("pos")).as("cov"))

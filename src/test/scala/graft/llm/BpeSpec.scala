@@ -2,6 +2,7 @@ package graft.llm
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.mr.TestSession
+import scala.jdk.CollectionConverters._
 
 /** Semantics of the BPE vocabulary-induction operator (t20/t21). */
 class BpeSpec extends AnyFunSuite {
@@ -92,153 +93,62 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("BPE queries leave zero persisted-RDD residue (checkpoint rotation + final release)") {
-    // the learn loop rotates its word-table checkpoint; queries that
-    // never consume the final table release it the moment learn returns
-    // (immediate zero residue), while vocab/tokenIds RETAIN the final
-    // checkpoint and release it via a QueryExecutionListener when the
-    // consuming action completes — listener dispatch is async on the SQL
-    // listener bus, so those drain shortly after collect() rather than
-    // synchronously (r14 VERDICT ask #1: no second corpus pass, still
-    // zero steady-state residue)
+    // the learn loop rotates its word-table checkpoint and releases it
+    // before every query returns, including the vocab/tokenIds
+    // histogram collect
     def residue[A](body: => A): Set[Int] = {
       val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
       body
       spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     }
-    def drained[A](label: String)(body: => A): Unit = {
-      val r = residue(body)
-      if (r.nonEmpty) {
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (System.nanoTime() < deadline &&
-            (spark.sparkContext.getPersistentRDDs.keySet.toSet & r).nonEmpty)
-          Thread.sleep(50)
-      }
-      assert((spark.sparkContext.getPersistentRDDs.keySet.toSet & r).isEmpty,
-        s"$label leaked (residue did not drain within 30s of the consuming action)")
-    }
     assert(residue(Bpe.merges(spark, sf).collect()).isEmpty, "t20 leaked")
-    drained("t21")(Bpe.vocab(spark, sf).collect())
+    assert(residue(Bpe.vocab(spark, sf).collect()).isEmpty, "t21 leaked")
     assert(residue(Bpe.docTokens(spark, sf).collect()).isEmpty, "t23 leaked")
     assert(residue(Bpe.heldoutTokens(spark, sf).collect()).isEmpty, "t24 leaked")
-    drained("t25")(Bpe.tokenIds(spark, sf).collect())
+    assert(residue(Bpe.tokenIds(spark, sf).collect()).isEmpty, "t25 leaked")
     assert(residue(Bpe.bpeSeqPack(spark, sf).collect()).isEmpty, "t26 leaked")
     assert(residue(Bpe.mergeList(spark, sf)).isEmpty, "mergeList leaked")
   }
 
-  test("unconsumed retained tables drain on the next learnRetained call (fallback release)") {
-    // r15 ADVICE: a caller that never materializes the retained frame
-    // (watchdog expiry, schema-only inspection) must not pin its
-    // checkpoint block and listener forever — the NEXT learnRetained on
-    // the session drains the abandoned pair, bounding the leak to one.
-    // r16 ADVICE refinement: "abandoned" now means UNREACHABLE (weak-ref
-    // gate) — the frame must leave scope before the drain may fire, so
-    // the helper method below returns nothing
-    val docs = graft.Tables.documents(spark, sf)
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    def makeAbandoned(): Unit = {
-      val (_, abandoned) = Bpe.learnRetained(spark, docs)
-      abandoned.schema // inspected, never materialized, never escapes
-      ()
+  test("t21/t25 frames hold no checkpoint: released on return, re-materializable") {
+    // the returned frame is not tied to any learn-loop block: the
+    // persisted-RDD set is back to its start as soon as the call
+    // returns, and later actions give the same rows. The later actions
+    // plan afresh: re-collecting the same frame would reuse its first
+    // run's shuffle output instead of re-reading its sources
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def twice(label: String, make: => org.apache.spark.sql.DataFrame): Unit = {
+      val before = persisted
+      val df = make
+      assert(persisted == before, s"$label left a persisted RDD behind")
+      val first = rows(df)
+      assert(first.nonEmpty)
+      assert(rows(df.select("*")) == first, s"$label: second action differs")
+      assert(df.count() == first.size, s"$label: third action differs")
     }
-    makeAbandoned()
-    assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).nonEmpty,
-      "the retained checkpoint should be live while unconsumed")
-    val (_, fin2) = Bpe.learnRetained(spark, docs)
-    fin2.collect() // consume the second — its own listener releases it
-    def mine = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (System.nanoTime() < deadline && mine.nonEmpty)
-      Thread.sleep(50)
-    assert(mine.isEmpty,
-      "abandoned retained checkpoint did not drain on the next learnRetained call")
+    twice("t21", Bpe.vocab(spark, sf))
+    twice("t25", Bpe.tokenIds(spark, sf))
   }
 
-  test("a LIVE unconsumed retained table makes the next learnRetained refuse loudly") {
-    // r16 ADVICE: the old drain unconditionally unpersisted the previous
-    // caller's checkpoint — an interleaved LEGITIMATE caller that
-    // materialized its frame afterwards crashed on a missing checkpoint
-    // block. Now a reachable, unconsumed frame is protected: the second
-    // call fails with a clear single-outstanding error instead
-    val docs = graft.Tables.documents(spark, sf)
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val (_, live) = Bpe.learnRetained(spark, docs)
-    val ex = intercept[IllegalStateException] {
-      Bpe.learnRetained(spark, docs)
-    }
-    assert(ex.getMessage.contains("single-outstanding"))
-    // the protected frame still materializes fine afterwards (the very
-    // scenario the old drain corrupted), and consumption drains it
-    assert(live.count() > 0)
-    def mine = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (System.nanoTime() < deadline && mine.nonEmpty)
-      Thread.sleep(50)
-    assert(mine.isEmpty, "consumed retained checkpoint did not drain")
-  }
-
-  test("releaseRetained: an explicitly released live frame frees the block and unblocks the next learn") {
-    // r17 ADVICE #3: under -XX:+DisableExplicitGC the weak-ref drain
-    // can never clear for a reachable abandoned frame — the explicit
-    // release is the GC-independent recovery path. It must free the
-    // checkpoint block synchronously and let the next learnRetained
-    // proceed without the 2 s wait-and-refuse.
-    val docs = graft.Tables.documents(spark, sf)
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val (_, live) = Bpe.learnRetained(spark, docs)
-    live.schema // held and reachable, never materialized
-    Bpe.releaseRetained(spark)
-    def mine = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-    assert(mine.isEmpty, "explicit release must free the retained block synchronously")
-    // next caller proceeds (no single-outstanding refusal), end to end
-    val (_, next) = Bpe.learnRetained(spark, docs)
-    assert(next.count() > 0)
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (System.nanoTime() < deadline && mine.nonEmpty)
-      Thread.sleep(50)
-    assert(mine.isEmpty, "consumed retained checkpoint did not drain")
-    // releasing when nothing is outstanding is a no-op
-    Bpe.releaseRetained(spark)
-  }
-
-  test("hybrid gate: the delta loop's retained-final-table path equals the full loop's") {
-    // DeltaArmWords = 0 forces the AUTO gate onto the delta loop at
-    // fixture scale, exercising the pending-merge + retained-checkpoint
-    // path that production only reaches above the measured crossover;
-    // both arms must hand back the identical final segmentation and
-    // drain to zero residue after consumption
-    val docs = graft.Tables.documents(spark, sf)
-    def consume(deltaArmWords: Long): (Seq[(String, String)], Map[String, Long]) = {
-      val (learned, fin) = Bpe.learnRetained(spark, docs, deltaArmWords = deltaArmWords)
-      val rows = fin.select("word", "cnt").as[(String, Long)].collect().toMap
-      (learned.map(m => (m.a, m.b)), rows)
-    }
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val (mFull, wFull) = consume(Long.MaxValue) // always full
-    val (mDelta, wDelta) = consume(0L) // always delta
-    assert(mFull == mDelta)
-    assert(wFull == wDelta)
-    // residue created by THIS test drains once the consuming collects
-    // complete (diff-based: a shared session may carry other suites'
-    // cached blocks)
-    def mine = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (System.nanoTime() < deadline && mine.nonEmpty)
-      Thread.sleep(50)
-    assert(mine.isEmpty,
-      "retained checkpoints did not drain after consumption")
-  }
-
-  test("delta-maintained learn arm produces byte-identical merges to the shipped full re-agg") {
-    // the two forced arms must be semantics-free: the
-    // r14 delta fold (kept as the private learnDeltaArm) and the shipped
-    // full-re-aggregation loop learn the SAME merge sequence
-    val docs = graft.Tables.documents(spark, sf)
-    val full = Bpe.learnFullArm(Bpe.wordSeqs(docs))
-    val delta = Bpe.learnDeltaArm(Bpe.wordSeqs(docs))
-    assert(full == delta)
-    assert(full.map(m => (m.round, m.a, m.b, m.cnt)) ==
-      Bpe.merges(spark, sf).as[(Int, String, String, String, Long)]
-        .collect().sortBy(_._1).map(x => (x._1, x._2, x._3, x._5)).toSeq)
+  test("no src/main/scala/graft/llm code registers listeners, forces GC or holds weak refs") {
+    // learned artifacts are released deterministically before a query
+    // returns; doc comments may still name the primitives
+    val banned = Seq("listenerManager", "addSparkListener", "System.gc", "WeakReference")
+    val root = java.nio.file.Paths.get("src/main/scala/graft/llm")
+    assert(java.nio.file.Files.isDirectory(root), s"$root not found from ${root.toAbsolutePath}")
+    val stream = java.nio.file.Files.walk(root)
+    val offenders = try stream.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if !Seq("//", "/*", "*").exists(line.trim.startsWith) &&
+              banned.exists(line.contains) =>
+            s"$p:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    finally stream.close()
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("t25: token ids reconstruct the scrubbed corpus text exactly") {
@@ -295,7 +205,7 @@ class BpeSpec extends AnyFunSuite {
       (4L, "   "),
       (5L, "x  y~ |hello world|")
     ).toDF("doc_id", "text")
-    val (learned, _) = Bpe.learnDf(spark, docs)
+    val learned = Bpe.learnDf(docs)
     learned.foreach { m =>
       assert(!m.a.contains("~") && !m.a.contains("|") &&
         !m.b.contains("~") && !m.b.contains("|"), "reserved char in a learned symbol")
@@ -306,7 +216,7 @@ class BpeSpec extends AnyFunSuite {
         Bpe.tokenCountWithMerges(col("text"), merges).as("n"))
       .as[(Long, Long)].collect().toMap
     // the word-table path has no rows for token-less docs; they count 0
-    val tableCounts = Bpe.docTokensDf(spark, docs)
+    val tableCounts = Bpe.docTokensDf(docs)
       .as[(Long, Long)].collect().toMap.withDefaultValue(0L)
     (0L to 5L).foreach { id =>
       assert(streamCounts(id) == tableCounts(id),

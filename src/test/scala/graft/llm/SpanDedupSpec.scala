@@ -107,18 +107,6 @@ class SpanDedupSpec extends AnyFunSuite {
     assert(got == Set((1L, 3, 7, 5)))
   }
 
-  test("materializeGrams is a pure performance knob: both arms agree exactly") {
-    val d = docs(1L -> s"u1 u2 u3 u4 u5 $shared v1 v2 v3 v4 v5",
-      2L -> s"w1 w2 w3 w4 w5 $shared x1 x2 x3 x4 x5",
-      3L -> "c1 c2 c3 c4 c5 c6 c7")
-    assert(spans(d, 3) ==
-      SpanDedup.dupSpansDf(d, 3, materializeGrams = false)
-        .as[(Long, Int, Int, Int)].collect().toSet)
-    assert(SpanDedup.stripSpansDf(d, 3).as[(Long, String, Int)].collect().toSet ==
-      SpanDedup.stripSpansDf(d, 3, materializeGrams = false)
-        .as[(Long, String, Int)].collect().toSet)
-  }
-
   test("d36: the bloom posture reproduces d29's answer exactly") {
     val bench = docs(100L -> "e1 e2 e3 e4 e5", 101L -> "f1 f2 f3 f4 f5 f6")
     val train = docs(1L -> "p1 p2 e1 e2 e3 e4 e5 p3",

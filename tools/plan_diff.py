@@ -5,9 +5,11 @@ Usage: python3 tools/plan_diff.py <dirA> <sfxA> <dirB> <sfxB>
 
 Reads `<dirA>/<id>_<sfxA>.txt` and `<dirB>/<id>_<sfxB>.txt`. Before
 comparing, it rewrites what changes on every run without being plan:
-expression ids (`#123`), `plan_id=N`, RDD ids (`RDD[N]`), index temp
-dirs (`/tmp/graft-<kind><digits>`) and the catalog table names derived
-from them (`graft_<kind>_<16 hex>`). Prints `<id>: identical` or a
+expression ids (`#123`), lambda variable names (`lambda x_12`: a
+JVM-wide counter, so they shift with whatever ran earlier in the JVM),
+`plan_id=N`, RDD ids (`RDD[N]`), index temp dirs
+(`/tmp/graft-<kind><digits>`) and the catalog table names derived from
+them (`graft_<kind>_<16 hex>`). Prints `<id>: identical` or a
 unified diff per query id, and exits 1 if any query differs or has a
 dump on one side only.
 """
@@ -18,6 +20,7 @@ import sys
 
 NORMALIZE = [
     (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"\b(lambda [a-z]+)_\d+"), r"\1_N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"/tmp/graft-([a-z-]+)\d+"), r"/tmp/graft-\1N"),
