@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Two fixed profiles, chosen in code by each main:
   *  - [[engine]] ([[build]]): the library session — `GraftExtensions`, and
-  *    shuffle partitions = 2 × cores. `perfbench` and `StreamDemo` run on it.
+  *    shuffle partitions = 2 × cores. `perfbench` runs on it.
   *  - [[driver]] ([[driverSession]]): the driver-contract session that
   *    `Bench`, `Verify` and the `graft.tools` mains run on — shuffle
   *    partitions = cores, no extensions (no inventory query calls a
@@ -49,7 +49,7 @@ object GraftSession {
     }
   }
 
-  /** Default shuffle partitions = 2 × cores. Measured, not folklore: the
+  /** Shuffle partitions = 2 × cores. Measured, not folklore: the
     * round-12 d13cand A/B at ×500 (SCALE_RESULTS_r12.jsonl) found an
     * interior minimum at exactly 2 tasks/core — 54.5 s vs 79.7 s at
     * 1×/32 and 64.8 s at 4×/128, identical outputs, zero spill — the
@@ -59,8 +59,7 @@ object GraftSession {
     * queries is already handled. (The [[driver]] profile pins its own
     * value and is unaffected.)
     */
-  def shufflePartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", (cpus * 2).toString)
+  def shufflePartitions: String = (cpus * 2).toString
 
   private def common: Map[String, String] = Map(
     "spark.sql.adaptive.enabled" -> "true",

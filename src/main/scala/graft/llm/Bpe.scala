@@ -30,15 +30,15 @@ import graft.Tables
   *
   * Deterministic spec (both engines implement THIS, independently):
   *   - tokens = whitespace split ([[Hashing.tokens]]), empties dropped;
-  *   - `~` (symbol marker) and `|` (the streaming counter's word
-  *     boundary) are RESERVED: both engines delete them from a word
-  *     before marker-encoding (`replace(replace(w,'~',''),'|',''))` —
-  *     so learned symbols can never contain either, the marker algebra
-  *     below is total, and the streaming count path
-  *     ([[tokenCountWithMerges]]) agrees with the word-table path on
-  *     ANY input, not just corpora free of the reserved chars (the r13
-  *     ADVICE divergence). A word consisting entirely of reserved chars
-  *     scrubs to the empty sequence and counts zero symbols;
+  *   - `~` (symbol marker) and `|` (reserved so the learned vocabulary
+  *     and every BPE answer the oracle pins stay as they are) are
+  *     RESERVED: both engines delete them from a word before
+  *     marker-encoding (`replace(replace(w,'~',''),'|',''))` — so
+  *     learned symbols can never contain either and the marker algebra
+  *     below is total on ANY input, not just corpora free of the
+  *     reserved chars (the r13 ADVICE divergence). A word consisting
+  *     entirely of reserved chars scrubs to the empty sequence and
+  *     counts zero symbols;
   *   - a word's symbol sequence is encoded as `~s1~s2~…~sn~` — every
   *     symbol carries a leading `~` marker and the string ends with one;
   *   - pair counts weight each word's adjacent symbol pairs by word
@@ -84,8 +84,8 @@ object Bpe {
     */
   val Passes = 8
 
-  /** Reserved-character scrub (see the spec above): delete the marker
-    * and boundary chars from a word/text before marker-encoding.
+  /** Reserved-character scrub (see the spec above): delete the two
+    * reserved chars from a word before marker-encoding.
     */
   private def scrub(c: Column): Column =
     replace(replace(c, lit("~"), lit("")), lit("|"), lit(""))
@@ -360,37 +360,6 @@ object Bpe {
       .withColumn("cum", sum(col("n_bpe_tokens")).over(w))
       .withColumn("seq_no", expr(s"(cum - n_bpe_tokens) div $seqTokens"))
       .select(col("source"), col("doc_id"), col("n_bpe_tokens"), col("seq_no"))
-  }
-
-  /** The learned merge list in application order, collected (Merges
-    * rows) — the artifact a serving/streaming tokenizer ships (the
-    * literal-model posture of `LearnedQuality.trainModel`, applied to
-    * the tokenizer; consumed by
-    * [[graft.streaming.DocStream.bpeSegmented]]).
-    */
-  def mergeList(s: SparkSession, dir: String): Seq[(String, String)] =
-    learnDf(Tables.documents(s, dir)).map(m => (m.a, m.b))
-
-  /** Per-row token count under a learned merge list, as ONE codegen
-    * expression chain over the WHOLE text — no explode, no join, no
-    * state, so it drops into a streaming micro-batch plan as-is.
-    *
-    * Construction: scrub the reserved chars (the same scrub the learn
-    * path applies per word, so the two paths see identical symbol
-    * material), collapse space runs to a `|` boundary symbol, marker-
-    * encode every char, then replay the merge chain globally. `|` can
-    * never participate in a merge (the scrub keeps it out of words, so
-    * no learned symbol contains it), so boundaries block cross-word
-    * merges and each word's rewrite equals the per-word replay exactly.
-    * Every merge application removes exactly one `~`, so the final
-    * count is pure arithmetic: tokens = (#`~` − 1) − #`|`.
-    */
-  def tokenCountWithMerges(text: Column, merges: Seq[(String, String)]): Column = {
-    var enc: Column = concat(lit("~"),
-      regexp_replace(regexp_replace(scrub(text), " +", "|"), "(?s)(.)", "$1~"))
-    enc = replayAll(enc, merges)
-    def cntOf(ch: String) = length(enc) - length(replace(enc, lit(ch), lit("")))
-    (cntOf("~") - 1 - cntOf("|")).cast("long")
   }
 
   /** t24: the BPE train/apply SPLIT — learn on the 80% doc_id split,

@@ -208,9 +208,9 @@ object Curate {
     *       already-computed heuristic `quality` as the teacher at the
     *       corpus-median 0.55 threshold, features over the REDACTED
     *       text; the (bucket-count-sized) model is collected and scores
-    *       every survivor ROW-LOCALLY as a literal map (the t22-stream
-    *       posture — no join-back, no exchange, redacted text still
-    *       never shuffles). Docs the learned gate rejects drop;
+    *       every survivor ROW-LOCALLY as a literal map
+    *       ([[LearnedQuality.scoreColumnsFor]] — no join-back, no
+    *       exchange, redacted text still never shuffles). Docs the learned gate rejects drop;
     *       `nb_score` rides along as evidence.
     *
     *   The scrub output is localCheckpointed: the training aggregate and

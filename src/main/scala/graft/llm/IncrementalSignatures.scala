@@ -274,6 +274,11 @@ object IncrementalSig {
       IndexLifecycle.selfPairs(banded, banded.hint("shuffle_hash"), Bands, hamming), maxHamming)
   }
 
+  /** The gates' 32-bit SimHash signatures, empty-text docs dropped. */
+  private def simhashSigs(docs: DataFrame): DataFrame = docs
+    .select(col("doc_id"), graft.functions.SimHashSig(col("text"), 32).as("sig"))
+    .where(col("sig") =!= lit(graft.functions.SimHashSig.Empty))
+
   /** d42: incremental SimHash near-dup pairs at d12's grid point
     * (32-bit signature, 4 bands, Hamming ≤ 7). Corpus = the 80% doc_id
     * split, delta = the 20%; the gate writes the real bucketed index to
@@ -282,17 +287,14 @@ object IncrementalSig {
     */
   def simhashAppend(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    def sigsOf(d: DataFrame): DataFrame = d
-      .select(col("doc_id"), graft.functions.SimHashSig(col("text"), 32).as("sig"))
-      .where(col("sig") =!= lit(graft.functions.SimHashSig.Empty))
     // one SimHash pass for the corpus side (guide §1.2): the kernel fed
     // the band/count/pair writes lazily — 3-4 recomputes per build (r21)
-    val corpusSigs = sigsOf(docs.where(col("doc_id") % 5 < 4))
+    val corpusSigs = simhashSigs(docs.where(col("doc_id") % 5 < 4))
       .transform(graft.runtime.Ckpt.eager)
     val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-incsim")
     // nBuckets = 8 at the gate (layout knob; see IncrementalDedup.appendDedup)
     writeIndex(corpusSigs, buildPairs(corpusSigs, 32, 4, 7), idxDir, 32, 4, nBuckets = 8)
-    appendPairs(readIndex(s, idxDir), sigsOf(docs.where(col("doc_id") % 5 >= 4)), 7)
+    appendPairs(readIndex(s, idxDir), simhashSigs(docs.where(col("doc_id") % 5 >= 4)), 7)
   }
 
   val simhashAppendSql: String = Dedup.simhashPairsSql
@@ -305,9 +307,7 @@ object IncrementalSig {
     */
   def simhashDelete(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val sigs = docs
-      .select(col("doc_id"), graft.functions.SimHashSig(col("text"), 32).as("sig"))
-      .where(col("sig") =!= lit(graft.functions.SimHashSig.Empty))
+    val sigs = simhashSigs(docs)
       // one SimHash pass feeding the build's 3-4 write/pair actions (r21)
       .transform(graft.runtime.Ckpt.eager)
     val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-incsimdel")
@@ -331,18 +331,15 @@ object IncrementalSig {
     */
   def simhashMultiAppend(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    def sigsOf(d: DataFrame): DataFrame = d
-      .select(col("doc_id"), graft.functions.SimHashSig(col("text"), 32).as("sig"))
-      .where(col("sig") =!= lit(graft.functions.SimHashSig.Empty))
     // one SimHash pass for the base corpus (guide §1.2; see simhashAppend)
-    val base = sigsOf(docs.where(col("doc_id") % 4 === 0))
+    val base = simhashSigs(docs.where(col("doc_id") % 4 === 0))
       .transform(graft.runtime.Ckpt.eager)
     val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-simmulti")
     // nBuckets = 8 at the gate (layout knob; see IncrementalDedup.appendDedup)
     writeIndex(base, buildPairs(base, 32, 4, 7), idxDir, 32, 4, nBuckets = 8)
     var pairs: DataFrame = null
     (1 to 3).foreach { m =>
-      pairs = appendToIndex(s, idxDir, sigsOf(docs.where(col("doc_id") % 4 === m)), 7)
+      pairs = appendToIndex(s, idxDir, simhashSigs(docs.where(col("doc_id") % 4 === m)), 7)
     }
     pairs
   }
@@ -374,11 +371,8 @@ object IncrementalSig {
     */
   def cappedMultiAppend(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    def sigsOf(d: DataFrame): DataFrame = d
-      .select(col("doc_id"), graft.functions.SimHashSig(col("text"), 32).as("sig"))
-      .where(col("sig") =!= lit(graft.functions.SimHashSig.Empty))
     // one SimHash pass for the base corpus (guide §1.2; see simhashAppend)
-    val base = sigsOf(docs.where(col("doc_id") % 4 === 0))
+    val base = simhashSigs(docs.where(col("doc_id") % 4 === 0))
       .transform(graft.runtime.Ckpt.eager)
     val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-incsigled")
     val (pairs0, over0) = buildPairsWithLedger(
@@ -388,7 +382,7 @@ object IncrementalSig {
       capLedger0 = Some(over0))
     var pairs: DataFrame = null
     (1 to 3).foreach { m =>
-      pairs = appendToIndex(s, idxDir, sigsOf(docs.where(col("doc_id") % 4 === m)),
+      pairs = appendToIndex(s, idxDir, simhashSigs(docs.where(col("doc_id") % 4 === m)),
         LedgerMaxHamming, bucketCap = LedgerCap)
     }
     pairs

@@ -61,8 +61,8 @@ object LearnedQuality {
   private def isTrain(c: org.apache.spark.sql.Column) = c % 5 < 4
 
   /** The four bucket-feature expressions over an in-scope TokenStats
-    * struct and text column — shared by the exploded batch path, the
-    * literal-map streaming path, AND the curation-v4 gate (which scores
+    * struct and text column — shared by the exploded batch path AND the
+    * literal-map curation-v4 gate (which scores
     * REDACTED text under different column names), so the scoring forms
     * cannot drift. Ratio denominators are `greatest(·, 1)`-guarded on
     * BOTH engines: t22's own path sits behind no emptiness filter, so an
@@ -96,17 +96,16 @@ object LearnedQuality {
   /** Train on the 80% split and COLLECT the model — legitimate here and
     * only here: the model is bucket-count-sized (~40 rows; ≤ a few
     * thousand with richer feature sets), and collecting it is what lets
-    * inference run with NO join at all (see [[scoreColumns]]). This is
-    * the train-batch/score-stream production shape.
+    * inference run with NO join at all (see [[scoreColumnsFor]]).
     */
   def trainModel(s: SparkSession, dir: String): Map[String, Long] =
     modelFrom(featureRows(s, dir).where(isTrain(col("doc_id"))))
 
   /** Fit the evidence model from `(label, f)` rows and collect it (tiny
     * by construction — one row per feature bucket). THE one place the
-    * smoothing/scale formula lives for collected models: t22's
-    * streaming path and the d38 curation gate both call this, so the
-    * formula cannot drift between consumers (the broadcast-join path in
+    * smoothing/scale formula lives for collected models: the d38
+    * curation gate calls this, so the formula cannot drift between
+    * consumers (the broadcast-join path in
     * [[nbQuality]] carries its own copy, pinned equal by the t22 gate
     * and the literal-map≡join spec).
     */
@@ -119,20 +118,13 @@ object LearnedQuality {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** `(score_sum, predicted)` columns scoring a row against a literal
-    * model: the map rides the expression tree to every executor (the
-    * d36 bloom-sketch posture applied to a model) — four map lookups
-    * and a sum, zero joins, zero state, so it drops into a streaming
-    * micro-batch plan as-is. Caller provides `st` =
-    * `TokenStats(text)` in scope. Bit-identical to the join path of
-    * [[nbQuality]] by construction (same [[featureExprs]], same
-    * backoff, same decision rule) — spec-pinned.
-    */
-  def scoreColumns(model: Map[String, Long]):
-      (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =
-    scoreColumnsFor(model, "st", "text")
-
-  /** [[scoreColumns]] over caller-named TokenStats/text columns (the
-    * curation-v4 gate scores redacted text as `nbst`/`rtext`).
+    * model over caller-named TokenStats/text columns (the curation-v4
+    * gate scores redacted text as `nbst`/`rtext`): the map rides the
+    * expression tree to every executor (the d36 bloom-sketch posture
+    * applied to a model) — four map lookups and a sum, zero joins.
+    * Bit-identical to the join path of [[nbQuality]] by construction
+    * (same [[featureExprsFor]], same backoff, same decision rule) —
+    * spec-pinned.
     */
   def scoreColumnsFor(model: Map[String, Long], st: String, text: String):
       (org.apache.spark.sql.Column, org.apache.spark.sql.Column) = {

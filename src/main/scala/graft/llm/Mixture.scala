@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.llm.Hashing.{hash60, sqlHash60}
@@ -69,28 +69,16 @@ object Mixture {
   def mixtureSample(s: SparkSession, dir: String, targetPerSource: Long): DataFrame =
     mixtureSampleDf(Tables.documents(s, dir), targetPerSource)
 
-  /** The calibration half of [[mixtureSampleDf]]: per-source integer keep
-    * thresholds from observed counts. Split out so a STREAM can apply the
-    * same row-local keep decision with thresholds calibrated on a batch
-    * corpus (see [[graft.streaming.DocStream.mixtureThrottled]]) — the
-    * production control-loop shape: counts from yesterday's compaction,
-    * filter on today's stream.
-    */
-  def sampleThresholds(docs: DataFrame, targetPerSource: Long): DataFrame =
-    docs.groupBy(col("source"))
+  /** [[mixtureSample]] over any (doc_id, source, …) DataFrame. */
+  def mixtureSampleDf(docs: DataFrame, targetPerSource: Long): DataFrame = {
+    val thresholds = docs.groupBy(col("source"))
       .agg(count(lit(1)).as("n_src"))
       .withColumn("thresh",
         least(lit(10000L), expr(s"CAST(${targetPerSource * 10000L} AS BIGINT) div n_src")))
-
-  /** The row-local keep decision (shared batch/stream). */
-  def sampleKeep: Column =
-    pmod(hash60(col("doc_id").cast("string")), lit(10000L)) < col("thresh")
-
-  /** [[mixtureSample]] over any (doc_id, source, …) DataFrame. */
-  def mixtureSampleDf(docs: DataFrame, targetPerSource: Long): DataFrame =
-    docs.join(broadcast(sampleThresholds(docs, targetPerSource)), Seq("source"))
-      .filter(sampleKeep)
+    docs.join(broadcast(thresholds), Seq("source"))
+      .filter(pmod(hash60(col("doc_id").cast("string")), lit(10000L)) < col("thresh"))
       .select(col("doc_id"), col("source"))
+  }
 
   def mixtureSampleSql(targetPerSource: Long): String =
     s"""WITH c AS (SELECT source, COUNT(*) AS n_src FROM documents GROUP BY source)

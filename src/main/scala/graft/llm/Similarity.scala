@@ -505,12 +505,13 @@ object Similarity {
       nCells: Int = 16,
       nProbe: Int = 2,
       sampleN: Int = 200): DataFrame = {
-    val e = vecs(s, dir).transform(Ckpt.lazyCp)
+    // 5 branches reference e (seeds, sample, scored, codes, query codes)
+    val e = vecs(s, dir).transform(Ckpt.eager)
     val candIds = ivfCandidateIds(e, nCells, nProbe, sampleN)
-    // pack ONCE and materialize (the d31 lesson: the interpreted HOF
-    // lambda must not re-run per consumer) — and the stored form IS the
-    // production layout now, not a model of it
-    val qt = sq8CodesOf(e).transform(Ckpt.lazyCp)
+    // the interpreted HOF packing runs over the corpus once: the query
+    // side re-packs only its 50 rows (the vec_id filter sits below it) —
+    // and the packed form IS the production layout, not a model of it
+    val qt = sq8CodesOf(e)
     packedTop5(candIds, qt, qt.filter(col("vec_id") < 50))
   }
 
@@ -657,7 +658,9 @@ object Similarity {
       dir: String,
       nCells: Int = 16,
       sampleN: Int = 200): IvfSq8Index =
-    buildIvfSq8IndexFrom(vecs(s, dir).transform(Ckpt.lazyCp), nCells, sampleN)
+    // no checkpoint: the build re-reads a parquet scan plus a codegen'd
+    // norm, measured cheaper at d40 than materializing it as its own job
+    buildIvfSq8IndexFrom(vecs(s, dir), nCells, sampleN)
 
   /** [[buildIvfSq8Index]] over a prepared (vec_id, embedding, nrm)
     * frame — the seam the incremental append path (d44) trains its
@@ -690,9 +693,9 @@ object Similarity {
       .select(col("vec_id"), col("code"))
 
   /** Write + PUBLISH generation 0 through the maintained-index runner
-    * ([[graft.runtime.IndexLifecycle.publishGen0]]; the serving twin
-    * re-resolves the manifest per micro-batch, so published state must
-    * be immutable-per-generation). `centroids` is rewritten only at
+    * ([[graft.runtime.IndexLifecycle.publishGen0]]; a reader resolves
+    * the manifest per read, so published state must be
+    * immutable-per-generation). `centroids` is rewritten only at
     * rebuild; `cells`/`codes` append per epoch. The trained cell count
     * (the centroid rows — a seed no sample vector chose trains no cell)
     * is manifest geometry `n_cells`, read by maintenance and by a
@@ -721,9 +724,8 @@ object Similarity {
     * [[ivfRanked]] argmax the build used), quantize it with the same SQ8
     * formula, and append both as the next epoch of `cells`/`codes`
     * ([[graft.runtime.IndexLifecycle.appendEpochs]]) — nothing touches
-    * the corpus side. A serving reader
-    * ([[graft.streaming.VecStream.annServedMaintained]]) re-resolves the
-    * directory per micro-batch.
+    * the corpus side. A reader that resolves the manifest per read
+    * ([[readIvfSq8IndexAt]]) serves the generation published before it.
     */
   def appendVectorsToIndexDir(s: SparkSession, dir: String, delta: DataFrame): Unit =
     IndexLifecycle.mutate(dir) { m =>
@@ -859,8 +861,8 @@ object Similarity {
     * corpus split; today's delta vectors are assigned to the FROZEN
     * coarse quantizer (the same [[ivfRanked]] argmax the build used)
     * and quantized with the same SQ8 formula, through the maintained
-    * append ([[appendVectorsToIndexDir]]) the serving twin re-resolves;
-    * serving reads the published generation back.
+    * append ([[appendVectorsToIndexDir]]); serving reads the published
+    * generation back.
     *
     * The append CONTRACT — and what the oracle is: append must equal a
     * REBUILD WITH THE FROZEN QUANTIZER over corpus ⊎ delta (the oracle
@@ -876,7 +878,7 @@ object Similarity {
     * side but the artifact append itself.
     */
   def ivfSq8IndexAppend(s: SparkSession, dir: String): DataFrame = {
-    val all = vecs(s, dir).transform(Ckpt.lazyCp)
+    val all = vecs(s, dir).transform(Ckpt.eager)
     // yesterday: train on the corpus split, persist
     val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-ivf-append")
     writeIvfSq8Index(buildIvfSq8IndexFrom(all.filter(col("vec_id") % 5 < 4),

@@ -510,7 +510,7 @@ object TextAnalysis {
       .partitionBy(col("source")).orderBy(col("cnt").desc, col("tok").asc)
     // rk feeds three branches (base aggregate + both ratio sides) —
     // materialize the vocabulary-sized table once
-    val rk = tc.withColumn("rnk", row_number().over(w)).transform(graft.runtime.Ckpt.lazyCp)
+    val rk = tc.withColumn("rnk", row_number().over(w)).transform(graft.runtime.Ckpt.eager)
     val base = rk.groupBy(col("source")).agg(
       count(lit(1)).as("vocab"),
       sum(col("cnt")).as("total_tokens"),

@@ -951,9 +951,9 @@ object Relational {
       |repeat(p_brand, 2) AS brand2
       |FROM part WHERE p_partkey <= 500""".stripMargin
 
-  /** Tumbling-window time aggregation (batch form of the streaming query in
-    * graft.streaming): events per hour per type. Window start rendered as a
-    * string so engine timestamp precision (µs vs ns) can't skew the hash.
+  /** Tumbling-window time aggregation: events per hour per type. Window
+    * start rendered as a string so engine timestamp precision (µs vs ns)
+    * can't skew the hash.
     */
   def timeWindow(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
   * dominant driver-side cost of the d5x index-lifecycle queries).
   *
   * Use via `.transform(Ckpt.eager)` in place of `.localCheckpoint(true)`
-  * (and `Ckpt.lazyCp` for the lazy form) so call sites stay chainable.
+  * so call sites stay chainable.
   */
 object Ckpt {
   /** 1 PiB: far above any honest per-frame estimate these pipelines
@@ -22,7 +22,4 @@ object Ckpt {
 
   def eager(df: DataFrame): DataFrame =
     org.apache.spark.sql.GraftShims.clampCheckpointStats(df.localCheckpoint(true), CapBytes)
-
-  def lazyCp(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftShims.clampCheckpointStats(df.localCheckpoint(false), CapBytes)
 }

@@ -202,7 +202,7 @@ object IndexStatePublisher {
   /** Resolve the Hadoop conf through the ACTIVE session, then the
     * DEFAULT session, then a bare `Configuration`. getActiveSession is
     * thread-local — publisher calls from a thread that never set one
-    * (scheduler threads, streaming micro-batch workers) would
+    * (scheduler threads, pool workers) would
     * otherwise silently drop cluster fs settings (s3a credentials,
     * defaultFS) and could resolve a DIFFERENT FileSystem than the
     * writing job used (r18 ADVICE #5).

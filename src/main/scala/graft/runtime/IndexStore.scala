@@ -130,11 +130,10 @@ object IndexStore {
     } else {
       // drop THIS session's cached relation (file listing included): the
       // session resolving the table is not always the session that last
-      // appended to it — a streaming micro-batch runs on a CLONED session
-      // whose SessionCatalog caches its own file index, so without the
-      // refresh a maintained-index serve kept probing the band files of
-      // the generation it first resolved (caught by StreamingSpec's
-      // maintained-serve parity case)
+      // appended to it — a reader on another session of the same context
+      // has a SessionCatalog that caches its own file index, so without
+      // the refresh it kept probing the files of the generation it first
+      // resolved (pinned by IndexStoreSpec's cross-session case)
       s.catalog.refreshTable(name)
     }
     s.table(name)

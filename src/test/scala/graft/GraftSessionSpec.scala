@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The two session profiles, pinned as conf maps without starting a
-  * session: `engine` is the library session (`perfbench`, `StreamDemo`),
+  * session: `engine` is the library session (`perfbench`),
   * `driver` is the session `Bench`, `Verify` and `graft.tools` run on, key
   * for key the config `Bench` built by hand. And the one core-count parse.
   */
@@ -19,7 +19,7 @@ class GraftSessionSpec extends AnyFunSuite {
   test("profiles: engine is 2 × cores with extensions, driver is Bench's config without") {
     val n = GraftSession.cpus
     assert(n == GraftSession.parseCpus(sys.env.get("SPARK_GRAFT_CPUS")))
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", (2 * n).toString)
+    val shuffle = (2 * n).toString
     assert(GraftSession.shufflePartitions == shuffle)
     assert(GraftSession.engine ==
       GraftSession.Profile(shared + ("spark.sql.shuffle.partitions" -> shuffle), extensions = true))

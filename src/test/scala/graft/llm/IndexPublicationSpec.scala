@@ -713,4 +713,124 @@ class IndexPublicationSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }
   }
+
+  // The served-generation contract of a batch reader: resolve the
+  // manifest per read (IndexStatePublisher.current → readIndexAt), serve
+  // from that generation, and a mutation published between two reads is
+  // served by the second — equal at every step to the serve over a fresh
+  // readIndex.
+
+  private def minHashServeTracksAppend(capped: Boolean): Unit = {
+    val corpus = Seq(0L, 1L, 2L, 3L, 5L)
+    def docs(ids: Seq[Long]) = docsDf.where(col("doc_id").isin(ids: _*))
+    // the landed batch's survivors: the batch is the delta of an
+    // incremental pass over everything the index holds plus the batch
+    def serve(idx: IncrementalDedup.CorpusIndex, held: Seq[Long], batch: Seq[Long]): Set[Long] =
+      IncrementalDedup.appendKept(docs(held ++ batch), idx, docs(batch), rowsPerBand = 4)
+        .as[Long].collect().toSet.intersect(batch.toSet)
+    val tmp = java.nio.file.Files.createTempDirectory("servegen-minhash").toString
+    try {
+      val cap = if (capped) 3 else Dedup.NoBucketCap
+      if (capped) {
+        val (idx0, over0) = IncrementalDedup.buildIndexWithLedger(
+          docs(corpus), rowsPerBand = 4, bucketCap = cap)
+        IncrementalDedup.writeIndex(idx0, tmp, rowsPerBand = 4, capLedger0 = Some(over0))
+      } else {
+        IncrementalDedup.writeIndex(
+          IncrementalDedup.buildIndex(docs(corpus), rowsPerBand = 4), tmp, rowsPerBand = 4)
+      }
+      val gen0 = IncrementalDedup.readIndex(spark, tmp) // a handle held across the append
+      var held = corpus
+      // (landed batch, its expected survivors, docs appended after the serve):
+      // 9 is 5's exact twin; 24 is a near-dup of the appended 19
+      val steps = Seq((Seq(9L, 14L), Set(14L), Seq(19L)), (Seq(24L), Set.empty[Long], Nil))
+      for ((batch, want, appended) <- steps) {
+        val m = IndexStatePublisher.current(tmp)
+        val served = serve(IncrementalDedup.readIndexAt(spark, tmp, m), held, batch)
+        assert(served == want, s"capped=$capped gen ${m.gen}: served $served")
+        assert(served == serve(IncrementalDedup.readIndex(spark, tmp), held, batch),
+          s"capped=$capped gen ${m.gen}: serve differs from a fresh readIndex")
+        if (appended.nonEmpty) {
+          IncrementalDedup.appendToIndex(spark, tmp, docs(held ++ appended),
+            docs(appended), bucketCap = cap).count()
+          held = held ++ appended
+          val next = IndexStatePublisher.current(tmp)
+          assert(next.gen > m.gen, s"capped=$capped: the append published no generation")
+          if (capped) assert(next.epochs("capledger") == 1,
+            s"capped append must record a ledger epoch: ${next.epochs}")
+        }
+      }
+      // the handle read before the append still answers as gen 0 did:
+      // it never saw 19, so 24 survives
+      assert(serve(gen0, corpus, Seq(9L, 14L)) == Set(14L))
+      assert(serve(gen0, corpus, Seq(24L)) == Set(24L),
+        s"capped=$capped: the gen-0 handle saw the appended 19")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    }
+  }
+
+  test("served generation: a MinHash serve tracks a published append") {
+    minHashServeTracksAppend(capped = false)
+  }
+
+  test("served generation: a ledgered MinHash serve tracks a capped append") {
+    minHashServeTracksAppend(capped = true)
+  }
+
+  // bound: the corpus is vec_id < bound; probe: the probe count (None:
+  // derived from the served generation's cell count); mutate: the
+  // mutation published between the two serves
+  private def ivfSq8ServeTracks(bound: Long, probe: Option[Int])(
+      mutate: (String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) => Unit): Unit = {
+    val all = graft.Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding"))
+      .withColumn("nrm", sqrt(graft.functions.FloatVecDot(col("embedding"), col("embedding"))))
+      .localCheckpoint(true)
+    val query = all.filter(col("vec_id") === 3L).localCheckpoint(true)
+    // an exact copy of the query vector under a fresh id: its quantized
+    // dot is maximal, so a serve of the generation holding it surfaces it
+    val twin = query.select(lit(100000L).as("vec_id"), col("embedding"), col("nrm"))
+    def nids(df: org.apache.spark.sql.DataFrame) = df.select("nid").as[Long].collect().toSet
+    val tmp = java.nio.file.Files.createTempDirectory("servegen-ivf").toString
+    try {
+      Similarity.writeIvfSq8Index(Similarity.buildIvfSq8IndexFrom(
+        all.filter(col("vec_id") < bound), nCells = 16, sampleN = 200), tmp)
+      val served = (0 to 1).map { step =>
+        if (step == 1) mutate(tmp, all, twin)
+        val m = IndexStatePublisher.current(tmp)
+        val np = probe.getOrElse(Similarity.probeFor(m.geom(tmp, "n_cells")))
+        val got = nids(Similarity.ivfSq8KnnFromIndex(query,
+          Similarity.readIvfSq8IndexAt(spark, tmp, m), np))
+        assert(got.nonEmpty, s"corpus < $bound gen ${m.gen}: served nothing")
+        assert(got == nids(Similarity.ivfSq8KnnFromIndex(query,
+          Similarity.readIvfSq8Index(spark, tmp), np)),
+          s"corpus < $bound gen ${m.gen}: serve differs from a fresh readIndex")
+        got
+      }
+      assert(!served(0).contains(100000L))
+      assert(served(1).contains(100000L),
+        s"corpus < $bound: the published twin is not served: ${served(1)}")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    }
+  }
+
+  test("served generation: an IVF-SQ8 serve tracks an append") {
+    ivfSq8ServeTracks(800L, Some(2)) { (dir, _, twin) =>
+      Similarity.appendVectorsToIndexDir(spark, dir, twin)
+    }
+  }
+
+  test("served generation: an IVF-SQ8 serve tracks a rebuild") {
+    ivfSq8ServeTracks(400L, None) { (dir, all, twin) =>
+      // append past the rebuild ratio, then the ratio-triggered
+      // retrain + re-tune + republish
+      val delta = all.filter(col("vec_id") >= 400).unionByName(twin)
+      Similarity.appendVectorsToIndexDir(spark, dir, delta)
+      val r = Similarity.maintainIvfSq8IndexDir(spark, dir,
+        all.filter(col("vec_id") < 400).unionByName(delta))
+      assert(r.rebuilt, s"the append ratio must trigger the rebuild: $r")
+    }
+  }
 }

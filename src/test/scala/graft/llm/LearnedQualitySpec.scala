@@ -42,7 +42,7 @@ class LearnedQualitySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val model = LearnedQuality.trainModel(spark, sf)
     assert(model.nonEmpty && model.keys.forall(k => "LDSA".contains(k.head)))
-    val (score, pred) = LearnedQuality.scoreColumns(model)
+    val (score, pred) = LearnedQuality.scoreColumnsFor(model, "st", "text")
     val viaMap = graft.Tables.documents(spark, sf)
       .where(col("doc_id") % 5 >= 4)
       .withColumn("st", graft.functions.TokenStats(col("text")))

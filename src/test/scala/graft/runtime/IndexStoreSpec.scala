@@ -55,4 +55,27 @@ class IndexStoreSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dirB))
     }
   }
+
+  test("ensureBucketedTable: a reader session sees another session's append") {
+    // each session caches its own resolved relation (file listing
+    // included): the reader's next registration must refresh it, or it
+    // keeps serving the files it first resolved
+    val dir = java.nio.file.Files.createTempDirectory("idxstore-x").toString
+    val schema = "doc_id BIGINT, content_hash STRING"
+    val reader = spark.newSession()
+    try {
+      IndexStore.writeBucketed(Seq((1L, "x"), (2L, "y")).toDF("doc_id", "content_hash"),
+        4, s"$dir/t", "graft_idxstore_xsession", "overwrite", "content_hash")
+      assert(IndexStore.ensureBucketedTable(reader, "graft_idxstore_xsession",
+        schema, "content_hash", 4, s"$dir/t").count() == 2L)
+      IndexStore.writeBucketed(Seq((3L, "z")).toDF("doc_id", "content_hash"),
+        4, s"$dir/t", "graft_idxstore_xsession", "append", "content_hash")
+      assert(IndexStore.ensureBucketedTable(reader, "graft_idxstore_xsession",
+        schema, "content_hash", 4, s"$dir/t").count() == 3L,
+        "the reader session served its stale file listing")
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS graft_idxstore_xsession")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
 }
