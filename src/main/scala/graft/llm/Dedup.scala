@@ -39,7 +39,7 @@ object Dedup {
   // threshold via the S-curve midpoint — bandsFor(0.8, 32) = 4 bands of 8
   // (midpoint ≈ 0.84; see LshCalibration for why midpoint ABOVE threshold).
   private val mh = 16 // minhash signature length (d02)
-  private val bandRows = 4 // rows per LSH band → 4 bands (d02)
+  private val mhRows = 4 // rows per LSH band → 4 bands (d02)
   private val vJaccard = 0.8 // verify threshold of the composed ladder
   private val vK = 32 // signature length of the composed ladder
   private val vBands = LshCalibration.bandsFor(vJaccard, vK) // = 4
@@ -213,7 +213,7 @@ object Dedup {
       s: SparkSession,
       dir: String,
       k: Int = mh,
-      rowsPerBand: Int = bandRows,
+      rowsPerBand: Int = mhRows,
       bucketCap: Int = NoBucketCap): DataFrame =
     // threshold-calibrated bands keep E[bucket] = O(1), so AutoCap
     // resolves to capFor(1) = the measured zero-loss floor
@@ -240,7 +240,7 @@ object Dedup {
        |JOIN mh mb ON mb.doc_id = p.b_id""".stripMargin
   }
 
-  val minhashLshSql: String = minhashLshSqlFor(mh, bandRows)
+  val minhashLshSql: String = minhashLshSqlFor(mh, mhRows)
 
   /** SimHash (32-bit) over whitespace tokens: per-bit weighted majority
     * vote of token hashes, computed per ROW by the fused codegen

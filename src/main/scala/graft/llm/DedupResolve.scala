@@ -138,9 +138,11 @@ object DedupResolve {
   }
 
   /** TOUCHED-subgraph incremental resolution — the delta-proportional
-    * stage every corpus-append dedup family shares (d39/d45/d46): given
-    * yesterday's resolved `labels` (id, cluster; cluster = component
-    * min, itself a member) and `newEdges0` of delta-involved evidence,
+    * stage every maintained corpus-append dedup family shares
+    * (d39/d45/d46): given yesterday's resolved `labels` (id, cluster;
+    * cluster = component min, itself a member) and `newEdges` of
+    * delta-involved evidence, MATERIALIZED (it is read three times, and
+    * the maintained append checkpoints it before its artifact mutation),
     * resolve components over newEdges ∪ the label stars of clusters
     * with ≥ 1 member incident to new evidence; untouched clusters keep
     * yesterday's labels verbatim. Identical to a full resolution over
@@ -150,13 +152,7 @@ object DedupResolve {
     * cluster unchanged. Output: the UPDATED full label table (the
     * artifact a maintained index rewrites — d46).
     */
-  private[graft] def incrementalLabels(labels: DataFrame,
-      newEdges0: DataFrame, edgesMaterialized: Boolean = false): DataFrame = {
-    // maintained-index callers checkpoint the evidence themselves (it
-    // must materialize BEFORE the artifact mutation they follow with) —
-    // re-checkpointing it here was one wasted materialization job per
-    // append (r20); one-shot callers still pass a lazy frame
-    val newEdges = if (edgesMaterialized) newEdges0 else newEdges0.transform(graft.runtime.Ckpt.eager)
+  private[graft] def incrementalLabels(labels: DataFrame, newEdges: DataFrame): DataFrame = {
     val evNodes = newEdges.select(col("a_id").as("id"))
       .unionByName(newEdges.select(col("b_id").as("id")))
       .distinct()
@@ -185,13 +181,6 @@ object DedupResolve {
       .join(losers, allIds("doc_id") === losers("id"), "left_anti")
       .orderBy(col("doc_id"))
   }
-
-  /** [[incrementalLabels]] composed with [[keptFromLabels]] — the
-    * one-shot (non-maintained) append's answer path (d39/d45).
-    */
-  private[llm] def incrementalKept(allIds: DataFrame, labels: DataFrame,
-      newEdges0: DataFrame): DataFrame =
-    keptFromLabels(allIds, incrementalLabels(labels, newEdges0))
 
   /** Full dedup pipeline through the verify gate: exact-Jaccard near-dup
     * pairs → connected components → keep one representative per cluster.

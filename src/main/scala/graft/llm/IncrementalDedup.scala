@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.runtime.{Ckpt, IndexLifecycle, IndexManifest, IndexStatePublisher, IndexStore}
+import graft.llm.IndexScenario.{Append, Delete, Row}
 
 /** Incremental corpus-append deduplication (d39) — the operator a daily
   * ingest pipeline runs most often: dedup a DELTA batch against the
@@ -67,7 +68,7 @@ import graft.runtime.{Ckpt, IndexLifecycle, IndexManifest, IndexStatePublisher, 
   * directories: concurrent appends/deletes/compactions can never tear
   * its view, and two writers can never interleave.
   *
-  * The incremental pass ([[appendKept]]) touches, per stage:
+  * The incremental pass of [[appendToIndex]] touches, per stage:
   *   1. exact: the delta's DISTINCT content hashes probe the bucketed
   *      corpus hash table (corpus side: scan, no exchange); group-min
   *      runs over the matched-plus-delta rows only — STAR edges to the
@@ -136,11 +137,9 @@ object IncrementalDedup {
 
   /** The persisted per-corpus artifacts (see class doc). `bands` /
     * `bandCounts` are present when the index was loaded from its
-    * persisted (bucketed) form — [[appendKept]] falls back to deriving
-    * them from `sigs` otherwise (the in-plan spec path), and ignores a
-    * persisted band table whose (k, rowsPerBand) don't match the call.
-    * `pairs`, the verified edge evidence, is required by [[writeIndex]]:
-    * deletion re-resolves touched clusters from it.
+    * persisted (bucketed) form. `pairs`, the verified edge evidence, is
+    * required by [[writeIndex]]: deletion re-resolves touched clusters
+    * from it.
     */
   final case class CorpusIndex(
       hashes: DataFrame,
@@ -148,19 +147,8 @@ object IncrementalDedup {
       labels: DataFrame,
       bands: Option[DataFrame] = None,
       bandCounts: Option[DataFrame] = None,
-      bandK: Int = 0,
-      bandRows: Int = 0,
       pairs: Option[DataFrame] = None,
-      nBuckets: Int = 32) {
-    /** Materialize the core artifacts and the pair evidence (the in-plan
-      * stand-in for the parquet the production pipeline persists — and
-      * the pushdown fence that guarantees the incremental pass reads
-      * artifacts, not a re-derive of the corpus text).
-      */
-    def checkpointed(): CorpusIndex =
-      CorpusIndex(hashes.transform(Ckpt.eager), sigs.transform(Ckpt.eager),
-        labels.transform(Ckpt.eager), pairs = pairs.map(_.transform(Ckpt.eager)))
-  }
+      nBuckets: Int = 32)
 
   /** The band table: the LSH probe surface (see class doc). */
   private val Bands = IndexLifecycle.Probe("graft_inc_", "bands", "bandcounts", "doc_id",
@@ -316,98 +304,7 @@ object IncrementalDedup {
         s"$dir/${m.path("hashes")}"), "doc_id"),
       minusDel(s.read.parquet(m.epochPaths(dir, "sigs"): _*), "doc_id"),
       s.read.parquet(s"$dir/${m.path("labels")}"),
-      Some(bands), counts, m.geom(dir, "k"), m.geom(dir, "rows_per_band"), Some(pairs), nb)
-  }
-
-  /** The delta-side evidence of one append — everything stages 1–3 of
-    * the class doc produce, factored so the one-shot pass
-    * ([[appendKept]]) and the maintained-index pass ([[appendToIndex]])
-    * cannot drift. `edges` is LAZY (callers checkpoint it exactly once,
-    * before any artifact mutation); the delta frames are delta-sized.
-    */
-  private final case class DeltaEvidence(
-      deltaHash: DataFrame,
-      deltaSigs: DataFrame,
-      deltaBands: DataFrame,
-      edges: DataFrame,
-      over: Option[DataFrame])
-
-  private def deltaEvidence(
-      allDocs: DataFrame,
-      idx: CorpusIndex,
-      delta: DataFrame,
-      k: Int,
-      rowsPerBand: Int,
-      estMin: Double,
-      jaccardMin: Double,
-      bucketCap: Int): DeltaEvidence = {
-    // 1. exact stars: each delta doc links to the min id of its
-    // content-hash group. The corpus side is PROBED by the delta's
-    // distinct hashes — bucketed table ⇒ no corpus exchange — and only
-    // matched rows enter the group-min.
-    val deltaHash = hashesOf(delta)
-    val touchedMembers = idx.hashes.join(
-        deltaHash.select(col("content_hash")).distinct().hint("shuffle_hash"),
-        Seq("content_hash"))
-      .unionByName(deltaHash)
-    // star EVERY touched member to the group min, not just delta
-    // members: when the group's smallest id arrives in a LATER epoch,
-    // the arriving doc IS the min — a delta-only star would link nobody
-    // and (under a binding cap, where the banded jaccard-1.0 channel is
-    // suppressed) the group would silently stay split on its old
-    // representative (caught by d52 at sf0.1: kept 4767 vs 4766).
-    // Corpus-side members are the delta-probed HITS, so the channel
-    // stays delta-proportional; the extra corpus-member edges are
-    // connectivity-idempotent in the uncapped gates.
-    val exactStars = groupMinStars(touchedMembers)
-
-    // 2. banded candidates with >= 1 delta member, under the
-    // template-skew cap (d21's guard). A persisted band table with
-    // mismatched geometry is ignored (bands are re-derived from sigs).
-    val corpusBands = idx.bands match {
-      case Some(b) if idx.bandK == k && idx.bandRows == rowsPerBand => b
-      case _ => Dedup.bandsOf(idx.sigs, k, rowsPerBand)
-    }
-    val deltaSigs = sigsOf(delta, k)
-      .transform(Ckpt.eager) // read by the band explode AND the sig-epoch write-back
-    val deltaBands = Dedup.bandsOf(deltaSigs, k, rowsPerBand)
-      .transform(Ckpt.eager) // read thrice: counts + both join sides
-    val (cb, db, over) = IndexLifecycle.capDelta(corpusBands, idx.bandCounts, deltaBands,
-      bucketCap, Bands)
-    val cand = IndexLifecycle.deltaCandidates(cb, db, Bands, Dedup.sigEst(k).as("est"))
-      .distinct()
-      // the d13 pushdown barrier: est stays a projection computed once
-      // per distinct pair, never an interpreted join condition
-      .transform(Ckpt.eager)
-
-    // 3. est prefilter + exact-Jaccard verify; grams only for candidate
-    // members (the semi-join prune inside verifyJaccardDf)
-    val verified = Dedup.verifyJaccardDf(allDocs,
-      cand.filter(col("est") >= estMin).select(col("a_id"), col("b_id")),
-      n = 5, minJaccard = jaccardMin)
-
-    DeltaEvidence(deltaHash, deltaSigs, deltaBands,
-      exactStars.unionByName(verified.select(col("a_id"), col("b_id"))), over)
-  }
-
-  /** The incremental pass: kept doc_ids of corpus ⊎ delta (one column,
-    * doc_id-ordered — the d14 output contract). `allDocs` is the full
-    * documents table; the pass reads it ONLY for the final id list and
-    * the semi-join-pruned gram verify (see class doc).
-    */
-  def appendKept(
-      allDocs: DataFrame,
-      idx: CorpusIndex,
-      delta: DataFrame,
-      k: Int = 32,
-      rowsPerBand: Int = 8,
-      estMin: Double = 0.6,
-      jaccardMin: Double = 0.8,
-      bucketCap: Int = Dedup.NoBucketCap): DataFrame = {
-    val ev = deltaEvidence(allDocs, idx, delta, k, rowsPerBand, estMin, jaccardMin, bucketCap)
-    // 4. TOUCHED-subgraph components (proof sketch in
-    // [[DedupResolve.incrementalLabels]])
-    DedupResolve.incrementalKept(allDocs.select(col("doc_id")), idx.labels, ev.edges)
+      Some(bands), Some(counts), Some(pairs), nb)
   }
 
   /** One MAINTAINED append (d46): run the incremental pass AND write the
@@ -449,14 +346,56 @@ object IncrementalDedup {
       estMin: Double = 0.6,
       jaccardMin: Double = 0.8,
       bucketCap: Int = Dedup.NoBucketCap): DataFrame = IndexLifecycle.mutate(dir) { m =>
+    val (k, rowsPerBand) = (m.geom(dir, "k"), m.geom(dir, "rows_per_band"))
     val idx = readIndexAt(s, dir, m)
-    val ev = deltaEvidence(allDocs, idx, delta, idx.bandK, idx.bandRows,
-      estMin, jaccardMin, bucketCap)
-    val edges = ev.edges.transform(Ckpt.eager)
+    // 1. exact stars: each delta doc links to the min id of its
+    // content-hash group. The corpus side is PROBED by the delta's
+    // distinct hashes — bucketed table ⇒ no corpus exchange — and only
+    // matched rows enter the group-min.
+    val deltaHash = hashesOf(delta)
+    val touchedMembers = idx.hashes.join(
+        deltaHash.select(col("content_hash")).distinct().hint("shuffle_hash"),
+        Seq("content_hash"))
+      .unionByName(deltaHash)
+    // star EVERY touched member to the group min, not just delta
+    // members: when the group's smallest id arrives in a LATER epoch,
+    // the arriving doc IS the min — a delta-only star would link nobody
+    // and (under a binding cap, where the banded jaccard-1.0 channel is
+    // suppressed) the group would silently stay split on its old
+    // representative (caught by d52 at sf0.1: kept 4767 vs 4766).
+    // Corpus-side members are the delta-probed HITS, so the channel
+    // stays delta-proportional; the extra corpus-member edges are
+    // connectivity-idempotent in the uncapped gates.
+    val exactStars = groupMinStars(touchedMembers)
+
+    // 2. banded candidates with >= 1 delta member, under the
+    // template-skew cap (d21's guard), at the manifest's band geometry
+    val deltaSigs = sigsOf(delta, k)
+      .transform(Ckpt.eager) // read by the band explode AND the sig-epoch write-back
+    val deltaBands = Dedup.bandsOf(deltaSigs, k, rowsPerBand)
+      .transform(Ckpt.eager) // read thrice: counts + both join sides
+    val (cb, db, over) = IndexLifecycle.capDelta(idx.bands.get, idx.bandCounts.get, deltaBands,
+      bucketCap, Bands)
+    val cand = IndexLifecycle.deltaCandidates(cb, db, Bands, Dedup.sigEst(k).as("est"))
+      .distinct()
+      // the d13 pushdown barrier: est stays a projection computed once
+      // per distinct pair, never an interpreted join condition
+      .transform(Ckpt.eager)
+
+    // 3. est prefilter + exact-Jaccard verify; grams only for candidate
+    // members (the semi-join prune inside verifyJaccardDf)
+    val verified = Dedup.verifyJaccardDf(allDocs,
+      cand.filter(col("est") >= estMin).select(col("a_id"), col("b_id")),
+      n = 5, minJaccard = jaccardMin)
+    val edges = exactStars.unionByName(verified.select(col("a_id"), col("b_id")))
+      .transform(Ckpt.eager)
+
+    // 4. the write-back, and the TOUCHED-subgraph components (proof
+    // sketch in [[DedupResolve.incrementalLabels]])
     val hashes = s"$dir/${m.path("hashes")}"
-    val (_, labels) = IndexLifecycle.appendWriteBack(s, dir, m, Bands, ev.deltaBands, ev.over,
-      Map("sigs" -> ev.deltaSigs, "pairs" -> edges), Some((idx.labels, edges)),
-      Seq(IndexLifecycle.bucketedWrite(s, ev.deltaHash, idx.nBuckets, hashes,
+    val (_, labels) = IndexLifecycle.appendWriteBack(s, dir, m, Bands, deltaBands, over,
+      Map("sigs" -> deltaSigs, "pairs" -> edges), Some((idx.labels, edges)),
+      Seq(IndexLifecycle.bucketedWrite(s, deltaHash, idx.nBuckets, hashes,
         hashTable(hashes), "append", Seq("content_hash"))))
     DedupResolve.keptFromLabels(allDocs.select(col("doc_id")), labels)
   }
@@ -600,29 +539,44 @@ object IncrementalDedup {
         None, m.geom(dir, "k"), m.geom(dir, "rows_per_band"), m.geom(dir, "n_buckets"))
     }
 
+  /** The MinHash family at band geometry (`k`, `rowsPerBand`), as the
+    * lifecycle gates run it ([[IndexScenario]]): a capped write is
+    * ledgered, and the answer is the kept set of a generation — its
+    * surviving hash rows minus the losers of its labels, doc_id-ordered
+    * (the d14 output contract).
+    */
+  final case class Family(k: Int = 32, rowsPerBand: Int = 8) extends MaintainedFamily {
+    val name = "minhash"
+    val id = "doc_id"
+    def source(s: SparkSession, dir: String): DataFrame = Tables.documents(s, dir)
+    def write(s: SparkSession, dir: String, base: DataFrame, cap: Int, nBuckets: Int): Unit =
+      if (cap == Dedup.NoBucketCap)
+        writeIndex(buildIndex(base, k, rowsPerBand), dir, k, rowsPerBand, nBuckets)
+      else {
+        val (idx, over0) = buildIndexWithLedger(base, k, rowsPerBand, bucketCap = cap)
+        writeIndex(idx, dir, k, rowsPerBand, nBuckets, Some(over0))
+      }
+    def append(s: SparkSession, dir: String, arrived: DataFrame, delta: DataFrame, cap: Int): Unit =
+      appendToIndex(s, dir, arrived, delta, bucketCap = cap)
+    def delete(s: SparkSession, dir: String, ids: DataFrame): Unit = deleteFromIndex(s, dir, ids)
+    def answerAt(s: SparkSession, dir: String, src: DataFrame, m: IndexManifest): DataFrame = {
+      val idx = readIndexAt(s, dir, m)
+      DedupResolve.keptFromLabels(idx.hashes.select(col("doc_id")), idx.labels)
+    }
+  }
+
   /** d39: the oracle-gated composition — corpus = the 80% doc_id split
     * ("yesterday"), delta = the 20% ("today's batch"); build the corpus
-    * artifacts, WRITE them as the real bucketed parquet index, read the
-    * index back, then run the incremental pass — the gate exercises the
-    * full persistence seam, bucketed probe tables included. The DuckDB
+    * artifacts, WRITE them as the real bucketed parquet index, append the
+    * delta through the maintained index ([[appendToIndex]]) and read the
+    * kept set of the published generation — the gate exercises the full
+    * persistence seam, bucketed probe tables included. The DuckDB
     * mirror is the FULL-CORPUS rerun
     * ([[DedupResolve.corpusDedupPipelineSql]]) — hash-matching it is
-    * the incremental ≡ full equivalence proof, per query run. The
-    * per-invocation temp index is deleted by a JVM shutdown hook
-    * ([[IndexStore.tempIndexDir]]): the returned plan reads it lazily,
-    * so deletion must outlast the harness's action.
+    * the incremental ≡ full equivalence proof, per query run.
     */
-  def appendDedup(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val idxDir = IndexStore.tempIndexDir("graft-incidx")
-    // nBuckets = 8 at the gate: bucket COUNT is a layout knob (it never
-    // changes the answer — the bucketed-join plan shape is pinned by
-    // spec at the default 32); at verify SFs 32 buckets × 4 artifacts
-    // is ~100 near-empty files of pure write/read overhead per run
-    writeIndex(buildIndex(docs.where(col("doc_id") % 5 < 4)), idxDir, nBuckets = 8)
-    val idx = readIndex(s, idxDir)
-    appendKept(docs, idx, docs.where(col("doc_id") % 5 >= 4))
-  }
+  def appendDedup(s: SparkSession, dir: String): DataFrame =
+    IndexScenario.run(s, dir, Family(), Row(col("doc_id") % 5 < 4, Seq(Append(col("doc_id") % 5 >= 4))))
 
   val appendDedupSql: String = DedupResolve.corpusDedupPipelineSql
 
@@ -634,21 +588,11 @@ object IncrementalDedup {
     * unchanged ([[DedupResolve.corpusDedupPipelineSql]]): k chained
     * appends must change the cost model, never the answer. The three
     * appends run EAGERLY (artifact writes are actions); the returned
-    * frame reads only the final checkpointed labels.
+    * frame reads the final published generation.
     */
-  def multiAppendDedup(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val idxDir = IndexStore.tempIndexDir("graft-incmulti")
-    // nBuckets = 8 at the gate (layout knob; see appendDedup)
-    writeIndex(buildIndex(docs.where(col("doc_id") % 5 < 2)), idxDir, nBuckets = 8)
-    var kept: DataFrame = null
-    (2 to 4).foreach { m =>
-      kept = appendToIndex(s, idxDir,
-        docs.where(col("doc_id") % 5 <= m),
-        docs.where(col("doc_id") % 5 === m))
-    }
-    kept
-  }
+  def multiAppendDedup(s: SparkSession, dir: String): DataFrame =
+    IndexScenario.run(s, dir, Family(),
+      Row(col("doc_id") % 5 < 2, (2 to 4).map(m => Append(col("doc_id") % 5 === m))))
 
   val multiAppendDedupSql: String = DedupResolve.corpusDedupPipelineSql
 
@@ -673,23 +617,9 @@ object IncrementalDedup {
     * closure. The Scala-side ledger replay
     * ([[rerunKeptWithLedger]]) is additionally spec-pinned equal.
     */
-  def cappedMultiAppendDedup(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val idxDir = IndexStore.tempIndexDir("graft-incdedled")
-    val (idx0, over0) = buildIndexWithLedger(docs.where(col("doc_id") % 4 === 0),
-      k = 32, rowsPerBand = 4, bucketCap = LedgerCap)
-    // nBuckets = 8 at the gate (layout knob; see appendDedup)
-    writeIndex(idx0, idxDir, k = 32, rowsPerBand = 4, nBuckets = 8,
-      capLedger0 = Some(over0))
-    var kept: DataFrame = null
-    (1 to 3).foreach { m =>
-      kept = appendToIndex(s, idxDir,
-        docs.where(col("doc_id") % 4 <= m),
-        docs.where(col("doc_id") % 4 === m),
-        bucketCap = LedgerCap)
-    }
-    kept
-  }
+  def cappedMultiAppendDedup(s: SparkSession, dir: String): DataFrame =
+    IndexScenario.run(s, dir, Family(rowsPerBand = 4),
+      Row(col("doc_id") % 4 === 0, (1 to 3).map(m => Append(col("doc_id") % 4 === m)), LedgerCap))
 
   /** The epoch-capped full-rerun kept-set oracle (see
     * [[cappedMultiAppendDedup]]): epoch-capped verified pairs ∪ global
@@ -753,27 +683,13 @@ object IncrementalDedup {
     * The Scala-side replay ([[rerunKeptWithLedger]] fed the surviving
     * corpus) is additionally spec-pinned equal.
     */
-  def cappedLedgerDeleteDedup(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val deadPred = col("doc_id") % 7 === 3 && col("doc_id") % 3 <= 1
-    val idxDir = IndexStore.tempIndexDir("graft-incdeldl")
-    val (idx0, over0) = buildIndexWithLedger(docs.where(col("doc_id") % 3 === 0),
-      k = 32, rowsPerBand = 4, bucketCap = LedgerCap)
-    // nBuckets = 8 at the gate (layout knob; see appendDedup)
-    writeIndex(idx0, idxDir, k = 32, rowsPerBand = 4, nBuckets = 8,
-      capLedger0 = Some(over0))
-    appendToIndex(s, idxDir,
-      docs.where(col("doc_id") % 3 <= 1),
-      docs.where(col("doc_id") % 3 === 1),
-      bucketCap = LedgerCap)
-    // the takedown lands BETWEEN capped appends: only already-arrived
-    // docs (epochs 0-1) are deletable
-    deleteFromIndex(s, idxDir, docs.where(deadPred).select(col("doc_id")))
-    appendToIndex(s, idxDir,
-      docs.where(!deadPred),
-      docs.where(col("doc_id") % 3 === 2),
-      bucketCap = LedgerCap)
-  }
+  def cappedLedgerDeleteDedup(s: SparkSession, dir: String): DataFrame =
+    IndexScenario.run(s, dir, Family(rowsPerBand = 4), Row(col("doc_id") % 3 === 0, Seq(
+      Append(col("doc_id") % 3 === 1),
+      // the takedown lands BETWEEN capped appends: only already-arrived
+      // docs (epochs 0-1) are deletable
+      Delete(col("doc_id") % 7 === 3 && col("doc_id") % 3 <= 1),
+      Append(col("doc_id") % 3 === 2)), LedgerCap))
 
   /** The epoch-capped survivor-rerun oracle (see
     * [[cappedLedgerDeleteDedup]]): epoch-capped verified pairs over the
@@ -802,16 +718,8 @@ object IncrementalDedup {
     * corpus ([[deleteDedupSql]]) — incremental delete ≡ full rerun on
     * corpus-minus-deleted, hash-exact.
     */
-  def deleteDedup(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val idxDir = IndexStore.tempIndexDir("graft-incdel")
-    // nBuckets = 8 at the gate (layout knob; see appendDedup)
-    writeIndex(buildIndex(docs), idxDir, nBuckets = 8)
-    val newLabels = deleteFromIndex(s, idxDir,
-      docs.where(col("doc_id") % 7 === 3).select(col("doc_id")))
-    DedupResolve.keptFromLabels(
-      docs.where(col("doc_id") % 7 =!= 3).select(col("doc_id")), newLabels)
-  }
+  def deleteDedup(s: SparkSession, dir: String): DataFrame =
+    IndexScenario.run(s, dir, Family(), Row(lit(true), Seq(Delete(col("doc_id") % 7 === 3))))
 
   val deleteDedupSql: String = DedupResolve.corpusDedupPipelineSqlWhere("doc_id % 7 <> 3")
 }

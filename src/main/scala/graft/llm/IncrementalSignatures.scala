@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.runtime.{Ckpt, IndexLifecycle, IndexManifest, IndexStatePublisher}
+import graft.llm.IndexScenario.{Append, Delete, Row}
 
 /** Incremental corpus-append arms for the remaining signature families
   * of the corpus index (r14 VERDICT ask #5) — the d39 pattern (persist
@@ -39,7 +40,7 @@ object IncrementalSig {
     * [[Multimodal.phashPairsFromSigs]] band with — band-key equality
     * across runs is what makes the persisted band table joinable.
     */
-  private def bandsOfSig(sigs: DataFrame, bits: Int, nBands: Int): DataFrame = {
+  private[graft] def bandsOfSig(sigs: DataFrame, bits: Int, nBands: Int): DataFrame = {
     require(bits % nBands == 0, s"bands=$nBands must divide the $bits-bit signature")
     val width = bits / nBands
     val mask = (1L << width) - 1
@@ -89,7 +90,7 @@ object IncrementalSig {
     * the d39 pattern), and yesterday's resolved pair list.
     */
   final case class SigIndex(bands: DataFrame, pairs: DataFrame,
-      bits: Int, nBands: Int, bandCounts: Option[DataFrame] = None)
+      bits: Int, nBands: Int, bandCounts: DataFrame)
 
   /** Write + PUBLISH manifest generation 0
     * ([[IndexLifecycle.publishGen0]], the atomic-publication discipline
@@ -182,19 +183,6 @@ object IncrementalSig {
         Map("pairs" -> pairs), None)
     }
 
-  /** The incremental pass: delta bands probe the bucketed corpus band
-    * table (corpus side: scan, no exchange) for corpus–delta pairs,
-    * plus a delta-sized self-join for delta–delta pairs; exact Hamming
-    * verify is a projection of the joined rows; union with yesterday's
-    * pairs IS the full-corpus answer (class doc). `bucketCap` follows
-    * the d39 pattern ([[IndexLifecycle.capDelta]]). Under a finite cap
-    * the equivalence carries d39's yesterday's-population caveat at cap
-    * crossings; the uncapped gates stay exact.
-    */
-  def appendPairs(idx: SigIndex, deltaSigs: DataFrame,
-      maxHamming: Int, bucketCap: Int = Dedup.NoBucketCap): DataFrame =
-    idx.pairs.unionByName(deltaPairs(idx, deltaSigs, maxHamming, bucketCap)._2)
-
   /** The CAPPED build arm with its over-cap evidence (the epoch-0 cap
     * ledger): same semantics as [[buildPairs]] at a finite cap, but the
     * suppressed bucket set is returned for persistence
@@ -207,37 +195,34 @@ object IncrementalSig {
     (buildPairs(sigs, bits, nBands, maxHamming, bucketCap), over)
   }
 
-  /** The delta-involved pairs of one append (the shared core of the
-    * one-shot [[appendPairs]] and the maintained [[appendToIndex]]):
-    * the capped delta probe, exact Hamming verify, `a < b` distinct.
-    * Returns (delta band rows — checkpointed, the write-back payload —
-    * the LAZY new-pair frame, and the over-cap bucket set this epoch
-    * SUPPRESSED — the cap-ledger row source, `None` when uncapped).
-    */
-  private def deltaPairs(idx: SigIndex, deltaSigs: DataFrame,
-      maxHamming: Int, bucketCap: Int): (DataFrame, DataFrame, Option[DataFrame]) = {
-    val db0 = bandsOfSig(deltaSigs, idx.bits, idx.nBands).transform(Ckpt.eager)
-    val (cb, db, over) = IndexLifecycle.capDelta(idx.bands, idx.bandCounts, db0, bucketCap, Bands)
-    (db0, withinHamming(IndexLifecycle.deltaCandidates(cb, db, Bands, hamming), maxHamming), over)
-  }
-
   /** One MAINTAINED append (the d46 lifecycle for the signature
-    * families): compute the delta-involved pairs, then write the delta's
-    * rows BACK ([[IndexLifecycle.appendWriteBack]]) — band rows appended
-    * in the same bucket layout, one count row per (append, bucket),
-    * new pairs (and a ledgered index's suppressed set) as a new epoch —
-    * so the directory again holds what a full run over the accumulated
+    * families): delta bands probe the bucketed corpus band table
+    * (corpus side: scan, no exchange) for corpus–delta pairs, plus a
+    * delta-sized self-join for delta–delta pairs, under the cap
+    * ([[IndexLifecycle.capDelta]]); exact Hamming verify is a
+    * projection of the joined rows, and old ∪ new pairs IS the
+    * full-corpus answer (class doc). Then the delta's rows are written
+    * BACK ([[IndexLifecycle.appendWriteBack]]) — band rows appended in
+    * the same bucket layout, one count row per (append, bucket), new
+    * pairs (and a ledgered index's suppressed set) as a new epoch — so
+    * the directory again holds what a full run over the accumulated
     * corpus would persist. New pairs are checkpointed BEFORE any table
     * mutation (their plan lazily probes the very band table being
-    * appended). Returns the published pair state — old ∪ new,
+    * appended). Under a finite cap the equivalence carries d39's
+    * yesterday's-population caveat at cap crossings; the uncapped gates
+    * stay exact. Returns the published pair state — old ∪ new,
     * tombstone-filtered, exactly what the next reader sees.
     */
   def appendToIndex(s: SparkSession, dir: String, deltaSigs: DataFrame,
       maxHamming: Int, bucketCap: Int = Dedup.NoBucketCap): DataFrame =
     IndexLifecycle.mutate(dir) { m =>
-      val (db0, newPairs, over) = deltaPairs(readIndexAt(s, dir, m), deltaSigs, maxHamming, bucketCap)
+      val idx = readIndexAt(s, dir, m)
+      val db0 = bandsOfSig(deltaSigs, idx.bits, idx.nBands).transform(Ckpt.eager)
+      val (cb, db, over) = IndexLifecycle.capDelta(idx.bands, idx.bandCounts, db0, bucketCap, Bands)
+      val newPairs = withinHamming(IndexLifecycle.deltaCandidates(cb, db, Bands, hamming), maxHamming)
+        .transform(Ckpt.eager)
       val (next, _) = IndexLifecycle.appendWriteBack(s, dir, m, Bands, db0, over,
-        Map("pairs" -> newPairs.transform(Ckpt.eager)), None)
+        Map("pairs" -> newPairs), None)
       readIndexAt(s, dir, next).pairs
     }
 
@@ -274,28 +259,49 @@ object IncrementalSig {
       IndexLifecycle.selfPairs(banded, banded.hint("shuffle_hash"), Bands, hamming), maxHamming)
   }
 
-  /** The gates' 32-bit SimHash signatures, empty-text docs dropped. */
-  private def simhashSigs(docs: DataFrame): DataFrame = docs
-    .select(col("doc_id"), graft.functions.SimHashSig(col("text"), 32).as("sig"))
-    .where(col("sig") =!= lit(graft.functions.SimHashSig.Empty))
+  /** The bit-signature family at (`bits`, `nBands`, `maxHamming`), as
+    * the lifecycle gates run it ([[IndexScenario]]): `sigs` derives the
+    * (doc_id, sig) rows of a gate's input, checkpointed ONCE — the
+    * signature kernel (SimHash, or pHash's image decode + DCT) otherwise
+    * re-ran for every band, count and pair write of every step (guide
+    * §1.2). A capped write is ledgered; the answer is a generation's
+    * tombstone-filtered pair list.
+    */
+  final class Family(val name: String, bits: Int, nBands: Int, maxHamming: Int,
+      sigs: (SparkSession, String) => DataFrame) extends MaintainedFamily {
+    val id = "doc_id"
+    def source(s: SparkSession, dir: String): DataFrame = sigs(s, dir).transform(Ckpt.eager)
+    def write(s: SparkSession, dir: String, base: DataFrame, cap: Int, nBuckets: Int): Unit =
+      if (cap == Dedup.NoBucketCap)
+        writeIndex(base, buildPairs(base, bits, nBands, maxHamming), dir, bits, nBands, nBuckets)
+      else {
+        val (pairs, over0) = buildPairsWithLedger(base, bits, nBands, maxHamming, cap)
+        writeIndex(base, pairs, dir, bits, nBands, nBuckets, Some(over0))
+      }
+    def append(s: SparkSession, dir: String, arrived: DataFrame, delta: DataFrame, cap: Int): Unit =
+      appendToIndex(s, dir, delta, maxHamming, cap)
+    def delete(s: SparkSession, dir: String, ids: DataFrame): Unit = deleteDocs(s, dir, ids)
+    def answerAt(s: SparkSession, dir: String, src: DataFrame, m: IndexManifest): DataFrame =
+      readIndexAt(s, dir, m).pairs
+  }
+
+  /** The gates' 32-bit SimHash family at `bands` bands, Hamming ≤ 7,
+    * empty-text docs dropped.
+    */
+  private[graft] def simhash(bands: Int): Family = new Family("simhash", 32, bands, 7, (s, dir) =>
+    Tables.documents(s, dir)
+      .select(col("doc_id"), graft.functions.SimHashSig(col("text"), 32).as("sig"))
+      .where(col("sig") =!= lit(graft.functions.SimHashSig.Empty)))
 
   /** d42: incremental SimHash near-dup pairs at d12's grid point
     * (32-bit signature, 4 bands, Hamming ≤ 7). Corpus = the 80% doc_id
     * split, delta = the 20%; the gate writes the real bucketed index to
-    * a per-invocation temp dir, reads it back, and appends — oracle =
-    * the full-rerun banded-join SQL ([[Dedup.simhashPairsSql]]).
+    * a per-invocation temp dir, appends through it ([[appendToIndex]])
+    * and reads the published pairs back — oracle = the full-rerun
+    * banded-join SQL ([[Dedup.simhashPairsSql]]).
     */
-  def simhashAppend(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    // one SimHash pass for the corpus side (guide §1.2): the kernel fed
-    // the band/count/pair writes lazily — 3-4 recomputes per build (r21)
-    val corpusSigs = simhashSigs(docs.where(col("doc_id") % 5 < 4))
-      .transform(graft.runtime.Ckpt.eager)
-    val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-incsim")
-    // nBuckets = 8 at the gate (layout knob; see IncrementalDedup.appendDedup)
-    writeIndex(corpusSigs, buildPairs(corpusSigs, 32, 4, 7), idxDir, 32, 4, nBuckets = 8)
-    appendPairs(readIndex(s, idxDir), simhashSigs(docs.where(col("doc_id") % 5 >= 4)), 7)
-  }
+  def simhashAppend(s: SparkSession, dir: String): DataFrame =
+    IndexScenario.run(s, dir, simhash(4), Row(col("doc_id") % 5 < 4, Seq(Append(col("doc_id") % 5 >= 4))))
 
   val simhashAppendSql: String = Dedup.simhashPairsSql
 
@@ -305,17 +311,8 @@ object IncrementalSig {
     * down; the answer is the tombstone-filtered pair artifact. Oracle:
     * the full rerun over the surviving corpus.
     */
-  def simhashDelete(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val sigs = simhashSigs(docs)
-      // one SimHash pass feeding the build's 3-4 write/pair actions (r21)
-      .transform(graft.runtime.Ckpt.eager)
-    val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-incsimdel")
-    // nBuckets = 8 at the gate (layout knob; see IncrementalDedup.appendDedup)
-    writeIndex(sigs, buildPairs(sigs, 32, 4, 7), idxDir, 32, 4, nBuckets = 8)
-    deleteDocs(s, idxDir, docs.where(col("doc_id") % 7 === 3).select(col("doc_id")))
-    readIndex(s, idxDir).pairs
-  }
+  def simhashDelete(s: SparkSession, dir: String): DataFrame =
+    IndexScenario.run(s, dir, simhash(4), Row(lit(true), Seq(Delete(col("doc_id") % 7 === 3))))
 
   val simhashDeleteSql: String =
     Dedup.simhashPairsSqlFor(4, 7, docWhere = "WHERE doc_id % 7 <> 3")
@@ -329,20 +326,9 @@ object IncrementalSig {
     * so after append k the artifacts equal a full run's over the
     * accumulated corpus).
     */
-  def simhashMultiAppend(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    // one SimHash pass for the base corpus (guide §1.2; see simhashAppend)
-    val base = simhashSigs(docs.where(col("doc_id") % 4 === 0))
-      .transform(graft.runtime.Ckpt.eager)
-    val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-simmulti")
-    // nBuckets = 8 at the gate (layout knob; see IncrementalDedup.appendDedup)
-    writeIndex(base, buildPairs(base, 32, 4, 7), idxDir, 32, 4, nBuckets = 8)
-    var pairs: DataFrame = null
-    (1 to 3).foreach { m =>
-      pairs = appendToIndex(s, idxDir, simhashSigs(docs.where(col("doc_id") % 4 === m)), 7)
-    }
-    pairs
-  }
+  def simhashMultiAppend(s: SparkSession, dir: String): DataFrame =
+    IndexScenario.run(s, dir, simhash(4),
+      Row(col("doc_id") % 4 === 0, (1 to 3).map(m => Append(col("doc_id") % 4 === m))))
 
   val simhashMultiAppendSql: String = Dedup.simhashPairsSql
 
@@ -369,24 +355,9 @@ object IncrementalSig {
     * ledger replay ([[rerunWithLedger]]) is additionally spec-pinned
     * equal to the artifact.
     */
-  def cappedMultiAppend(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    // one SimHash pass for the base corpus (guide §1.2; see simhashAppend)
-    val base = simhashSigs(docs.where(col("doc_id") % 4 === 0))
-      .transform(graft.runtime.Ckpt.eager)
-    val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-incsigled")
-    val (pairs0, over0) = buildPairsWithLedger(
-      base, 32, LedgerBands, LedgerMaxHamming, LedgerCap)
-    // nBuckets = 8 at the gate (layout knob; see IncrementalDedup.appendDedup)
-    writeIndex(base, pairs0, idxDir, 32, LedgerBands, nBuckets = 8,
-      capLedger0 = Some(over0))
-    var pairs: DataFrame = null
-    (1 to 3).foreach { m =>
-      pairs = appendToIndex(s, idxDir, simhashSigs(docs.where(col("doc_id") % 4 === m)),
-        LedgerMaxHamming, bucketCap = LedgerCap)
-    }
-    pairs
-  }
+  def cappedMultiAppend(s: SparkSession, dir: String): DataFrame =
+    IndexScenario.run(s, dir, simhash(LedgerBands),
+      Row(col("doc_id") % 4 === 0, (1 to 3).map(m => Append(col("doc_id") % 4 === m)), LedgerCap))
 
   /** The epoch-capped full-rerun oracle (see [[cappedMultiAppend]]):
     * suppression sets re-derived in SQL from running bucket populations
@@ -427,24 +398,14 @@ object IncrementalSig {
     * (60-bit fingerprint, 6 bands, Hamming ≤ 5 — the pigeonhole-
     * lossless region, so the full-rerun oracle is the ALL-PAIRS SQL
     * ([[Multimodal.phashPairsSqlFor]]), which also re-proves banding
-    * loses nothing through the persistence seam).
+    * loses nothing through the persistence seam). Corpus = the 80%
+    * doc_id split, appended with the 20% through the maintained index.
     */
-  def phashAppend(s: SparkSession, dir: String): DataFrame = {
-    // ONE media-decode pass (guide §1.2, the r20 one-sig-pass discipline
-    // applied to this family — r21): the pHash kernel (image decode +
-    // DCT) is the dominant per-row cost and fed FOUR downstream actions
-    // lazily (bands write, counts write, pairs build×2 via the
-    // self-join's two scans) — each recomputed the kernel over the
-    // corpus. Checkpoint the tiny (doc_id, sig) frame once instead.
-    val sigs = Multimodal.perceptualHash(Multimodal.mediaTable(s, dir))
-      .toDF().withColumnRenamed("phash", "sig")
-      .transform(graft.runtime.Ckpt.eager)
-    val corpusSigs = sigs.where(col("doc_id") % 5 < 4)
-    val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-incph")
-    // nBuckets = 8 at the gate (layout knob; see IncrementalDedup.appendDedup)
-    writeIndex(corpusSigs, buildPairs(corpusSigs, 60, 6, 5), idxDir, 60, 6, nBuckets = 8)
-    appendPairs(readIndex(s, idxDir), sigs.where(col("doc_id") % 5 >= 4), 5)
-  }
+  def phashAppend(s: SparkSession, dir: String): DataFrame =
+    IndexScenario.run(s, dir,
+      new Family("phash", 60, 6, 5, (s, dir) =>
+        Multimodal.perceptualHash(Multimodal.mediaTable(s, dir)).toDF().withColumnRenamed("phash", "sig")),
+      Row(col("doc_id") % 5 < 4, Seq(Append(col("doc_id") % 5 >= 4))))
 
   val phashAppendSql: String = Multimodal.phashPairsSqlFor(5)
 }
@@ -455,7 +416,7 @@ object IncrementalSig {
   * resolved component labels persist beside it, and the delta pass
   * probes buckets (corpus side scan-only), cosine-verifies only
   * candidates with ≥ 1 delta member, and resolves the TOUCHED subgraph
-  * ([[DedupResolve.incrementalKept]]).
+  * ([[DedupResolve.incrementalLabels]]).
   *
   * Geometry is PINNED (8 tables × 4 bits, cosine ≥ 0.35 — d16's
   * historical fixed point): the shipped d16 derives bits from the
@@ -514,33 +475,28 @@ object IncrementalSemantic {
   private[graft] def corpusPairs(e: DataFrame, minCos: Double = MinCos): DataFrame =
     verifiedPairs(e, bucketsOf(e), minCos)
 
-  final case class SemIndex(buckets: DataFrame, labels: DataFrame,
-      nTables: Int = NTables, bits: Int = Bits,
-      pairs: Option[DataFrame] = None,
-      bucketCounts: Option[DataFrame] = None,
-      nBuckets: Int = 32)
+  final case class SemIndex(buckets: DataFrame, labels: DataFrame, pairs: DataFrame,
+      bucketCounts: DataFrame, nTables: Int, bits: Int, nBuckets: Int)
 
   /** Write + PUBLISH manifest generation 0
-    * ([[IndexLifecycle.publishGen0]]). Pairs, when given (deletion's
-    * evidence), live in EPOCH directories like every family's. A
-    * LEDGERED write (`capLedger0` present — the d53 capped posture, r17
-    * VERDICT ask #3) additionally persists the per-bucket population
-    * counts (the cap's delta-side evidence, one count row per (append,
-    * bucket); readers SUM over delta-touched keys) and the epoch-0
-    * ledger, so maintained appends ([[appendToIndex]]) extend them
-    * append-only.
+    * ([[IndexLifecycle.publishGen0]]): the bucket table, its per-bucket
+    * population counts (the cap's delta-side evidence, one count row
+    * per (append, bucket); readers SUM over delta-touched keys), the
+    * labels and the pair evidence (deletion re-resolves from it), which
+    * lives in EPOCH directories like every family's. A LEDGERED write
+    * (`capLedger0` present — the d53 capped posture, r17 VERDICT ask #3)
+    * additionally persists the epoch-0 ledger. `pairs` is required: an
+    * `IllegalArgumentException` naming `dir` otherwise.
     */
   def writeIndex(corpusE: DataFrame, labels: DataFrame, dir: String,
       nBuckets: Int = 32, nTables: Int = NTables, bits: Int = Bits,
       pairs: Option[DataFrame] = None,
       capLedger0: Option[DataFrame] = None): Unit = {
-    require(capLedger0.isEmpty || pairs.nonEmpty,
-      "a ledgered semantic index persists its pair evidence")
+    require(pairs.nonEmpty, s"writeIndex($dir): a semantic index persists its pair " +
+      "evidence, which deletion re-resolves from")
     val (writes, entries) = IndexLifecycle.freshIndex(corpusE.sparkSession, dir, Buckets,
-      bucketsOf(corpusE), nBuckets, 0L, pairs.map("pairs" -> _).toMap, Some(labels),
-      capLedger0, counts = capLedger0.nonEmpty)
-    IndexLifecycle.publishGen0(dir, writes, entries,
-      pairs.map(_ => "pairs") ++ capLedger0.map(_ => "capledger"),
+      bucketsOf(corpusE), nBuckets, 0L, Map("pairs" -> pairs.get), Some(labels), capLedger0)
+    IndexLifecycle.publishGen0(dir, writes, entries, Seq("pairs") ++ capLedger0.map(_ => "capledger"),
       Map("n_buckets" -> nBuckets, "n_tables" -> nTables, "bits" -> bits))
   }
 
@@ -555,10 +511,10 @@ object IncrementalSemantic {
 
   private def readIndexAt(s: SparkSession, dir: String, m: IndexManifest): SemIndex = {
     val minusDel = IndexLifecycle.tombstoneFilter(s, dir, m, "vec_id")
-    val pairs = m.pathOpt("pairs").map(_ => IndexLifecycle.readPairs(s, dir, m, minusDel))
     val (buckets, counts) = IndexLifecycle.readProbe(s, dir, m, Buckets, minusDel)
     SemIndex(buckets, s.read.parquet(s"$dir/${m.path("labels")}"),
-      m.geom(dir, "n_tables"), m.geom(dir, "bits"), pairs, counts, m.geom(dir, "n_buckets"))
+      IndexLifecycle.readPairs(s, dir, m, minusDel), counts,
+      m.geom(dir, "n_tables"), m.geom(dir, "bits"), m.geom(dir, "n_buckets"))
   }
 
   /** Incremental DELETION from the semantic index (d49 — the d47
@@ -584,51 +540,7 @@ object IncrementalSemantic {
   def deleteVectors(s: SparkSession, dir: String,
       deleteIds0: DataFrame): DataFrame = IndexLifecycle.mutate(dir) { m =>
     val idx = readIndexAt(s, dir, m)
-    IndexLifecycle.deleteTouched(s, dir, m, "vec_id", deleteIds0, idx.labels,
-      idx.pairs.getOrElse(
-        sys.error(s"semantic index at $dir persists no pair evidence; deletion needs it")),
-      None)
-  }
-
-  /** The delta probe of one append: delta buckets probe the bucketed
-    * corpus bucket table (corpus side: scan, no exchange) plus a
-    * delta-sized self-join under the cap ([[IndexLifecycle.capDelta]]);
-    * only candidates with ≥ 1 delta member reach the cosine verify.
-    * Returns (the delta's bucket rows, checkpointed; the LAZY verified
-    * pairs; the suppressed set, `None` when uncapped).
-    */
-  private def deltaVerified(allE: DataFrame, idx: SemIndex, delta: DataFrame,
-      minCos: Double, bucketCap: Int): (DataFrame, DataFrame, Option[DataFrame]) = {
-    // one checkpoint, not two: bucketsOf is the signature projection's
-    // only consumer, so materializing the pre-explode frame separately
-    // was a pure extra job (r20)
-    val db0 = bucketsOf(withSigs(delta, idx.nTables, idx.bits)).transform(Ckpt.eager)
-    val (cb, db, over) = IndexLifecycle.capDelta(idx.buckets, idx.bucketCounts, db0,
-      bucketCap, Buckets)
-    val candIds = IndexLifecycle.deltaCandidates(cb, db, Buckets).distinct().transform(Ckpt.eager)
-    // semi-join-prune the vector table to candidate ENDPOINTS before
-    // the cosine verify (the verifyJaccardDf discipline): without it
-    // every append re-broadcast the FULL corpus embedding table twice
-    // — measured at ×500 (1.02M vecs): append walls ≈ the full-rerun
-    // wall (~175 s vs 154 s) instead of delta-proportional
-    val candEnds = candIds.select(col("a_id").as("vec_id"))
-      .unionByName(candIds.select(col("b_id").as("vec_id")))
-      .distinct()
-    val eCand = allE.select(col("vec_id"), col("embedding"), col("nrm"))
-      .join(candEnds, Seq("vec_id"), "left_semi")
-      .transform(Ckpt.eager)
-    (db0, Similarity.verifyCosineOn(eCand, candIds, minCos), over)
-  }
-
-  /** The incremental pass: the uncapped delta probe, cosine verify,
-    * components resolved over the touched subgraph.
-    */
-  def appendKept(allE: DataFrame, idx: SemIndex, delta: DataFrame,
-      minCos: Double = MinCos): DataFrame = {
-    val (_, verified, _) = deltaVerified(allE, idx, delta, minCos, Dedup.NoBucketCap)
-    DedupResolve.incrementalKept(
-        allE.select(col("vec_id").as("doc_id")), idx.labels, verified)
-      .select(col("doc_id").as("vec_id"))
+    IndexLifecycle.deleteTouched(s, dir, m, "vec_id", deleteIds0, idx.labels, idx.pairs, None)
   }
 
   /** The scale-adaptive d53 cap: 75% of the MEAN (table, bucket)
@@ -658,30 +570,47 @@ object IncrementalSemantic {
   }
 
   /** One MAINTAINED append on the semantic index (the d46/d51 lifecycle
-    * for the embedding family — r17 VERDICT ask #3: before this, the
-    * capped posture on embeddings was either impossible or
-    * drift-unbounded). Under the writer lock: the capped delta probe
-    * (suppression from the PERSISTED per-bucket counts summed over
-    * delta-touched keys + the delta's own counts), cosine verify, then
-    * the write-back and publish ([[IndexLifecycle.appendWriteBack]]) —
-    * delta bucket rows appended in the bucket layout, one count row per
-    * (append, bucket), verified pairs + the epoch's suppressed-bucket
-    * set as a new epoch, labels re-resolved over the touched subgraph
-    * (overlapped with the writes) into a fresh generation. Requires a
-    * LEDGERED index ([[writeIndex]] with `capLedger0`): the ledger and
-    * the bucket counts are what make the capped answer
-    * rerun-reproducible ([[rerunKeptWithLedger]]). Returns the kept
-    * vec_ids of `allE` (the accumulated corpus).
+    * for the embedding family — r17 VERDICT ask #3). Under the writer
+    * lock: delta buckets probe the bucketed corpus bucket table (corpus
+    * side: scan, no exchange) plus a delta-sized self-join under the cap
+    * ([[IndexLifecycle.capDelta]]: suppression from the PERSISTED
+    * per-bucket counts summed over delta-touched keys + the delta's own
+    * counts); only candidates with ≥ 1 delta member reach the cosine
+    * verify; then the write-back and publish
+    * ([[IndexLifecycle.appendWriteBack]]) — delta bucket rows appended
+    * in the bucket layout, one count row per (append, bucket), verified
+    * pairs (and a ledgered index's suppressed set) as a new epoch,
+    * labels re-resolved over the touched subgraph (overlapped with the
+    * writes) into a fresh generation. On a LEDGERED index
+    * ([[writeIndex]] with `capLedger0`) the ledger and the bucket counts
+    * make the capped answer rerun-reproducible
+    * ([[rerunKeptWithLedger]]). Returns the kept vec_ids of `allE` (the
+    * accumulated corpus).
     */
   def appendToIndex(s: SparkSession, dir: String, allE: DataFrame,
       delta: DataFrame, minCos: Double = MinCos,
       bucketCap: Int = Dedup.NoBucketCap): DataFrame = IndexLifecycle.mutate(dir) { m =>
-    require(m.pathOpt("capledger").nonEmpty,
-      s"semantic index at $dir is not ledgered — maintained appends need " +
-        "its cap ledger and bucket counts (writeIndex with capLedger0)")
     val idx = readIndexAt(s, dir, m)
-    val (db0, verified0, over) = deltaVerified(allE, idx, delta, minCos, bucketCap)
-    val verified = verified0.transform(Ckpt.eager) // materialize BEFORE mutating its input tables
+    // one checkpoint, not two: bucketsOf is the signature projection's
+    // only consumer, so materializing the pre-explode frame separately
+    // was a pure extra job (r20)
+    val db0 = bucketsOf(withSigs(delta, idx.nTables, idx.bits)).transform(Ckpt.eager)
+    val (cb, db, over) = IndexLifecycle.capDelta(idx.buckets, idx.bucketCounts, db0,
+      bucketCap, Buckets)
+    val candIds = IndexLifecycle.deltaCandidates(cb, db, Buckets).distinct().transform(Ckpt.eager)
+    // semi-join-prune the vector table to candidate ENDPOINTS before
+    // the cosine verify (the verifyJaccardDf discipline): without it
+    // every append re-broadcast the FULL corpus embedding table twice
+    // — measured at ×500 (1.02M vecs): append walls ≈ the full-rerun
+    // wall (~175 s vs 154 s) instead of delta-proportional
+    val candEnds = candIds.select(col("a_id").as("vec_id"))
+      .unionByName(candIds.select(col("b_id").as("vec_id")))
+      .distinct()
+    val eCand = allE.select(col("vec_id"), col("embedding"), col("nrm"))
+      .join(candEnds, Seq("vec_id"), "left_semi")
+      .transform(Ckpt.eager)
+    val verified = Similarity.verifyCosineOn(eCand, candIds, minCos)
+      .transform(Ckpt.eager) // materialize BEFORE mutating its input tables
     val (_, labels) = IndexLifecycle.appendWriteBack(s, dir, m, Buckets, db0, over,
       Map("pairs" -> verified), Some((idx.labels, verified)))
     DedupResolve.keptFromLabels(
@@ -740,9 +669,10 @@ object IncrementalSemantic {
   }
 
   /** Rebuild-time compaction ([[IndexLifecycle.compact]] holds the
-    * contract): rewrite the bucket table and
-    * pair evidence minus tombstoned rows into FRESH generation-suffixed
-    * directories, drop the tombstone entry. Labels were already
+    * contract): rewrite the bucket table and pair evidence minus
+    * tombstoned rows into FRESH generation-suffixed directories, recount
+    * buckets (collapsing the per-append count rows and the epoch
+    * history), drop the tombstone entry. Labels were already
     * rewritten at delete time. Answer-invariant. REFUSED on a ledgered
     * index (its compaction is [[rebuildLedgered]]).
     */
@@ -750,28 +680,54 @@ object IncrementalSemantic {
     IndexLifecycle.compact(dir, "rebuildLedgered(dir, allE, bucketCap)") { (m, g) =>
       val idx = readIndexAt(s, dir, m)
       val buckets = idx.buckets.transform(Ckpt.eager)
-      val pairs = idx.pairs.map(_.transform(Ckpt.eager))
+      val pairs = idx.pairs.transform(Ckpt.eager)
       IndexLifecycle.freshIndex(s, dir, Buckets, buckets, m.geom(dir, "n_buckets"), g,
-        pairs.map("pairs" -> _).toMap, None, counts = false)
+        Map("pairs" -> pairs), None)
     }
 
+  /** The semantic family at the pinned geometry, as the lifecycle gates
+    * run it ([[IndexScenario]]): the source is the (vec_id, embedding,
+    * nrm) table, checkpointed once; [[Dedup.AutoCap]] means the
+    * scale-adaptive [[semLedgerCap]] of the source; a capped write is
+    * ledgered. The answer is the kept vec_ids of a generation — its
+    * surviving bucket rows' ids minus the losers of its labels.
+    */
+  object Family extends MaintainedFamily {
+    val name = "semantic"
+    val id = "vec_id"
+    def source(s: SparkSession, dir: String): DataFrame =
+      withNrm(Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))).transform(Ckpt.eager)
+    override def capFor(src: DataFrame, cap: Int): Int =
+      if (cap == Dedup.AutoCap) semLedgerCap(src.count()) else cap
+    def write(s: SparkSession, dir: String, base: DataFrame, cap: Int, nBuckets: Int): Unit = {
+      val e = withSigs(base).transform(Ckpt.eager)
+      val (pairs0, over0) =
+        if (cap == Dedup.NoBucketCap) (corpusPairs(e), None)
+        else { val (p, o) = corpusPairsWithLedger(e, cap); (p, Some(o)) }
+      val pairs = pairs0.transform(Ckpt.eager)
+      writeIndex(e, DedupResolve.resolveClusters(pairs), dir, nBuckets,
+        pairs = Some(pairs), capLedger0 = over0)
+    }
+    def append(s: SparkSession, dir: String, arrived: DataFrame, delta: DataFrame, cap: Int): Unit =
+      appendToIndex(s, dir, arrived, delta, bucketCap = cap)
+    def delete(s: SparkSession, dir: String, ids: DataFrame): Unit = deleteVectors(s, dir, ids)
+    def answerAt(s: SparkSession, dir: String, src: DataFrame, m: IndexManifest): DataFrame = {
+      val idx = readIndexAt(s, dir, m)
+      DedupResolve.keptFromLabels(idx.buckets.select(col("vec_id").as("doc_id")).distinct(), idx.labels)
+        .select(col("doc_id").as("vec_id"))
+    }
+  }
+
   /** d45: the oracle-gated composition — corpus = the 80% vec_id split,
-    * delta = the 20%; build + persist the bucketed index, reload, run
-    * the incremental pass. Oracle = the FULL-corpus rerun at the same
+    * delta = the 20%; build + persist the bucketed index, append the
+    * delta through it ([[appendToIndex]]) and read the kept set of the
+    * published generation. Oracle = the FULL-corpus rerun at the same
     * pinned geometry ([[semanticAppendSql]]) — hash-matching it is the
     * incremental ≡ full equivalence proof (exact here: fixed bits make
     * corpus buckets count-independent, and the family is uncapped).
     */
-  def semanticAppend(s: SparkSession, dir: String): DataFrame = {
-    val all = withNrm(Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
-      .transform(graft.runtime.Ckpt.eager)
-    val corpusE = withSigs(all.filter(col("vec_id") % 5 < 4)).transform(graft.runtime.Ckpt.eager)
-    val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-incsem")
-    // nBuckets = 8 at the gate (layout knob; see IncrementalDedup.appendDedup)
-    writeIndex(corpusE, DedupResolve.resolveClusters(corpusPairs(corpusE)),
-      idxDir, nBuckets = 8)
-    appendKept(all, readIndex(s, idxDir), all.filter(col("vec_id") % 5 >= 4))
-  }
+  def semanticAppend(s: SparkSession, dir: String): DataFrame =
+    IndexScenario.run(s, dir, Family, Row(col("vec_id") % 5 < 4, Seq(Append(col("vec_id") % 5 >= 4))))
 
   /** d49: DELETION from the semantic index — yesterday's index over the
     * whole vector corpus at the pinned geometry (pairs persisted beside
@@ -779,22 +735,8 @@ object IncrementalSemantic {
     * taken down. Oracle: the full rerun over surviving vectors at the
     * same geometry ([[semanticDeleteSql]]), hash-exact.
     */
-  def semanticDelete(s: SparkSession, dir: String): DataFrame = {
-    val all = withNrm(Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
-      .transform(graft.runtime.Ckpt.eager)
-    val corpusE = withSigs(all).transform(graft.runtime.Ckpt.eager)
-    val pairs = corpusPairs(corpusE).transform(graft.runtime.Ckpt.eager)
-    val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-semdel")
-    // nBuckets = 8 at the gate (layout knob; see IncrementalDedup.appendDedup)
-    writeIndex(corpusE, DedupResolve.resolveClusters(pairs), idxDir,
-      nBuckets = 8, pairs = Some(pairs))
-    val newLabels = deleteVectors(s, idxDir,
-      all.where(col("vec_id") % 7 === 3).select(col("vec_id")))
-    DedupResolve.keptFromLabels(
-        all.where(col("vec_id") % 7 =!= 3).select(col("vec_id").as("doc_id")),
-        newLabels)
-      .select(col("doc_id").as("vec_id"))
-  }
+  def semanticDelete(s: SparkSession, dir: String): DataFrame =
+    IndexScenario.run(s, dir, Family, Row(lit(true), Seq(Delete(col("vec_id") % 7 === 3))))
 
   /** The frozen-geometry full rerun over survivors: d45's closure shape
     * with the takedown predicate threaded through both the pair CTE and
@@ -826,24 +768,9 @@ object IncrementalSemantic {
     * replay ([[rerunKeptWithLedger]]) is additionally spec-pinned
     * equal to the maintained answer.
     */
-  def cappedSemanticMultiAppend(s: SparkSession, dir: String): DataFrame = {
-    val all = withNrm(Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
-      .transform(graft.runtime.Ckpt.eager)
-    val cap = semLedgerCap(all.count())
-    val base = withSigs(all.filter(col("vec_id") % 4 === 0)).transform(graft.runtime.Ckpt.eager)
-    val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-incsemled")
-    val (pairs0, over0) = corpusPairsWithLedger(base, cap)
-    val pairs0c = pairs0.transform(graft.runtime.Ckpt.eager)
-    // nBuckets = 8 at the gate (layout knob; see IncrementalDedup.appendDedup)
-    writeIndex(base, DedupResolve.resolveClusters(pairs0c), idxDir, nBuckets = 8,
-      pairs = Some(pairs0c), capLedger0 = Some(over0))
-    var kept: DataFrame = null
-    (1 to 3).foreach { m =>
-      kept = appendToIndex(s, idxDir, all, all.filter(col("vec_id") % 4 === m),
-        bucketCap = cap)
-    }
-    kept
-  }
+  def cappedSemanticMultiAppend(s: SparkSession, dir: String): DataFrame =
+    IndexScenario.run(s, dir, Family,
+      Row(col("vec_id") % 4 === 0, (1 to 3).map(m => Append(col("vec_id") % 4 === m)), Dedup.AutoCap))
 
   /** d56: DELETION composed with the capped LEDGERED posture on the
     * SEMANTIC family (r18 VERDICT ask #1 — the embedding half of the
@@ -861,24 +788,11 @@ object IncrementalSemantic {
     * repair. Answer: the kept vec_ids over survivors. The Scala-side
     * ledger replay over survivors is additionally spec-pinned equal.
     */
-  def cappedSemanticLedgerDelete(s: SparkSession, dir: String): DataFrame = {
-    val all = withNrm(Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
-      .transform(graft.runtime.Ckpt.eager)
-    val cap = semLedgerCap(all.count())
-    val deadPred = col("vec_id") % 7 === 3 && col("vec_id") % 3 <= 1
-    val base = withSigs(all.filter(col("vec_id") % 3 === 0)).transform(graft.runtime.Ckpt.eager)
-    val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-incsemdl")
-    val (pairs0, over0) = corpusPairsWithLedger(base, cap)
-    val pairs0c = pairs0.transform(graft.runtime.Ckpt.eager)
-    // nBuckets = 8 at the gate (layout knob; see IncrementalDedup.appendDedup)
-    writeIndex(base, DedupResolve.resolveClusters(pairs0c), idxDir, nBuckets = 8,
-      pairs = Some(pairs0c), capLedger0 = Some(over0))
-    appendToIndex(s, idxDir, all.filter(col("vec_id") % 3 <= 1),
-      all.filter(col("vec_id") % 3 === 1), bucketCap = cap)
-    deleteVectors(s, idxDir, all.where(deadPred).select(col("vec_id")))
-    appendToIndex(s, idxDir, all.filter(!deadPred),
-      all.filter(col("vec_id") % 3 === 2), bucketCap = cap)
-  }
+  def cappedSemanticLedgerDelete(s: SparkSession, dir: String): DataFrame =
+    IndexScenario.run(s, dir, Family, Row(col("vec_id") % 3 === 0, Seq(
+      Append(col("vec_id") % 3 === 1),
+      Delete(col("vec_id") % 7 === 3 && col("vec_id") % 3 <= 1),
+      Append(col("vec_id") % 3 === 2)), Dedup.AutoCap))
 
   /** The d56 oracle: [[cappedSemanticSqlFor]] at epochMod = 3 with the
     * takedown predicate threaded through (suppression from full
@@ -956,12 +870,16 @@ object IncrementalContam {
     graft.runtime.IndexStore.tableFor("graft_contam_grams_", dir)
 
   /** Write + PUBLISH manifest generation 0 (like every other index
-    * family; [[IndexLifecycle.publishGen0]]).
+    * family; [[IndexLifecycle.publishGen0]]). Every artifact, the Bloom
+    * sketch's bytes included, goes through the Hadoop FileSystem, so
+    * `dir` may be a plain path or a URI (`file:///…`, `hdfs://…`).
     */
   def writeIndex(idx: ContamIndex, dir: String, nBuckets: Int = 32): Unit = {
     val s = idx.grams.sparkSession
-    val out = new java.io.FileOutputStream(s"$dir/bloom.bin")
-    try idx.bloom.writeTo(out) finally out.close()
+    val bytes = new java.io.ByteArrayOutputStream()
+    idx.bloom.writeTo(bytes)
+    graft.runtime.FsUtil.putStream(s, new java.io.ByteArrayInputStream(bytes.toByteArray),
+      s"$dir/bloom.bin")
     IndexLifecycle.publishGen0(dir, Seq(
         IndexLifecycle.bucketedWrite(s, idx.grams, nBuckets,
           s"$dir/grams", tableFor(dir), "overwrite", Seq("gk")),
@@ -973,7 +891,7 @@ object IncrementalContam {
   def readIndex(s: SparkSession, dir: String): ContamIndex = {
     val m = IndexStatePublisher.current(dir)
     val nb = m.geom(dir, "n_buckets")
-    val in = new java.io.FileInputStream(s"$dir/${m.path("bloom")}")
+    val in = graft.runtime.FsUtil.open(s, s"$dir/${m.path("bloom")}")
     val bloom =
       try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
       finally in.close()
@@ -1006,8 +924,7 @@ object IncrementalContam {
         val spansOld = SpanDedup.contamIslands(
           SpanDedup.contamHitsWithSketch(trainOld, bloom, bgrams, k), k)
         val d = graft.runtime.IndexStore.tempIndexDir("graft-inccontam")
-        // nBuckets = 8 at the gate (layout knob; see IncrementalDedup.appendDedup)
-        writeIndex(ContamIndex(bloom, bgrams, spansOld), d, nBuckets = 8)
+        writeIndex(ContamIndex(bloom, bgrams, spansOld), d, IndexScenario.GateBuckets)
         d
       } finally bgrams.unpersist(false)
     val idx = readIndex(s, idxDir)

@@ -413,7 +413,7 @@ object Similarity {
 
   /** Centroid training (one deterministic Lloyd iteration — see
     * [[ivfKnn]]'s scaladoc): (cid, qv float[], cnrm). Factored out so the
-    * persisted-index path ([[buildIvfSq8Index]]) trains the IDENTICAL
+    * persisted-index path ([[buildIvfSq8IndexFrom]]) trains the IDENTICAL
     * centroids the in-plan path uses.
     */
   private def ivfCentroids(e: DataFrame, nCells: Int, sampleN: Int): DataFrame = {
@@ -648,23 +648,10 @@ object Similarity {
     */
   final case class IvfSq8Index(centroids: DataFrame, cells: DataFrame, codes: DataFrame)
 
-  /** Train the index artifacts over the corpus — the SAME centroid
-    * training, cell argmax, and quantization the in-plan operators use
-    * (shared code, so the persisted index cannot drift from the gated
-    * in-plan semantics).
-    */
-  def buildIvfSq8Index(
-      s: SparkSession,
-      dir: String,
-      nCells: Int = 16,
-      sampleN: Int = 200): IvfSq8Index =
-    // no checkpoint: the build re-reads a parquet scan plus a codegen'd
-    // norm, measured cheaper at d40 than materializing it as its own job
-    buildIvfSq8IndexFrom(vecs(s, dir), nCells, sampleN)
-
-  /** [[buildIvfSq8Index]] over a prepared (vec_id, embedding, nrm)
-    * frame — the seam the incremental append path (d44) trains its
-    * corpus-split index through.
+  /** Train the index artifacts over a prepared (vec_id, embedding, nrm)
+    * frame — the SAME centroid training, cell argmax, and quantization
+    * the in-plan operators use (shared code, so the persisted index
+    * cannot drift from the gated in-plan semantics).
     */
   private[graft] def buildIvfSq8IndexFrom(e: DataFrame, nCells: Int, sampleN: Int): IvfSq8Index =
     buildIvfSq8IndexWith(e, ivfCentroids(e, nCells, sampleN))
@@ -836,22 +823,37 @@ object Similarity {
     packedTop5(probeCands(probes, idx.cells), idx.codes, sq8CodesOf(queries))
   }
 
+  /** The IVF-SQ8 family at (`nCells`, `sampleN`), serving at `nProbe`,
+    * as the lifecycle gates run it ([[IndexScenario]]): gen 0 trains on
+    * the base split, an append is [[appendVectorsToIndexDir]] (the cap
+    * does not apply), and there is no delete. The answer serves the
+    * vec_id < 50 queries of the source from a generation
+    * ([[ivfSq8KnnFromIndex]]). The source is the plain [[vecs]] scan:
+    * its re-reads were measured cheaper at d40 than a checkpoint job.
+    */
+  final case class IvfSq8Family(nCells: Int = 16, sampleN: Int = 200, nProbe: Int = 2)
+      extends MaintainedFamily {
+    val name = "ivfsq8"
+    val id = "vec_id"
+    def source(s: SparkSession, dir: String): DataFrame = vecs(s, dir)
+    def write(s: SparkSession, dir: String, base: DataFrame, cap: Int, nBuckets: Int): Unit =
+      writeIvfSq8Index(buildIvfSq8IndexFrom(base, nCells, sampleN), dir)
+    def append(s: SparkSession, dir: String, arrived: DataFrame, delta: DataFrame, cap: Int): Unit =
+      appendVectorsToIndexDir(s, dir, delta)
+    def delete(s: SparkSession, dir: String, ids: DataFrame): Unit =
+      throw new UnsupportedOperationException("the IVF-SQ8 index has no delete")
+    def answerAt(s: SparkSession, dir: String, src: DataFrame, m: IndexManifest): DataFrame =
+      ivfSq8KnnFromIndex(src.filter(col("vec_id") < 50), readIvfSq8IndexAt(s, dir, m), nProbe)
+  }
+
   /** d40: the full persistence round — train, WRITE the parquet index,
     * READ it back, serve kNN from the loaded artifacts. Same grid as d31
     * and the same layout-independent oracle ([[ivfSq8KnnSql]]): the
     * persistence seam must change where the index lives, never the
-    * answer. The artifact lands in a PER-INVOCATION temp directory
-    * (r14 ADVICE: a fixed shared path let two concurrent harness JVMs
-    * overwrite each other's parquet mid-read); it is left for the OS
-    * tmp reaper because the returned plan reads it lazily — deleting
-    * at construction would break the later materialization.
+    * answer.
     */
-  def ivfSq8KnnLoaded(s: SparkSession, dir: String): DataFrame = {
-    val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-ivf-index")
-    writeIvfSq8Index(buildIvfSq8Index(s, dir, nCells = 16, sampleN = 200), idxDir)
-    val idx = readIvfSq8Index(s, idxDir)
-    ivfSq8KnnFromIndex(vecs(s, dir).filter(col("vec_id") < 50), idx, nProbe = 2)
-  }
+  def ivfSq8KnnLoaded(s: SparkSession, dir: String): DataFrame =
+    IndexScenario.run(s, dir, IvfSq8Family(), IndexScenario.Row(lit(true)))
 
   val ivfSq8KnnLoadedSql: String = ivfSq8KnnSql
 
@@ -877,17 +879,9 @@ object Similarity {
     * table, quantization is a per-row map — nothing touches the corpus
     * side but the artifact append itself.
     */
-  def ivfSq8IndexAppend(s: SparkSession, dir: String): DataFrame = {
-    val all = vecs(s, dir).transform(Ckpt.eager)
-    // yesterday: train on the corpus split, persist
-    val idxDir = graft.runtime.IndexStore.tempIndexDir("graft-ivf-append")
-    writeIvfSq8Index(buildIvfSq8IndexFrom(all.filter(col("vec_id") % 5 < 4),
-      nCells = 16, sampleN = 200), idxDir)
-    // today: the maintained append of the delta split, then serve the
-    // published generation
-    appendVectorsToIndexDir(s, idxDir, all.filter(col("vec_id") % 5 >= 4))
-    ivfSq8KnnFromIndex(all.filter(col("vec_id") < 50), readIvfSq8Index(s, idxDir), nProbe = 2)
-  }
+  def ivfSq8IndexAppend(s: SparkSession, dir: String): DataFrame =
+    IndexScenario.run(s, dir, IvfSq8Family(), IndexScenario.Row(col("vec_id") % 5 < 4,
+      Seq(IndexScenario.Append(col("vec_id") % 5 >= 4))))
 
   /** [[ivfSq8IndexAppend]]'s oracle: the frozen-quantizer rebuild —
     * d31's SQL with the centroid training CTEs (seeds + Lloyd sample)

@@ -67,6 +67,12 @@ object FsUtil {
     } finally out.close()
   }
 
+  /** `hadoop fs -cat` of one file as a stream (any scheme); the caller
+    * closes it.
+    */
+  def open(s: SparkSession, path: String): java.io.InputStream =
+    fs(s, path).open(new Path(path))
+
   /** `hadoop fs -rm -r` */
   def rmr(s: SparkSession, path: String): Boolean =
     fs(s, path).delete(new Path(path), true)

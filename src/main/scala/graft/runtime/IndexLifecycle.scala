@@ -57,15 +57,15 @@ object IndexLifecycle {
   }
 
   /** `p`'s probe table at `m`, tombstone-filtered by `minusDel`, and its
-    * count table when `m` publishes one (counts keep counting tombstoned
-    * rows: the cap guards the PHYSICAL bucket population a probe joins).
+    * count table (counts keep counting tombstoned rows: the cap guards
+    * the PHYSICAL bucket population a probe joins).
     */
   def readProbe(s: SparkSession, dir: String, m: IndexManifest, p: Probe,
-      minusDel: (DataFrame, String) => DataFrame): (DataFrame, Option[DataFrame]) = {
+      minusDel: (DataFrame, String) => DataFrame): (DataFrame, DataFrame) = {
     val nb = m.geom(dir, "n_buckets")
-    val rel = m.path(p.table)
-    val counts = m.pathOpt(p.counts).map(c => IndexStore.ensureBucketedTable(s,
-      p.countsAt(s"$dir/$c"), s"${p.keySchema}, cn BIGINT", p.keys.mkString(", "), nb, s"$dir/$c"))
+    val (rel, c) = (m.path(p.table), m.path(p.counts))
+    val counts = IndexStore.ensureBucketedTable(s,
+      p.countsAt(s"$dir/$c"), s"${p.keySchema}, cn BIGINT", p.keys.mkString(", "), nb, s"$dir/$c")
     (minusDel(IndexStore.ensureBucketedTable(s, p.tableAt(s"$dir/$rel"), p.rowSchema,
       p.keys.mkString(", "), nb, s"$dir/$rel"), p.id), counts)
   }
@@ -77,15 +77,15 @@ object IndexLifecycle {
       minusDel: (DataFrame, String) => DataFrame): DataFrame =
     minusDel(minusDel(s.read.parquet(m.epochPaths(dir, "pairs"): _*), "a_id"), "b_id")
 
-  /** The writes of `rows` as `p`'s probe table at `rel` and, when
-    * `countsRel` is set, of their per-bucket populations at it; the
-    * returned writes are independent, for the caller's [[Par.run]].
+  /** The writes of `rows` as `p`'s probe table at `rel` and of their
+    * per-bucket populations at `countsRel`; the returned writes are
+    * independent, for the caller's [[Par.run]].
     */
   private def probeWrites(s: SparkSession, dir: String, p: Probe, rows: DataFrame,
-      nBuckets: Int, mode: String, rel: String, countsRel: Option[String]): Seq[() => Unit] =
-    Seq(bucketedWrite(s, rows, nBuckets, s"$dir/$rel", p.tableAt(s"$dir/$rel"), mode, p.keys)) ++
-      countsRel.map(c => bucketedWrite(s, rows.groupBy(p.keyCols: _*).agg(count(lit(1)).as("cn")),
-        nBuckets, s"$dir/$c", p.countsAt(s"$dir/$c"), mode, p.keys))
+      nBuckets: Int, mode: String, rel: String, countsRel: String): Seq[() => Unit] =
+    Seq(bucketedWrite(s, rows, nBuckets, s"$dir/$rel", p.tableAt(s"$dir/$rel"), mode, p.keys),
+      bucketedWrite(s, rows.groupBy(p.keyCols: _*).agg(count(lit(1)).as("cn")),
+        nBuckets, s"$dir/$countsRel", p.countsAt(s"$dir/$countsRel"), mode, p.keys))
 
   /** A bucketed write of `df` as catalog table `table` at `path`, for the
     * caller's [[Par.run]]; an overwrite drops the catalog name first, at
@@ -98,8 +98,8 @@ object IndexLifecycle {
   }
 
   /** Every write of a freshly derived generation `g` of an index —
-    * generation 0, a rebuild or a compaction: `p`'s probe table from
-    * `rows` (and its count table when `counts`), each artifact of
+    * generation 0, a rebuild or a compaction: `p`'s probe table and its
+    * count table from `rows`, each artifact of
     * `epochs` (name → frame) and the cap `ledger`, when given, as epoch
     * 0 of a fresh directory, and `labels`, when given, as
     * `labels/gen-<g>`. Generation 0 uses the plain names; later
@@ -109,29 +109,27 @@ object IndexLifecycle {
     */
   def freshIndex(s: SparkSession, dir: String, p: Probe, rows: DataFrame, nBuckets: Int,
       g: Long, epochs: Map[String, DataFrame], labels: Option[DataFrame],
-      ledger: Option[DataFrame] = None,
-      counts: Boolean = true): (Seq[() => Unit], Map[String, String]) = {
+      ledger: Option[DataFrame] = None): (Seq[() => Unit], Map[String, String]) = {
     val sfx = if (g == 0) "" else s"-g$g"
-    val tables = Map(p.table -> s"${p.table}$sfx") ++
-      (if (counts) Map(p.counts -> s"${p.counts}$sfx") else Map.empty)
+    val tables = Map(p.table -> s"${p.table}$sfx", p.counts -> s"${p.counts}$sfx")
     val arts = epochs ++ ledger.map(l => "capledger" -> l.select(p.keyCols: _*))
     val lrel = s"labels/gen-$g"
-    (probeWrites(s, dir, p, rows, nBuckets, "overwrite", tables(p.table), tables.get(p.counts)) ++
+    (probeWrites(s, dir, p, rows, nBuckets, "overwrite", tables(p.table), tables(p.counts)) ++
       arts.map { case (n, df) => () => df.write.mode("overwrite").parquet(s"$dir/$n$sfx/epoch-0") } ++
       labels.map(l => () => l.write.mode("overwrite").parquet(s"$dir/$lrel")),
       tables ++ arts.keys.map(n => n -> s"$n$sfx") ++ labels.map(_ => "labels" -> lrel))
   }
 
   /** The capped delta probe of one append: the bucket population of each
-    * DELTA-TOUCHED bucket is the persisted corpus count (summed over its
-    * per-write rows; re-counted from `corpus` without a count table)
-    * plus the delta's, and buckets above `bucketCap` are dropped from
+    * DELTA-TOUCHED bucket is the persisted corpus count (`counts`, summed
+    * over its per-write rows) plus the delta's, and buckets above
+    * `bucketCap` are dropped from
     * both sides — output-equivalent to capping the full union (a bucket
     * without a delta member emits no candidate), at a delta-bucket-sized
     * cost. Returns (corpus rows, delta rows, the suppressed set — `None`
     * when uncapped). `delta` must be materialized: it is read thrice.
     */
-  def capDelta(corpus: DataFrame, counts: Option[DataFrame], delta: DataFrame,
+  def capDelta(corpus: DataFrame, counts: DataFrame, delta: DataFrame,
       bucketCap: Int, p: Probe): (DataFrame, DataFrame, Option[DataFrame]) =
     if (bucketCap == Dedup.NoBucketCap) (corpus, delta, None)
     else {
@@ -141,7 +139,7 @@ object IndexLifecycle {
         .transform(Ckpt.eager) // read twice: the count probe + the over-join
       // probe the bucketed counts with the delta's bucket list first
       // (corpus side exchange-free, aggregation input delta-bucket-sized)
-      val cCnt = counts.getOrElse(corpus.groupBy(k: _*).agg(count(lit(1)).as("cn")))
+      val cCnt = counts
         .join(dCnt.select(k: _*).hint("shuffle_hash"), keys)
         .groupBy(k: _*).agg(sum(col("cn")).as("cn"))
       val over = dCnt
@@ -302,14 +300,13 @@ object IndexLifecycle {
       if (m.pathOpt("capledger").isEmpty) Nil
       else Seq(() => writeLedgerEpoch(dir, m, e, over, rows, p.keys: _*))
     val resolve = relabel.map { case (old, edges) => () =>
-      labels = DedupResolve.incrementalLabels(old, edges, edgesMaterialized = true)
-        .transform(Ckpt.eager)
+      labels = DedupResolve.incrementalLabels(old, edges).transform(Ckpt.eager)
       labels.write.mode("overwrite").parquet(s"$dir/${nextLabels(m)}")
     }
     val next = if (relabel.isEmpty) next0 else next0.withEntry("labels", nextLabels(m))
     writeAndPublish(dir, next,
       extra ++ probeWrites(s, dir, p, rows, m.geom(dir, "n_buckets"), "append",
-        m.path(p.table), Some(m.path(p.counts))) ++ epochWrites ++ resolve ++ ledger)
+        m.path(p.table), m.path(p.counts)) ++ epochWrites ++ resolve ++ ledger)
     (next, labels)
   }
 

@@ -2,7 +2,8 @@ package graft.runtime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared plumbing for the persisted-index families (d39/d42–d47/m08):
+/** Shared plumbing for the persisted-index families (the lifecycle
+  * gates d39–d56 and m08):
   * per-invocation temp directories with a bounded lifetime, collision-
   * safe catalog names, and idempotent bucketed-table registration.
   *

@@ -44,9 +44,21 @@ class IncrementalDedupSpec extends AnyFunSuite {
   private def corpusDf = docsDf.where(col("doc_id") % 5 < 4)
   private def deltaDf = docsDf.where(col("doc_id") % 5 >= 4)
 
-  private def keptIncremental(idx: IncrementalDedup.CorpusIndex): Set[Long] =
-    IncrementalDedup.appendKept(docsDf, idx, deltaDf, rowsPerBand = 4)
+  /** The kept set of one maintained append of the delta into a freshly
+    * written corpus index (8×4 banding) at `dir`.
+    */
+  private def keptAppended(dir: String, bucketCap: Int = Dedup.NoBucketCap): Set[Long] = {
+    IncrementalDedup.writeIndex(
+      IncrementalDedup.buildIndex(corpusDf, rowsPerBand = 4), dir, rowsPerBand = 4)
+    IncrementalDedup.appendToIndex(spark, dir, docsDf, deltaDf, bucketCap = bucketCap)
       .as[Long].collect().toSet
+  }
+
+  private def withTmp[T](prefix: String)(body: String => T): T = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
+    try body(tmp)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
 
   private def keptFull: Set[Long] = {
     val pairs = Dedup.lshVerifiedPairsDf(docsDf, rowsPerBand = 4)
@@ -55,13 +67,13 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("incremental == full rerun on the bridge fixture, and the bridge merges clusters") {
-    val idx = IncrementalDedup.buildIndex(corpusDf, rowsPerBand = 4).checkpointed()
+    val idx = IncrementalDedup.buildIndex(corpusDf, rowsPerBand = 4)
     // yesterday's corpus run really did see TWO clusters ({5} pairs with
     // nothing corpus-side: its exact twin 9 arrives in the DELTA)
     val corpusClusters = idx.labels.select("cluster").as[Long].collect().toSet
     assert(corpusClusters == Set(0L, 2L),
       s"corpus resolution should be {0,1},{2,3}: got reps $corpusClusters")
-    val inc = keptIncremental(idx)
+    val inc = withTmp("incdedup")(keptAppended(_))
     // E bridges {0,1} and {2,3}: one component keeps 0 only; F drops
     // with keeper 5; H survives alone; I2 drops with keeper 19
     assert(inc == Set(0L, 5L, 14L, 19L), s"kept: $inc")
@@ -69,55 +81,36 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("artifacts round-trip through parquet and serve the same answer") {
-    val tmp = java.nio.file.Files.createTempDirectory("incdedup").toString
-    try {
+    withTmp("incdedup") { tmp =>
       IncrementalDedup.writeIndex(
         IncrementalDedup.buildIndex(corpusDf, rowsPerBand = 4), tmp, rowsPerBand = 4)
       val loaded = IncrementalDedup.readIndex(spark, tmp)
-      // the loaded index carries the bucketed probe tables + geometry
+      // the loaded index carries the bucketed probe tables, and the
+      // manifest its band geometry
       assert(loaded.bands.nonEmpty && loaded.bandCounts.nonEmpty)
-      assert(loaded.bandK == 32 && loaded.bandRows == 4)
-      assert(keptIncremental(loaded) == Set(0L, 5L, 14L, 19L),
-        "loaded-artifact path diverged from the in-memory path")
-      // a mismatched band geometry must fall back to sigs, not mis-join:
-      // rowsPerBand = 8 over the same loaded index still equals the
-      // full rerun at that geometry
-      val inc8 = IncrementalDedup.appendKept(docsDf, loaded, deltaDf)
+      val geometry = graft.runtime.IndexStatePublisher.current(tmp).geometry
+      assert(geometry("k") == 32 && geometry("rows_per_band") == 4, s"geometry: $geometry")
+      val kept = IncrementalDedup.appendToIndex(spark, tmp, docsDf, deltaDf)
         .as[Long].collect().toSet
-      val full8 = {
-        val pairs = Dedup.lshVerifiedPairsDf(docsDf)
-          .select(col("a_id"), col("b_id"))
-        DedupResolve.dedupedDocIds(spark, docsDf, pairs).as[Long].collect().toSet
-      }
-      assert(inc8 == full8,
-        "mismatched-geometry fallback diverged from the full rerun")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+      assert(kept == Set(0L, 5L, 14L, 19L), s"maintained append over the loaded artifacts: $kept")
+      // a reader of the published generation serves the same kept set
+      val idx = IncrementalDedup.readIndex(spark, tmp)
+      val served = DedupResolve.keptFromLabels(idx.hashes.select(col("doc_id")), idx.labels)
+        .as[Long].collect().toSet
+      assert(served == kept, s"the published generation serves $served")
     }
   }
 
   test("capped incremental pass with persisted band counts equals capped full semantics on a clean fixture") {
     // no bucket here exceeds cap=32, so the capped pass must equal the
     // uncapped answer exactly — through the PERSISTED bandcounts path
-    val tmp = java.nio.file.Files.createTempDirectory("incdedupcap").toString
-    try {
-      IncrementalDedup.writeIndex(
-        IncrementalDedup.buildIndex(corpusDf, rowsPerBand = 4), tmp, rowsPerBand = 4)
-      val loaded = IncrementalDedup.readIndex(spark, tmp)
-      val kept = IncrementalDedup.appendKept(docsDf, loaded, deltaDf,
-          rowsPerBand = 4, bucketCap = 32)
-        .as[Long].collect().toSet
-      assert(kept == Set(0L, 5L, 14L, 19L), s"capped kept: $kept")
-      // and a cap of 1 drops every multi-member bucket: banded evidence
-      // vanishes, only exact-hash stars remain (F=9 still drops)
-      val kept1 = IncrementalDedup.appendKept(docsDf, loaded, deltaDf,
-          rowsPerBand = 4, bucketCap = 1)
-        .as[Long].collect().toSet
-      assert(!kept1.contains(9L), "exact-dup star must survive any cap")
-      assert(kept1.contains(24L), "cap=1 should drop the banded near-dup evidence")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }
+    val kept = withTmp("incdedupcap")(keptAppended(_, bucketCap = 32))
+    assert(kept == Set(0L, 5L, 14L, 19L), s"capped kept: $kept")
+    // and a cap of 1 drops every multi-member bucket: banded evidence
+    // vanishes, only exact-hash stars remain (F=9 still drops)
+    val kept1 = withTmp("incdedupcap")(keptAppended(_, bucketCap = 1))
+    assert(!kept1.contains(9L), "exact-dup star must survive any cap")
+    assert(kept1.contains(24L), "cap=1 should drop the banded near-dup evidence")
   }
 
   test("persisted band table joins bucket-aware: corpus side is exchange-free") {
@@ -214,9 +207,9 @@ class IncrementalDedupSpec extends AnyFunSuite {
         .as[Long].collect().toSet
       assert(kept == Set(0L, 5L, 14L, 19L), s"kept after 3 appends: $kept")
       assert(kept == keptFull, "maintained multi-append diverged from the full rerun")
-      // the maintained artifacts now cover the accumulated corpus: a
-      // FRESH one-shot append over them must also match (the induction
-      // step of the d46 argument, checked on the persisted state itself)
+      // the maintained artifacts now cover the accumulated corpus (the
+      // induction step of the d46 argument, checked on the persisted
+      // state itself)
       val idx = IncrementalDedup.readIndex(spark, tmp)
       assert(idx.pairs.nonEmpty, "maintained index must persist pair evidence")
       val sigCount = idx.sigs.count()
@@ -350,7 +343,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     }
   }
 
-  test("pair evidence is required: writeIndex refuses an index without it, and checkpointed() keeps it through append then delete") {
+  test("pair evidence is required: writeIndex refuses an index without it, and the written evidence serves append then delete") {
     // an index persisted without its corpus pairs would start its pair
     // artifact at the first append with only that delta's edges; a later
     // delete would re-resolve the touched corpus cluster from that
@@ -358,7 +351,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("incpairs").toString
     try {
       val corpus = docsDf.where(col("doc_id") <= 5L) // {0,1,2,3,4} bridged, {5}
-      val idx = IncrementalDedup.buildIndex(corpus, rowsPerBand = 4).checkpointed()
+      val idx = IncrementalDedup.buildIndex(corpus, rowsPerBand = 4)
       val e = intercept[IllegalArgumentException] {
         IncrementalDedup.writeIndex(idx.copy(pairs = None), tmp, rowsPerBand = 4)
       }

@@ -121,7 +121,7 @@ class IncrementalSemanticSpec extends AnyFunSuite {
         s"corpus bucket scan is not a bucketed read:\n$p")
       // and the persisted per-bucket counts exist for the cap's
       // delta-touched probe
-      assert(idx.bucketCounts.nonEmpty, "ledgered index must persist bucket counts")
+      assert(!idx.bucketCounts.isEmpty, "ledgered index must persist bucket counts")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }
@@ -139,10 +139,9 @@ class IncrementalSemanticSpec extends AnyFunSuite {
       .localCheckpoint(true)
     val tmp = java.nio.file.Files.createTempDirectory("incsemtypes").toString
     try {
-      IncrementalSemantic.writeIndex(corpusE,
-        DedupResolve.resolveClusters(
-          Similarity.signLshPairs(spark, sf, nTables = 8, bits = 4, minCos = 0.35)
-            .select(col("a_id"), col("b_id"))), tmp)
+      val pairs = IncrementalSemantic.corpusPairs(corpusE).localCheckpoint(true)
+      IncrementalSemantic.writeIndex(corpusE, DedupResolve.resolveClusters(pairs), tmp,
+        pairs = Some(pairs))
       val idx = IncrementalSemantic.readIndex(spark, tmp)
       val n = idx.buckets.where(col("bucket").isNotNull).count()
       assert(n > 0 && n == idx.buckets.count(),

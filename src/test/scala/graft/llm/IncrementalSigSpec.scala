@@ -46,9 +46,17 @@ class IncrementalSigSpec extends AnyFunSuite {
         IncrementalSig.buildPairs(corpusSigs, 32, 4, 7), tmp, 32, 4)
       val idx = IncrementalSig.readIndex(spark, tmp)
       assert(idx.bits == 32 && idx.nBands == 4)
-      val p = IncrementalSig.appendPairs(idx,
-          simSigs(docs.where(col("doc_id") % 5 >= 4)), 7)
+      // the probe the maintained append runs: delta bands against the
+      // persisted corpus band table
+      val deltaBands = IncrementalSig.bandsOfSig(simSigs(docs.where(col("doc_id") % 5 >= 4)), 32, 4)
+      val p = idx.bands.alias("a")
+        .join(deltaBands.hint("shuffle_hash").alias("b"),
+          col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
+            col("a.doc_id") =!= col("b.doc_id"))
         .queryExecution.executedPlan.toString
+      val exchanges = p.linesIterator.count(l =>
+        l.contains("Exchange") && !l.contains("ReusedExchange"))
+      assert(exchanges == 1, s"expected ONE exchange (the delta side), plan:\n$p")
       assert(p.contains("Bucketed: true"),
         s"corpus band scan is not a bucketed read:\n$p")
     } finally {
@@ -57,31 +65,30 @@ class IncrementalSigSpec extends AnyFunSuite {
   }
 
   test("capped append with persisted band counts equals the capped full rerun on a clean fixture") {
-    // at a cap no fixture bucket exceeds, the capped incremental pass
+    // at a cap no fixture bucket exceeds, the capped maintained append
     // (persisted-counts path) must equal both the uncapped answer and
     // the capped full rerun exactly
     val docs = graft.Tables.documents(spark, sf)
     val corpusSigs = simSigs(docs.where(col("doc_id") % 5 < 4))
-    val tmp = java.nio.file.Files.createTempDirectory("incsigcap").toString
-    try {
-      IncrementalSig.writeIndex(corpusSigs,
-        IncrementalSig.buildPairs(corpusSigs, 32, 4, 7, bucketCap = 1000), tmp, 32, 4)
-      val idx = IncrementalSig.readIndex(spark, tmp)
-      assert(idx.bandCounts.nonEmpty)
-      val deltaSigs = simSigs(docs.where(col("doc_id") % 5 >= 4))
-      val capped = IncrementalSig.appendPairs(idx, deltaSigs, 7, bucketCap = 1000)
-        .as[(Long, Long, Int)].collect().toSet
-      val fullCapped = IncrementalSig.buildPairs(simSigs(docs), 32, 4, 7, bucketCap = 1000)
-        .as[(Long, Long, Int)].collect().toSet
-      assert(capped == fullCapped)
-      // and a tight cap drops banded evidence on BOTH arms' semantics:
-      // the capped append is a subset of the uncapped answer
-      val tight = IncrementalSig.appendPairs(idx, deltaSigs, 7, bucketCap = 1)
-        .as[(Long, Long, Int)].collect().toSet
-      assert(tight.subsetOf(capped))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    val deltaSigs = simSigs(docs.where(col("doc_id") % 5 >= 4))
+    def appended(cap: Int): Set[(Long, Long, Int)] = {
+      val tmp = java.nio.file.Files.createTempDirectory("incsigcap").toString
+      try {
+        IncrementalSig.writeIndex(corpusSigs,
+          IncrementalSig.buildPairs(corpusSigs, 32, 4, 7, bucketCap = 1000), tmp, 32, 4)
+        IncrementalSig.appendToIndex(spark, tmp, deltaSigs, 7, bucketCap = cap)
+          .as[(Long, Long, Int)].collect().toSet
+      } finally {
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+      }
     }
+    val capped = appended(1000)
+    val fullCapped = IncrementalSig.buildPairs(simSigs(docs), 32, 4, 7, bucketCap = 1000)
+      .as[(Long, Long, Int)].collect().toSet
+    assert(capped == fullCapped)
+    // and a tight cap drops banded evidence on BOTH arms' semantics:
+    // the capped append is a subset of the uncapped answer
+    assert(appended(1).subsetOf(capped))
   }
 
   test("d48: tombstoned docs leave every artifact, and appends cannot resurrect them") {
@@ -108,10 +115,9 @@ class IncrementalSigSpec extends AnyFunSuite {
       // the band table no longer serves deleted docs: a later APPEND of
       // a delta cannot pair against them
       assert(idx.bands.filter(col("doc_id") % 7 === 3).count() == 0)
-      val appended = IncrementalSig.appendPairs(idx,
-          simSigs(docs.where(col("doc_id") % 7 =!= 3)
-            .limit(0)) // empty delta: append must return exactly the filtered state
-          , 7)
+      // an empty delta: the append must publish exactly the filtered state
+      val appended = IncrementalSig.appendToIndex(spark, tmp,
+          simSigs(docs.where(col("doc_id") % 7 =!= 3)).limit(0), 7)
         .as[(Long, Long, Int)].collect().toSet
       assert(appended == full, "empty append changed the tombstone-filtered answer")
       // compaction: same answer, tombstones physically gone
@@ -136,5 +142,27 @@ class IncrementalSigSpec extends AnyFunSuite {
     val full = SpanDedup.contamSpans8(spark, sf)
       .as[(Long, Int, Int, Int)].collect().toSet
     assert(inc == full)
+  }
+  test("d43 index at a file:// URI directory: write, read and the append probe go through the Hadoop FileSystem") {
+    val docs = graft.Tables.documents(spark, sf)
+    val bgrams = SpanDedup.benchGrams(docs.where(col("doc_id") % 10 === 0), 8).localCheckpoint(true)
+    val bloom = bgrams.stat.bloomFilter("gk", math.max(bgrams.count(), 1L), 0.01)
+    val spansOld = SpanDedup.contamIslands(SpanDedup.contamHitsWithSketch(
+      docs.where(col("doc_id") % 10 =!= 0 && col("doc_id") % 5 =!= 4), bloom, bgrams, 8), 8)
+    val tmp = java.nio.file.Files.createTempDirectory("contamuri").toString
+    val uri = s"file://$tmp"
+    try {
+      IncrementalContam.writeIndex(IncrementalContam.ContamIndex(bloom, bgrams, spansOld), uri,
+        nBuckets = 4)
+      val idx = IncrementalContam.readIndex(spark, uri)
+      assert(idx.bloom == bloom, "the Bloom sketch did not round-trip")
+      val inc = idx.spans.unionByName(SpanDedup.contamIslands(
+          SpanDedup.contamHitsWithSketch(docs.where(col("doc_id") % 5 === 4), idx.bloom, idx.grams, 8), 8))
+        .as[(Long, Int, Int, Int)].collect().toSet
+      val full = SpanDedup.contamSpans8(spark, sf).as[(Long, Int, Int, Int)].collect().toSet
+      assert(inc == full)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    }
   }
 }

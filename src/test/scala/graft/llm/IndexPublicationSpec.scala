@@ -723,11 +723,10 @@ class IndexPublicationSpec extends AnyFunSuite {
   private def minHashServeTracksAppend(capped: Boolean): Unit = {
     val corpus = Seq(0L, 1L, 2L, 3L, 5L)
     def docs(ids: Seq[Long]) = docsDf.where(col("doc_id").isin(ids: _*))
-    // the landed batch's survivors: the batch is the delta of an
-    // incremental pass over everything the index holds plus the batch
-    def serve(idx: IncrementalDedup.CorpusIndex, held: Seq[Long], batch: Seq[Long]): Set[Long] =
-      IncrementalDedup.appendKept(docs(held ++ batch), idx, docs(batch), rowsPerBand = 4)
-        .as[Long].collect().toSet.intersect(batch.toSet)
+    // the kept set of the generation `idx` was read at
+    def serve(idx: IncrementalDedup.CorpusIndex): Set[Long] =
+      DedupResolve.keptFromLabels(idx.hashes.select(col("doc_id")), idx.labels)
+        .as[Long].collect().toSet
     val tmp = java.nio.file.Files.createTempDirectory("servegen-minhash").toString
     try {
       val cap = if (capped) 3 else Dedup.NoBucketCap
@@ -739,32 +738,32 @@ class IndexPublicationSpec extends AnyFunSuite {
         IncrementalDedup.writeIndex(
           IncrementalDedup.buildIndex(docs(corpus), rowsPerBand = 4), tmp, rowsPerBand = 4)
       }
-      val gen0 = IncrementalDedup.readIndex(spark, tmp) // a handle held across the append
+      val gen0 = IncrementalDedup.readIndex(spark, tmp) // a handle held across the appends
       var held = corpus
-      // (landed batch, its expected survivors, docs appended after the serve):
-      // 9 is 5's exact twin; 24 is a near-dup of the appended 19
-      val steps = Seq((Seq(9L, 14L), Set(14L), Seq(19L)), (Seq(24L), Set.empty[Long], Nil))
-      for ((batch, want, appended) <- steps) {
+      // (appended batch, the kept set after it): 9 is 5's exact twin; 24
+      // is a near-dup of the appended 19
+      val steps = Seq(
+        Seq(9L, 14L) -> Set(0L, 2L, 5L, 14L),
+        Seq(19L) -> Set(0L, 2L, 5L, 14L, 19L),
+        Seq(24L) -> Set(0L, 2L, 5L, 14L, 19L))
+      for ((batch, want) <- steps) {
         val m = IndexStatePublisher.current(tmp)
-        val served = serve(IncrementalDedup.readIndexAt(spark, tmp, m), held, batch)
-        assert(served == want, s"capped=$capped gen ${m.gen}: served $served")
-        assert(served == serve(IncrementalDedup.readIndex(spark, tmp), held, batch),
+        assert(serve(IncrementalDedup.readIndexAt(spark, tmp, m)) ==
+          serve(IncrementalDedup.readIndex(spark, tmp)),
           s"capped=$capped gen ${m.gen}: serve differs from a fresh readIndex")
-        if (appended.nonEmpty) {
-          IncrementalDedup.appendToIndex(spark, tmp, docs(held ++ appended),
-            docs(appended), bucketCap = cap).count()
-          held = held ++ appended
-          val next = IndexStatePublisher.current(tmp)
-          assert(next.gen > m.gen, s"capped=$capped: the append published no generation")
-          if (capped) assert(next.epochs("capledger") == 1,
-            s"capped append must record a ledger epoch: ${next.epochs}")
-        }
+        IncrementalDedup.appendToIndex(spark, tmp, docs(held ++ batch),
+          docs(batch), bucketCap = cap).count()
+        held = held ++ batch
+        val next = IndexStatePublisher.current(tmp)
+        assert(next.gen > m.gen, s"capped=$capped: the append published no generation")
+        if (capped) assert(next.epochs("capledger") == m.epochs("capledger") + 1,
+          s"capped append must record a ledger epoch: ${next.epochs}")
+        val served = serve(IncrementalDedup.readIndexAt(spark, tmp, next))
+        assert(served == want, s"capped=$capped gen ${next.gen}: served $served")
       }
-      // the handle read before the append still answers as gen 0 did:
-      // it never saw 19, so 24 survives
-      assert(serve(gen0, corpus, Seq(9L, 14L)) == Set(14L))
-      assert(serve(gen0, corpus, Seq(24L)) == Set(24L),
-        s"capped=$capped: the gen-0 handle saw the appended 19")
+      // the handle read before the appends still answers as gen 0 did
+      assert(serve(gen0) == Set(0L, 2L, 5L),
+        s"capped=$capped: the gen-0 handle saw the appended rows: ${serve(gen0)}")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }
@@ -831,6 +830,45 @@ class IndexPublicationSpec extends AnyFunSuite {
       val r = Similarity.maintainIvfSq8IndexDir(spark, dir,
         all.filter(col("vec_id") < 400).unionByName(delta))
       assert(r.rebuilt, s"the append ratio must trigger the rebuild: $r")
+    }
+  }
+  test("served generation: every family's published answer tracks an append and a delete") {
+    import IndexScenario.{Append, Delete, Row}
+    val cases: Seq[(MaintainedFamily, Row)] = Seq(
+      IncrementalDedup.Family(rowsPerBand = 4) -> Row(col("doc_id") % 3 === 0,
+        Seq(Append(col("doc_id") % 3 === 1), Delete(col("doc_id") % 7 === 3 && col("doc_id") % 3 <= 1))),
+      IncrementalSig.simhash(4) -> Row(col("doc_id") % 3 === 0,
+        Seq(Append(col("doc_id") % 3 === 1), Delete(col("doc_id") % 7 === 3 && col("doc_id") % 3 <= 1))),
+      IncrementalSemantic.Family -> Row(col("vec_id") % 3 === 0,
+        Seq(Append(col("vec_id") % 3 === 1), Delete(col("vec_id") % 7 === 3 && col("vec_id") % 3 <= 1))),
+      // the IVF-SQ8 index has no delete
+      Similarity.IvfSq8Family() -> Row(col("vec_id") % 5 < 4, Seq(Append(col("vec_id") % 5 >= 4))))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    for ((f, row) <- cases) {
+      val src = f.source(spark, sf)
+      val dir = java.nio.file.Files.createTempDirectory(s"servegen-${f.name}").toString
+      try {
+        f.write(spark, dir, src.where(row.base), row.cap, IndexScenario.GateBuckets)
+        var held = row.base
+        row.ops.foreach { op =>
+          val m = IndexStatePublisher.current(dir)
+          val handle = f.answerAt(spark, dir, src, m)
+          val before = rows(handle)
+          op match {
+            case Append(d) =>
+              f.append(spark, dir, src.where(held || d), src.where(d), row.cap)
+              held = held || d
+            case Delete(p) => f.delete(spark, dir, src.where(p).select(col(f.id)))
+          }
+          assert(IndexStatePublisher.current(dir).gen > m.gen, s"${f.name} $op published nothing")
+          assert(rows(handle) == before, s"${f.name} $op: the handle read at gen ${m.gen} changed")
+          assert(rows(f.answer(spark, dir, src)) != before, s"${f.name} $op left the answer as it was")
+        }
+        assert(rows(f.answer(spark, dir, src)) == rows(IndexScenario.run(spark, sf, f, row)),
+          s"${f.name}: a fresh read differs from the runner's answer")
+      } finally {
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      }
     }
   }
 }

@@ -391,14 +391,13 @@ class LlmSpec extends AnyFunSuite {
     // collect_list M-step is the training fingerprint)
     val idxDir = java.nio.file.Files.createTempDirectory("ivfidx").toString
     try {
-      Similarity.writeIvfSq8Index(
-        Similarity.buildIvfSq8Index(spark, sf), idxDir)
-      val idx = Similarity.readIvfSq8Index(spark, idxDir)
-      val queries = graft.Tables.embeddings(spark, sf)
+      val e = graft.Tables.embeddings(spark, sf)
         .select(col("vec_id"), col("embedding"))
         .withColumn("nrm",
           sqrt(graft.functions.FloatVecDot(col("embedding"), col("embedding"))))
-        .filter(col("vec_id") < 50)
+      Similarity.writeIvfSq8Index(Similarity.buildIvfSq8IndexFrom(e, 16, 200), idxDir)
+      val idx = Similarity.readIvfSq8Index(spark, idxDir)
+      val queries = e.filter(col("vec_id") < 50)
       val plan = Similarity.ivfSq8KnnFromIndex(queries, idx)
         .queryExecution.optimizedPlan.toString
       assert(!plan.contains("collect_list"), "training M-step leaked into the serve plan")
@@ -414,13 +413,12 @@ class LlmSpec extends AnyFunSuite {
     // own passed embeddings.
     val idxDir = java.nio.file.Files.createTempDirectory("ivfnew").toString
     try {
-      Similarity.writeIvfSq8Index(
-        Similarity.buildIvfSq8Index(spark, sf), idxDir)
-      val idx = Similarity.readIvfSq8Index(spark, idxDir)
       val e = graft.Tables.embeddings(spark, sf)
         .select(col("vec_id"), col("embedding"))
         .withColumn("nrm",
           sqrt(graft.functions.FloatVecDot(col("embedding"), col("embedding"))))
+      Similarity.writeIvfSq8Index(Similarity.buildIvfSq8IndexFrom(e, 16, 200), idxDir)
+      val idx = Similarity.readIvfSq8Index(spark, idxDir)
       // a genuinely new vector: an indexed embedding under a FRESH id the
       // index has no row for
       val newQ = e.filter(col("vec_id") === 7L)

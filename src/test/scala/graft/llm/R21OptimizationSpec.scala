@@ -74,7 +74,7 @@ class R21OptimizationSpec extends AnyFunSuite {
         Map("bits" -> 32, "n_bands" -> 4, "n_buckets" -> 6)),
       ("semantic", dir => IncrementalSemantic.writeIndex(corpusE,
           DedupResolve.resolveClusters(IncrementalSemantic.corpusPairs(corpusE)), dir,
-          nBuckets = 5, nTables = 8, bits = 4),
+          nBuckets = 5, nTables = 8, bits = 4, pairs = Some(IncrementalSemantic.corpusPairs(corpusE))),
         Map("n_buckets" -> 5, "n_tables" -> 8, "bits" -> 4)),
       ("contam", dir => IncrementalContam.writeIndex(
           IncrementalContam.ContamIndex(bloom, grams, Seq((1L, 0, 7)).toDF("doc_id",

@@ -7,6 +7,8 @@ Reads `<dirA>/<id>_<sfxA>.txt` and `<dirB>/<id>_<sfxB>.txt`. Before
 comparing, it rewrites what changes on every run without being plan:
 expression ids (`#123`), lambda variable names (`lambda x_12`: a
 JVM-wide counter, so they shift with whatever ran earlier in the JVM),
+JVM lambda class names (`$$Lambda$6429/0x…`, likewise), object identity
+hashes (`ExactSumAgg@5bcaea6a`),
 `plan_id=N`, RDD ids (`RDD[N]`), index temp dirs
 (`/tmp/graft-<kind><digits>`) and the catalog table names derived from
 them (`graft_<kind>_<16 hex>`). Prints `<id>: identical` or a
@@ -21,6 +23,8 @@ import sys
 NORMALIZE = [
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"\b(lambda [a-z]+)_\d+"), r"\1_N"),
+    (re.compile(r"\$\$Lambda\$\d+/0x[0-9a-f]+"), "$$Lambda$N"),
+    (re.compile(r"([\w$]+)@[0-9a-f]{4,8}\b"), r"\1@H"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"/tmp/graft-([a-z-]+)\d+"), r"/tmp/graft-\1N"),
