@@ -60,10 +60,13 @@ object Dedup {
     */
   val AutoCap: Int = -1
 
-  private[llm] def resolveCap(cap: Int, expectedBucket: Double): Int =
+  /** `cap`, or under [[AutoCap]] the cap for `expectedBucket` — by name,
+    * so a corpus count behind it runs only when the cap is derived.
+    */
+  private[llm] def resolveCap(cap: Int, expectedBucket: => Double): Int =
     if (cap == AutoCap) LshCalibration.capFor(expectedBucket) else cap
 
-  /** Oversized-bucket guard for template skew: drop (k1, k2) buckets with
+  /** Oversized-bucket guard for template skew: drop `keys` buckets with
     * more than `cap` members before a bucket self-join. A bucket of m docs
     * emits m(m−1)/2 candidate pairs, so one boilerplate template shared by
     * 20% of a corpus turns "candidates ∝ true pairs" into ~n²/50 — capping
@@ -77,16 +80,39 @@ object Dedup {
     * adding one. Default [[NoBucketCap]] compiles to a no-op: the oracle
     * path is cap-free.
     */
-  private[llm] def capBuckets(df: DataFrame, cap: Int, k1: String, k2: String): DataFrame =
+  private def capBuckets(df: DataFrame, cap: Int, keys: Seq[String]): DataFrame =
     if (cap == NoBucketCap) df
     else {
       require(cap > 0,
         s"bucketCap must be positive or NoBucketCap (operators resolve AutoCap first), got $cap")
-      val w = Window.partitionBy(col(k1), col(k2))
+      val w = Window.partitionBy(keys.map(col): _*)
       df.withColumn("bn", count(lit(1)).over(w))
         .filter(col("bn") <= cap)
         .drop("bn")
     }
+
+  /** The banded candidate join every LSH operator and index runs: bucket
+    * rows (an `id` column plus the bucket `keys`) capped at `bucketCap`
+    * ([[capBuckets]]), then self-joined on the keys with `a.id < b.id`,
+    * as (a_id, b_id, extra...) — `extra` are projections over the joined
+    * `a.` / `b.` rows (a verify that needs no join back), one row per
+    * shared bucket, so callers dedup. Both sides carry the
+    * `shuffle_hash` hint: broadcasting a corpus-sized bucket table cannot
+    * scale (it only looks broadcastable on test data), and the shuffle
+    * form gives both sides IDENTICAL exchanges, which Spark dedups via
+    * ReusedExchange — one corpus scan, one signature pass.
+    */
+  private[graft] def candidatePairs(rows: DataFrame, keys: Seq[String], id: String,
+      bucketCap: Int, extra: Column*): DataFrame = {
+    val capped = capBuckets(rows, bucketCap, keys).hint("shuffle_hash")
+    capped.alias("a")
+      .join(capped.alias("b"), keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+        col(s"a.$id") < col(s"b.$id"))
+      .select(Seq(col(s"a.$id").as("a_id"), col(s"b.$id").as("b_id")) ++ extra: _*)
+  }
+
+  /** The band key of every banded signature table: (band, bsig). */
+  private[graft] val BandKeys = Seq("band", "bsig")
 
   /** Exact dedup by content hash: keep the smallest doc_id per distinct
     * text, report group size. One shuffle on a 128-bit key.
@@ -128,15 +154,11 @@ object Dedup {
        |    SELECT doc_id, unnest(${sqlShingles("text", 5)}) AS s FROM documents $docWhere)))
        |GROUP BY doc_id""".stripMargin
 
-  /** Shared banded self-join over MinHash signatures: k-hash signature →
-    * (band, band-signature) explode → equi-join within buckets, signature
+  /** Banded self-join over MinHash signatures: k-hash signature →
+    * (band, band-signature) explode → [[candidatePairs]], signature
     * riding along so the match-count estimate is computed directly on the
-    * joined rows — no join back to the signatures. The shuffle_hash hint
-    * matters twice over: broadcasting `bands` (bands rows per corpus doc)
-    * cannot scale — it only looks broadcastable on test data — and the
-    * shuffle form gives both sides IDENTICAL exchanges, which Spark dedups
-    * via ReusedExchange: one corpus scan, one signature pass. Output:
-    * (a_id, b_id, est) with est = fraction of matching minhashes.
+    * joined rows — no join back to the signatures. Output: (a_id, b_id,
+    * est) with est = fraction of matching minhashes.
     */
   private def bandedMinhashPairs(
       s: SparkSession,
@@ -158,18 +180,9 @@ object Dedup {
       sig: DataFrame,
       k: Int,
       rowsPerBand: Int,
-      bucketCap: Int): DataFrame = {
-    val bands = capBuckets(bandsOf(sig, k, rowsPerBand), bucketCap, "band", "bsig")
-      .hint("shuffle_hash")
-    val a = bands.alias("a")
-    val b = bands.alias("b")
-    a
-      .join(b, col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        sigEst(k).as("est"))
+      bucketCap: Int): DataFrame =
+    candidatePairs(bandsOf(sig, k, rowsPerBand), BandKeys, "doc_id", bucketCap, sigEst(k).as("est"))
       .distinct()
-  }
 
   /** The band explode of a (doc_id, sig) table — (doc_id, sig, band,
     * bsig), signature riding along for the est computation. Factored out
@@ -272,53 +285,65 @@ object Dedup {
 
   val simhashSql: String = simhashSqlWhere("")
 
-  /** SimHash near-dup pairs: band the 32-bit signature into `bands` equal
-    * slices; docs sharing any full band are candidates (pigeonhole: a pair
-    * at Hamming distance ≤ bands−1 MUST agree on at least one band, so the
-    * guarantee is complete for distance < bands and approximate above —
-    * the shipped 4×8-bit banding covers ≤ 3 exactly and 4–7
-    * probabilistically; `bands = 8` buys the full ≤ 7 guarantee at the
-    * cost of coarser 4-bit buckets). Verify is exact Hamming distance over
-    * the full signature. The d02 join discipline applies unchanged: the
-    * signature rides through the band explode so the verify needs no join
-    * back, `shuffle_hash` keeps the corpus-sized band table out of a
-    * broadcast and lets the two identical exchanges dedup via
-    * ReusedExchange (one corpus scan, one signature aggregate).
-    * Everything is integer arithmetic — bit-identical in any engine.
+  /** Band explode of a (doc_id, sig) fixed-width bit signature (SimHash
+    * 32, pHash 60) into `nBands` slices of `bits / nBands` bits, as
+    * (doc_id, sig, band, bsig) — the one band key of the batch operators
+    * and the maintained index, so a persisted band table joins a rerun's
+    * by construction.
+    */
+  private[graft] def bandsOfSig(sigs: DataFrame, bits: Int, nBands: Int): DataFrame = {
+    require(bits % nBands == 0, s"bands=$nBands must divide the $bits-bit signature")
+    val width = bits / nBands
+    val mask = (1L << width) - 1
+    // col("*") lets caller-side evidence columns (e.g. the ledger
+    // rerun's epoch tag) ride through the explode
+    sigs
+      .select(col("*"),
+        posexplode(array((0 until nBands).map(b =>
+          shiftright(col("sig"), b * width).bitwiseAND(lit(mask))): _*)))
+      .withColumnRenamed("pos", "band")
+      .withColumnRenamed("col", "bsig")
+  }
+
+  /** The verify of the bit-signature families: exact Hamming distance
+    * over the full signatures the joined band rows carry — a projection
+    * of the join.
+    */
+  private[graft] def hamming: Column =
+    bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).cast("int").as("hamming")
+
+  private[graft] def withinHamming(cand: DataFrame, maxHamming: Int): DataFrame =
+    cand.filter(col("hamming") <= maxHamming).distinct()
+
+  /** Banded Hamming pairs over a (doc_id, sig) fixed-width bit signature
+    * table: [[bandsOfSig]] → [[candidatePairs]] with the signature riding
+    * along → exact Hamming verify ≤ `maxHamming` → distinct, as (a_id,
+    * b_id, hamming). Pigeonhole: a pair at Hamming distance < `nBands`
+    * shares at least one full band, so banding is complete below
+    * `nBands` and approximate above. Everything is integer arithmetic —
+    * bit-identical in any engine.
+    */
+  private[graft] def hammingPairs(sigs: DataFrame, bits: Int, nBands: Int,
+      maxHamming: Int, bucketCap: Int = NoBucketCap): DataFrame =
+    withinHamming(
+      candidatePairs(bandsOfSig(sigs, bits, nBands), BandKeys, "doc_id", bucketCap, hamming),
+      maxHamming)
+
+  /** SimHash near-dup pairs: [[hammingPairs]] over the 32-bit
+    * [[simhash]] in `bands` equal slices (the shipped 4×8-bit banding
+    * covers Hamming ≤ 3 exactly and 4–7 probabilistically; `bands = 8`
+    * buys the full ≤ 7 guarantee at the cost of coarser 4-bit buckets).
+    * [[AutoCap]] sizes the cap from the corpus count: simhash buckets are
+    * width-bit values, E[bucket] = n / 2^width.
     */
   def simhashPairs(
       s: SparkSession,
       dir: String,
       bands: Int = 4,
       maxHamming: Int = 7,
-      bucketCap: Int = NoBucketCap): DataFrame = {
-    require(32 % bands == 0, s"bands=$bands must divide the 32-bit signature")
-    val width = 32 / bands
-    val mask = (1L << width) - 1
-    // simhash buckets are width-bit values: E[bucket] = n / 2^width
-    val capEff =
-      if (bucketCap == AutoCap)
-        LshCalibration.capFor(
-          Tables.documents(s, dir).count().toDouble / (1L << width))
-      else bucketCap
-    val banded = capBuckets(
-      simhash(s, dir)
-        .select(col("doc_id"), col("simhash"),
-          posexplode(array((0 until bands).map(b =>
-            shiftright(col("simhash"), b * width).bitwiseAND(lit(mask))): _*)))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "bsig"),
-      capEff, "band", "bsig")
-      .hint("shuffle_hash")
-    val a = banded.alias("a")
-    val b = banded.alias("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("int").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
+      bucketCap: Int = NoBucketCap): DataFrame =
+    hammingPairs(simhash(s, dir).withColumnRenamed("simhash", "sig"), 32, bands, maxHamming,
+      resolveCap(bucketCap, Tables.documents(s, dir).count().toDouble / (1L << (32 / bands))))
 
   def simhashPairsSqlFor(bands: Int, maxHamming: Int, bucketCap: Int = NoBucketCap,
       docWhere: String = ""): String = {

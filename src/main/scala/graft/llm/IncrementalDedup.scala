@@ -152,7 +152,7 @@ object IncrementalDedup {
 
   /** The band table: the LSH probe surface (see class doc). */
   private val Bands = IndexLifecycle.Probe("graft_inc_", "bands", "bandcounts", "doc_id",
-    Seq("band", "bsig"), "doc_id BIGINT, sig ARRAY<BIGINT>, band INT, bsig STRING",
+    Dedup.BandKeys, "doc_id BIGINT, sig ARRAY<BIGINT>, band INT, bsig STRING",
     "band INT, bsig STRING")
 
   private def hashTable(loc: String) = IndexStore.tableFor("graft_inc_hash_", loc)
@@ -425,7 +425,7 @@ object IncrementalDedup {
       Dedup.bandsOf(sigsOf(docsWithEpoch, k), k, m.geom(dir, "rows_per_band"))
         .join(docsWithEpoch.select(col("doc_id"), col("epoch")), Seq("doc_id")),
       Bands)
-    val cand = IndexLifecycle.selfPairs(b, b.hint("shuffle_hash"), Bands,
+    val cand = Dedup.candidatePairs(b, Bands.keys, Bands.id, Dedup.NoBucketCap,
         Dedup.sigEst(k).as("est"))
       .distinct()
       .transform(Ckpt.eager)

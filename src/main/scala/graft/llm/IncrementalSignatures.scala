@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.runtime.{Ckpt, IndexLifecycle, IndexManifest, IndexStatePublisher}
@@ -35,55 +35,10 @@ import graft.llm.IndexScenario.{Append, Delete, Row}
   */
 object IncrementalSig {
 
-  /** Band explode of a (doc_id, sig) fixed-width signature: the same
-    * width-bit slicing [[Dedup.simhashPairs]] and
-    * [[Multimodal.phashPairsFromSigs]] band with — band-key equality
-    * across runs is what makes the persisted band table joinable.
-    */
-  private[graft] def bandsOfSig(sigs: DataFrame, bits: Int, nBands: Int): DataFrame = {
-    require(bits % nBands == 0, s"bands=$nBands must divide the $bits-bit signature")
-    val width = bits / nBands
-    val mask = (1L << width) - 1
-    // col("*") lets caller-side evidence columns (e.g. the ledger
-    // rerun's epoch tag) ride through the explode
-    sigs
-      .select(col("*"),
-        posexplode(array((0 until nBands).map(b =>
-          shiftright(col("sig"), b * width).bitwiseAND(lit(mask))): _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bsig")
-  }
-
   /** The band table: the probe surface, bucketed on (band, bsig). */
   private val Bands = IndexLifecycle.Probe("graft_sig_", "bands", "bandcounts", "doc_id",
-    Seq("band", "bsig"), "doc_id BIGINT, sig BIGINT, band INT, bsig BIGINT",
+    Dedup.BandKeys, "doc_id BIGINT, sig BIGINT, band INT, bsig BIGINT",
     "band INT, bsig BIGINT")
-
-  /** The verify predicate: exact Hamming distance over the full
-    * signatures the joined band rows carry — a projection of the join.
-    */
-  private def hamming: Column =
-    bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).cast("int").as("hamming")
-
-  private def withinHamming(cand: DataFrame, maxHamming: Int): DataFrame =
-    cand.filter(col("hamming") <= maxHamming).distinct()
-
-  /** The banded Hamming self-join over a (doc_id, sig) table — the
-    * "yesterday's run" that produces the persisted corpus-internal pair
-    * artifact. Identical semantics to the shipped family operators
-    * (banded candidates, exact full-signature Hamming verify, a < b
-    * normalized, distinct); `bucketCap` is the d25 production posture —
-    * fixed-width bit signatures have O(n/2^width) bucket populations,
-    * so an UNCAPPED band join is quadratic at corpus scale (the d22
-    * measured cost) and every production run caps.
-    */
-  private[graft] def buildPairs(sigs: DataFrame, bits: Int, nBands: Int,
-      maxHamming: Int, bucketCap: Int = Dedup.NoBucketCap): DataFrame = {
-    val banded = Dedup.capBuckets(
-        bandsOfSig(sigs, bits, nBands), bucketCap, "band", "bsig")
-      .hint("shuffle_hash")
-    withinHamming(IndexLifecycle.selfPairs(banded, banded, Bands, hamming), maxHamming)
-  }
 
   /** The persisted artifacts: the bucketed band table (probe surface),
     * its per-bucket population counts (the cap's delta-side evidence —
@@ -100,7 +55,7 @@ object IncrementalSig {
       bits: Int, nBands: Int, nBuckets: Int = 32,
       capLedger0: Option[DataFrame] = None): Unit = {
     val (writes, entries) = IndexLifecycle.freshIndex(corpusSigs.sparkSession, dir, Bands,
-      bandsOfSig(corpusSigs, bits, nBands), nBuckets, 0L, Map("pairs" -> pairs), None, capLedger0)
+      Dedup.bandsOfSig(corpusSigs, bits, nBands), nBuckets, 0L, Map("pairs" -> pairs), None, capLedger0)
     IndexLifecycle.publishGen0(dir, writes, entries, Seq("pairs") ++ capLedger0.map(_ => "capledger"),
       Map("bits" -> bits, "n_bands" -> nBands, "n_buckets" -> nBuckets))
   }
@@ -163,7 +118,7 @@ object IncrementalSig {
     val survSigs = readIndexAt(s, dir, m).bands.select(col("doc_id"), col("sig")).distinct()
       .transform(Ckpt.eager)
     val (pairs, over0) = buildPairsWithLedger(survSigs, bits, nBands, maxHamming, bucketCap)
-    IndexLifecycle.freshIndex(s, dir, Bands, bandsOfSig(survSigs, bits, nBands),
+    IndexLifecycle.freshIndex(s, dir, Bands, Dedup.bandsOfSig(survSigs, bits, nBands),
       m.geom(dir, "n_buckets"), g, Map("pairs" -> pairs.transform(Ckpt.eager)), None, Some(over0))
   }
 
@@ -184,15 +139,15 @@ object IncrementalSig {
     }
 
   /** The CAPPED build arm with its over-cap evidence (the epoch-0 cap
-    * ledger): same semantics as [[buildPairs]] at a finite cap, but the
-    * suppressed bucket set is returned for persistence
+    * ledger): same semantics as [[Dedup.hammingPairs]] at a finite cap,
+    * but the suppressed bucket set is returned for persistence
     * ([[IndexLifecycle.overCap]]).
     */
   private[graft] def buildPairsWithLedger(sigs: DataFrame, bits: Int, nBands: Int,
       maxHamming: Int, bucketCap: Int): (DataFrame, DataFrame) = {
     require(bucketCap != Dedup.NoBucketCap, "ledger build requires a finite cap")
-    val over = IndexLifecycle.overCap(bandsOfSig(sigs, bits, nBands), bucketCap, Bands)
-    (buildPairs(sigs, bits, nBands, maxHamming, bucketCap), over)
+    val over = IndexLifecycle.overCap(Dedup.bandsOfSig(sigs, bits, nBands), bucketCap, Bands)
+    (Dedup.hammingPairs(sigs, bits, nBands, maxHamming, bucketCap), over)
   }
 
   /** One MAINTAINED append (the d46 lifecycle for the signature
@@ -217,9 +172,10 @@ object IncrementalSig {
       maxHamming: Int, bucketCap: Int = Dedup.NoBucketCap): DataFrame =
     IndexLifecycle.mutate(dir) { m =>
       val idx = readIndexAt(s, dir, m)
-      val db0 = bandsOfSig(deltaSigs, idx.bits, idx.nBands).transform(Ckpt.eager)
+      val db0 = Dedup.bandsOfSig(deltaSigs, idx.bits, idx.nBands).transform(Ckpt.eager)
       val (cb, db, over) = IndexLifecycle.capDelta(idx.bands, idx.bandCounts, db0, bucketCap, Bands)
-      val newPairs = withinHamming(IndexLifecycle.deltaCandidates(cb, db, Bands, hamming), maxHamming)
+      val newPairs = Dedup.withinHamming(
+          IndexLifecycle.deltaCandidates(cb, db, Bands, Dedup.hamming), maxHamming)
         .transform(Ckpt.eager)
       val (next, _) = IndexLifecycle.appendWriteBack(s, dir, m, Bands, db0, over,
         Map("pairs" -> newPairs), None)
@@ -252,28 +208,28 @@ object IncrementalSig {
       sigsWithEpoch: DataFrame, maxHamming: Int): DataFrame = {
     val m = IndexStatePublisher.current(dir)
     val banded = IndexLifecycle.ledgerAdmitted(s, dir, m,
-      bandsOfSig(sigsWithEpoch.select(col("doc_id"), col("sig"), col("epoch")),
+      Dedup.bandsOfSig(sigsWithEpoch.select(col("doc_id"), col("sig"), col("epoch")),
         m.geom(dir, "bits"), m.geom(dir, "n_bands")),
       Bands)
-    withinHamming(
-      IndexLifecycle.selfPairs(banded, banded.hint("shuffle_hash"), Bands, hamming), maxHamming)
+    Dedup.withinHamming(
+      Dedup.candidatePairs(banded, Bands.keys, Bands.id, Dedup.NoBucketCap, Dedup.hamming),
+      maxHamming)
   }
 
   /** The bit-signature family at (`bits`, `nBands`, `maxHamming`), as
     * the lifecycle gates run it ([[IndexScenario]]): `sigs` derives the
-    * (doc_id, sig) rows of a gate's input, checkpointed ONCE — the
-    * signature kernel (SimHash, or pHash's image decode + DCT) otherwise
-    * re-ran for every band, count and pair write of every step (guide
-    * §1.2). A capped write is ledgered; the answer is a generation's
-    * tombstone-filtered pair list.
+    * (doc_id, sig) rows of a gate's input, which every band, count and
+    * pair write of every step re-reads. A capped write is ledgered; the
+    * answer is a generation's tombstone-filtered pair list.
     */
   final class Family(val name: String, bits: Int, nBands: Int, maxHamming: Int,
       sigs: (SparkSession, String) => DataFrame) extends MaintainedFamily {
     val id = "doc_id"
-    def source(s: SparkSession, dir: String): DataFrame = sigs(s, dir).transform(Ckpt.eager)
+    def source(s: SparkSession, dir: String): DataFrame = sigs(s, dir)
     def write(s: SparkSession, dir: String, base: DataFrame, cap: Int, nBuckets: Int): Unit =
       if (cap == Dedup.NoBucketCap)
-        writeIndex(base, buildPairs(base, bits, nBands, maxHamming), dir, bits, nBands, nBuckets)
+        writeIndex(base, Dedup.hammingPairs(base, bits, nBands, maxHamming), dir, bits, nBands,
+          nBuckets)
       else {
         val (pairs, over0) = buildPairsWithLedger(base, bits, nBands, maxHamming, cap)
         writeIndex(base, pairs, dir, bits, nBands, nBuckets, Some(over0))
@@ -289,9 +245,7 @@ object IncrementalSig {
     * empty-text docs dropped.
     */
   private[graft] def simhash(bands: Int): Family = new Family("simhash", 32, bands, 7, (s, dir) =>
-    Tables.documents(s, dir)
-      .select(col("doc_id"), graft.functions.SimHashSig(col("text"), 32).as("sig"))
-      .where(col("sig") =!= lit(graft.functions.SimHashSig.Empty)))
+    Dedup.simhash(s, dir).withColumnRenamed("simhash", "sig"))
 
   /** d42: incremental SimHash near-dup pairs at d12's grid point
     * (32-bit signature, 4 bands, Hamming ≤ 7). Corpus = the 80% doc_id
@@ -400,11 +354,15 @@ object IncrementalSig {
     * ([[Multimodal.phashPairsSqlFor]]), which also re-proves banding
     * loses nothing through the persistence seam). Corpus = the 80%
     * doc_id split, appended with the 20% through the maintained index.
+    * The signatures are checkpointed once: the windowed md5 vote per
+    * payload is the expensive kernel every step would otherwise re-run
+    * (sf0.1 on 4 vCPUs: m08 20% faster checkpointed; SimHash's codegen'd
+    * kernel gained under 10% from it, so its gates re-run the kernel).
     */
   def phashAppend(s: SparkSession, dir: String): DataFrame =
     IndexScenario.run(s, dir,
       new Family("phash", 60, 6, 5, (s, dir) =>
-        Multimodal.perceptualHash(Multimodal.mediaTable(s, dir)).toDF().withColumnRenamed("phash", "sig")),
+        Multimodal.perceptualHash(Multimodal.mediaTable(s, dir)).toDF().transform(Ckpt.eager)),
       Row(col("doc_id") % 5 < 4, Seq(Append(col("doc_id") % 5 >= 4))))
 
   val phashAppendSql: String = Multimodal.phashPairsSqlFor(5)
@@ -435,10 +393,6 @@ object IncrementalSemantic {
   private val Bits = 4
   private val MinCos = 0.35
 
-  private def withNrm(emb: DataFrame): DataFrame =
-    emb.withColumn("nrm",
-      sqrt(graft.functions.FloatVecDot(col("embedding"), col("embedding"))))
-
   private[graft] def withSigs(e: DataFrame,
       nTables: Int = NTables, bits: Int = Bits): DataFrame =
     e.withColumn("sigs",
@@ -459,21 +413,22 @@ object IncrementalSemantic {
     Seq("table_id", "bucket"), "vec_id BIGINT, table_id INT, bucket INT",
     "table_id INT, bucket INT")
 
-  /** The bucket self-join over `buckets` + the exact-cosine verify over
-    * `e` (the same candidate/verify ladder as [[Similarity.signLshPairs]]
-    * at explicit bits).
+  /** The bucket candidate join ([[Dedup.candidatePairs]] at `bucketCap`)
+    * over `buckets`, deduped, + the exact-cosine verify over `e`.
     */
-  private def verifiedPairs(e: DataFrame, buckets0: DataFrame, minCos: Double): DataFrame = {
-    val buckets = buckets0.hint("shuffle_hash")
+  private def verifiedPairs(e: DataFrame, buckets: DataFrame, minCos: Double,
+      bucketCap: Int): DataFrame =
     Similarity.verifyCosineOn(e.select(col("vec_id"), col("embedding"), col("nrm")),
-      IndexLifecycle.selfPairs(buckets, buckets, Buckets).distinct(), minCos)
-  }
+      Dedup.candidatePairs(buckets, Buckets.keys, Buckets.id, bucketCap).distinct(), minCos)
 
-  /** Yesterday's run: bucket self-join + exact-cosine verify over the
-    * corpus at the index's geometry.
+  /** The sign-LSH pair ladder over a signature frame `e` (vec_id,
+    * embedding, nrm, sigs — [[withSigs]]): bucket candidates under
+    * `bucketCap`, cosine-verified. Yesterday's run of the index, and
+    * [[Similarity.signLshPairs]] at its resolved bits and cap.
     */
-  private[graft] def corpusPairs(e: DataFrame, minCos: Double = MinCos): DataFrame =
-    verifiedPairs(e, bucketsOf(e), minCos)
+  private[graft] def corpusPairs(e: DataFrame, minCos: Double = MinCos,
+      bucketCap: Int = Dedup.NoBucketCap): DataFrame =
+    verifiedPairs(e, bucketsOf(e), minCos, bucketCap)
 
   final case class SemIndex(buckets: DataFrame, labels: DataFrame, pairs: DataFrame,
       bucketCounts: DataFrame, nTables: Int, bits: Int, nBuckets: Int)
@@ -566,7 +521,8 @@ object IncrementalSemantic {
     require(bucketCap > 0, s"ledger build requires a finite positive cap, got $bucketCap")
     val buckets0 = bucketsOf(e)
     val over = IndexLifecycle.overCap(buckets0, bucketCap, Buckets)
-    (verifiedPairs(e, buckets0.join(over, Buckets.keys, "left_anti"), minCos), over)
+    (verifiedPairs(e, buckets0.join(over, Buckets.keys, "left_anti"), minCos, Dedup.NoBucketCap),
+      over)
   }
 
   /** One MAINTAINED append on the semantic index (the d46/d51 lifecycle
@@ -637,7 +593,7 @@ object IncrementalSemantic {
     val e = withSigs(vecsWithEpoch, m.geom(dir, "n_tables"), m.geom(dir, "bits"))
       .transform(Ckpt.eager)
     val b = IndexLifecycle.ledgerAdmitted(s, dir, m, bucketsOf(e, "epoch"), Buckets)
-    val cand = IndexLifecycle.selfPairs(b, b.hint("shuffle_hash"), Buckets).distinct()
+    val cand = Dedup.candidatePairs(b, Buckets.keys, Buckets.id, Dedup.NoBucketCap).distinct()
     val verified = Similarity.verifyCosineOn(
       e.select(col("vec_id"), col("embedding"), col("nrm")), cand, minCos)
     DedupResolve.keptFromLabels(
@@ -696,7 +652,7 @@ object IncrementalSemantic {
     val name = "semantic"
     val id = "vec_id"
     def source(s: SparkSession, dir: String): DataFrame =
-      withNrm(Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))).transform(Ckpt.eager)
+      Similarity.vecs(s, dir).transform(Ckpt.eager)
     override def capFor(src: DataFrame, cap: Int): Int =
       if (cap == Dedup.AutoCap) semLedgerCap(src.count()) else cap
     def write(s: SparkSession, dir: String, base: DataFrame, cap: Int, nBuckets: Int): Unit = {

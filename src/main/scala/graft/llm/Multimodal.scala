@@ -149,7 +149,7 @@ object Multimodal {
       |FROM documents""".stripMargin
 
   /** Perceptual fingerprint of one media payload. */
-  case class MediaSig(doc_id: Long, phash: Long)
+  case class MediaSig(doc_id: Long, sig: Long)
 
   /** 60-bit perceptual hash over the payload byte stream: a SimHash vote
     * over every overlapping 4-byte window (WITH multiplicity — windows are
@@ -246,8 +246,8 @@ object Multimodal {
     * oracle CTE — bit-identical derivations). This is the ×500 lesson made
     * a computation: at 2.55M docs the measured 21 chance pairs at h = 5
     * matched the n²-model, and the ONLY lever that removes them is the
-    * Hamming threshold itself — `minBands` provably cannot (see
-    * [[phashPairsFromSigs]]). With the default budget (2^0 = one expected
+    * Hamming threshold itself (requiring more shared bands provably
+    * cannot; see [[phashPairsMin2]]). With the default budget (2^0 = one expected
     * chance pair corpus-wide) the threshold holds at 5 through ~620k docs,
     * tightens to 4 at ~2.1M and to 3 at ~17M — each step trading recall at
     * the dropped Hamming distance for an ~11× chance-rate cut, the
@@ -262,32 +262,30 @@ object Multimodal {
   }
 
   /** Perceptual-hash near-dup pairs over the media corpus: fingerprints
-    * from [[perceptualHash]], banded into `bands` equal slices of the
-    * 60-bit signature, bucket self-join, exact Hamming verify ≤
-    * `maxHamming`. With `maxHamming ≤ bands − minBands` the pigeonhole
-    * makes banding LOSSLESS — h bit errors corrupt at most h bands, so
-    * every pair within the threshold shares at least `bands − maxHamming`
-    * full bands — and the banded join returns exactly the all-pairs
-    * result (which is what the oracle computes).
+    * from [[perceptualHash]] through the shared banded Hamming builder
+    * ([[Dedup.hammingPairs]]: `bands` equal slices of the 60-bit
+    * signature, bucket self-join, exact Hamming verify ≤ `maxHamming`).
+    * `maxHamming < bands` is required: the pigeonhole then makes banding
+    * LOSSLESS — h bit errors corrupt at most h bands, so every pair
+    * within the threshold shares at least `bands − maxHamming` full
+    * bands — and the banded join returns exactly the all-pairs result
+    * (which is what the oracle computes).
     *
     * `maxHamming = AutoHamming` (the default) derives the threshold from
     * the corpus count ([[hammingFor]]): one cheap count, then the largest
     * h whose expected chance-collision yield stays under one pair. The
-    * Hamming threshold is the ONLY chance-pair lever this operator has —
-    * see the `minBands` honesty note below — so the auto default is what
-    * keeps a corpus-scale run out of the measured 60-bit birthday regime
-    * (21 chance pairs at 2.55M docs under a fixed h = 5, SCALING.md §3d).
+    * Hamming threshold is the ONLY chance-pair lever this operator has,
+    * so the auto default is what keeps a corpus-scale run out of the
+    * measured 60-bit birthday regime (21 chance pairs at 2.55M docs
+    * under a fixed h = 5, SCALING.md §3d).
     *
     * The all-pairs equality holds ONLY at the default
     * `bucketCap = NoBucketCap`: a finite cap drops every pair whose shared
     * bands all sit in over-cap buckets (the deliberate skew trade-off of
-    * [[Dedup.capBuckets]]) — capped runs are a strict SUBSET of the
+    * [[Dedup.candidatePairs]]) — capped runs are a strict SUBSET of the
     * all-pairs result and must not be compared against the all-pairs
-    * oracle. The d02/d12 join discipline applies unchanged: the signature
-    * rides the band explode (no join back), `shuffle_hash` keeps
-    * corpus-sized band tables out of broadcasts and dedups the two
-    * identical exchanges via ReusedExchange. Output pairs feed
-    * [[DedupResolve.resolveClusters]] like every other pair signal.
+    * oracle. Output pairs feed [[DedupResolve.resolveClusters]] like
+    * every other pair signal.
     */
   def phashPairs(
       s: SparkSession,
@@ -295,77 +293,14 @@ object Multimodal {
       bands: Int = 6,
       maxHamming: Int = AutoHamming,
       bucketCap: Int = Dedup.NoBucketCap,
-      minBands: Int = 1,
-      allowLossy: Boolean = false,
       budgetLog2: Int = 0): DataFrame = {
     val mh =
       if (maxHamming == AutoHamming)
         hammingFor(Tables.documents(s, dir).count(), budgetLog2)
       else maxHamming
-    phashPairsFromSigs(perceptualHash(mediaTable(s, dir)).toDF(),
-      bands, mh, bucketCap, minBands, allowLossy)
-  }
-
-  /** [[phashPairs]] over an explicit (doc_id, phash) signature table —
-    * the seam the synthetic-signature specs drive.
-    *
-    * `minBands` honesty note (the round-10 post-mortem): requiring ≥
-    * `minBands` DISTINCT shared bands after the Hamming verify is
-    * provably a NO-OP everywhere the pigeonhole `require` admits it — any
-    * pair with hamming ≤ maxHamming ≤ bands − minBands already shares ≥
-    * bands − maxHamming ≥ minBands bands, chance collisions included
-    * (a chance pair IS a pair within the Hamming threshold; nothing
-    * post-verify can tell it apart). The ×500 A/B confirmed it: minBands
-    * 1 vs 2 at h ≤ 4 produced identical 403 198-pair outputs, and the
-    * chance-pair removal that round credited to the guard actually came
-    * from tightening maxHamming 5 → 4 — which [[AutoHamming]] now does by
-    * derivation. `minBands` therefore stays only as an explicitly LOSSY
-    * knob: with `allowLossy = true` it may exceed `bands − maxHamming`,
-    * dropping every pair whose bit errors spread across more than
-    * `bands − minBands` bands — candidate-volume suppression that
-    * sacrifices spread-error true pairs along with everything else. The
-    * recall loss is real and undifferentiated; prefer the Hamming lever.
-    */
-  def phashPairsFromSigs(
-      sigs: DataFrame,
-      bands: Int,
-      maxHamming: Int,
-      bucketCap: Int = Dedup.NoBucketCap,
-      minBands: Int = 1,
-      allowLossy: Boolean = false): DataFrame = {
-    require(60 % bands == 0, s"bands=$bands must divide the 60-bit signature")
-    require(minBands >= 1, s"minBands must be >= 1, got $minBands")
-    require(allowLossy || maxHamming <= bands - minBands,
-      s"banding is pigeonhole-complete only for maxHamming <= bands - minBands " +
-        s"($maxHamming > $bands - $minBands); in that region minBands cannot drop " +
-        "any pair — pass allowLossy=true only for the documented recall trade")
-    val width = 60 / bands
-    val mask = (1L << width) - 1
-    val banded = Dedup.capBuckets(
-      sigs
-        .select(col("doc_id"), col("phash"),
-          posexplode(array((0 until bands).map(b =>
-            shiftright(col("phash"), b * width).bitwiseAND(lit(mask))): _*)))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "bsig"),
-      bucketCap, "band", "bsig")
-      .hint("shuffle_hash")
-    val a = banded.alias("a")
-    val b = banded.alias("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        col("a.band").as("band"),
-        bit_count(col("a.phash").bitwiseXOR(col("b.phash"))).cast("int").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      // one row per shared (band, bsig); the >= minBands cut is inert in
-      // the pigeonhole region (every surviving pair shares >= bands -
-      // maxHamming bands by construction) and only drops rows in the
-      // allowLossy posture — see the scaladoc honesty note
-      .groupBy(col("a_id"), col("b_id"), col("hamming"))
-      .agg(countDistinct(col("band")).as("nb"))
-      .filter(col("nb") >= minBands)
-      .select(col("a_id"), col("b_id"), col("hamming"))
+    require(mh < bands,
+      s"banding is pigeonhole-complete only for maxHamming < bands ($mh >= $bands)")
+    Dedup.hammingPairs(perceptualHash(mediaTable(s, dir)).toDF(), 60, bands, mh, bucketCap)
   }
 
   /** DuckDB mirror of [[phashPairs]] (at the default `NoBucketCap` only —
@@ -421,19 +356,18 @@ object Multimodal {
 
   val phashPairsH3Sql: String = phashPairsSqlFor(3)
 
-  /** m04: minBands = 2 at Hamming ≤ 4 against the banding-independent
-    * all-pairs oracle at maxHamming = 4. HONESTY CORRECTION (round 11):
-    * in this pigeonhole region the cut is provably inert — every pair at
-    * hamming ≤ 4 shares ≥ 2 of 6 bands, chance collisions included — so
-    * this gate pins only that the nb plumbing drops NOTHING here (a
-    * groupBy/countDistinct regression that over-drops would fail it);
-    * the direction where minBands CAN drop rows is spec-covered on
-    * synthetic signatures in the allowLossy posture (LlmSpec). The
-    * chance-collision protection the round-10 docs credited to this knob
-    * actually lives in the Hamming threshold — see [[AutoHamming]]/m05.
+  /** m04: 6 bands at Hamming ≤ 4 against the banding-independent
+    * all-pairs oracle at maxHamming = 4. Every pair at hamming ≤ 4
+    * shares ≥ 2 of the 6 bands, chance collisions included, so the
+    * distinct over the per-band join rows must fold each such pair —
+    * found in 2 to 6 bands — into one row. The gate is named for a
+    * retired "at least 2 shared bands" knob: a cut on shared bands after
+    * the Hamming verify is provably inert in the pigeonhole region, and the
+    * chance-collision protection it was once credited with lives in the
+    * Hamming threshold — see [[AutoHamming]]/m05.
     */
   def phashPairsMin2(s: SparkSession, dir: String): DataFrame =
-    phashPairs(s, dir, bands = 6, maxHamming = 4, minBands = 2)
+    phashPairs(s, dir, bands = 6, maxHamming = 4)
 
   val phashPairsMin2Sql: String = phashPairsSqlFor(4)
 

@@ -65,7 +65,7 @@ object Similarity {
   /** The (vec_id, embedding, nrm) vector table every kNN operator starts
     * from.
     */
-  private def vecs(s: SparkSession, dir: String): DataFrame =
+  private[llm] def vecs(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"))
       .withColumn("nrm", normCol)
@@ -1082,28 +1082,10 @@ object Similarity {
     val bitsEff =
       if (bits == AutoBits) LshCalibration.bitsFor(n, targetBucket, minBits)
       else bits
-    val capEff =
-      if (bucketCap == Dedup.AutoCap)
-        LshCalibration.capFor(n.toDouble / (1L << bitsEff))
-      else bucketCap
     // referenced by the bucket explode AND both verify sides
-    val e = vecs(s, dir)
-      .withColumn("sigs", graft.functions.SignLshBuckets(col("embedding"), nTables, bitsEff))
-      .transform(Ckpt.eager)
-    val buckets = Dedup.capBuckets(
-      e.select(col("vec_id"), posexplode(col("sigs")))
-        .withColumnRenamed("pos", "table_id")
-        .withColumnRenamed("col", "bucket"),
-      capEff, "table_id", "bucket")
-      .hint("shuffle_hash")
-    val a = buckets.alias("a")
-    val b = buckets.alias("b")
-    val pairIds = a
-      .join(b, col("a.table_id") === col("b.table_id") &&
-        col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-      .distinct()
-    verifyCosineOn(e.drop("sigs"), pairIds, minCos)
+    val e = IncrementalSemantic.withSigs(vecs(s, dir), nTables, bitsEff).transform(Ckpt.eager)
+    IncrementalSemantic.corpusPairs(e, minCos,
+      Dedup.resolveCap(bucketCap, n.toDouble / (1L << bitsEff)))
   }
 
   /** DuckDB mirror of [[signLshPairs]] (same plane derivation as
@@ -1211,13 +1193,8 @@ object Similarity {
     // the checkpoint materializes scan+norm+signature ONCE, not per branch
     // — eagerly: lazily, the broadcast (qb, qv) and shuffle (buckets,
     // corpus) branches raced to compute the same cached partitions
-    val e = vecs(s, dir)
-      .withColumn("sigs", graft.functions.SignLshBuckets(col("embedding"), nTables, bits))
-      .transform(Ckpt.eager)
-    val buckets = e.select(col("vec_id"), col("embedding"), col("nrm"),
-      posexplode(col("sigs")))
-      .withColumnRenamed("pos", "table_id")
-      .withColumnRenamed("col", "bucket")
+    val e = IncrementalSemantic.withSigs(vecs(s, dir), nTables, bits).transform(Ckpt.eager)
+    val buckets = IncrementalSemantic.bucketsOf(e, "embedding", "nrm")
     val qb = buckets.filter(col("vec_id") < 50)
       .select(col("vec_id").as("qid"),
         col("table_id").as("q_table"), col("bucket").as("q_bucket"))

@@ -85,18 +85,28 @@ object SpanDedup {
     */
   private def dupPositions(docs: DataFrame, k: Int): DataFrame = {
     require(k >= 2, s"minTokens must be >= 2, got $k")
-    val grams = docs
-      .select(col("doc_id"), Hashing.tokens(col("text")).as("t"))
-      .where(size(col("t")) >= k)
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(1), size(col("t")) - (k - 1)),
-          i => Hashing.hash60(concat_ws(" ", slice(col("t"), i, lit(k)))))))
-      .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("gk"))
-      .transform(graft.runtime.Ckpt.eager)
+    val grams = gramPositions(docs, k).transform(graft.runtime.Ckpt.eager)
     val dup = grams.groupBy(col("gk")).count().where(col("count") > 1)
       .select(col("gk"))
     grams.join(dup, "gk").select(col("doc_id"), col("pos"))
   }
+
+  /** The 60-bit [[Hashing.hash60]] key of every `k`-token window of the
+    * token-array column `t`, in window order (entry i starts at token i).
+    */
+  private def gramKeys(k: Int): Column =
+    transform(sequence(lit(1), size(col("t")) - (k - 1)),
+      i => Hashing.hash60(concat_ws(" ", slice(col("t"), i, lit(k)))))
+
+  /** (doc_id, pos, gk): every `k`-gram of the docs with ≥ k tokens, at
+    * its 1-based start position.
+    */
+  private def gramPositions(docs: DataFrame, k: Int): DataFrame =
+    docs
+      .select(col("doc_id"), Hashing.tokens(col("text")).as("t"))
+      .where(size(col("t")) >= k)
+      .select(col("doc_id"), posexplode(gramKeys(k)))
+      .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("gk"))
 
   /** DuckDB mirror of [[dupSpansDf]] over the `documents` table. */
   def dupSpansSqlFor(k: Int): String = {
@@ -192,20 +202,8 @@ object SpanDedup {
   def contamSpansDf(train: DataFrame, bench: DataFrame, minTokens: Int): DataFrame = {
     require(minTokens >= 2, s"minTokens must be >= 2, got $minTokens")
     val k = minTokens
-    val bgrams = bench
-      .select(Hashing.tokens(col("text")).as("t"))
-      .where(size(col("t")) >= k)
-      .select(explode(transform(sequence(lit(1), size(col("t")) - (k - 1)),
-        i => Hashing.hash60(concat_ws(" ", slice(col("t"), i, lit(k))))))
-        .as("gk"))
-      .distinct()
-    val hits = train
-      .select(col("doc_id"), Hashing.tokens(col("text")).as("t"))
-      .where(size(col("t")) >= k)
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(1), size(col("t")) - (k - 1)),
-          i => Hashing.hash60(concat_ws(" ", slice(col("t"), i, lit(k)))))))
-      .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("gk"))
+    val bgrams = benchGrams(bench, k)
+    val hits = gramPositions(train, k)
       .join(broadcast(bgrams), "gk")
       .select(col("doc_id"), col("pos"))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
@@ -308,9 +306,7 @@ object SpanDedup {
     bench
       .select(Hashing.tokens(col("text")).as("t"))
       .where(size(col("t")) >= k)
-      .select(explode(transform(sequence(lit(1), size(col("t")) - (k - 1)),
-        i => Hashing.hash60(concat_ws(" ", slice(col("t"), i, lit(k))))))
-        .as("gk"))
+      .select(explode(gramKeys(k)).as("gk"))
       .distinct()
 
   /** Steps 2–3 of the d36 ladder over a GIVEN sketch + gram table: probe
@@ -323,13 +319,7 @@ object SpanDedup {
   private[graft] def contamHitsWithSketch(train: DataFrame,
       bloom: org.apache.spark.util.sketch.BloomFilter,
       bgrams: DataFrame, k: Int): DataFrame =
-    train
-      .select(col("doc_id"), Hashing.tokens(col("text")).as("t"))
-      .where(size(col("t")) >= k)
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(1), size(col("t")) - (k - 1)),
-          i => Hashing.hash60(concat_ws(" ", slice(col("t"), i, lit(k)))))))
-      .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("gk"))
+    gramPositions(train, k)
       .where(graft.functions.BloomMightContain(bloom, col("gk")))
       .join(bgrams.hint("shuffle_hash"), "gk") // exact verify: kills the fp
       .select(col("doc_id"), col("pos"))

@@ -153,8 +153,9 @@ object IndexLifecycle {
   /** Candidate pairs with >= 1 delta member, (a_id, b_id, extra...),
     * `a_id < b_id`, not yet distinct: corpus–delta through the bucketed
     * corpus probe table (corpus side scan-only; the delta side alone
-    * shuffles into its layout) plus the delta-sized self-join. `extra`
-    * are projections over the joined `a.` / `b.` rows.
+    * shuffles into its layout) plus the delta-sized self-join
+    * ([[Dedup.candidatePairs]]; `delta` is already capped). `extra` are
+    * projections over the joined `a.` / `b.` rows.
     */
   def deltaCandidates(cb: DataFrame, db: DataFrame, p: Probe, extra: Column*): DataFrame =
     cb.alias("a")
@@ -163,15 +164,7 @@ object IndexLifecycle {
       .select(Seq(
         least(col(s"a.${p.id}"), col(s"b.${p.id}")).as("a_id"),
         greatest(col(s"a.${p.id}"), col(s"b.${p.id}")).as("b_id")) ++ extra: _*)
-      .unionByName(selfPairs(db.hint("shuffle_hash"), db, p, extra: _*))
-
-  /** The bucket self-join `a ⋈ b`, (a_id, b_id, extra...), `a_id < b_id`.
-    * Callers place the shuffle-hash hint.
-    */
-  def selfPairs(a: DataFrame, b: DataFrame, p: Probe, extra: Column*): DataFrame =
-    a.alias("a")
-      .join(b.alias("b"), p.keysEqual && col(s"a.${p.id}") < col(s"b.${p.id}"))
-      .select(Seq(col(s"a.${p.id}").as("a_id"), col(s"b.${p.id}").as("b_id")) ++ extra: _*)
+      .unionByName(Dedup.candidatePairs(db, p.keys, p.id, Dedup.NoBucketCap, extra: _*))
 
   /** The epoch-0 cap ledger of a capped build: every bucket of `rows`
     * whose population exceeds `bucketCap` — the rule every append

@@ -43,11 +43,15 @@ class OracleSqlSpec extends AnyFunSuite {
     }
   }
 
-  test("one copy: the closure and sign-LSH plane CTEs are each written once in src/main") {
-    // every oracle that needs them goes through graft.llm.OracleSql; doc
+  test("one copy: the closure and plane CTEs and the Spark band, norm and gram keys are each written once in src/main") {
+    // every oracle that needs the CTEs goes through graft.llm.OracleSql;
+    // every LSH operator bands through Dedup.bandsOfSig /
+    // IncrementalSemantic.bucketsOf, norms through Similarity's normCol,
+    // and every span operator keys grams through SpanDedup.gramKeys. Doc
     // comments may still name them
     import scala.jdk.CollectionConverters._
-    val snippets = Seq("reach(a, b) AS (", "planes AS")
+    val snippets = Seq("reach(a, b) AS (", "planes AS", "shiftright(", """posexplode(col("sigs"))""",
+      """FloatVecDot(col("embedding"), col("embedding"))""", """sequence(lit(1), size(col("t"))""")
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"$root not found from ${root.toAbsolutePath}")
     val stream = java.nio.file.Files.walk(root)

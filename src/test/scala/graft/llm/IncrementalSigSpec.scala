@@ -22,17 +22,16 @@ class IncrementalSigSpec extends AnyFunSuite {
     val docs = graft.Tables.documents(spark, sf)
     val inc = IncrementalSig.simhashAppend(spark, sf)
       .as[(Long, Long, Int)].collect().toSet
-    val full = IncrementalSig.buildPairs(simSigs(docs), 32, 4, 7)
+    val full = Dedup.hammingPairs(simSigs(docs), 32, 4, 7)
       .as[(Long, Long, Int)].collect().toSet
     assert(inc == full)
   }
 
   test("m08: incremental phash pairs equal the full-rerun (all-pairs by pigeonhole)") {
-    val sigs = Multimodal.perceptualHash(Multimodal.mediaTable(spark, sf))
-      .toDF().withColumnRenamed("phash", "sig")
+    val sigs = Multimodal.perceptualHash(Multimodal.mediaTable(spark, sf)).toDF()
     val inc = IncrementalSig.phashAppend(spark, sf)
       .as[(Long, Long, Int)].collect().toSet
-    val full = IncrementalSig.buildPairs(sigs, 60, 6, 5)
+    val full = Dedup.hammingPairs(sigs, 60, 6, 5)
       .as[(Long, Long, Int)].collect().toSet
     assert(inc == full)
   }
@@ -43,12 +42,12 @@ class IncrementalSigSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("incsigplan").toString
     try {
       IncrementalSig.writeIndex(corpusSigs,
-        IncrementalSig.buildPairs(corpusSigs, 32, 4, 7), tmp, 32, 4)
+        Dedup.hammingPairs(corpusSigs, 32, 4, 7), tmp, 32, 4)
       val idx = IncrementalSig.readIndex(spark, tmp)
       assert(idx.bits == 32 && idx.nBands == 4)
       // the probe the maintained append runs: delta bands against the
       // persisted corpus band table
-      val deltaBands = IncrementalSig.bandsOfSig(simSigs(docs.where(col("doc_id") % 5 >= 4)), 32, 4)
+      val deltaBands = Dedup.bandsOfSig(simSigs(docs.where(col("doc_id") % 5 >= 4)), 32, 4)
       val p = idx.bands.alias("a")
         .join(deltaBands.hint("shuffle_hash").alias("b"),
           col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
@@ -75,7 +74,7 @@ class IncrementalSigSpec extends AnyFunSuite {
       val tmp = java.nio.file.Files.createTempDirectory("incsigcap").toString
       try {
         IncrementalSig.writeIndex(corpusSigs,
-          IncrementalSig.buildPairs(corpusSigs, 32, 4, 7, bucketCap = 1000), tmp, 32, 4)
+          Dedup.hammingPairs(corpusSigs, 32, 4, 7, bucketCap = 1000), tmp, 32, 4)
         IncrementalSig.appendToIndex(spark, tmp, deltaSigs, 7, bucketCap = cap)
           .as[(Long, Long, Int)].collect().toSet
       } finally {
@@ -83,7 +82,7 @@ class IncrementalSigSpec extends AnyFunSuite {
       }
     }
     val capped = appended(1000)
-    val fullCapped = IncrementalSig.buildPairs(simSigs(docs), 32, 4, 7, bucketCap = 1000)
+    val fullCapped = Dedup.hammingPairs(simSigs(docs), 32, 4, 7, bucketCap = 1000)
       .as[(Long, Long, Int)].collect().toSet
     assert(capped == fullCapped)
     // and a tight cap drops banded evidence on BOTH arms' semantics:
@@ -96,7 +95,7 @@ class IncrementalSigSpec extends AnyFunSuite {
     val sigs = simSigs(docs)
     val tmp = java.nio.file.Files.createTempDirectory("sigdel").toString
     try {
-      IncrementalSig.writeIndex(sigs, IncrementalSig.buildPairs(sigs, 32, 4, 7),
+      IncrementalSig.writeIndex(sigs, Dedup.hammingPairs(sigs, 32, 4, 7),
         tmp, 32, 4, nBuckets = 8)
       val del = docs.where(col("doc_id") % 7 === 3).select(col("doc_id"))
       IncrementalSig.deleteDocs(spark, tmp, del)
@@ -108,7 +107,7 @@ class IncrementalSigSpec extends AnyFunSuite {
       // per-doc deterministic, so survivor pairs are exactly the
       // restriction)
       val survivors = docs.where(col("doc_id") % 7 =!= 3)
-      val full = IncrementalSig.buildPairs(simSigs(survivors), 32, 4, 7)
+      val full = Dedup.hammingPairs(simSigs(survivors), 32, 4, 7)
         .as[(Long, Long, Int)].collect().toSet
       val inc = idx.pairs.as[(Long, Long, Int)].collect().toSet
       assert(inc == full, "tombstone-filtered pairs diverged from the survivor rerun")

@@ -690,7 +690,7 @@ class IndexPublicationSpec extends AnyFunSuite {
         s"ledger-aware rerun diverged: artifact ${artifact.size} vs rerun ${rerun.size}, " +
           s"diff ${(artifact diff rerun).take(5)} / ${(rerun diff artifact).take(5)}")
       // and the capped answer is NOT the uncapped one (the cap bound)
-      val uncapped = IncrementalSig.buildPairs(sigsOf(docs), 32, 8, 7)
+      val uncapped = Dedup.hammingPairs(sigsOf(docs), 32, 8, 7)
         .as[(Long, Long, Int)].collect().toSet
       assert(artifact != uncapped, "cap changed nothing — fixture too small to gate")
       // DELETION composes with the ledger (r18 VERDICT #1 on the

@@ -239,11 +239,8 @@ class LlmSpec extends AnyFunSuite {
     lbl.foreach { case (id, c) => assert(c <= id && lbl(c) == c, s"($id,$c) not canonical-min") }
   }
 
-  test("phash minBands actually drops spread-error pairs in the lossy posture") {
-    // The round-10 losslessness A/B was a tautology (the cut is inert
-    // wherever the pigeonhole require admits it), so this drives the
-    // nb plumbing where it CAN drop rows: synthetic 60-bit signatures,
-    // 6 bands x 10 bits, allowLossy.
+  test("phash banded verify keeps spread-error and clustered-error pairs on synthetic signatures") {
+    // Synthetic 60-bit signatures, 6 bands x 10 bits, Hamming <= 5:
     //   doc 1: all-zero reference
     //   doc 2: 5 bit errors spread over bands 0..4 -> shares exactly 1
     //           band with doc 1 (band 5) at hamming 5
@@ -252,25 +249,13 @@ class LlmSpec extends AnyFunSuite {
     val sigs = Seq(
       (1L, 0L),
       (2L, (1L << 0) | (1L << 10) | (1L << 20) | (1L << 30) | (1L << 40)),
-      (3L, (1L << 0) | (1L << 1))).toDF("doc_id", "phash")
-    def pairsAt(minBands: Int): Set[(Long, Long, Int)] =
-      Multimodal.phashPairsFromSigs(sigs, bands = 6, maxHamming = 5,
-          minBands = minBands, allowLossy = true)
-        .select($"a_id", $"b_id", $"hamming").as[(Long, Long, Int)].collect().toSet
+      (3L, (1L << 0) | (1L << 1))).toDF("doc_id", "sig")
+    val pairs = Dedup.hammingPairs(sigs, 60, 6, 5)
+      .select($"a_id", $"b_id", $"hamming").as[(Long, Long, Int)].collect().toSet
     // xor(2,3) = bits {1,10,20,30,40} (bit 0 cancels) -> hamming(2,3)=5,
-    // also sharing only band 5; all three pairs pass the plain verify
-    assert(pairsAt(1) == Set((1L, 2L, 5), (2L, 3L, 5), (1L, 3L, 2)))
-    // minBands=2 must drop exactly the two spread-error 1-shared-band
-    // pairs and keep the clustered-error one
-    assert(pairsAt(2) == Set((1L, 3L, 2)),
-      "lossy minBands=2 should drop the 1-shared-band pairs and keep the clustered one")
-    // minBands=6 requires ALL bands shared — impossible at hamming>0
-    assert(pairsAt(6).isEmpty)
-    // without allowLossy the lossy parameterization must refuse, not
-    // silently drop
-    intercept[IllegalArgumentException] {
-      Multimodal.phashPairs(spark, sf, bands = 6, maxHamming = 5, minBands = 2)
-    }
+    // also sharing only band 5; all three pairs pass the plain verify,
+    // and the 5-band pair (1,3) is one row, not five
+    assert(pairs == Set((1L, 2L, 5), (2L, 3L, 5), (1L, 3L, 2)))
   }
 
   test("AutoHamming derives the measured chance-pair thresholds from the corpus count") {
@@ -310,10 +295,10 @@ class LlmSpec extends AnyFunSuite {
     assert(pairs == planted, s"unexpected pairs: ${pairs -- planted}")
     // signatures are a pure function of payload bytes — invariant to layout
     val sigs1 = Multimodal.perceptualHash(Multimodal.mediaTable(spark, tmp))
-      .collect().map(s => (s.doc_id, s.phash)).toSet
+      .collect().map(s => (s.doc_id, s.sig)).toSet
     val sigs2 = Multimodal.perceptualHash(
       Multimodal.mediaTable(spark, tmp).repartition(7)).collect()
-      .map(s => (s.doc_id, s.phash)).toSet
+      .map(s => (s.doc_id, s.sig)).toSet
     assert(sigs1 == sigs2)
   }
 

@@ -70,7 +70,7 @@ class R21OptimizationSpec extends AnyFunSuite {
           k = 32, rowsPerBand = 4, nBuckets = 8),
         Map("k" -> 32, "rows_per_band" -> 4, "n_buckets" -> 8)),
       ("sig", dir => IncrementalSig.writeIndex(sigs,
-          IncrementalSig.buildPairs(sigs, 32, 4, 7), dir, 32, 4, nBuckets = 6),
+          Dedup.hammingPairs(sigs, 32, 4, 7), dir, 32, 4, nBuckets = 6),
         Map("bits" -> 32, "n_bands" -> 4, "n_buckets" -> 6)),
       ("semantic", dir => IncrementalSemantic.writeIndex(corpusE,
           DedupResolve.resolveClusters(IncrementalSemantic.corpusPairs(corpusE)), dir,

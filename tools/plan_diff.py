@@ -11,9 +11,9 @@ JVM lambda class names (`$$Lambda$6429/0x…`, likewise), object identity
 hashes (`ExactSumAgg@5bcaea6a`),
 `plan_id=N`, RDD ids (`RDD[N]`), index temp dirs
 (`/tmp/graft-<kind><digits>`) and the catalog table names derived from
-them (`graft_<kind>_<16 hex>`). Prints `<id>: identical` or a
-unified diff per query id, and exits 1 if any query differs or has a
-dump on one side only.
+them (`graft_<kind>_<hex>`, a 64-bit hash printed in up to 16 hex
+digits). Prints `<id>: identical` or a unified diff per query id, and
+exits 1 if any query differs or has a dump on one side only.
 """
 import difflib
 import os
@@ -28,7 +28,7 @@ NORMALIZE = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"/tmp/graft-([a-z-]+)\d+"), r"/tmp/graft-\1N"),
-    (re.compile(r"\b(graft_[a-z_]+)_[0-9a-f]{16}\b"), r"\1_H"),
+    (re.compile(r"\b(graft_[a-z_]+)_[0-9a-f]{1,16}\b"), r"\1_H"),
 ]
 
 
