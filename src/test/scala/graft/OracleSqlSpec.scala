@@ -43,7 +43,7 @@ class OracleSqlSpec extends AnyFunSuite {
     }
   }
 
-  test("one copy: the closure and plane CTEs and the Spark band, norm and gram keys are each written once in src/main") {
+  test("one copy: the closure and sign-LSH plane CTEs are each written once in src/main") {
     // every oracle that needs the CTEs goes through graft.llm.OracleSql;
     // every LSH operator bands through Dedup.bandsOfSig /
     // IncrementalSemantic.bucketsOf, norms through Similarity's normCol,

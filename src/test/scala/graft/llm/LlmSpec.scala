@@ -239,7 +239,7 @@ class LlmSpec extends AnyFunSuite {
     lbl.foreach { case (id, c) => assert(c <= id && lbl(c) == c, s"($id,$c) not canonical-min") }
   }
 
-  test("phash banded verify keeps spread-error and clustered-error pairs on synthetic signatures") {
+  test("phash banded verify keeps spread-error and clustered-error pairs") {
     // Synthetic 60-bit signatures, 6 bands x 10 bits, Hamming <= 5:
     //   doc 1: all-zero reference
     //   doc 2: 5 bit errors spread over bands 0..4 -> shares exactly 1
