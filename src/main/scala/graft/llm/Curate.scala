@@ -312,16 +312,6 @@ object Curate {
       .drop("nbst")
   }
 
-  /** d41: [[curateV4]] with the approx-percentile teacher arm — the
-    * calibration a 100-TB deployment runs (see
-    * [[nbTeacherThresholdApprox]]). Same oracle as d38 BY DESIGN: at the
-    * verify SFs the sketch is exact, so the arm must change the
-    * calibration PLAN, never the answer (the d36 pattern); the
-    * exact≡approx agreement itself is additionally spec-pinned.
-    */
-  def curateV4Approx(s: SparkSession, dir: String): DataFrame =
-    curateV4Df(Tables.documents(s, dir), approxTeacher = true)
-
   /** [[curateV4]] over any (doc_id, source, text) DataFrame. */
   def curateV4Df(docs: DataFrame, minTokens: Int = 8,
       quota: Int = 12, seqTokens: Int = 256, repK: Int = 3,

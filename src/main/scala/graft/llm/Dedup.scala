@@ -233,24 +233,36 @@ object Dedup {
     bandedMinhashPairs(s, dir, k, rowsPerBand, resolveCap(bucketCap, 1.0))
       .withColumnRenamed("est", "est_jaccard")
 
-  def minhashLshSqlFor(k: Int, rowsPerBand: Int): String = {
-    val bandSelects = (0 until k / rowsPerBand).map { b =>
-      val sig = (0 until rowsPerBand).map(j => s"h${b * rowsPerBand + j}").mkString("||':'||")
-      s"SELECT doc_id, $b AS band, $sig AS sig FROM mh"
-    }.mkString(" UNION ALL ")
-    val matchSum = (0 until k)
-      .map(i => s"(CASE WHEN ma.h$i = mb.h$i THEN 1 ELSE 0 END)")
-      .mkString(" + ")
+  def minhashLshSqlFor(k: Int, rowsPerBand: Int): String =
     s"""WITH mh AS (${minhashesSqlK(k)}),
-       |bands AS ($bandSelects),
+       |bands AS (${bandSelectsSql(k, rowsPerBand)}),
        |pairs AS (
        |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
        |  FROM bands a JOIN bands b
        |    ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id)
-       |SELECT p.a_id, p.b_id, CAST($matchSum AS DOUBLE) / $k.0 AS est_jaccard
+       |SELECT p.a_id, p.b_id, ${estSql(k)} AS est_jaccard
        |FROM pairs p
        |JOIN mh ma ON ma.doc_id = p.a_id
        |JOIN mh mb ON mb.doc_id = p.b_id""".stripMargin
+
+  /** The band explode of the minhash mirrors: one `UNION ALL` select per
+    * band over the `mh` CTE, as (doc_id, [epoch,] band, sig) — `epochCol`
+    * is the epoch-capped oracle's arrival-epoch column.
+    */
+  private def bandSelectsSql(k: Int, rowsPerBand: Int, epochCol: String = ""): String =
+    (0 until k / rowsPerBand).map { b =>
+      val sig = (0 until rowsPerBand).map(j => s"h${b * rowsPerBand + j}").mkString("||':'||")
+      s"SELECT doc_id, $epochCol$b AS band, $sig AS sig FROM mh"
+    }.mkString(" UNION ALL ")
+
+  /** The signature estimate of the minhash mirrors over joined `ma`/`mb`
+    * rows: the fraction of matching minhashes ([[sigEst]]'s mirror).
+    */
+  private def estSql(k: Int): String = {
+    val matchSum = (0 until k)
+      .map(i => s"(CASE WHEN ma.h$i = mb.h$i THEN 1 ELSE 0 END)")
+      .mkString(" + ")
+    s"CAST($matchSum AS DOUBLE) / $k.0"
   }
 
   val minhashLshSql: String = minhashLshSqlFor(mh, mhRows)
@@ -377,43 +389,11 @@ object Dedup {
        |SELECT a_id, b_id, hamming FROM pairs WHERE hamming <= $maxHamming""".stripMargin
   }
 
-  val simhashPairsSql: String = simhashPairsSqlFor(4, 7)
-
-  /** d12's banding at the FULL pigeonhole guarantee: 8 bands of 4 bits
-    * cover Hamming ≤ 7 completely (d12's default 4×8 covers ≤ 3 exactly,
-    * 4–7 probabilistically), trading coarser 16-value buckets — more
-    * join volume — for zero banding misses at the verify threshold. The
-    * trade, measured at sf0.1: ~n/16 docs per bucket ⇒ ~6M band-join
-    * rows, 5.4 s vs 1.9 s for the 4×8 default — the full guarantee costs
-    * ~Σ C(n/16, 2)·128 join volume BY CONSTRUCTION, which is why it is
-    * the grid point and not the shipped default (at corpus scale pair it
-    * with `bucketCap`, which bounds every bucket's contribution — that
-    * combination is its own oracle gate, [[simhashPairsB8Capped]]/d25). A
-    * parameter-grid gate in the d18-d21 pattern: same code path, oracle
-    * generated from the same arguments.
-    */
-  def simhashPairsB8(s: SparkSession, dir: String): DataFrame =
-    simhashPairs(s, dir, bands = 8, maxHamming = 7)
-
-  val simhashPairsB8Sql: String = simhashPairsSqlFor(8, 7)
-
-  /** d22's PRODUCTION posture, oracle-gated (d25): the full-guarantee
-    * 8-band banding nobody would run uncapped at corpus scale — its
-    * ~C(n/16, 2)·128 join volume is the measured cost of the pigeonhole
-    * guarantee — paired with the `bucketCap` that bounds every bucket's
-    * contribution, against a DuckDB mirror that replays the cap as a
-    * window filter over the same (band, bsig) key (the d21 pattern).
-    * Capping voids the ≤ 7 completeness guarantee exactly where buckets
-    * overflow — which at 4-bit widths is everywhere the corpus is dense —
-    * so the gate's value is correctness of the combination, with recall
-    * owned by the cap choice as in every capped path.
+  /** The cap of the capped 8-band SimHash gate (d25): full-guarantee
+    * banding nobody would run uncapped at corpus scale, paired with the
+    * `bucketCap` that bounds every bucket's contribution.
     */
   val simhashCapGate = 64
-
-  def simhashPairsB8Capped(s: SparkSession, dir: String): DataFrame =
-    simhashPairs(s, dir, bands = 8, maxHamming = 7, bucketCap = simhashCapGate)
-
-  val simhashPairsB8CappedSql: String = simhashPairsSqlFor(8, 7, bucketCap = simhashCapGate)
 
   /** Candidate-fed exact n-gram Jaccard verifier — the reusable verify
     * stage of the scale ladder: takes ANY (a_id, b_id) candidate set (LSH
@@ -555,13 +535,7 @@ object Dedup {
       jaccardMin: Double,
       bucketCap: Int = NoBucketCap,
       docWhere: String = ""): String = {
-    val bandSelects = (0 until k / rowsPerBand).map { b =>
-      val sig = (0 until rowsPerBand).map(j => s"h${b * rowsPerBand + j}").mkString("||':'||")
-      s"SELECT doc_id, $b AS band, $sig AS sig FROM mh"
-    }.mkString(" UNION ALL ")
-    val matchSum = (0 until k)
-      .map(i => s"(CASE WHEN ma.h$i = mb.h$i THEN 1 ELSE 0 END)")
-      .mkString(" + ")
+    val bandSelects = bandSelectsSql(k, rowsPerBand)
     // the cap replays Dedup.capBuckets exactly: count per (band, sig)
     // bucket, drop over-cap buckets BEFORE the self-join. Emitted only for
     // a finite cap so the uncapped oracles' SQL text is unchanged.
@@ -581,26 +555,42 @@ object Dedup {
        |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
        |  FROM bands a JOIN bands b
        |    ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
-       |cand AS (
+       |${verifiedTailSql(k, estMin, jaccardMin, s" $docWhere")}""".stripMargin
+  }
+
+  /** The verify tail of the minhash ladder mirrors over their candidate
+    * pairs `cpairs`: the est prefilter, the 5-gram lists of the documents
+    * matching `docWhere` (written right after the table name), and the
+    * exact Jaccard score.
+    */
+  private def verifiedTailSql(k: Int, estMin: Double, jaccardMin: Double,
+      docWhere: String): String =
+    s"""cand AS (
        |  SELECT p.a_id, p.b_id
        |  FROM cpairs p JOIN mh ma ON ma.doc_id = p.a_id
        |  JOIN mh mb ON mb.doc_id = p.b_id
-       |  WHERE CAST($matchSum AS DOUBLE) / $k.0 >= $estMin),
+       |  WHERE ${estSql(k)} >= $estMin),
        |grams AS (
        |  SELECT doc_id, list(${sqlHash60("g")}) AS gs FROM (
        |    SELECT DISTINCT doc_id, g FROM (
-       |      SELECT doc_id, unnest(${sqlShingles("text", 5)}) AS g FROM documents $docWhere))
+       |      SELECT doc_id, unnest(${sqlShingles("text", 5)}) AS g FROM documents$docWhere))
        |  GROUP BY doc_id),
-       |scored AS (
+       |${jaccardScoredSql("grams", jaccardMin)}""".stripMargin
+
+  /** The exact-Jaccard tail of every Jaccard mirror: each (a_id, b_id) of
+    * `cand` scored over the gram lists (doc_id, gs) of table `grams`,
+    * kept at ≥ `jaccardMin`.
+    */
+  private def jaccardScoredSql(grams: String, jaccardMin: Double): String =
+    s"""scored AS (
        |  SELECT c.a_id, c.b_id,
        |    CAST(len(list_intersect(ga.gs, gb.gs)) AS DOUBLE)
        |      / CAST(len(ga.gs) + len(gb.gs) - len(list_intersect(ga.gs, gb.gs)) AS DOUBLE)
        |      AS jaccard
        |  FROM cand c
-       |  JOIN grams ga ON ga.doc_id = c.a_id
-       |  JOIN grams gb ON gb.doc_id = c.b_id)
+       |  JOIN $grams ga ON ga.doc_id = c.a_id
+       |  JOIN $grams gb ON gb.doc_id = c.b_id)
        |SELECT a_id, b_id, jaccard FROM scored WHERE jaccard >= $jaccardMin""".stripMargin
-  }
 
   val lshVerifiedPairsSql: String = lshVerifiedPairsSqlFor(vK, vRows, vEstMin, vJaccard)
 
@@ -613,7 +603,7 @@ object Dedup {
 
   /** The EPOCH-CAPPED variant of [[lshVerifiedPairsSqlFor]] — the d52
     * oracle's pair stage (see
-    * [[IncrementalDedup.cappedMultiAppendDedup]]): documents carry an
+    * [[IncrementalDedup.cappedMultiAppendDedupSql]]): documents carry an
     * arrival epoch (`doc_id % epochMod`); a candidate pair is admitted
     * iff some shared (band, sig) bucket's population among docs visible
     * at the pair's birth epoch (`pe = greatest` of the endpoints') is
@@ -628,16 +618,9 @@ object Dedup {
       estMin: Double,
       jaccardMin: Double,
       bucketCap: Int,
-      epochMod: Int): String = {
-    val bandSelects = (0 until k / rowsPerBand).map { b =>
-      val sig = (0 until rowsPerBand).map(j => s"h${b * rowsPerBand + j}").mkString("||':'||")
-      s"SELECT doc_id, doc_id % $epochMod AS epoch, $b AS band, $sig AS sig FROM mh"
-    }.mkString(" UNION ALL ")
-    val matchSum = (0 until k)
-      .map(i => s"(CASE WHEN ma.h$i = mb.h$i THEN 1 ELSE 0 END)")
-      .mkString(" + ")
+      epochMod: Int): String =
     s"""WITH mh AS (${minhashesSqlK(k, "")}),
-       |bands_all AS ($bandSelects),
+       |bands_all AS (${bandSelectsSql(k, rowsPerBand, s"doc_id % $epochMod AS epoch, ")}),
        |pop AS (
        |  SELECT x.band, x.sig, kk.k AS pe, COUNT(*) AS cnt
        |  FROM bands_all x JOIN range(0, $epochMod) kk(k) ON x.epoch <= kk.k
@@ -650,78 +633,7 @@ object Dedup {
        |  JOIN pop p ON p.band = a.band AND p.sig = a.sig
        |    AND p.pe = greatest(a.epoch, b.epoch)
        |  WHERE p.cnt <= $bucketCap),
-       |cand AS (
-       |  SELECT p.a_id, p.b_id
-       |  FROM cpairs p JOIN mh ma ON ma.doc_id = p.a_id
-       |  JOIN mh mb ON mb.doc_id = p.b_id
-       |  WHERE CAST($matchSum AS DOUBLE) / $k.0 >= $estMin),
-       |grams AS (
-       |  SELECT doc_id, list(${sqlHash60("g")}) AS gs FROM (
-       |    SELECT DISTINCT doc_id, g FROM (
-       |      SELECT doc_id, unnest(${sqlShingles("text", 5)}) AS g FROM documents))
-       |  GROUP BY doc_id),
-       |scored AS (
-       |  SELECT c.a_id, c.b_id,
-       |    CAST(len(list_intersect(ga.gs, gb.gs)) AS DOUBLE)
-       |      / CAST(len(ga.gs) + len(gb.gs) - len(list_intersect(ga.gs, gb.gs)) AS DOUBLE)
-       |      AS jaccard
-       |  FROM cand c
-       |  JOIN grams ga ON ga.doc_id = c.a_id
-       |  JOIN grams gb ON gb.doc_id = c.b_id)
-       |SELECT a_id, b_id, jaccard FROM scored WHERE jaccard >= $jaccardMin""".stripMargin
-  }
-
-  /** The higher-recall parameterization of the composed ladder, end to
-    * end: k = 48, bandsFor(0.8, 48) = 6 bands of 8 — S-curve midpoint
-    * ≈ 0.80, sitting ON the verify threshold instead of above it, so a
-    * true pair at j = 0.8 is surfaced with probability ≈ 0.66 (vs ≈ 0.52
-    * at the default 4×8) in exchange for more sub-threshold candidates
-    * reaching the verifier. Same code path as the default — this query
-    * exists to keep the parameterization oracle-gated (the DuckDB mirror
-    * is generated from the SAME (k, bands) arguments).
-    */
-  def lshVerifiedK48(s: SparkSession, dir: String): DataFrame = {
-    val k = 48
-    val bands = LshCalibration.bandsFor(vJaccard, k) // = 6
-    lshVerifiedPairs(s, dir, k = k, rowsPerBand = k / bands)
-  }
-
-  val lshVerifiedK48Sql: String = lshVerifiedPairsSqlFor(48, 8, vEstMin, vJaccard)
-
-  /** Parameter-GRID gates: the same ladder at two more non-shipped points,
-    * each oracle-compared against SQL generated from the SAME arguments —
-    * these exist to gate the argument PLUMBING itself (band construction,
-    * est arithmetic, verify threshold), not just the shipped defaults.
-    * k=16 in 2 bands of 8 is the low-recall corner (midpoint ≈ 0.92);
-    * k=32 in 8 bands of 4 is the high-recall/noisy-est corner
-    * (midpoint ≈ 0.56 — the verifier earns its keep).
-    */
-  def lshVerifiedK16(s: SparkSession, dir: String): DataFrame =
-    lshVerifiedPairs(s, dir, k = 16, rowsPerBand = 8)
-
-  val lshVerifiedK16Sql: String = lshVerifiedPairsSqlFor(16, 8, vEstMin, vJaccard)
-
-  def lshVerifiedB8(s: SparkSession, dir: String): DataFrame =
-    lshVerifiedPairs(s, dir, k = 32, rowsPerBand = 4)
-
-  val lshVerifiedB8Sql: String = lshVerifiedPairsSqlFor(32, 4, vEstMin, vJaccard)
-
-  /** The CAPPED ladder, oracle-gated: same d13 defaults with
-    * `bucketCap = 32`, against a DuckDB mirror that replays the cap as a
-    * window filter over the same (band, signature) key — so the skew
-    * guard itself is hash-exact gated, not just spec-fixtured. The scale
-    * runs (SCALING.md §3b) measured this cap collapsing the KM
-    * anchor-bucket flood (14.7k → 5.2k candidates at sf0.1) with zero
-    * change to the verified output; at 100 TB the cap is mandatory, so
-    * its correctness deserves the same gate as the uncapped path.
-    */
-  val capGateCap = 32
-
-  def lshVerifiedCapped(s: SparkSession, dir: String): DataFrame =
-    lshVerifiedPairs(s, dir, bucketCap = capGateCap)
-
-  val lshVerifiedCappedSql: String =
-    lshVerifiedPairsSqlFor(vK, vRows, vEstMin, vJaccard, bucketCap = capGateCap)
+       |${verifiedTailSql(k, estMin, jaccardMin, "")}""".stripMargin
 
   /** Exact n-gram Jaccard near-dup pairs (threshold 0.8), re-expressed as
     * bounded candidate generation + the SHARED verify stage: candidates =
@@ -778,13 +690,5 @@ object Dedup {
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
        |  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id),
-       |scored AS (
-       |  SELECT c.a_id, c.b_id,
-       |    CAST(len(list_intersect(ga.gs, gb.gs)) AS DOUBLE)
-       |      / CAST(len(ga.gs) + len(gb.gs) - len(list_intersect(ga.gs, gb.gs)) AS DOUBLE)
-       |      AS jaccard
-       |  FROM cand c
-       |  JOIN garr ga ON ga.doc_id = c.a_id
-       |  JOIN garr gb ON gb.doc_id = c.b_id)
-       |SELECT a_id, b_id, jaccard FROM scored WHERE jaccard >= 0.8""".stripMargin
+       |${jaccardScoredSql("garr", 0.8)}""".stripMargin
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.runtime.{Ckpt, IndexLifecycle, IndexManifest, IndexStatePublisher, IndexStore}
-import graft.llm.IndexScenario.{Append, Delete, Row}
 
 /** Incremental corpus-append deduplication (d39) — the operator a daily
   * ingest pipeline runs most often: dedup a DELTA batch against the
@@ -565,37 +564,6 @@ object IncrementalDedup {
     }
   }
 
-  /** d39: the oracle-gated composition — corpus = the 80% doc_id split
-    * ("yesterday"), delta = the 20% ("today's batch"); build the corpus
-    * artifacts, WRITE them as the real bucketed parquet index, append the
-    * delta through the maintained index ([[appendToIndex]]) and read the
-    * kept set of the published generation — the gate exercises the full
-    * persistence seam, bucketed probe tables included. The DuckDB
-    * mirror is the FULL-CORPUS rerun
-    * ([[DedupResolve.corpusDedupPipelineSql]]) — hash-matching it is
-    * the incremental ≡ full equivalence proof, per query run.
-    */
-  def appendDedup(s: SparkSession, dir: String): DataFrame =
-    IndexScenario.run(s, dir, Family(), Row(col("doc_id") % 5 < 4, Seq(Append(col("doc_id") % 5 >= 4))))
-
-  val appendDedupSql: String = DedupResolve.corpusDedupPipelineSql
-
-  /** d46: MULTI-append through a MAINTAINED index — base = the 40%
-    * doc_id split, then three chained 20% deltas, each appended INTO the
-    * persisted artifacts ([[appendToIndex]]) and each reading the index
-    * state its predecessor left behind. The final kept set must equal
-    * the full rerun over ALL documents — the same oracle as d39,
-    * unchanged ([[DedupResolve.corpusDedupPipelineSql]]): k chained
-    * appends must change the cost model, never the answer. The three
-    * appends run EAGERLY (artifact writes are actions); the returned
-    * frame reads the final published generation.
-    */
-  def multiAppendDedup(s: SparkSession, dir: String): DataFrame =
-    IndexScenario.run(s, dir, Family(),
-      Row(col("doc_id") % 5 < 2, (2 to 4).map(m => Append(col("doc_id") % 5 === m))))
-
-  val multiAppendDedupSql: String = DedupResolve.corpusDedupPipelineSql
-
   /** d52's cap: 2 — buckets with ≥ 3 members suppress, which BINDS on
     * every exact-dup trio and near-dup family at the verify SFs (a
     * ledger gate whose ledger is empty gates nothing — the d51
@@ -603,28 +571,16 @@ object IncrementalDedup {
     */
   val LedgerCap = 2
 
-  /** d52: k CAPPED maintained appends on the MINHASH family with a
-    * persisted cap ledger — d51's contract carried to the corpus-dedup
-    * index, whose answer is a KEPT SET resolved through the est/Jaccard
-    * verify ladder and the exact-dup channel (not a raw pair list).
-    * Base = the doc_id % 4 == 0 split (built CAPPED with
-    * [[buildIndexWithLedger]] — exact stars included, since a capped
-    * banded channel loses suppressed buckets' internal pairs), then
-    * three chained capped appends. Oracle:
-    * [[cappedMultiAppendDedupSql]] — the full rerun under EPOCH-CAPPED
-    * semantics (suppression re-derived from running bucket populations)
-    * plus global exact-star connectivity, resolved by the recursive-CTE
-    * closure. The Scala-side ledger replay
-    * ([[rerunKeptWithLedger]]) is additionally spec-pinned equal.
-    */
-  def cappedMultiAppendDedup(s: SparkSession, dir: String): DataFrame =
-    IndexScenario.run(s, dir, Family(rowsPerBand = 4),
-      Row(col("doc_id") % 4 === 0, (1 to 3).map(m => Append(col("doc_id") % 4 === m)), LedgerCap))
-
-  /** The epoch-capped full-rerun kept-set oracle (see
-    * [[cappedMultiAppendDedup]]): epoch-capped verified pairs ∪ global
-    * exact-dup group-min stars → transitive closure → keep the min
-    * doc_id per component.
+  /** The d52 oracle — k CAPPED maintained appends on the MINHASH family
+    * with a persisted cap ledger, d51's contract carried to the
+    * corpus-dedup index, whose answer is a KEPT SET resolved through the
+    * est/Jaccard verify ladder and the exact-dup channel (a capped build
+    * includes exact stars: a capped banded channel loses suppressed
+    * buckets' internal pairs). The full rerun under EPOCH-CAPPED
+    * semantics: epoch-capped verified pairs ∪ global exact-dup group-min
+    * stars → transitive closure → keep the min doc_id per component. The
+    * Scala-side ledger replay ([[rerunKeptWithLedger]]) is additionally
+    * spec-pinned equal.
     */
   val cappedMultiAppendDedupSql: String = OracleSql.keptClosureSql(
     s"""pairs AS (${Dedup.lshVerifiedPairsEpochCappedSql(32, 4, 0.6, 0.8, LedgerCap, 4)}),
@@ -644,59 +600,35 @@ object IncrementalDedup {
        |    ON h.ch = m.ch
        |  WHERE h.doc_id <> m.min_id)""".stripMargin
 
-  /** d55: DELETION composed with the CAPPED LEDGERED posture (r18
-    * VERDICT ask #1 — the round's one `weak` component: the production
-    * index is exactly capped AND receives takedowns, and before this
-    * gate those two certified lifecycles had no joint contract). The
-    * composition: ledgered capped build (epoch 0 = the doc_id % 3 == 0
-    * split), one capped maintained append (epoch 1), a TAKEDOWN of
-    * every already-arrived doc_id ≡ 3 (mod 7) — interleaved, not
-    * terminal, so the gate also certifies that capped appends AFTER a
-    * delete stay rerun-reproducible — then a second capped append
-    * (epoch 2). Answer: the kept set over survivors.
+  /** The d55 oracle — DELETION composed with the CAPPED LEDGERED
+    * posture (the production index is capped AND receives takedowns):
+    * ledgered capped build (epoch 0), one capped append (epoch 1), a
+    * takedown of already-arrived docs BETWEEN appends, a second capped
+    * append (epoch 2); the answer is the kept set over survivors.
     *
-    * WHY the ledger stays valid through a delete (the contract the
-    * oracle certifies): the per-epoch suppression sets are POPULATION
-    * HISTORY — they recorded which buckets were over cap among the
-    * docs visible when each epoch ran, and a later takedown cannot
-    * retroactively change what ran. Deletion only removes EDGES
-    * (pairs with a dead endpoint) and exact-star centers (which
-    * [[deleteFromIndex]] repairs by re-starring touched groups'
-    * survivors). The persisted per-bucket counts deliberately keep
-    * counting tombstoned rows ([[IncrementalSig.deleteDocs]]'s
-    * documented posture) — the cap guards the PHYSICAL bucket
-    * population the probe join touches — so post-delete appends
-    * suppress exactly as the epoch-capped history says. The
-    * ledger-aware rerun over SURVIVORS therefore reproduces the
-    * maintained answer exactly:
-    *   - banded channel: admitted candidates = epoch-capped candidates
-    *     (populations over ALL arrivals, dead included) restricted to
-    *     surviving endpoints — per-doc-deterministic banding makes
-    *     restriction ≡ the engine's tombstone-filtered probes;
+    * WHY the ledger stays valid through a delete: the per-epoch
+    * suppression sets are POPULATION HISTORY — they recorded which
+    * buckets were over cap among the docs visible when each epoch ran,
+    * and a later takedown cannot retroactively change what ran. Deletion
+    * only removes EDGES (pairs with a dead endpoint) and exact-star
+    * centers (which [[deleteFromIndex]] repairs by re-starring touched
+    * groups' survivors). The persisted per-bucket counts deliberately
+    * keep counting tombstoned rows ([[IncrementalSig.deleteDocs]]'s
+    * documented posture) — the cap guards the PHYSICAL bucket population
+    * the probe join touches — so post-delete appends suppress exactly as
+    * the epoch-capped history says. The ledger-aware rerun over
+    * SURVIVORS therefore reproduces the maintained answer exactly:
+    *   - banded channel: epoch-capped verified pairs over the FULL
+    *     arrival history (populations count the later-deleted),
+    *     restricted to surviving endpoints — per-doc-deterministic
+    *     banding makes restriction ≡ the engine's tombstone-filtered
+    *     probes;
     *   - exact channel: group-min stars RECOMPUTED over survivors
-    *     (restricting star edges would split a group whose center
-    *     died — the repair [[deleteFromIndex]] performs);
-    *   - resolution: components of the surviving edge set.
-    * Oracle: [[cappedLedgerDeleteDedupSql]] — the epoch-capped rerun
-    * SQL with populations over ALL docs, pair endpoints restricted to
-    * survivors, stars recomputed over survivors, kept over survivors.
+    *     (restricting star edges would split a group whose center died);
+    *   - resolution: components of the surviving edge set, kept = min
+    *     per surviving component.
     * The Scala-side replay ([[rerunKeptWithLedger]] fed the surviving
     * corpus) is additionally spec-pinned equal.
-    */
-  def cappedLedgerDeleteDedup(s: SparkSession, dir: String): DataFrame =
-    IndexScenario.run(s, dir, Family(rowsPerBand = 4), Row(col("doc_id") % 3 === 0, Seq(
-      Append(col("doc_id") % 3 === 1),
-      // the takedown lands BETWEEN capped appends: only already-arrived
-      // docs (epochs 0-1) are deletable
-      Delete(col("doc_id") % 7 === 3 && col("doc_id") % 3 <= 1),
-      Append(col("doc_id") % 3 === 2)), LedgerCap))
-
-  /** The epoch-capped survivor-rerun oracle (see
-    * [[cappedLedgerDeleteDedup]]): epoch-capped verified pairs over the
-    * FULL arrival history (populations count the later-deleted — they
-    * were present when each epoch's cap was enforced) restricted to
-    * surviving endpoints, exact-dup group-min stars RECOMPUTED over
-    * survivors, transitive closure, kept = min per surviving component.
     */
   val cappedLedgerDeleteDedupSql: String = {
     val dead = "(doc_id % 7 = 3 AND doc_id % 3 <= 1)"
@@ -710,16 +642,4 @@ object IncrementalDedup {
          |${exactStarCtes(s" WHERE NOT $dead")}""".stripMargin,
       "doc_id", "documents", Some(s"NOT $dead"), Seq("hstars"))
   }
-
-  /** d47: the deletion gate — yesterday's index over the WHOLE corpus,
-    * then every doc_id ≡ 3 (mod 7) is taken down (≈ 14%, and by
-    * construction it hits cluster representatives, bridge members, and
-    * exact-dup group minima). Oracle: the full rerun over the surviving
-    * corpus ([[deleteDedupSql]]) — incremental delete ≡ full rerun on
-    * corpus-minus-deleted, hash-exact.
-    */
-  def deleteDedup(s: SparkSession, dir: String): DataFrame =
-    IndexScenario.run(s, dir, Family(), Row(lit(true), Seq(Delete(col("doc_id") % 7 === 3))))
-
-  val deleteDedupSql: String = DedupResolve.corpusDedupPipelineSqlWhere("doc_id % 7 <> 3")
 }

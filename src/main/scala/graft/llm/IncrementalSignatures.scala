@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.runtime.{Ckpt, IndexLifecycle, IndexManifest, IndexStatePublisher}
-import graft.llm.IndexScenario.{Append, Delete, Row}
 
 /** Incremental corpus-append arms for the remaining signature families
   * of the corpus index (r14 VERDICT ask #5) — the d39 pattern (persist
@@ -247,76 +246,17 @@ object IncrementalSig {
   private[graft] def simhash(bands: Int): Family = new Family("simhash", 32, bands, 7, (s, dir) =>
     Dedup.simhash(s, dir).withColumnRenamed("simhash", "sig"))
 
-  /** d42: incremental SimHash near-dup pairs at d12's grid point
-    * (32-bit signature, 4 bands, Hamming ≤ 7). Corpus = the 80% doc_id
-    * split, delta = the 20%; the gate writes the real bucketed index to
-    * a per-invocation temp dir, appends through it ([[appendToIndex]])
-    * and reads the published pairs back — oracle = the full-rerun
-    * banded-join SQL ([[Dedup.simhashPairsSql]]).
-    */
-  def simhashAppend(s: SparkSession, dir: String): DataFrame =
-    IndexScenario.run(s, dir, simhash(4), Row(col("doc_id") % 5 < 4, Seq(Append(col("doc_id") % 5 >= 4))))
-
-  val simhashAppendSql: String = Dedup.simhashPairsSql
-
-  /** d48: DELETION from the signature index — yesterday's index over the
-    * whole corpus at d12's grid point (4 bands, Hamming ≤ 7, uncapped ⇒
-    * the equivalence is exact), then every doc_id ≡ 3 (mod 7) is taken
-    * down; the answer is the tombstone-filtered pair artifact. Oracle:
-    * the full rerun over the surviving corpus.
-    */
-  def simhashDelete(s: SparkSession, dir: String): DataFrame =
-    IndexScenario.run(s, dir, simhash(4), Row(lit(true), Seq(Delete(col("doc_id") % 7 === 3))))
-
-  val simhashDeleteSql: String =
-    Dedup.simhashPairsSqlFor(4, 7, docWhere = "WHERE doc_id % 7 <> 3")
-
-  /** d50: MULTI-append through a MAINTAINED signature index — base = the
-    * 25% doc_id split, then three chained 25% deltas, each written back
-    * into the band/count/pair artifacts ([[appendToIndex]]), each
-    * reading its predecessor's state. Oracle: the UNCHANGED full-rerun
-    * banded-join SQL (d42's) — k appends must change the cost model,
-    * never the answer (the induction: banding is per-doc deterministic,
-    * so after append k the artifacts equal a full run's over the
-    * accumulated corpus).
-    */
-  def simhashMultiAppend(s: SparkSession, dir: String): DataFrame =
-    IndexScenario.run(s, dir, simhash(4),
-      Row(col("doc_id") % 4 === 0, (1 to 3).map(m => Append(col("doc_id") % 4 === m))))
-
-  val simhashMultiAppendSql: String = Dedup.simhashPairsSql
-
-  /** d51's grid point: the full-pigeonhole 8-band geometry where 4-bit
-    * buckets are dense enough that a cap of 64 genuinely BINDS at the
-    * verify SFs — a ledger gate whose ledger is empty gates nothing.
-    */
-  val LedgerBands = 8
-  val LedgerCap = 64
-  val LedgerMaxHamming = 7
-
-  /** d51: k CAPPED maintained appends with a persisted cap ledger (r16
-    * VERDICT #2 — "capped maintained appends have no oracle-gated
-    * definition"). Base = the doc_id % 4 == 0 split, then three chained
-    * capped appends (epochs 1–3), every epoch's suppressed-bucket set
-    * persisted beside the pairs. The answer is the accumulated pair
-    * artifact. Oracle: [[simhashPairsEpochCappedSql]] — the full rerun
-    * under EPOCH-CAPPED semantics, where a pair is admitted iff some
-    * shared bucket's population among docs visible at the pair's birth
-    * epoch (max of the endpoints' epochs) is within the cap. This is
-    * exactly what the incremental capped pass computes, so the capped
-    * posture now has a rerun-reproducible, oracle-gated definition —
-    * not "append-consistent with unbounded drift". The Scala-side
-    * ledger replay ([[rerunWithLedger]]) is additionally spec-pinned
-    * equal to the artifact.
-    */
-  def cappedMultiAppend(s: SparkSession, dir: String): DataFrame =
-    IndexScenario.run(s, dir, simhash(LedgerBands),
-      Row(col("doc_id") % 4 === 0, (1 to 3).map(m => Append(col("doc_id") % 4 === m)), LedgerCap))
-
-  /** The epoch-capped full-rerun oracle (see [[cappedMultiAppend]]):
-    * suppression sets re-derived in SQL from running bucket populations
-    * (`pop` = bucket size among docs with epoch ≤ k), pairs admitted
-    * through any shared bucket within the cap at their birth epoch.
+  /** The epoch-capped full-rerun oracle of capped maintained appends
+    * with a persisted cap ledger (d51): documents carry an arrival epoch
+    * (`doc_id % epochMod`), and a pair is admitted iff some shared
+    * bucket's population among docs visible at the pair's birth epoch
+    * (max of the endpoints' epochs) is within the cap — exactly what the
+    * incremental capped pass computes, so the capped posture has a
+    * rerun-reproducible definition, not "append-consistent with
+    * unbounded drift". Suppression sets are re-derived in SQL from
+    * running bucket populations (`pop` = bucket size among docs with
+    * epoch ≤ k). The Scala-side ledger replay ([[rerunWithLedger]]) is
+    * additionally spec-pinned equal to the maintained artifact.
     */
   def simhashPairsEpochCappedSql(bands: Int, maxHamming: Int, cap: Int,
       epochMod: Int): String = {
@@ -344,28 +284,6 @@ object IncrementalSig {
        |  ON p.band = c.band AND p.bsig = c.bsig AND p.pe = c.pe
        |WHERE p.cnt <= $cap AND c.hamming <= $maxHamming""".stripMargin
   }
-
-  val cappedMultiAppendSql: String =
-    simhashPairsEpochCappedSql(LedgerBands, LedgerMaxHamming, LedgerCap, 4)
-
-  /** m08: incremental pHash near-dup pairs over the media corpus
-    * (60-bit fingerprint, 6 bands, Hamming ≤ 5 — the pigeonhole-
-    * lossless region, so the full-rerun oracle is the ALL-PAIRS SQL
-    * ([[Multimodal.phashPairsSqlFor]]), which also re-proves banding
-    * loses nothing through the persistence seam). Corpus = the 80%
-    * doc_id split, appended with the 20% through the maintained index.
-    * The signatures are checkpointed once: the windowed md5 vote per
-    * payload is the expensive kernel every step would otherwise re-run
-    * (sf0.1 on 4 vCPUs: m08 20% faster checkpointed; SimHash's codegen'd
-    * kernel gained under 10% from it, so its gates re-run the kernel).
-    */
-  def phashAppend(s: SparkSession, dir: String): DataFrame =
-    IndexScenario.run(s, dir,
-      new Family("phash", 60, 6, 5, (s, dir) =>
-        Multimodal.perceptualHash(Multimodal.mediaTable(s, dir)).toDF().transform(Ckpt.eager)),
-      Row(col("doc_id") % 5 < 4, Seq(Append(col("doc_id") % 5 >= 4))))
-
-  val phashAppendSql: String = Multimodal.phashPairsSqlFor(5)
 }
 
 /** Incremental corpus-append SEMANTIC dedup (d45) — the sign-LSH
@@ -674,104 +592,41 @@ object IncrementalSemantic {
     }
   }
 
-  /** d45: the oracle-gated composition — corpus = the 80% vec_id split,
-    * delta = the 20%; build + persist the bucketed index, append the
-    * delta through it ([[appendToIndex]]) and read the kept set of the
-    * published generation. Oracle = the FULL-corpus rerun at the same
-    * pinned geometry ([[semanticAppendSql]]) — hash-matching it is the
-    * incremental ≡ full equivalence proof (exact here: fixed bits make
-    * corpus buckets count-independent, and the family is uncapped).
-    */
-  def semanticAppend(s: SparkSession, dir: String): DataFrame =
-    IndexScenario.run(s, dir, Family, Row(col("vec_id") % 5 < 4, Seq(Append(col("vec_id") % 5 >= 4))))
-
-  /** d49: DELETION from the semantic index — yesterday's index over the
-    * whole vector corpus at the pinned geometry (pairs persisted beside
-    * the labels: deletion's evidence), then every vec_id ≡ 3 (mod 7) is
-    * taken down. Oracle: the full rerun over surviving vectors at the
-    * same geometry ([[semanticDeleteSql]]), hash-exact.
-    */
-  def semanticDelete(s: SparkSession, dir: String): DataFrame =
-    IndexScenario.run(s, dir, Family, Row(lit(true), Seq(Delete(col("vec_id") % 7 === 3))))
-
-  /** The frozen-geometry full rerun over survivors: d45's closure shape
-    * with the takedown predicate threaded through both the pair CTE and
-    * the kept select.
+  /** d49's oracle, the frozen-geometry full rerun over survivors: d45's
+    * closure shape with the takedown predicate threaded through both the
+    * pair CTE and the kept select.
     */
   val semanticDeleteSql: String = OracleSql.keptClosureSql(
     s"pairs AS (${Similarity.signLshPairsSqlFor(8, 4, 0.35, vecWhere = "WHERE vec_id % 7 <> 3")})",
     "vec_id", "embeddings", Some("vec_id % 7 <> 3"))
 
-  /** The frozen-geometry full rerun: d16's recursive-closure shape over
-    * [[Similarity.signLshPairsSqlFor]] at the pinned (8, 4, 0.35).
+  /** d45's oracle, the frozen-geometry full rerun: d16's
+    * recursive-closure shape over [[Similarity.signLshPairsSqlFor]] at the
+    * pinned (8, 4, 0.35). Uncapped, fixed bits make corpus buckets
+    * count-independent, so incremental ≡ full is exact.
     */
   val semanticAppendSql: String = OracleSql.keptClosureSql(
     s"pairs AS (${Similarity.signLshPairsSqlFor(8, 4, 0.35)})", "vec_id", "embeddings")
 
-  /** d53: k CAPPED maintained appends on the SEMANTIC family with a
-    * persisted cap ledger — the d51/d52 contract carried to embeddings
-    * (r17 VERDICT ask #3: the one family where the capped posture was
-    * previously impossible-or-drifting). Base = the vec_id % 4 == 0
-    * split built capped ([[corpusPairsWithLedger]]), then three chained
-    * capped appends through the maintained index ([[appendToIndex]]),
-    * every epoch's suppressed (table_id, bucket) set persisted beside
-    * the pairs. The cap is SCALE-ADAPTIVE ([[semLedgerCap]]) so it
-    * binds without blanket-suppressing at every verify SF. Answer: the
-    * kept vec_ids. Oracle: [[cappedSemanticMultiAppendSql]] — the full
-    * rerun under EPOCH-CAPPED semantics (suppression re-derived from
-    * running bucket populations, cap re-derived from COUNT(*)),
-    * resolved by the recursive-CTE closure. The Scala-side ledger
-    * replay ([[rerunKeptWithLedger]]) is additionally spec-pinned
-    * equal to the maintained answer.
-    */
-  def cappedSemanticMultiAppend(s: SparkSession, dir: String): DataFrame =
-    IndexScenario.run(s, dir, Family,
-      Row(col("vec_id") % 4 === 0, (1 to 3).map(m => Append(col("vec_id") % 4 === m)), Dedup.AutoCap))
-
-  /** d56: DELETION composed with the capped LEDGERED posture on the
-    * SEMANTIC family (r18 VERDICT ask #1 — the embedding half of the
-    * d55 contract; see [[IncrementalDedup.cappedLedgerDeleteDedup]] for
-    * the full argument). Ledgered capped build (epoch 0 = the
-    * vec_id % 3 == 0 split), one capped maintained append (epoch 1), a
-    * TAKEDOWN of every already-arrived vec_id ≡ 3 (mod 7) — interleaved
-    * between appends, certifying that capped appends AFTER a delete
-    * stay rerun-reproducible — then a second capped append (epoch 2).
-    * The suppression ledger is population history (the persisted
-    * bucket counts keep counting tombstoned rows by design), so the
-    * oracle derives suppression from the FULL arrival history and only
-    * then restricts pair endpoints and the kept set to survivors; no
-    * exact-star channel exists here, so restriction alone is the whole
-    * repair. Answer: the kept vec_ids over survivors. The Scala-side
-    * ledger replay over survivors is additionally spec-pinned equal.
-    */
-  def cappedSemanticLedgerDelete(s: SparkSession, dir: String): DataFrame =
-    IndexScenario.run(s, dir, Family, Row(col("vec_id") % 3 === 0, Seq(
-      Append(col("vec_id") % 3 === 1),
-      Delete(col("vec_id") % 7 === 3 && col("vec_id") % 3 <= 1),
-      Append(col("vec_id") % 3 === 2)), Dedup.AutoCap))
-
-  /** The d56 oracle: [[cappedSemanticSqlFor]] at epochMod = 3 with the
-    * takedown predicate threaded through (suppression from full
-    * history; endpoints and kept set restricted to survivors).
-    */
-  val cappedSemanticLedgerDeleteSql: String =
-    cappedSemanticSqlFor(3, Some("(@ % 7 = 3 AND @ % 3 <= 1)"))
-
-  /** The epoch-capped full-rerun kept-set oracle (see
-    * [[cappedSemanticMultiAppend]]): the d45 plane/bucket arithmetic at
-    * the pinned (8, 4, 0.35) with vectors carrying `vec_id % epochMod`
-    * arrival epochs; a candidate pair is admitted iff some shared
-    * (table, bucket)'s population among vectors visible at the pair's
-    * birth epoch is within the cap (`pop` re-derives the suppression
-    * sets the engine persists — over the FULL arrival history, later
-    * deletions included; `cap` re-derives [[semLedgerCap]] from
-    * COUNT(*)); admitted candidates run the unchanged cosine verify,
-    * components close recursively, kept = min per component. When
-    * `deadTemplate` is set (d56 — a predicate with `@` standing for
-    * the id column, e.g. `"(@ % 7 = 3 AND @ % 3 <= 1)"`), pair
-    * ENDPOINTS and the kept set are restricted to survivors AFTER
-    * suppression derives — deletion is an event in the index's life,
-    * not a rewrite of its history.
+  /** The epoch-capped full-rerun kept-set oracle of the capped
+    * ledgered SEMANTIC gates (d53, d56): the d51/d52 contract carried to
+    * embeddings, with a SCALE-ADAPTIVE cap ([[semLedgerCap]]) so it binds
+    * without blanket-suppressing at every verify SF. The d45
+    * plane/bucket arithmetic runs at the pinned (8, 4, 0.35) with vectors
+    * carrying `vec_id % epochMod` arrival epochs; a candidate pair is
+    * admitted iff some shared (table, bucket)'s population among vectors
+    * visible at the pair's birth epoch is within the cap (`pop`
+    * re-derives the suppression sets the engine persists — over the FULL
+    * arrival history, later deletions included; `cap` re-derives
+    * [[semLedgerCap]] from COUNT(*)); admitted candidates run the
+    * unchanged cosine verify, components close recursively, kept = min
+    * per component. When `deadTemplate` is set (d56 — a predicate with
+    * `@` standing for the id column, e.g. `"(@ % 7 = 3 AND @ % 3 <= 1)"`),
+    * pair ENDPOINTS and the kept set are restricted to survivors AFTER
+    * suppression derives — deletion is an event in the index's life, not
+    * a rewrite of its history. The Scala-side ledger replay
+    * ([[rerunKeptWithLedger]]) is additionally spec-pinned equal to the
+    * maintained answer.
     */
   def cappedSemanticSqlFor(epochMod: Int, deadTemplate: Option[String] = None): String = {
     val (nTables, bits, minCos) = (NTables, Bits, MinCos)
@@ -800,11 +655,6 @@ object IncrementalSemantic {
          |${OracleSql.indented(OracleSql.cosineVerifySql(minCos))})""".stripMargin,
       "vec_id", "embeddings", dead("vec_id").map(p => s"NOT $p"))
   }
-
-  /** The d53 oracle: [[cappedSemanticSqlFor]] at epochMod = 4, no
-    * takedown.
-    */
-  val cappedSemanticMultiAppendSql: String = cappedSemanticSqlFor(4)
 }
 
 /** Incremental corpus-append decontamination (d36's sketch ladder with
@@ -888,6 +738,4 @@ object IncrementalContam {
       SpanDedup.contamIslands(
         SpanDedup.contamHitsWithSketch(delta, idx.bloom, idx.grams, k), k))
   }
-
-  val appendDecontamSql: String = SpanDedup.contamSpansSqlFor(8)
 }

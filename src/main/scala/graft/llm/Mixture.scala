@@ -187,30 +187,4 @@ object Mixture {
        |    AS INT) AS ord
        |FROM (SELECT doc_id, $h AS h FROM documents)""".stripMargin
   }
-
-  // ---- shipped gate postures (SparkEntry needs (SparkSession, dir) arity).
-  // The corpus holds 25 docs/source at sf0.001/sf0.01 and 250 at sf0.1, so
-  // quota 12 and target 18 down-sample for real at every verify SF (the
-  // keep-all cap branch is spec-covered on a small source in MixtureSpec).
-
-  def sourceQuota12(s: SparkSession, dir: String): DataFrame =
-    sourceQuota(s, dir, quota = 12)
-  val sourceQuota12Sql: String = sourceQuotaSql(12)
-
-  def mixtureSample18(s: SparkSession, dir: String): DataFrame =
-    mixtureSample(s, dir, targetPerSource = 18L)
-  val mixtureSample18Sql: String = mixtureSampleSql(18L)
-
-  // budget 256 ≈ 4–5 synthetic docs per window at every verify SF, so the
-  // packing exercises multi-doc windows AND straddling boundaries
-  def seqPack256(s: SparkSession, dir: String): DataFrame =
-    seqPack(s, dir, seqTokens = 256)
-  val seqPack256Sql: String = seqPackSql(256)
-
-  // 8 shards ≈ 60–640 docs/shard across the verify SFs: enough rows that
-  // a broken rank or a wrong modulus shifts thousands of (shard, ord)
-  // values — the full mapping is the gated artifact
-  def shardOrder8(s: SparkSession, dir: String): DataFrame =
-    shardOrder(s, dir, nShards = 8, seed = "epoch0")
-  val shardOrder8Sql: String = shardOrderSql(8, "epoch0")
 }

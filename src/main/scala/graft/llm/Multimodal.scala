@@ -171,7 +171,7 @@ object Multimodal {
     * becomes expressible in any engine whose md5 accepts only TEXT —
     * windows of the raw byte stream split multi-byte UTF-8 codepoints
     * into invalid text, while their hex transcription is plain ASCII.
-    * This is what keeps the DuckDB mirror ([[phashPairsSql]]) windowing
+    * This is what keeps the DuckDB mirror ([[phashPairsSqlFor]]) windowing
     * over BYTES (`to_hex(encode(text))`, stride 2 hex chars) instead of
     * characters, so Spark/oracle parity holds for non-ASCII payloads too.
     *
@@ -247,7 +247,7 @@ object Multimodal {
     * a computation: at 2.55M docs the measured 21 chance pairs at h = 5
     * matched the n²-model, and the ONLY lever that removes them is the
     * Hamming threshold itself (requiring more shared bands provably
-    * cannot; see [[phashPairsMin2]]). With the default budget (2^0 = one expected
+    * cannot; see the m04 gate). With the default budget (2^0 = one expected
     * chance pair corpus-wide) the threshold holds at 5 through ~620k docs,
     * tightens to 4 at ~2.1M and to 3 at ~17M — each step trading recall at
     * the dropped Hamming distance for an ~11× chance-rate cut, the
@@ -343,34 +343,6 @@ object Multimodal {
        |WHERE bit_count(xor(a.phash, b.phash)) <= $thresholdSql""".stripMargin
   }
 
-  val phashPairsSql: String = phashPairsSqlFor(5)
-
-  /** m02's parameter-grid twin: a DIFFERENT lossless banding (4 bands of
-    * 15 bits, Hamming ≤ 3 < bands) against the same banding-independent
-    * all-pairs oracle — the oracle proves losslessness of this banding
-    * exactly as it does m02's 6×10, so the (bands, maxHamming) plumbing
-    * is gated, not just the shipped point.
-    */
-  def phashPairsH3(s: SparkSession, dir: String): DataFrame =
-    phashPairs(s, dir, bands = 4, maxHamming = 3)
-
-  val phashPairsH3Sql: String = phashPairsSqlFor(3)
-
-  /** m04: 6 bands at Hamming ≤ 4 against the banding-independent
-    * all-pairs oracle at maxHamming = 4. Every pair at hamming ≤ 4
-    * shares ≥ 2 of the 6 bands, chance collisions included, so the
-    * distinct over the per-band join rows must fold each such pair —
-    * found in 2 to 6 bands — into one row. The gate is named for a
-    * retired "at least 2 shared bands" knob: a cut on shared bands after
-    * the Hamming verify is provably inert in the pigeonhole region, and the
-    * chance-collision protection it was once credited with lives in the
-    * Hamming threshold — see [[AutoHamming]]/m05.
-    */
-  def phashPairsMin2(s: SparkSession, dir: String): DataFrame =
-    phashPairs(s, dir, bands = 6, maxHamming = 4)
-
-  val phashPairsMin2Sql: String = phashPairsSqlFor(4)
-
   /** The m05 gate's chance-pair budget exponent: allowed expected chance
     * pairs = 2^−21 — tiny enough that the derived threshold actually
     * MOVES across the verify SFs (50 docs → h = 5, 500 → 4, 5000 → 3),
@@ -381,21 +353,12 @@ object Multimodal {
     */
   val autoGateBudgetLog2: Int = 21
 
-  /** m05: [[phashPairs]] under [[AutoHamming]] — the Hamming threshold
-    * derived from the corpus count with the gate budget, against an
-    * oracle that REPLAYS the derivation in exact integer arithmetic
-    * (HUGEINT CTE) and then runs the all-pairs join at whatever h it
-    * derives. At the driver's sf0.01 the derivation lands on h = 4 ≠
-    * m02's fixed 5 (27 vs 37 pairs), so the gate fails if either engine's
-    * derivation or arithmetic drifts.
-    */
-  def phashPairsAuto(s: SparkSession, dir: String): DataFrame =
-    phashPairs(s, dir, budgetLog2 = autoGateBudgetLog2)
-
-  /** DuckDB mirror of [[phashPairsAuto]]: the [[hammingFor]] inequality
-    * C(n,2)·cum(h) < 2^(60−budgetLog2), largest h first, as a HUGEINT
-    * CASE chain over COUNT(*) — then the all-pairs Hamming join at the
-    * derived threshold.
+  /** DuckDB mirror of [[phashPairs]] under [[AutoHamming]] (m05): the
+    * [[hammingFor]] inequality C(n,2)·cum(h) < 2^(60−budgetLog2), largest
+    * h first, as a HUGEINT CASE chain over COUNT(*) — then the all-pairs
+    * Hamming join at the derived threshold. At the driver's sf0.01 the
+    * gate budget derives h = 4 ≠ m02's fixed 5 (27 vs 37 pairs), so the
+    * gate fails if either engine's derivation or arithmetic drifts.
     */
   def phashPairsAutoSqlFor(budgetLog2: Int): String = {
     val lim = BigInt(1) << (60 - budgetLog2)
@@ -407,8 +370,6 @@ object Multimodal {
          |  FROM (SELECT n * (n - 1) / 2 AS pairs
          |        FROM (SELECT CAST(COUNT(*) AS HUGEINT) AS n FROM documents)))""".stripMargin)
   }
-
-  val phashPairsAutoSql: String = phashPairsAutoSqlFor(autoGateBudgetLog2)
 
   // ------------------------------------------------------- m06: real codec
 

@@ -241,19 +241,6 @@ object Similarity {
 
   val lshKnnSql: String = lshKnnSqlFor(defTables, defBits)
 
-  /** The sign-LSH ANN grid gate (d26) — the d23 pattern applied to the
-    * kNN surface: the scale runs measured that retuned bits alone
-    * collapse recall (0.38 at ×10) and the PRODUCTION pair is bits
-    * retuned + tables scaled to buy the recall back (t32 rows in
-    * SCALING.md §3b). At the driver SFs the retuned bits are the shipped
-    * 4, so the gated point is (32 tables, 4 bits) — the tables knob at a
-    * non-shipped value, oracle generated from the same arguments.
-    */
-  def lshKnn32(s: SparkSession, dir: String): DataFrame =
-    lshKnn(s, dir, nTables = 32, bits = defBits)
-
-  val lshKnn32Sql: String = lshKnnSqlFor(32, defBits)
-
   /** Candidate-fed exact cosine verifier — the reusable verify stage of
     * the semantic ladder: takes ANY (a_id, b_id) candidate set (sign-LSH
     * buckets at 100 TB, all-pairs on a bounded slice) and keeps pairs
@@ -606,32 +593,6 @@ object Similarity {
   def ivfSq8KnnSqlFor(nCells: Int, nProbe: Int, sampleN: Int): String =
     ivfCandidateCte(s"$nCells", s"$nProbe", s"$sampleN") + sq8RankSuffix
 
-  /** The d31 gate: IVF-SQ8 at the shipped IVF defaults. */
-  def ivfSq8Knn16(s: SparkSession, dir: String): DataFrame =
-    ivfSq8Knn(s, dir, nCells = 16, nProbe = 2, sampleN = 200)
-
-  val ivfSq8KnnSql: String = ivfSq8KnnSqlFor(16, 2, 200)
-
-  /** The d32 gate: IVF-SQ8 at the measured production point (64 cells ×
-    * 4 probes — the d23 retuning, composed with scalar quantization; the
-    * ×10/×50/×200 runs measured 0.92 recall at ×200 on a 6% scan for
-    * this pair, SCALING.md §3d).
-    */
-  def ivfSq8Knn64(s: SparkSession, dir: String): DataFrame =
-    ivfSq8Knn(s, dir, nCells = 64, nProbe = 4, sampleN = 200)
-
-  val ivfSq8Knn64Sql: String = ivfSq8KnnSqlFor(64, 4, 200)
-
-  /** The d35 gate posture: packed-code IVF-SQ8 at d31's grid point,
-    * against the same layout-independent oracle.
-    */
-  def ivfSq8KnnPacked16(s: SparkSession, dir: String): DataFrame =
-    ivfSq8KnnPacked(s, dir, nCells = 16, nProbe = 2, sampleN = 200)
-
-  val ivfSq8KnnPackedSql: String = ivfSq8KnnSqlFor(16, 2, 200)
-
-  val ivfKnnSql: String = ivfKnnSqlFor(16, 2, 200)
-
   // ------------------------------------------------- persisted ANN index
 
   /** The persisted IVF-SQ8 index (d40): what an ANN serving path loads
@@ -846,47 +807,21 @@ object Similarity {
       ivfSq8KnnFromIndex(src.filter(col("vec_id") < 50), readIvfSq8IndexAt(s, dir, m), nProbe)
   }
 
-  /** d40: the full persistence round — train, WRITE the parquet index,
-    * READ it back, serve kNN from the loaded artifacts. Same grid as d31
-    * and the same layout-independent oracle ([[ivfSq8KnnSql]]): the
-    * persistence seam must change where the index lives, never the
-    * answer.
-    */
-  def ivfSq8KnnLoaded(s: SparkSession, dir: String): DataFrame =
-    IndexScenario.run(s, dir, IvfSq8Family(), IndexScenario.Row(lit(true)))
-
-  val ivfSq8KnnLoadedSql: String = ivfSq8KnnSql
-
-  /** d44: incremental VECTOR APPEND to the persisted ANN index — the
-    * embedding family's corpus-append arm (completing the d39/d42/d43/
-    * m08 matrix): yesterday's index is trained and persisted over the
-    * corpus split; today's delta vectors are assigned to the FROZEN
-    * coarse quantizer (the same [[ivfRanked]] argmax the build used)
-    * and quantized with the same SQ8 formula, through the maintained
-    * append ([[appendVectorsToIndexDir]]); serving reads the published
-    * generation back.
-    *
-    * The append CONTRACT — and what the oracle is: append must equal a
-    * REBUILD WITH THE FROZEN QUANTIZER over corpus ⊎ delta (the oracle
-    * trains its centroid CTEs on the corpus split only, then assigns,
-    * quantizes, and ranks over all vectors). Centroid RETRAINING under
-    * drift is a scheduled rebuild decision — the ANN analogue of
-    * re-banding a minhash corpus — never part of append; per-vector
-    * cell assignment is independent given the centroids, which is why
-    * append is exact under this contract (the same argument as d40's
-    * query-side-only ranking). Delta cost: assignment is
-    * |delta| × nCells dots against a broadcast kilobyte-scale centroid
-    * table, quantization is a per-row map — nothing touches the corpus
-    * side but the artifact append itself.
-    */
-  def ivfSq8IndexAppend(s: SparkSession, dir: String): DataFrame =
-    IndexScenario.run(s, dir, IvfSq8Family(), IndexScenario.Row(col("vec_id") % 5 < 4,
-      Seq(IndexScenario.Append(col("vec_id") % 5 >= 4))))
-
-  /** [[ivfSq8IndexAppend]]'s oracle: the frozen-quantizer rebuild —
-    * d31's SQL with the centroid training CTEs (seeds + Lloyd sample)
-    * restricted to the corpus split; assignment, quantization, and
-    * ranking run over ALL vectors.
+  /** The d44 oracle, incremental VECTOR APPEND to the persisted ANN
+    * index: yesterday's index is trained and persisted over the corpus
+    * split; today's delta vectors are assigned to the FROZEN coarse
+    * quantizer (the same [[ivfRanked]] argmax the build used) and
+    * quantized with the same SQ8 formula, through the maintained append
+    * ([[appendVectorsToIndexDir]]). The append CONTRACT: append equals a
+    * REBUILD WITH THE FROZEN QUANTIZER over corpus ⊎ delta — d31's SQL
+    * with the centroid training CTEs (seeds + Lloyd sample) restricted
+    * to the corpus split; assignment, quantization, and ranking run over
+    * ALL vectors. Centroid RETRAINING under drift is a scheduled rebuild
+    * decision ([[shouldRebuild]]), never part of append; per-vector cell
+    * assignment is independent given the centroids, which is why append
+    * is exact under this contract. Delta cost: |delta| × nCells dots
+    * against a broadcast kilobyte-scale centroid table plus a per-row
+    * quantize — nothing touches the corpus side but the artifact append.
     */
   val ivfSq8IndexAppendSql: String =
     ivfCandidateCte("16", "2", "200",
@@ -958,15 +893,6 @@ object Similarity {
     * serve cost is.)
     */
   val RebuildAppendRatio: Double = 0.2
-
-  /** The IVF grid gate: the retuned point the scale runs measured best
-    * (64 cells, 4 probes — recall 0.93 at a 6% scan at the ×50 corpus,
-    * SCALING.md §3b) against an oracle generated from the same arguments.
-    */
-  def ivfKnn64(s: SparkSession, dir: String): DataFrame =
-    ivfKnn(s, dir, nCells = 64, nProbe = 4)
-
-  val ivfKnn64Sql: String = ivfKnnSqlFor(64, 4, 200)
 
   /** The measured-best cell POPULATION: the ×50 grid point (100k
     * vectors at 64 cells × 4 probes — recall 0.93 on a 6% scan,
@@ -1134,43 +1060,12 @@ object Similarity {
          |  FROM embeddings),
          |${signLshCtes(nTables, None, materialized = true)}""".stripMargin, minCos)
 
-  /** The AutoBits gate's target bucket: small enough that the derivation
-    * lands on DIFFERENT bit counts across the driver SFs (500 embeddings
-    * → 4 bits at sf0.001/sf0.01, 2 000 → 6 bits at sf0.1), proving the
-    * count-driven calibration is live, not a constant that happens to
-    * match. (The production default [[DefTargetBucket]] = 125 derives the
-    * historical 4 bits at every driver SF — d16 gates that point.)
-    */
-  val autoGateTargetBucket: Int = 31
-
-  /** The AutoBits oracle gate (d24): [[signLshPairs]] with bits derived
-    * from the corpus count at `targetBucket = 31`, against SQL that
-    * replays the derivation — the d18-d23 grid-gate pattern applied to
-    * the calibration itself.
-    */
-  def signLshPairsAuto(s: SparkSession, dir: String): DataFrame =
-    signLshPairs(s, dir, targetBucket = autoGateTargetBucket)
-
-  val signLshPairsAutoSql: String =
-    signLshPairsAutoSqlFor(defTables, autoGateTargetBucket, defBits, defCosMin)
-
   /** The shipped-default mirror: [[signLshPairs]] with no explicit bits =
     * AutoBits at [[DefTargetBucket]] — what [[graft.llm.DedupResolve
     * .semanticCorpusPipeline]]'s oracle embeds.
     */
   val signLshPairsDefaultSql: String =
     signLshPairsAutoSqlFor(defTables, DefTargetBucket, defBits, defCosMin)
-
-  /** Parameter-GRID gate: the embedding twin at a non-shipped point —
-    * 4 tables × 8 bits (same 32 planes, regrouped into finer buckets:
-    * fewer, higher-precision candidates), oracle-compared against SQL
-    * generated from the same arguments. Gates the (nTables, bits)
-    * plumbing, not just the shipped 8×4.
-    */
-  def signLshPairs4x8(s: SparkSession, dir: String): DataFrame =
-    signLshPairs(s, dir, nTables = 4, bits = 8)
-
-  val signLshPairs4x8Sql: String = signLshPairsSqlFor(4, 8, defCosMin)
 
   /** LSH-bucketed ANN: multi-table sign-random-projection. A vector joins
     * a query's candidate set iff the two share a full bucket in ANY table;

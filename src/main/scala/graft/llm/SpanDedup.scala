@@ -349,26 +349,4 @@ object SpanDedup {
     contamSpansBloomDf(docs.where(col("doc_id") % 10 =!= 0),
       docs.where(col("doc_id") % 10 === 0), minTokens)
   }
-
-  // ---- shipped gate postures: k=8 — long enough that word-salad
-  // coincidences are rare (the hits are the planted twins' shared
-  // regions), short enough that the gates exercise multi-gram islands
-  def dupSpans8(s: SparkSession, dir: String): DataFrame =
-    dupSpans(s, dir, minTokens = 8)
-  val dupSpans8Sql: String = dupSpansSqlFor(8)
-
-  def stripSpans8(s: SparkSession, dir: String): DataFrame =
-    stripSpans(s, dir, minTokens = 8)
-  val stripSpans8Sql: String = stripSpansSqlFor(8)
-
-  def contamSpans8(s: SparkSession, dir: String): DataFrame =
-    contamSpans(s, dir, minTokens = 8)
-  val contamSpans8Sql: String = contamSpansSqlFor(8)
-
-  def contamSpansBloom8(s: SparkSession, dir: String): DataFrame =
-    contamSpansBloom(s, dir, minTokens = 8)
-  /** Same oracle as d29 by design: the sketch is a volume optimization,
-    * never an answer change.
-    */
-  val contamSpansBloom8Sql: String = contamSpansSqlFor(8)
 }

@@ -47,11 +47,15 @@ class OracleSqlSpec extends AnyFunSuite {
     // every oracle that needs the CTEs goes through graft.llm.OracleSql;
     // every LSH operator bands through Dedup.bandsOfSig /
     // IncrementalSemantic.bucketsOf, norms through Similarity's normCol,
-    // and every span operator keys grams through SpanDedup.gramKeys. Doc
-    // comments may still name them
+    // and every span operator keys grams through SpanDedup.gramKeys; the
+    // minhash oracle ladder writes its band selects, signature estimate
+    // and exact-Jaccard score once in Dedup. Doc comments may still name
+    // them
     import scala.jdk.CollectionConverters._
     val snippets = Seq("reach(a, b) AS (", "planes AS", "shiftright(", """posexplode(col("sigs"))""",
-      """FloatVecDot(col("embedding"), col("embedding"))""", """sequence(lit(1), size(col("t"))""")
+      """FloatVecDot(col("embedding"), col("embedding"))""", """sequence(lit(1), size(col("t"))""",
+      "CASE WHEN ma.h", "AS band, $sig AS sig FROM mh",
+      "CAST(len(list_intersect(ga.gs, gb.gs)) AS DOUBLE)")
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"$root not found from ${root.toAbsolutePath}")
     val stream = java.nio.file.Files.walk(root)
@@ -67,6 +71,23 @@ class OracleSqlSpec extends AnyFunSuite {
     snippets.foreach { s =>
       val at = hits.collect { case (`s`, where) => where }
       assert(at.size == 1, s"'$s' is written ${at.size} times:\n${at.mkString("\n")}")
+    }
+  }
+
+  test("queries that share an answer share one oracle string") {
+    // each row builds its oracle from its own arguments, so nothing but
+    // this case keeps a row from drifting off the oracle of the queries
+    // whose answer it must reproduce (another plan, or an index lifecycle)
+    val groups = Seq(
+      Seq("d29_contam_spans", "d36_contam_bloom", "d43_incremental_decontam"),
+      Seq("d31_knn_ivf_sq8", "d35_ivf_sq8_packed", "d40_knn_index_load"),
+      Seq("d38_curate_v4", "d41_curate_v4_approx"),
+      Seq("d12_simhash_pairs", "d42_incremental_simhash", "d50_signature_multi_append"),
+      Seq("d14_dedup_corpus", "d39_incremental_dedup", "d46_multi_append_dedup"),
+      Seq("m02_phash_neardup", "m08_incremental_phash"))
+    groups.foreach { g =>
+      val oracles = g.map(SparkEntry.oracleSql)
+      assert(oracles.distinct.size == 1, s"${g.mkString(", ")}: oracle strings differ")
     }
   }
 

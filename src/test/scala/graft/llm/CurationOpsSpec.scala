@@ -340,7 +340,8 @@ class CurationOpsSpec extends AnyFunSuite {
     }
     // and the composed chains agree end to end
     val a = Curate.curateV4(spark, sf).collect().map(_.toString).sorted.toSeq
-    val b = Curate.curateV4Approx(spark, sf).collect().map(_.toString).sorted.toSeq
+    val b = graft.SparkEntry.queries("d41_curate_v4_approx")(spark, sf)
+      .collect().map(_.toString).sorted.toSeq
     assert(a == b, "v4 exact-arm and approx-arm outputs diverged")
   }
 

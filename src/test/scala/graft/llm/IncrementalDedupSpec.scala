@@ -178,7 +178,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("d39 on the shipped corpus: incremental equals the full d14 pipeline") {
-    val inc = IncrementalDedup.appendDedup(spark, sf).as[Long].collect().toSeq
+    val inc = graft.SparkEntry.queries("d39_incremental_dedup")(spark, sf).as[Long].collect().toSeq
     val full = DedupResolve.corpusDedupPipeline(spark, sf).as[Long].collect().toSeq
     assert(inc == full, "d39 diverged from the full-corpus rerun")
   }

@@ -16,7 +16,7 @@ class IncrementalSemanticSpec extends AnyFunSuite {
     val vecs = graft.Tables.embeddings(spark, sf).select(col("vec_id").as("doc_id"))
     val fullKept = DedupResolve.dedupedDocIds(spark, vecs, pairs)
       .as[Long].collect().toSet
-    val incKept = IncrementalSemantic.semanticAppend(spark, sf)
+    val incKept = graft.SparkEntry.queries("d45_incremental_semantic")(spark, sf)
       .as[Long].collect().toSet
     assert(incKept == fullKept)
     // and the delta pass did real cross-split work: at least one corpus
@@ -28,7 +28,7 @@ class IncrementalSemanticSpec extends AnyFunSuite {
     val all = graft.Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
       .withColumn("nrm", sqrt(graft.functions.FloatVecDot(col("embedding"), col("embedding"))))
       .localCheckpoint(true)
-    val inc = IncrementalSemantic.semanticDelete(spark, sf).as[Long].collect().toSet
+    val inc = graft.SparkEntry.queries("d49_semantic_delete")(spark, sf).as[Long].collect().toSet
     val survPairs = Similarity.signLshPairs(spark, sf, nTables = 8, bits = 4, minCos = 0.35)
       .filter(col("a_id") % 7 =!= 3 && col("b_id") % 7 =!= 3)
       .select(col("a_id"), col("b_id"))

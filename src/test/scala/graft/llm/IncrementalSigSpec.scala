@@ -20,7 +20,7 @@ class IncrementalSigSpec extends AnyFunSuite {
 
   test("d42: incremental simhash pairs equal the full-rerun banded join") {
     val docs = graft.Tables.documents(spark, sf)
-    val inc = IncrementalSig.simhashAppend(spark, sf)
+    val inc = graft.SparkEntry.queries("d42_incremental_simhash")(spark, sf)
       .as[(Long, Long, Int)].collect().toSet
     val full = Dedup.hammingPairs(simSigs(docs), 32, 4, 7)
       .as[(Long, Long, Int)].collect().toSet
@@ -29,7 +29,7 @@ class IncrementalSigSpec extends AnyFunSuite {
 
   test("m08: incremental phash pairs equal the full-rerun (all-pairs by pigeonhole)") {
     val sigs = Multimodal.perceptualHash(Multimodal.mediaTable(spark, sf)).toDF()
-    val inc = IncrementalSig.phashAppend(spark, sf)
+    val inc = graft.SparkEntry.queries("m08_incremental_phash")(spark, sf)
       .as[(Long, Long, Int)].collect().toSet
     val full = Dedup.hammingPairs(sigs, 60, 6, 5)
       .as[(Long, Long, Int)].collect().toSet
@@ -138,7 +138,7 @@ class IncrementalSigSpec extends AnyFunSuite {
     val docs = graft.Tables.documents(spark, sf)
     val inc = IncrementalContam.appendDecontam(spark, sf)
       .as[(Long, Int, Int, Int)].collect().toSet
-    val full = SpanDedup.contamSpans8(spark, sf)
+    val full = graft.SparkEntry.queries("d29_contam_spans")(spark, sf)
       .as[(Long, Int, Int, Int)].collect().toSet
     assert(inc == full)
   }
@@ -158,7 +158,8 @@ class IncrementalSigSpec extends AnyFunSuite {
       val inc = idx.spans.unionByName(SpanDedup.contamIslands(
           SpanDedup.contamHitsWithSketch(docs.where(col("doc_id") % 5 === 4), idx.bloom, idx.grams, 8), 8))
         .as[(Long, Int, Int, Int)].collect().toSet
-      val full = SpanDedup.contamSpans8(spark, sf).as[(Long, Int, Int, Int)].collect().toSet
+      val full = graft.SparkEntry.queries("d29_contam_spans")(spark, sf)
+        .as[(Long, Int, Int, Int)].collect().toSet
       assert(inc == full)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))

@@ -283,7 +283,7 @@ class LlmSpec extends AnyFunSuite {
     // multi-byte corpus (2/3/4-byte codepoints + sub-window/empty payloads)
     // with near-dups planted INSIDE the non-ASCII text — the case where a
     // character-windowed construction would diverge from the byte-windowed
-    // engine. The same fixture is oracle-checked against phashPairsSql via
+    // engine. The same fixture is oracle-checked against m02's oracle via
     // tools/MakeNonAsciiCorpus + Verify + local_verify.py.
     val tmp = java.nio.file.Files.createTempDirectory("graft-nonascii").toString
     graft.tools.MakeNonAsciiCorpus.write(spark, tmp)
@@ -363,9 +363,9 @@ class LlmSpec extends AnyFunSuite {
     // the persistence seam (write -> read -> serve) must be
     // value-invisible: same centroids, same cells, same packed codes,
     // same integer ranking as the fully in-plan d35 path at the same grid
-    val trained = Similarity.ivfSq8KnnPacked16(spark, sf)
+    val trained = graft.SparkEntry.queries("d35_ivf_sq8_packed")(spark, sf)
       .collect().map(_.toString).sorted.toSeq
-    val loaded = Similarity.ivfSq8KnnLoaded(spark, sf)
+    val loaded = graft.SparkEntry.queries("d40_knn_index_load")(spark, sf)
       .collect().map(_.toString).sorted.toSeq
     assert(trained == loaded, "loaded-index serve diverged from the trained path")
   }

@@ -106,7 +106,7 @@ class LshParamSpec extends AnyFunSuite {
 
   test("d17 (k=48, 6 bands) is the same ladder at higher recall: superset of d13's pairs") {
     // exactness is parameter-independent: every emitted pair is a true pair
-    val d17Shipped = Dedup.lshVerifiedK48(spark, sf)
+    val d17Shipped = graft.SparkEntry.queries("d17_lsh_verified_k48")(spark, sf)
       .select($"jaccard").as[Double].collect()
     assert(d17Shipped.forall(_ >= 0.8))
     // k=48 extends the k=32 signature (same h_i = a + i*b stream), so its
@@ -162,7 +162,7 @@ class LshParamSpec extends AnyFunSuite {
       .select($"qid", $"nid").as[(Long, Long)].collect().toSet
     val h8 = Similarity.lshKnn(spark, sf)
       .select($"qid", $"nid").as[(Long, Long)].collect().toSet
-    val h32 = Similarity.lshKnn32(spark, sf)
+    val h32 = graft.SparkEntry.queries("d26_knn_lsh_t32")(spark, sf)
       .select($"qid", $"nid").as[(Long, Long)].collect().toSet
     assert((truth intersect h32).size >= (truth intersect h8).size)
     info(s"recall@5: 8 tables ${(truth intersect h8).size}/${truth.size}, " +
@@ -186,9 +186,9 @@ class LshParamSpec extends AnyFunSuite {
   }
 
   test("simhashPairs capped run is a subset of the uncapped run (d25 posture)") {
-    val uncapped = Dedup.simhashPairsB8(spark, sf)
+    val uncapped = graft.SparkEntry.queries("d22_simhash_b8")(spark, sf)
       .select($"a_id", $"b_id").as[(Long, Long)].collect().toSet
-    val capped = Dedup.simhashPairsB8Capped(spark, sf)
+    val capped = graft.SparkEntry.queries("d25_simhash_b8_capped")(spark, sf)
       .select($"a_id", $"b_id").as[(Long, Long)].collect().toSet
     assert(capped.subsetOf(uncapped),
       s"capped-only pairs: ${(capped -- uncapped).take(5).mkString(",")}")
