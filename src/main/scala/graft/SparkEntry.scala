@@ -192,7 +192,8 @@ object SparkEntry {
     // d33: curation v2 — the COMPOSED ingest chain (strip spans -> PII
     // redact -> quality filter -> source quota -> seq-pack), one oracle
     // pinning every stage boundary
-    "d33_curate_v2" -> Query(Curate.curateV2(_, _), Curate.curateV2Sql),
+    "d33_curate_v2" -> Query(Curate.curateV2(_, _, 8, 12, 256),
+      Curate.curateV2SqlFor(8, 12, 256)),
     // d34: sq8 in the packed binary production layout; the oracle rebuilds
     // each code's hex transcription, so the byte layout is gated
     "d34_sq8_packed" -> Query(Similarity.sq8KnnPacked, Similarity.sq8KnnPackedSql),
@@ -207,18 +208,20 @@ object SparkEntry {
       SpanDedup.contamSpansSqlFor(8)),
     // d37: curation v3 — v2 plus the t17 repetition cut (over REDACTED
     // text, pre-quota) and the t18 window-grain training layout
-    "d37_curate_v3" -> Query(Curate.curateV3(_, _), Curate.curateV3Sql),
+    "d37_curate_v3" -> Query(Curate.curateV3(_, _, 8, 12, 256, 3, 0.1, 4),
+      Curate.curateV3SqlFor(8, 12, 256, 3, 0.1, 4)),
     // d38: curation v4 — v3 plus the t22 LEARNED quality gate as stage
     // 3' (model trained on the chain's own survivors, applied as a
     // literal map — row-local, no join-back, text still never shuffles)
-    "d38_curate_v4" -> Query(Curate.curateV4(_, _), Curate.curateV4Sql),
+    "d38_curate_v4" -> Query(Curate.curateV4(_, _, 8, 12, 256, 3, 0.1, 4),
+      Curate.curateV4SqlFor(8, 12, 256, 3, 0.1, 4)),
     // d41: v4 with the approx-percentile teacher calibration (the 100-TB
     // arm) — same oracle as d38 BY DESIGN: at verify SFs the quantile
     // sketch is exact, so the arm changes the calibration plan, never
     // the answer (exact≡approx additionally spec-pinned)
-    "d41_curate_v4_approx" -> Query(
-      (s, dir) => Curate.curateV4Df(Tables.documents(s, dir), approxTeacher = true),
-      Curate.curateV4Sql),
+    "d41_curate_v4_approx" -> Query((s, dir) =>
+      Curate.curateV4Df(Tables.documents(s, dir), 8, 12, 256, 3, 0.1, 4, approxTeacher = true),
+      Curate.curateV4SqlFor(8, 12, 256, 3, 0.1, 4)),
     "t01_doc_stats" -> Query(TextAnalysis.docStats, TextAnalysis.docStatsSql),
     "t02_lang_dist" -> Query(TextAnalysis.langDistribution, TextAnalysis.langDistributionSql),
     "t03_token_counts" -> Query(TextAnalysis.tokenCounts, TextAnalysis.tokenCountsSql),
@@ -246,7 +249,7 @@ object SparkEntry {
     // t17: within-doc duplicated-gram coverage (Gopher repetition rule),
     // shuffle-free per-row HOFs; k=3 is where the corpus has real signal
     "t17_dup_gram_cov" -> Query(TextAnalysis.dupGramCoverage(_, _, k = 3),
-      TextAnalysis.dupGramCoverageSql),
+      TextAnalysis.dupGramCoverageSqlFor(3)),
     // t18: deterministic shard + training order (seed-keyed permutation);
     // 8 shards ≈ 60–640 docs/shard across the verify SFs, so a broken rank
     // or a wrong modulus shifts thousands of (shard, ord) values
@@ -292,7 +295,7 @@ object SparkEntry {
     "m06_ppm_decode" -> Query(Multimodal.ppmDecodeStats, Multimodal.ppmDecodeStatsSql),
     // m07: the resize/thumbnail path over real parses (box-fit integer
     // arithmetic replayed in the oracle)
-    "m07_ppm_resize" -> Query(Multimodal.ppmResize(_, _), Multimodal.ppmResizeSql),
+    "m07_ppm_resize" -> Query(Multimodal.ppmResize(_, _, 32), Multimodal.ppmResizeSqlFor(32)),
     // t24: BPE train/apply split — merge replay segments UNSEEN words
     "t24_bpe_heldout" -> Query(Bpe.heldoutTokens, Bpe.heldoutTokensSql),
     // t25: per-occurrence token IDS under the learned vocab (the
@@ -300,7 +303,7 @@ object SparkEntry {
     "t25_bpe_token_ids" -> Query(Bpe.tokenIds, Bpe.tokenIdsSql),
     // t26: t15's packing budgeted by BPE token counts (training budgets
     // are measured in BPE tokens, not whitespace words)
-    "t26_bpe_seq_pack" -> Query(Bpe.bpeSeqPack(_, _), Bpe.bpeSeqPackSql),
+    "t26_bpe_seq_pack" -> Query(Bpe.bpeSeqPack(_, _, 256), Bpe.bpeSeqPackSqlFor(256)),
     // The lifecycle gates are IndexScenario rows: a base split, a list of
     // appends/deletes, a cap, over one maintained family; each answer is
     // one read of the published generation.

@@ -456,8 +456,6 @@ object Bpe {
       s" FROM dt JOIN documents d ON d.doc_id = dt.doc_id)" +
       s" SELECT source, doc_id, n_bpe_tokens, CAST((cum - n_bpe_tokens) // $seqTokens AS BIGINT) AS seq_no FROM sp"
 
-  val bpeSeqPackSql: String = bpeSeqPackSqlFor(256)
-
   /** [[heldoutTokens]] mirror: the learn chain over the train split,
     * then the merge REPLAY over the distinct held-out words (u-stages,
     * same empty-b$k exhaustion guard), joined back per occurrence.

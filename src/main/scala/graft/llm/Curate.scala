@@ -403,8 +403,6 @@ object Curate {
        |  CAST((cum - n_tokens) // $seqTokens AS BIGINT) AS seq_no
        |FROM packed""".stripMargin.replace("__PLANT__", Pii.plantSql)
 
-  val curateV2Sql: String = curateV2SqlFor(8, 12, 256)
-
   /** DuckDB mirror of [[curateV3]]: the shared prefix, the t17 list-lambda
     * stack over rtext, the v2 quota/pack, then the window-grain layout.
     */
@@ -466,13 +464,9 @@ object Curate {
       .replace("__PLANT__", Pii.plantSql)
   }
 
-  val curateV3Sql: String = curateV3SqlFor(8, 12, 256, 3, 0.1, 4)
-
   def curateV4SqlFor(k: Int, quota: Int, seqTokens: Int, repK: Int,
       repMax: Double, nShards: Int): String =
     curateChainSql(k, quota, seqTokens, repK, repMax, nShards, nbGate = true)
-
-  val curateV4Sql: String = curateV4SqlFor(8, 12, 256, 3, 0.1, 4)
 
   val curateSql: String =
     s"""WITH RECURSIVE pairs AS (${Dedup.lshVerifiedPairsSql}),

@@ -437,8 +437,6 @@ object Multimodal {
       |CAST(length('P6' || chr(10) || '#synthetic ppm ' || doc_id || chr(10) || w || ' ' || h || chr(10) || '255' || chr(10)) + w*h*3 AS BIGINT) AS n_bytes
       |FROM d""".stripMargin
 
-  val ppmResizeSql: String = ppmResizeSqlFor(32)
-
   /** DuckDB mirror of [[ppmDecodeStats]]: the [[PpmCodec.synth]] formula
     * replayed in integer arithmetic — dims from the id moduli, channel
     * sums as list comprehensions over the raster index space, and

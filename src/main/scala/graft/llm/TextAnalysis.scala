@@ -659,9 +659,6 @@ object TextAnalysis {
         (col("dup_covered").cast("double") / n.cast("double")).as("dup_gram_frac"))
   }
 
-  /** DuckDB mirror of [[dupGramCoverage]] at the gate's k = 3. */
-  val dupGramCoverageSql: String = dupGramCoverageSqlFor(3)
-
   def dupGramCoverageSqlFor(k: Int): String = {
     val toks = sqlTokens("text")
     val gk = Hashing.sqlHash60(s"array_to_string(t[i:i+${k - 1}], ' ')")
