@@ -154,6 +154,12 @@ object IncrementalDedup {
     Dedup.BandKeys, "doc_id BIGINT, sig ARRAY<BIGINT>, band INT, bsig STRING",
     "band INT, bsig STRING")
 
+  /** The plain-parquet artifacts' schemas (DDL), declared so a read
+    * skips the schema-inference job of a bare `read.parquet`.
+    */
+  private[graft] val SigsSchema = "doc_id BIGINT, sig ARRAY<BIGINT>"
+  private[graft] val PairsSchema = "a_id BIGINT, b_id BIGINT"
+
   private def hashTable(loc: String) = IndexStore.tableFor("graft_inc_hash_", loc)
 
   private def hashesOf(docs: DataFrame): DataFrame =
@@ -295,14 +301,14 @@ object IncrementalDedup {
   def readIndexAt(s: SparkSession, dir: String, m: IndexManifest): CorpusIndex = {
     val nb = m.geom(dir, "n_buckets")
     val minusDel = IndexLifecycle.tombstoneFilter(s, dir, m, "doc_id")
-    val pairs = IndexLifecycle.readPairs(s, dir, m, minusDel)
+    val pairs = IndexLifecycle.readPairs(s, dir, m, PairsSchema, minusDel)
     val (bands, counts) = IndexLifecycle.readProbe(s, dir, m, Bands, minusDel)
     CorpusIndex(
       minusDel(IndexStore.ensureBucketedTable(s, hashTable(s"$dir/${m.path("hashes")}"),
         "doc_id BIGINT, content_hash STRING", "content_hash", nb,
         s"$dir/${m.path("hashes")}"), "doc_id"),
-      minusDel(s.read.parquet(m.epochPaths(dir, "sigs"): _*), "doc_id"),
-      s.read.parquet(s"$dir/${m.path("labels")}"),
+      minusDel(s.read.schema(SigsSchema).parquet(m.epochPaths(dir, "sigs"): _*), "doc_id"),
+      IndexLifecycle.readLabels(s, dir, m),
       Some(bands), Some(counts), Some(pairs), nb)
   }
 

@@ -39,6 +39,9 @@ object IncrementalSig {
     Dedup.BandKeys, "doc_id BIGINT, sig BIGINT, band INT, bsig BIGINT",
     "band INT, bsig BIGINT")
 
+  /** The pair list's schema (DDL): the verified pairs and their distance. */
+  private[graft] val PairsSchema = "a_id BIGINT, b_id BIGINT, hamming INT"
+
   /** The persisted artifacts: the bucketed band table (probe surface),
     * its per-bucket population counts (the cap's delta-side evidence —
     * the d39 pattern), and yesterday's resolved pair list.
@@ -72,7 +75,7 @@ object IncrementalSig {
   private def readIndexAt(s: SparkSession, dir: String, m: IndexManifest): SigIndex = {
     val minusDel = IndexLifecycle.tombstoneFilter(s, dir, m, "doc_id")
     val (bands, counts) = IndexLifecycle.readProbe(s, dir, m, Bands, minusDel)
-    SigIndex(bands, IndexLifecycle.readPairs(s, dir, m, minusDel),
+    SigIndex(bands, IndexLifecycle.readPairs(s, dir, m, PairsSchema, minusDel),
       m.geom(dir, "bits"), m.geom(dir, "n_bands"), counts)
   }
 
@@ -331,6 +334,11 @@ object IncrementalSemantic {
     Seq("table_id", "bucket"), "vec_id BIGINT, table_id INT, bucket INT",
     "table_id INT, bucket INT")
 
+  /** The pair evidence's schema (DDL), declared so a read skips the
+    * schema-inference job of a bare `read.parquet`.
+    */
+  private[graft] val PairsSchema = "a_id BIGINT, b_id BIGINT"
+
   /** The bucket candidate join ([[Dedup.candidatePairs]] at `bucketCap`)
     * over `buckets`, deduped, + the exact-cosine verify over `e`.
     */
@@ -385,8 +393,8 @@ object IncrementalSemantic {
   private def readIndexAt(s: SparkSession, dir: String, m: IndexManifest): SemIndex = {
     val minusDel = IndexLifecycle.tombstoneFilter(s, dir, m, "vec_id")
     val (buckets, counts) = IndexLifecycle.readProbe(s, dir, m, Buckets, minusDel)
-    SemIndex(buckets, s.read.parquet(s"$dir/${m.path("labels")}"),
-      IndexLifecycle.readPairs(s, dir, m, minusDel), counts,
+    SemIndex(buckets, IndexLifecycle.readLabels(s, dir, m),
+      IndexLifecycle.readPairs(s, dir, m, PairsSchema, minusDel), counts,
       m.geom(dir, "n_tables"), m.geom(dir, "bits"), m.geom(dir, "n_buckets"))
   }
 
@@ -538,7 +546,7 @@ object IncrementalSemantic {
     val (pairs, over0) = corpusPairsWithLedger(e, bucketCap, minCos)
     val pairsC = pairs.transform(Ckpt.eager)
     IndexLifecycle.freshIndex(s, dir, Buckets, bucketsOf(e), m.geom(dir, "n_buckets"), g,
-      Map("pairs" -> pairsC), Some(DedupResolve.resolveClusters(pairsC).transform(Ckpt.eager)),
+      Map("pairs" -> pairsC), Some(DedupResolve.resolveClusters(pairsC)),
       Some(over0))
   }
 

@@ -48,13 +48,24 @@ object IndexLifecycle {
       id: String): (DataFrame, String) => DataFrame = m.pathOpt("deleted") match {
     case None => (df, _) => df
     case Some(rel) =>
-      val del = broadcast(s.read.parquet(s"$dir/$rel"))
+      val del = broadcast(readTombstones(s, s"$dir/$rel", id))
       // re-select the original order: a USING-key anti-join moves the key
       // column first, which would silently swap (a_id, b_id) in the pair
       // artifact for positional consumers
       (df, idCol) => df.join(del.withColumnRenamed(id, idCol), Seq(idCol), "left_anti")
         .select(df.columns.map(col).toIndexedSeq: _*)
   }
+
+  /** A tombstone list at `path`: one BIGINT column `id` (the schema
+    * [[writeTombstones]] writes), read with it declared, which spares
+    * the schema-inference job of a bare `read.parquet`.
+    */
+  private def readTombstones(s: SparkSession, path: String, id: String): DataFrame =
+    s.read.schema(s"$id BIGINT").parquet(path)
+
+  /** The label table of `m`, read as [[DedupResolve.LabelsSchema]]. */
+  def readLabels(s: SparkSession, dir: String, m: IndexManifest): DataFrame =
+    s.read.schema(DedupResolve.LabelsSchema).parquet(s"$dir/${m.path("labels")}")
 
   /** `p`'s probe table at `m`, tombstone-filtered by `minusDel`, and its
     * count table (counts keep counting tombstoned rows: the cap guards
@@ -70,12 +81,12 @@ object IndexLifecycle {
       p.keys.mkString(", "), nb, s"$dir/$rel"), p.id), counts)
   }
 
-  /** The pair evidence of `m` — every epoch — minus pairs with a
-    * tombstoned endpoint.
+  /** The pair evidence of `m` — every epoch, read as the family's
+    * declared `schema` (DDL) — minus pairs with a tombstoned endpoint.
     */
-  def readPairs(s: SparkSession, dir: String, m: IndexManifest,
+  def readPairs(s: SparkSession, dir: String, m: IndexManifest, schema: String,
       minusDel: (DataFrame, String) => DataFrame): DataFrame =
-    minusDel(minusDel(s.read.parquet(m.epochPaths(dir, "pairs"): _*), "a_id"), "b_id")
+    minusDel(minusDel(s.read.schema(schema).parquet(m.epochPaths(dir, "pairs"): _*), "a_id"), "b_id")
 
   /** The writes of `rows` as `p`'s probe table at `rel` and of their
     * per-bucket populations at `countsRel`; the returned writes are
@@ -233,7 +244,7 @@ object IndexLifecycle {
   private def writeTombstones(s: SparkSession, dir: String, m: IndexManifest,
       del: DataFrame): Unit =
     m.pathOpt("deleted")
-      .map(rel => s.read.parquet(s"$dir/$rel").unionByName(del).distinct())
+      .map(rel => readTombstones(s, s"$dir/$rel", del.columns.head).unionByName(del).distinct())
       .getOrElse(del)
       .transform(Ckpt.eager)
       .write.mode("overwrite").parquet(s"$dir/deleted/gen-${m.gen + 1}")
@@ -351,25 +362,26 @@ object IndexLifecycle {
     * verbatim (no path between survivor components runs through a
     * cluster none of whose members died). `labels` is (id, cluster).
     *
-    * The re-resolution is the mutation's HEAVY compute (an iterative
-    * multi-job resolve), so it runs to completion BEFORE any write, and
-    * only the two cheap writes overlap: no heavy job shares the memory
-    * pool with another (overlapping the resolve with the tombstone
-    * rewrite was the prime suspect for d49's intermittent 7× blowup at
-    * 32-way task concurrency), and nothing irreversible happens until
-    * the failure-prone step has succeeded. Returns the new labels,
-    * materialized before the publish that supersedes their input.
+    * The re-resolution is the mutation's compute (the touched pairs'
+    * collect and, within the driver budget, a union-find on the driver;
+    * above it the iterative multi-job Spark resolve), so it runs to
+    * completion BEFORE any write, and only the two cheap writes overlap:
+    * no heavy job shares the memory pool with another (overlapping the
+    * resolve with the tombstone rewrite was the prime suspect for d49's
+    * intermittent 7× blowup at 32-way task concurrency), and nothing
+    * irreversible happens until the failure-prone step has succeeded.
+    * Returns the new labels, materialized before the publish that
+    * supersedes their input.
     */
   def deleteTouched(s: SparkSession, dir: String, m: IndexManifest, id: String,
       deleteIds: DataFrame, labels: DataFrame, pairs: DataFrame,
       repair: Option[(DataFrame, DataFrame) => DataFrame]): DataFrame = {
     val del = deleteIds.select(col(id).cast("long").as(id)).transform(Ckpt.eager)
-    val touched = labels.join(del.select(col(id).as("id")), Seq("id"))
-      .select(col("cluster")).distinct()
-      .transform(Ckpt.eager)
-    // guard probe ONCE per delete; the touched and untouched joins below
+    // the touched-cluster list is collected ONCE per delete (the guard's
+    // probe is its payload); the touched and untouched joins below
     // reuse the same shaped frame
-    val tJoin = DedupResolve.guardedByCluster(touched)
+    val tJoin = DedupResolve.guardedByCluster(
+      labels.join(del.select(col(id).as("id")), Seq("id")).select(col("cluster")).distinct())
     val touchedLabels0 = labels.join(tJoin, Seq("cluster")).select(col("id"), col("cluster"))
     // a repair reads the touched labels a second time
     val touchedLabels =

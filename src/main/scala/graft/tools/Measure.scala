@@ -1,9 +1,10 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
@@ -22,7 +23,9 @@ import scala.util.control.NonFatal
   *    show.
   *  - `profile <name>`: one warm-up, then one run with every Spark job's
   *    interval and every action's time recorded; prints the job-covered
-  *    wall, the driver-only gap and the top actions.
+  *    wall, the driver-only gap, the jobs and job-covered span per call
+  *    site (the first `graft.` frame of the SQL execution that started
+  *    each job) and the top actions.
   *  - `cold [names…]`: each query in a FRESH session (no cached relations,
   *    no persisted-RDD residue, no shared-JVM allocator pressure):
   *    warm-up, min of two runs, one JSON line. Default: the heaviest
@@ -136,17 +139,29 @@ object Measure {
   }
 
   /** Per-job and per-action profile of one run: the job intervals give the
-    * job-covered wall and the driver-only gap; the action list (Catalyst
-    * optimize + AQE + execute, with a plan fingerprint) names the slow
-    * actions even when the jobs under them are all tiny.
+    * job-covered wall and the driver-only gap; each job's SQL execution
+    * (its `spark.sql.execution.id`) names the call site that started it;
+    * the action list (Catalyst optimize + AQE + execute, with a plan
+    * fingerprint) names the slow actions even when the jobs under them
+    * are all tiny.
     */
   private def profile(spark: SparkSession, name: String, sfDir: String): Unit = {
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Option[Long])]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Option[Long])]()
+    val sites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = starts.put(js.jobId, System.nanoTime())
+      override def onJobStart(js: SparkListenerJobStart): Unit = starts.put(js.jobId,
+        (System.nanoTime(), Option(js.properties).flatMap(p =>
+          Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)))
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        Option(starts.remove(je.jobId)).foreach(t0 => jobs.add((t0.longValue, System.nanoTime())))
+        Option(starts.remove(je.jobId)).foreach { case (t0, exec) =>
+          jobs.add((t0, System.nanoTime(), exec)) }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => sites.put(x.executionId,
+          x.details.linesIterator.map(_.trim).find(_.startsWith("graft."))
+            .getOrElse("(no graft frame)"))
+        case _ =>
+      }
     })
     val actions = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
     spark.listenerManager.register(new QueryExecutionListener {
@@ -160,25 +175,35 @@ object Measure {
     // listener events arrive asynchronously: settle before each read
     run(spark, name, warmDir, "warmup")
     Thread.sleep(1000)
-    jobs.clear(); starts.clear(); actions.clear()
+    jobs.clear(); starts.clear(); sites.clear(); actions.clear()
     val wall = run(spark, name, sfDir, "profile")
     Thread.sleep(1000)
 
     val all = jobs.asScala.toSeq.sortBy(_._1)
     println(f"== $name: wall $wall%.2f s, ${all.size} jobs, " +
       f"job-sum ${all.map(j => (j._2 - j._1) / 1e9).sum}%.2f s ==")
-    // merge job intervals; what they leave uncovered is driver-only time
-    var covered = 0L
-    var cursor = 0L
-    all.foreach { case (s0, e0) =>
-      val s1 = math.max(s0, cursor)
-      if (e0 > s1) { covered += e0 - s1; cursor = e0 } else cursor = math.max(cursor, e0)
-    }
+    val covered = coveredNs(all.map(j => (j._1, j._2)))
     println(f"-- job-covered wall ${covered / 1e9}%.2f s; driver-only gap ${wall - covered / 1e9}%.2f s --")
+    println("-- jobs and job-covered span per call site (desc) --")
+    all.groupBy(_._3.fold("no SQL execution")(id => sites.getOrDefault(id, "(no graft frame)")))
+      .map { case (site, js) => (site, js.size, coveredNs(js.map(j => (j._1, j._2))) / 1e9) }
+      .toSeq.sortBy(-_._3)
+      .foreach { case (site, n, span) => println(f"$n%5d jobs $span%8.3f s  $site") }
     println("-- top 40 actions (QueryExecutionListener, desc) --")
     val acts = actions.asScala.toSeq
     acts.sortBy(-_._2).take(40).foreach { case (k, d) => println(f"$d%8.3f s  $k") }
     println(f"-- actions: n=${acts.size}, sum ${acts.map(_._2).sum}%.2f s --")
+  }
+
+  /** Nanoseconds covered by the union of the start-ordered `intervals`. */
+  private def coveredNs(intervals: Seq[(Long, Long)]): Long = {
+    var covered = 0L
+    var cursor = 0L
+    intervals.foreach { case (s0, e0) =>
+      val s1 = math.max(s0, cursor)
+      if (e0 > s1) { covered += e0 - s1; cursor = e0 } else cursor = math.max(cursor, e0)
+    }
+    covered
   }
 
   private def cold(names: Seq[String], sfDir: String): Unit = {

@@ -871,4 +871,38 @@ class IndexPublicationSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("declared artifact schemas match the written ones after build, append and delete") {
+    import org.apache.spark.sql.types.StructType
+    // per family: the artifacts read with a declared schema (entry, DDL)
+    val cases: Seq[(MaintainedFamily, Seq[(String, String)])] = Seq(
+      IncrementalDedup.Family(rowsPerBand = 4) -> Seq("labels" -> DedupResolve.LabelsSchema,
+        "sigs" -> IncrementalDedup.SigsSchema, "pairs" -> IncrementalDedup.PairsSchema),
+      IncrementalSig.simhash(4) -> Seq("pairs" -> IncrementalSig.PairsSchema),
+      IncrementalSemantic.Family -> Seq("labels" -> DedupResolve.LabelsSchema,
+        "pairs" -> IncrementalSemantic.PairsSchema))
+    def fields(t: StructType): Seq[(String, String)] = t.fields.toSeq.map(f => f.name -> f.dataType.sql)
+    for ((f, declared) <- cases) {
+      val src = f.source(spark, sf)
+      val id = col(f.id)
+      val dir = java.nio.file.Files.createTempDirectory(s"schemas-${f.name}").toString
+      try {
+        f.write(spark, dir, src.where(id % 3 === 0), Dedup.NoBucketCap, IndexScenario.GateBuckets)
+        f.append(spark, dir, src.where(id % 3 <= 1), src.where(id % 3 === 1), Dedup.NoBucketCap)
+        f.delete(spark, dir, src.where(id % 7 === 3 && id % 3 <= 1).select(id))
+        val m = IndexStatePublisher.current(dir)
+        val paths = (declared :+ ("deleted" -> s"${f.id} BIGINT")).flatMap { case (entry, ddl) =>
+          val ps = if (m.epochs.contains(entry)) m.epochPaths(dir, entry) else Seq(s"$dir/${m.path(entry)}")
+          ps.map(_ -> ddl)
+        }
+        assert(paths.size > declared.size, s"${f.name}: no appended epoch was checked")
+        paths.foreach { case (p, ddl) =>
+          assert(fields(spark.read.parquet(p).schema) == fields(StructType.fromDDL(ddl)),
+            s"${f.name}: $p is not $ddl")
+        }
+      } finally {
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      }
+    }
+  }
 }

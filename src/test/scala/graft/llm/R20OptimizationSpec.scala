@@ -36,6 +36,49 @@ class R20OptimizationSpec extends AnyFunSuite {
     assert(m(7L) == 7L)
   }
 
+  /** The (id, cluster) set of a label table. */
+  private def labelSet(labels: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    labels.as[(Long, Long)].collect().toSet
+
+  /** The graphs the driver resolve is pinned on, as (a_id, b_id) rows. */
+  private def graphs: Seq[(String, Seq[(Long, Long)])] = {
+    val rnd = new scala.util.Random(42)
+    Seq(
+      "empty" -> Nil,
+      "self-pair" -> Seq((7L, 7L)),
+      "9-chain + isolated pair" -> ((1L to 8L).map(i => (i, i + 1)) :+ (100L, 101L)),
+      "star" -> (1L to 30L).map(i => (50L, 50L + i)),
+      "duplicate and reversed edges" -> Seq((3L, 1L), (1L, 3L), (1L, 3L), (5L, 3L), (9L, 8L), (8L, 9L)),
+      "seeded random" -> Seq.fill(3000)((rnd.nextInt(4000).toLong, rnd.nextInt(4000).toLong)))
+  }
+
+  test("resolveClusters: the driver resolve equals the Spark loop on every pinned graph") {
+    graphs.foreach { case (name, edges) =>
+      val pairs = edges.toDF("a_id", "b_id")
+      assert(labelSet(DedupResolve.resolveClusters(pairs)) ==
+        labelSet(DedupResolve.resolveClustersCounted(pairs)._1), name)
+    }
+  }
+
+  test("resolveClusters: over the edge budget the Spark loop answers, with the same labels") {
+    val pairs = ((1L to 8L).map(i => (i, i + 1)) :+ (100L, 101L)).toDF("a_id", "b_id")
+    val fallback = DedupResolve.resolveWithin(pairs, maxEdges = 4L)
+    assert(fallback.queryExecution.logical.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+      "a graph over the budget must resolve through the checkpointed Spark loop")
+    assert(labelSet(fallback) == labelSet(DedupResolve.resolveClusters(pairs)))
+  }
+
+  test("resolveClusters: a small resolve runs at most one Spark job, into one partition") {
+    // one input partition, the shape AQE gives a small shuffle output: the
+    // limit collect scans one partition per job and widens the scan when
+    // it has not seen enough rows, so a wider input may take a second job
+    val pairs = ((1L to 8L).map(i => (i, i + 1)) :+ (100L, 101L)).toDF("a_id", "b_id")
+      .coalesce(1).transform(graft.runtime.Ckpt.eager)
+    val (labels, jobs) = R21OptimizationSpec.jobsOf(spark)(DedupResolve.resolveClusters(pairs))
+    assert(jobs <= 1, s"a small resolve ran $jobs Spark jobs")
+    assert(labels.rdd.getNumPartitions == 1)
+  }
+
   test("checkpoint stats clamp: huge inherited estimates are capped, small ones kept") {
     import org.apache.spark.sql.execution.LogicalRDD
     val small = Seq((1L, 2L)).toDF("a", "b")

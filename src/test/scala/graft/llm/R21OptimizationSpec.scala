@@ -17,40 +17,6 @@ class R21OptimizationSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
-  /** The Spark jobs `body` starts, counted by a listener over a unique
-    * job group. A sentinel job in the same group closes the count: the
-    * listener bus delivers in order, so once the sentinel's start has
-    * arrived every job `body` started has been counted.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
-    val sentinel = s"$group-sentinel"
-    val seen = new java.util.concurrent.atomic.AtomicInteger()
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val p = Option(e.properties)
-        if (p.exists(_.getProperty("spark.jobGroup.id") == group)) {
-          if (p.exists(_.getProperty("spark.job.description") == sentinel)) done.countDown()
-          else seen.incrementAndGet()
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "geometry probe")
-      val out =
-        try {
-          val r = body
-          spark.sparkContext.setJobDescription(sentinel)
-          spark.range(1).count()
-          r
-        } finally spark.sparkContext.clearJobGroup()
-      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS), "sentinel job never arrived")
-      (out, seen.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("manifest geometry: zero-job read, as written, no meta dir") {
     val docs = (0L until 60L).map(i => (i, s"topic ${i % 7} note ${i % 5} body ${i % 3}"))
       .toDF("doc_id", "text").transform(graft.runtime.Ckpt.eager)
@@ -84,7 +50,8 @@ class R21OptimizationSpec extends AnyFunSuite {
       val dir = java.nio.file.Files.createTempDirectory(s"geom-$family").toString
       try {
         write(dir)
-        val (geometry, jobs) = jobsOf(graft.runtime.IndexStatePublisher.current(dir).geometry)
+        val (geometry, jobs) =
+          R21OptimizationSpec.jobsOf(spark)(graft.runtime.IndexStatePublisher.current(dir).geometry)
         assert(jobs == 0, s"$family: resolving geometry ran $jobs Spark jobs")
         assert(geometry == expected, s"$family: manifest geometry $geometry")
         assert(!new java.io.File(s"$dir/meta").exists(), s"$family: a meta dir was written")
@@ -155,5 +122,41 @@ class R21OptimizationSpec extends AnyFunSuite {
           "clamped checkpoint's RDD must be releasable through the plan")
       case other => fail(s"clamped checkpoint must stay a bare LogicalRDD, got $other")
     }
+  }
+}
+
+object R21OptimizationSpec {
+  /** The Spark jobs `body` starts, counted by a listener over a unique
+    * job group. A sentinel job in the same group closes the count: the
+    * listener bus delivers in order, so once the sentinel's start has
+    * arrived every job `body` started has been counted.
+    */
+  def jobsOf[T](spark: org.apache.spark.sql.SparkSession)(body: => T): (T, Int) = {
+    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
+    val sentinel = s"$group-sentinel"
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        if (p.exists(_.getProperty("spark.jobGroup.id") == group)) {
+          if (p.exists(_.getProperty("spark.job.description") == sentinel)) done.countDown()
+          else seen.incrementAndGet()
+        }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "geometry probe")
+      val out =
+        try {
+          val r = body
+          spark.sparkContext.setJobDescription(sentinel)
+          spark.range(1).count()
+          r
+        } finally spark.sparkContext.clearJobGroup()
+      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS), "sentinel job never arrived")
+      (out, seen.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
